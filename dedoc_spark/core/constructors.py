@@ -15,7 +15,7 @@ from __future__ import annotations
 import re
 from typing import Callable, Dict, List, Optional
 
-from dedoc_spark.core.model import HierarchyLevel, Line
+from dedoc_spark.core.model import HierarchyLevel, Line, param_flag
 from dedoc_spark.core.structure import DOTTED_RE, get_hierarchy_level
 from dedoc_spark.core.tree import TreeNode
 
@@ -40,14 +40,6 @@ def construct_linear(lines: List[Line]) -> TreeNode:
 PatternFn = Callable[[Line], Optional[HierarchyLevel]]
 
 
-def _bool(v, default=True) -> bool:
-    if v is None:
-        return default
-    if isinstance(v, bool):
-        return v
-    return str(v).lower() == "true"
-
-
 def compile_patterns(patterns: List[Dict]) -> Callable[[Line], HierarchyLevel]:
     """Compile a user pattern list into a first-match classifier; falls back
     to raw_text like PatternComposition (pattern_composition.py:41-56)."""
@@ -59,7 +51,7 @@ def compile_patterns(patterns: List[Dict]) -> Callable[[Line], HierarchyLevel]:
         line_type = p.get("line_type", default_lt)
         level_1 = p.get("level_1")
         level_2 = p.get("level_2")
-        multiline = _bool(p.get("can_be_multiline"))
+        multiline = param_flag(p, "can_be_multiline", True)
         if name == "regexp":
             rx = re.compile(p["regexp"])
             def fn(line, rx=rx, lt=line_type, l1=level_1, l2=level_2, ml=multiline):

@@ -12,11 +12,13 @@ table columns instead of os.stat (SURVEY.md §2.12).
 from __future__ import annotations
 
 import hashlib
+import importlib
 import json
-from typing import Dict, List, Optional, Sequence
+from functools import partial
+from typing import Callable, Dict, List, Optional, Sequence
 
 from dedoc_spark.core.html_extract import HtmlExtractor
-from dedoc_spark.core.model import Line
+from dedoc_spark.core.model import Line, param_flag
 from dedoc_spark.core.structure import assign_hierarchy_levels
 from dedoc_spark.core.tree import construct_tree, flatten_tree, tree_to_text
 from dedoc_spark.core.txt_extract import extract_txt_lines
@@ -42,9 +44,7 @@ def _finalize(url: str, lines: List[Line], tables, warnings, params: Optional[Di
     # open models (operators/line_labeler) through the labeler hook; the
     # default stays the regex stand-in so output bytes are unchanged
     labeler = None
-    if str(params.get("use_trained_labelers", "false")).lower() == "true" and document_type in (
-        "law", "foiv_law", "tz", "diploma"
-    ):
+    if param_flag(params, "use_trained_labelers") and document_type in ("law", "foiv_law", "tz", "diploma"):
         from dedoc_spark.operators.line_labeler import get_labeler, predict_labels_with_model
 
         model = get_labeler("law" if document_type == "foiv_law" else document_type)
@@ -140,15 +140,136 @@ def _finalize(url: str, lines: List[Line], tables, warnings, params: Optional[Di
     return out
 
 
-def extract_html_document(
-    url: str, html: bytes | str, handle_invisible_table: bool = False,
-    params: Optional[Dict] = None,
-) -> Dict:
-    """Full HTML pipeline for one document."""
-    lines, tables, warnings = _HTML_EXTRACTOR.extract(
-        html, url_hash(url), handle_invisible_table=handle_invisible_table
+def _on(module: str, name: str) -> Callable:
+    """``dedoc_spark.core.<module>.<name>``, imported and looked up when
+    called: a worker loads only the reader stacks its rows need, and a
+    wrapper installed on the module attribute is the one that runs."""
+
+    def call(*args):
+        return getattr(importlib.import_module(f"dedoc_spark.core.{module}"), name)(*args)
+
+    return call
+
+
+def _lines_tables(module: str, name: str) -> Callable:
+    """Reader ``fn(payload, seed) -> (lines, tables, warnings)``."""
+    fn = _on(module, name)
+    return lambda url, payload, params: fn(payload, url_hash(url))
+
+
+def _tables(module: str, name: str) -> Callable:
+    """Spreadsheet reader ``fn(payload, seed) -> (tables, warnings)``."""
+    fn = _on(module, name)
+
+    def parse(url, payload, params):
+        tables, warnings = fn(payload, url_hash(url))
+        return [], tables, warnings
+
+    return parse
+
+
+def _texts(module: str, name: str) -> Callable:
+    """Native text layer ``fn(payload) -> (texts, warnings)``, read as one
+    plain-text document."""
+    fn = _on(module, name)
+
+    def parse(url, payload, params):
+        texts, warnings = fn(payload)
+        return extract_txt_lines("\n".join(texts)), [], warnings
+
+    return parse
+
+
+def _utf8(parse: Callable) -> Callable:
+    """Reader over the payload decoded as UTF-8, bad bytes replaced."""
+    return lambda url, payload, params: parse(url, payload.decode("utf-8", errors="replace"), params)
+
+
+def _parse_html(url: str, payload: bytes | str, params: Dict):
+    return _HTML_EXTRACTOR.extract(
+        payload, url_hash(url), handle_invisible_table=param_flag(params, "handle_invisible_table")
     )
-    return _finalize(url, lines, tables, warnings, params)
+
+
+def _parse_json(url: str, payload: str, params: Dict):
+    from dedoc_spark.core.formats import extract_json_lines, json_html_field_attachments
+
+    html_fields = params.get("html_fields")
+    lines = extract_json_lines(payload, url_hash(url), html_fields=html_fields)
+    # excluded fields become html attachments (surface through the
+    # attachment channel, list_attachments with the same params)
+    attached = json_html_field_attachments(payload, html_fields) if html_fields else []
+    return lines, [], [f"attachment: {name}" for name, _ in attached]
+
+
+def _parse_csv(url: str, payload: str, params: Dict, is_tsv: bool = False):
+    from dedoc_spark.core.formats import extract_csv_table
+
+    # explicit delimiter parameter wins (csv_reader.py:31-33)
+    tables, warnings = extract_csv_table(
+        payload, url_hash(url), delimiter=params.get("delimiter"), is_tsv=is_tsv
+    )
+    return [], tables, warnings
+
+
+def _parse_txt(url: str, payload: bytes, params: Dict):
+    from dedoc_spark.core.formats import decode_text_payload
+
+    return extract_txt_lines(decode_text_payload(payload, params.get("encoding"))), [], []
+
+
+def _parse_txt_gz(url: str, payload: bytes, params: Dict):
+    # .txt.gz reads as ONE text document (raw_text_reader.py:34-50)
+    import gzip
+
+    return _parse_txt(url, gzip.decompress(payload), params)
+
+
+def _parse_note(url: str, payload: bytes, params: Dict):
+    # NoteReader (note_reader.py:15-37): one line from the pickled dict's
+    # "content" — restricted unpickler, see formats.py
+    from dedoc_spark.core.formats import extract_note_content
+
+    return [Line(line=extract_note_content(payload))], [], []
+
+
+# format -> parse(url, payload, params) -> (lines, tables, warnings): the one
+# reader list behind both the first read and the content re-sniff
+# (reader_composition.py:21-46, dedoc_manager.py:145-167). Every parse
+# finalizes with the request's params. Adding a format = one entry here.
+_READERS: Dict[str, Callable] = {
+    "html": _parse_html,
+    "json": _utf8(_parse_json),
+    "csv": _utf8(_parse_csv),
+    "tsv": _utf8(partial(_parse_csv, is_tsv=True)),
+    "email": _lines_tables("formats", "extract_email"),
+    "mhtml": _lines_tables("formats", "extract_mhtml"),
+    "txt": _parse_txt,
+    "txt_gz": _parse_txt_gz,
+    "note": _parse_note,
+    "docx": _lines_tables("docx_extract", "extract_docx"),
+    "xlsx": _tables("office_extract", "extract_xlsx_tables"),
+    "xls": _tables("xls_extract", "extract_xls_tables"),
+    "pptx": _lines_tables("office_extract", "extract_pptx"),
+    "odt": _lines_tables("odf_extract", "extract_odt"),
+    "ods": _tables("odf_extract", "extract_ods"),
+    "odp": _lines_tables("odf_extract", "extract_odp"),
+    # native best-effort text layers (core/rtf_extract.py, doc_extract.py)
+    "rtf": _texts("rtf_extract", "extract_rtf_text"),
+    "doc": _texts("doc_extract", "extract_doc_text"),
+    "ppt": _texts("doc_extract", "extract_ppt_texts"),
+}
+# the reference converts these through soffice (absent here): a payload the
+# native parser cannot read gets one content re-sniff, then the typed
+# needs_conversion:<fmt> row
+_NATIVE_BEST_EFFORT = frozenset({"rtf", "odt", "ods", "odp", "doc", "ppt"})
+# formats a content re-sniff may land on
+_RESNIFF_TARGETS = frozenset({"docx", "xlsx", "pptx", "xls", "pdf", "odt", "ods", "odp", "rtf"})
+
+
+def extract_html_document(url: str, html: bytes | str, params: Optional[Dict] = None) -> Dict:
+    """Full HTML pipeline for one document."""
+    return _finalize(url, *_parse_html(url, html, params or {}), params)
 
 
 def extract_txt_document(url: str, text: str, params: Optional[Dict] = None) -> Dict:
@@ -158,75 +279,7 @@ def extract_txt_document(url: str, text: str, params: Optional[Dict] = None) -> 
 
 
 def extract_json_document(url: str, payload: str, params: Optional[Dict] = None) -> Dict:
-    from dedoc_spark.core.formats import extract_json_lines
-
-    params = params or {}
-    html_fields = params.get("html_fields")
-    lines = extract_json_lines(payload, url_hash(url), html_fields=html_fields)
-    warnings: List[str] = []
-    if html_fields:
-        # excluded fields become html attachments (surface through the
-        # attachment channel, list_attachments with the same params)
-        from dedoc_spark.core.formats import json_html_field_attachments
-
-        warnings = [
-            f"attachment: {name}" for name, _ in json_html_field_attachments(payload, html_fields)
-        ]
-    return _finalize(url, lines, [], warnings, params)
-
-
-def extract_csv_document(
-    url: str, payload: str, is_tsv: bool = False, params: Optional[Dict] = None
-) -> Dict:
-    from dedoc_spark.core.formats import extract_csv_table
-
-    params = params or {}
-    tables, warnings = extract_csv_table(
-        payload, url_hash(url), delimiter=params.get("delimiter"), is_tsv=is_tsv
-    )
-    return _finalize(url, [], tables, warnings, params)
-
-
-def extract_email_document(url: str, payload: bytes) -> Dict:
-    from dedoc_spark.core.formats import extract_email
-
-    lines, tables, warnings = extract_email(payload, url_hash(url))
-    return _finalize(url, lines, tables, warnings)
-
-
-def extract_mhtml_document(url: str, payload: bytes) -> Dict:
-    from dedoc_spark.core.formats import extract_mhtml
-
-    lines, tables, warnings = extract_mhtml(payload, url_hash(url))
-    return _finalize(url, lines, tables, warnings)
-
-
-def extract_docx_document(url: str, payload: bytes) -> Dict:
-    from dedoc_spark.core.docx_extract import extract_docx
-
-    lines, tables, warnings = extract_docx(payload, url_hash(url))
-    return _finalize(url, lines, tables, warnings)
-
-
-def extract_xlsx_document(url: str, payload: bytes) -> Dict:
-    from dedoc_spark.core.office_extract import extract_xlsx_tables
-
-    tables, warnings = extract_xlsx_tables(payload, url_hash(url))
-    return _finalize(url, [], tables, warnings)
-
-
-def extract_xls_document(url: str, payload: bytes) -> Dict:
-    from dedoc_spark.core.xls_extract import extract_xls_tables
-
-    tables, warnings = extract_xls_tables(payload, url_hash(url))
-    return _finalize(url, [], tables, warnings)
-
-
-def extract_pptx_document(url: str, payload: bytes) -> Dict:
-    from dedoc_spark.core.office_extract import extract_pptx
-
-    lines, tables, warnings = extract_pptx(payload, url_hash(url))
-    return _finalize(url, lines, tables, warnings)
+    return _finalize(url, *_parse_json(url, payload, params or {}), params)
 
 
 def extract_scanned_image_document(url: str, payload: bytes, params: Optional[Dict] = None) -> Dict:
@@ -239,7 +292,6 @@ def extract_scanned_image_document(url: str, payload: bytes, params: Optional[Di
     deviation: the reference ALWAYS OCRs standalone images, here the route
     is opt-in so the default multimodal-channel bytes stay stable."""
     from dedoc_spark.core.image_decode import decode_image
-    from dedoc_spark.core.ocr import process_scanned_page
 
     # multi-page fax TIFFs: every IFD page is a scanned page (the
     # reference's PIL conversion walks frames the same way)
@@ -251,20 +303,7 @@ def extract_scanned_image_document(url: str, payload: bytes, params: Optional[Di
             raise ValueError("tiff: no decodable pages")
     else:
         rasters = [decode_image(payload)[2]]
-    seed = url_hash(url)
-    lines: List[Line] = []
-    located = []
-    angles: List[float] = []
-    for page_id, rgb in enumerate(rasters):
-        pl, pt, angle = process_scanned_page(rgb, page_id, seed, params or {})
-        lines.extend(pl)
-        located.extend(pt)
-        angles.append(angle)
-    warnings = []
-    if any(angles):
-        joined = ", ".join(f"{a:g}" for a in angles)
-        warnings.append(f"rotated page angles: [{joined}]")
-    return _finalize(url, lines, _merge_located_tables(located, lines), warnings, params)
+    return _ocr_document(url, [[rgb] for rgb in rasters], params or {})
 
 
 def _extract_scanned_pdf(
@@ -283,9 +322,8 @@ def _extract_scanned_pdf(
     text-layer path (pdf_base_reader.py:108-128). ``trailing_warnings``
     mirror pdf_auto_reader.py:67-68 ``result.warnings.extend(warnings)``
     — the routing warning lands AFTER the reader's own."""
-    from dedoc_spark.core.ocr import extract_pdf_page_images, process_scanned_page
+    from dedoc_spark.core.ocr import extract_pdf_page_images
 
-    seed = url_hash(url)
     if page_images is None:
         page_images = extract_pdf_page_images(payload)
     warnings: List[str] = []
@@ -297,36 +335,48 @@ def _extract_scanned_pdf(
         if lo > 1 or hi < len(page_images):
             warnings.append("The document is partially parsed")
         page_images = page_images[lo - 1 : hi]
+    return _ocr_document(url, page_images, params, warnings, trailing_warnings)
+
+
+def _ocr_document(
+    url: str,
+    pages: Sequence[Sequence],
+    params: Dict,
+    warnings: Sequence[str] = (),
+    trailing_warnings: Sequence[str] = (),
+) -> Dict:
+    """Scanned-page pipeline over ``pages`` (each a list of rasters): one
+    core/ocr.process_scanned_page per raster, then page-adjacent table
+    continuations merge (multipage_table_extractor, like the txt-layer path
+    in pdf_extract.py:946-955) into schema Tables. Warnings keep the order
+    ``warnings``, page rotation, ``trailing_warnings``."""
+    from dedoc_spark.core.ocr import process_scanned_page
+
+    seed = url_hash(url)
     lines: List[Line] = []
     located = []
     angles: List[float] = []
-    for page_id, images in enumerate(page_images):
-        for img in images:
-            pl, pt, angle = process_scanned_page(img, page_id, seed, params)
+    for page_id, rasters in enumerate(pages):
+        for raster in rasters:
+            pl, pt, angle = process_scanned_page(raster, page_id, seed, params)
             lines.extend(pl)
             located.extend(pt)
             angles.append(angle)
+    warnings = list(warnings)
     if any(angles):
         joined = ", ".join(f"{a:g}" for a in angles)
         warnings.append(f"rotated page angles: [{joined}]")
     warnings.extend(trailing_warnings)
-    return _finalize(url, lines, _merge_located_tables(located, lines), warnings, params)
+    tables = []
+    if located:
+        from dedoc_spark.core.model import Table
+        from dedoc_spark.core.multipage import extract_multipage_tables
 
-
-def _merge_located_tables(located, lines):
-    """Scanned-route table finish: page-adjacent continuations merge
-    (multipage_table_extractor, like the txt-layer path in
-    pdf_extract.py:946-955) and LocatedTables become schema Tables."""
-    if not located:
-        return []
-    from dedoc_spark.core.model import Table
-    from dedoc_spark.core.multipage import extract_multipage_tables
-
-    merged = extract_multipage_tables(located, lines)
-    return [
-        Table(cells=t.cells, page_id=t.location.page_number, uid=t.uid)
-        for t in merged
-    ]
+        tables = [
+            Table(cells=t.cells, page_id=t.location.page_number, uid=t.uid)
+            for t in extract_multipage_tables(located, lines)
+        ]
+    return _finalize(url, lines, tables, warnings, params)
 
 
 def extract_pdf_document(url: str, payload: bytes, params: Optional[Dict] = None) -> Dict:
@@ -355,48 +405,34 @@ def extract_pdf_document(url: str, payload: bytes, params: Optional[Dict] = None
             return _error_row(url, "needs_password:pdf")
     if str(params.get("pdf_with_text_layer", "auto")).lower() == "false":
         return _extract_scanned_pdf(url, payload, params)
-    pages_range = params.get("pages")
     tables = []
-    need_para = bool(params.get("need_paragraph_classification"))
-    hf_raw = params.get("need_header_footer_analysis")
-    need_hf = True if hf_raw is None else str(hf_raw).lower() == "true"
+    need_para = param_flag(params, "need_paragraph_classification")
     # is_one_column_document (parameter_utils; reference DEFAULT "auto",
     # api_args.py:33): "false" → two-column reading order, "true" →
     # single-column, "auto"/default → per-page x-histogram detection
     # (pdf_extract._looks_two_column) that falls back to single-column on
     # ambiguity, so one-column documents keep their previous bytes
     raw_one_col = str(params.get("is_one_column_document", "auto")).lower()
-    one_col = None if raw_one_col in ("auto", "none") else raw_one_col != "false"
-    need_gost = bool(params.get("need_gost_frame_analysis"))
-    if params.get("need_pdf_table_analysis"):
+    layout = dict(
+        pages_range=params.get("pages"),
+        # paragraph classification needs layout bboxes — force them on in
+        # both branches, or the flag silently no-ops
+        with_layout=param_flag(params, "with_layout") or need_para,
+        need_paragraph_classification=need_para,
+        need_header_footer_analysis=param_flag(params, "need_header_footer_analysis", True),
+        one_column=None if raw_one_col in ("auto", "none") else raw_one_col != "false",
+        need_gost_frame_analysis=param_flag(params, "need_gost_frame_analysis"),
+    )
+    if param_flag(params, "need_pdf_table_analysis"):
         # pdf_txtlayer_reader.py:49-73 table path: ruled tables detected
         # from the page's painted line art, captured lines leave the flow
         lines, tables, warnings = extract_pdf_lines_tables(
-            payload,
-            url_hash(url),
-            pages_range=pages_range,
-            table_type=str(params.get("table_type", "")),
-            # paragraph classification needs layout bboxes — force them on
-            # exactly like the non-table branch, or the flag silently no-ops
-            with_layout=bool(params.get("with_layout")) or need_para,
-            need_paragraph_classification=need_para,
-            need_header_footer_analysis=need_hf,
-            one_column=one_col,
-            need_gost_frame_analysis=need_gost,
+            payload, url_hash(url), table_type=str(params.get("table_type", "")), **layout
         )
     else:
-        lines, warnings = extract_pdf_lines(
-            payload,
-            url_hash(url),
-            pages_range=pages_range,
-            with_layout=bool(params.get("with_layout")) or need_para,
-            need_paragraph_classification=need_para,
-            need_header_footer_analysis=need_hf,
-            one_column=one_col,
-            need_gost_frame_analysis=need_gost,
-        )
+        lines, warnings = extract_pdf_lines(payload, url_hash(url), **layout)
     if params.get("pdf_with_text_layer", "auto") in ("auto", "auto_tabby"):
-        fast = str(params.get("fast_textual_layer_detection", "false")).lower() == "true"
+        fast = param_flag(params, "fast_textual_layer_detection")
         is_correct, first_correct = detect_txt_layer(lines, fast=fast)
         if is_correct:
             warnings.append("Assume document has a correct textual layer")
@@ -443,54 +479,24 @@ def _error_row(url: str, error: str, warnings: Optional[List[str]] = None) -> Di
     }
 
 
-def _content_resniff(
-    url: str,
-    html: bytes,
-    failed_fmt: Optional[str],
-    params: Optional[Dict],
-    handle_invisible_table: bool,
-) -> Optional[Dict]:
+def _content_resniff(url: str, html: bytes, failed_fmt: Optional[str], params: Dict) -> Optional[Dict]:
     """The reference's mime re-sniff retry (dedoc_manager.py:145-167):
     when extension-routed parsing fails, re-detect by CONTENT ONLY and try
     the sniffed reader once (catches misnamed files, e.g. an ODT shipped
     as .doc). Returns None when no different parseable format is found."""
     from dedoc_spark.core.formats import detect_format
 
-    fmt2 = detect_format("resniff", html, None)  # no extension → pure magic
-    if fmt2 == failed_fmt or fmt2.startswith(("needs_", "media:")) or fmt2 == "zip":
+    fmt = detect_format("resniff", html, None)  # no extension → pure magic
+    if fmt == failed_fmt or fmt not in _RESNIFF_TARGETS:
         return None
     try:
-        if fmt2 == "docx":
-            out = extract_docx_document(url, html)
-        elif fmt2 == "xlsx":
-            out = extract_xlsx_document(url, html)
-        elif fmt2 == "pptx":
-            out = extract_pptx_document(url, html)
-        elif fmt2 == "xls":
-            out = extract_xls_document(url, html)
-        elif fmt2 == "pdf":
+        if fmt == "pdf":
             out = extract_pdf_document(url, html, params)
-        elif fmt2 in ("odt", "ods", "odp"):
-            from dedoc_spark.core import odf_extract
-
-            if fmt2 == "odt":
-                lines, tables, w = odf_extract.extract_odt(html, url_hash(url))
-            elif fmt2 == "ods":
-                tables, w = odf_extract.extract_ods(html, url_hash(url))
-                lines = []
-            else:
-                lines, tables, w = odf_extract.extract_odp(html, url_hash(url))
-            out = _finalize(url, lines, tables, w, params)
-        elif fmt2 == "rtf":
-            from dedoc_spark.core.rtf_extract import extract_rtf_text
-
-            texts, w = extract_rtf_text(html)
-            out = _finalize(url, extract_txt_lines("\n".join(texts)), [], w, params)
         else:
-            return None
+            out = _finalize(url, *_READERS[fmt](url, html, params), params)
     except Exception:
         return None
-    out["warnings"] = [f"format re-sniffed by content: {fmt2}"] + list(out["warnings"])
+    out["warnings"] = [f"format re-sniffed by content: {fmt}"] + list(out["warnings"])
     return out
 
 
@@ -498,7 +504,6 @@ def extract_document(
     url: str,
     html: Optional[bytes],
     text: Optional[str],
-    handle_invisible_table: bool = False,
     params: Optional[Dict] = None,
 ) -> Dict:
     """Format dispatch for one input-table row (ReaderComposition
@@ -511,135 +516,32 @@ def extract_document(
     fmt: Optional[str] = None
     try:
         params = params or {}
-        handle_invisible_table = bool(params.get("handle_invisible_table", handle_invisible_table))
         fmt = detect_format(url, html, text)
-        if html:
-            # ArticleReader's TEI analysis half (article_reader.py:64-80):
-            # the GROBID HTTP call is an external service (de-scoped); a
-            # user-supplied GROBID response routes here and yields the
-            # reference's article structure. Routing is the DEDICATED
-            # extension (*.tei/*.tei.xml — a new reader, like .note.pickle)
-            # or the document_type="article" opt-in + a <TEI> root sniff;
-            # a <TEI> payload under another url/params keeps its previous
-            # reader (default bytes stay stable per CLAUDE.md).
-            low_url = url.lower()
-            is_tei_ext = low_url.endswith((".tei", ".tei.xml"))
-            if is_tei_ext or params.get("document_type") == "article":
-                from dedoc_spark.core.tei_extract import looks_like_tei
+        if not html:
+            return extract_txt_document(url, text or "", params)
+        # ArticleReader's TEI analysis half (article_reader.py:64-80):
+        # the GROBID HTTP call is an external service (de-scoped); a
+        # user-supplied GROBID response routes here and yields the
+        # reference's article structure. Routing is the DEDICATED
+        # extension (*.tei/*.tei.xml — a new reader, like .note.pickle)
+        # or the document_type="article" opt-in + a <TEI> root sniff;
+        # a <TEI> payload under another url/params keeps its previous
+        # reader (default bytes stay stable per CLAUDE.md).
+        if url.lower().endswith((".tei", ".tei.xml")) or params.get("document_type") == "article":
+            from dedoc_spark.core.tei_extract import looks_like_tei
 
-                if looks_like_tei(url, html):
-                    from dedoc_spark.core.tei_extract import extract_tei_lines_tables
+            if looks_like_tei(url, html):
+                from dedoc_spark.core.tei_extract import extract_tei_lines_tables
 
-                    lines, tei_tables, warnings = extract_tei_lines_tables(
-                        html,
-                        url_hash(url),
-                        with_attachments=str(params.get("with_attachments", "false")).lower()
-                        == "true",
-                    )
-                    params = dict(params)
-                    params.setdefault("document_type", "article")
-                    return _finalize(url, lines, tei_tables, warnings, params)
-        if fmt == "html" and html:
-            return extract_html_document(url, html, handle_invisible_table, params)
-        if fmt == "json" and html:
-            return extract_json_document(url, html.decode("utf-8", errors="replace"), params)
-        if fmt in ("csv", "tsv") and html:
-            # explicit delimiter parameter wins (csv_reader.py:31-33)
-            return extract_csv_document(
-                url, html.decode("utf-8", errors="replace"), is_tsv=fmt == "tsv", params=params
-            )
-        if fmt == "email" and html:
-            return extract_email_document(url, html)
-        if fmt == "mhtml" and html:
-            return extract_mhtml_document(url, html)
-        if fmt == "txt" and html:
-            from dedoc_spark.core.formats import decode_text_payload
-
-            return extract_txt_document(
-                url, decode_text_payload(html, params.get("encoding")), params
-            )
-        if fmt == "note" and html:
-            # NoteReader (note_reader.py:15-37): one line from the pickled
-            # dict's "content" — restricted unpickler, see formats.py
-            from dedoc_spark.core.formats import extract_note_content
-
-            lines = [Line(line=extract_note_content(html))]
-            return _finalize(url, lines, [], [], params)
-        if fmt == "txt_gz" and html:
-            # .txt.gz reads as ONE text document (raw_text_reader.py:34-50)
-            import gzip as _gzip
-
-            from dedoc_spark.core.formats import decode_text_payload
-
-            return extract_txt_document(
-                url, decode_text_payload(_gzip.decompress(html), params.get("encoding")), params
-            )
-        if fmt == "docx" and html:
-            return extract_docx_document(url, html)
-        if fmt == "pdf" and html:
+                lines, tei_tables, warnings = extract_tei_lines_tables(
+                    html, url_hash(url), with_attachments=param_flag(params, "with_attachments")
+                )
+                params = dict(params)
+                params.setdefault("document_type", "article")
+                return _finalize(url, lines, tei_tables, warnings, params)
+        if fmt == "pdf":
             return extract_pdf_document(url, html, params)
-        if fmt == "xlsx" and html:
-            return extract_xlsx_document(url, html)
-        if fmt == "xls" and html:
-            return extract_xls_document(url, html)
-        if fmt == "rtf" and html:
-            try:
-                from dedoc_spark.core.rtf_extract import extract_rtf_text
-
-                texts, warnings_nat = extract_rtf_text(html)
-            except Exception as e:
-                retry = _content_resniff(url, html, "rtf", params, handle_invisible_table)
-                if retry is not None:
-                    return retry
-                return _error_row(
-                    url, "needs_conversion:rtf", warnings=[f"native parse failed: {e}"]
-                )
-            lines = extract_txt_lines("\n".join(texts))
-            return _finalize(url, lines, [], warnings_nat, params)
-        if fmt in ("odt", "ods", "odp") and html:
-            try:
-                from dedoc_spark.core import odf_extract
-
-                if fmt == "odt":
-                    lines, tables, warnings_nat = odf_extract.extract_odt(html, url_hash(url))
-                elif fmt == "ods":
-                    tables, warnings_nat = odf_extract.extract_ods(html, url_hash(url))
-                    lines = []
-                else:
-                    lines, tables, warnings_nat = odf_extract.extract_odp(html, url_hash(url))
-            except Exception as e:
-                retry = _content_resniff(url, html, fmt, params, handle_invisible_table)
-                if retry is not None:
-                    return retry
-                return _error_row(
-                    url, f"needs_conversion:{fmt}", warnings=[f"native parse failed: {e}"]
-                )
-            return _finalize(url, lines, tables, warnings_nat, params)
-        if fmt in ("doc", "ppt") and html:
-            # native best-effort text layer (core/doc_extract.py); a payload
-            # the native parser can't read keeps the typed conversion row
-            try:
-                if fmt == "doc":
-                    from dedoc_spark.core.doc_extract import extract_doc_text
-
-                    texts, warnings_nat = extract_doc_text(html)
-                else:
-                    from dedoc_spark.core.doc_extract import extract_ppt_texts
-
-                    texts, warnings_nat = extract_ppt_texts(html)
-            except Exception as e:
-                retry = _content_resniff(url, html, fmt, params, handle_invisible_table)
-                if retry is not None:
-                    return retry
-                return _error_row(
-                    url, f"needs_conversion:{fmt}", warnings=[f"native parse failed: {e}"]
-                )
-            lines = extract_txt_lines("\n".join(texts))
-            out = _finalize(url, lines, [], warnings_nat, params)
-            return out
-        if fmt == "pptx" and html:
-            return extract_pptx_document(url, html)
-        if fmt == "zip" and html:
+        if fmt == "zip":
             # archives are exploded into member rows by
             # operators/archives.extract_with_archives; a bare per-row call
             # reports the members instead of parsing zip bytes as markup
@@ -657,12 +559,12 @@ def extract_document(
                 "needs_explosion:zip (use operators.archives.extract_with_archives)",
                 warnings=[f"archive member: {n}" for n in names],
             )
-        if fmt.startswith(("needs_conversion:", "needs_unpacker:")) and html:
+        if fmt.startswith(("needs_conversion:", "needs_unpacker:")):
             # reference converts these via soffice (converters/concrete_converters/
             # docx_converter.py:15-28); soffice is absent here, so emit a typed
             # error row rather than html-fallback garbage lines
             return _error_row(url, fmt)
-        if fmt.startswith("media:") and html:
+        if fmt.startswith("media:"):
             # pdf_with_text_layer="false" forces the PdfImageReader branch
             # for image formats too (it registers image_like_format,
             # pdf_image_reader.py:41-47) — scanned-page OCR over the
@@ -686,12 +588,21 @@ def extract_document(
                     f"exif.{k}={v}" for k, v in sorted(extract_image_metadata(html).items())
                 )
             return _error_row(url, f"needs_decoder:{fmt[6:]}", warnings=warnings_list)
-        if html:  # unknown markup-ish bytes: html fallback (web default)
-            return extract_html_document(url, html, handle_invisible_table, params)
-        return extract_txt_document(url, text or "", params)
+        # unknown markup-ish bytes: html fallback (web default)
+        parse = _READERS.get(fmt, _parse_html)
+        if fmt not in _NATIVE_BEST_EFFORT:
+            return _finalize(url, *parse(url, html, params), params)
+        try:
+            lines, tables, warnings = parse(url, html, params)
+        except Exception as e:
+            retry = _content_resniff(url, html, fmt, params)
+            if retry is not None:
+                return retry
+            return _error_row(url, f"needs_conversion:{fmt}", warnings=[f"native parse failed: {e}"])
+        return _finalize(url, lines, tables, warnings, params)
     except Exception as e:  # error channel, never job failure
         if html:
-            retry = _content_resniff(url, html, fmt, params, handle_invisible_table)
+            retry = _content_resniff(url, html, fmt, params)
             if retry is not None:
                 return retry
         return _error_row(url, f"{type(e).__name__}: {e}")

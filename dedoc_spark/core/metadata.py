@@ -20,6 +20,8 @@ from datetime import datetime, timedelta, timezone
 from typing import Dict, Optional
 from xml.etree import ElementTree as ET
 
+from dedoc_spark.core.model import param_flag
+
 _PDF_DATE_RE = re.compile(
     r"D:(\d{4})(\d{2})?(\d{2})?(\d{2})?(\d{2})?(\d{2})?([+\-Zz])?(\d{2})?'?(\d{2})?"
 )
@@ -429,7 +431,7 @@ def extract_document_metadata(
             out = extract_image_metadata(payload)
     except Exception:
         return {}
-    if bool(params.get("is_attached")) and str(params.get("return_base64", "false")).lower() == "true":
+    if param_flag(params, "is_attached") and param_flag(params, "return_base64"):
         import base64 as _b64
 
         out = dict(out)

@@ -28,6 +28,15 @@ NON_MERGEABLE_NAMES = frozenset(
 )
 
 
+def param_flag(params: Optional[Dict], name: str, default: bool = False) -> bool:
+    """Boolean request parameter under the reference's rule
+    (dedoc/utils/parameter_utils.py): on only when its string form is
+    "true" in any case, so the string "false" is off; an absent or None
+    value takes the per-name ``default``."""
+    value = (params or {}).get(name)
+    return default if value is None else str(value).lower() == "true"
+
+
 class Annotation:
     """Span annotation over a line's text: [start, end) with a stringly value."""
 

@@ -49,7 +49,7 @@ from typing import Dict, List, Optional, Sequence, Tuple
 
 import numpy as np
 
-from dedoc_spark.core.model import Annotation, Line
+from dedoc_spark.core.model import Annotation, Line, param_flag
 from dedoc_spark.core.pdf_layout import BBox, Location
 from dedoc_spark.core.scanfont import BOLD_GLYPHS, GLYPH, GLYPHS, charset_for_language
 
@@ -1135,7 +1135,7 @@ def process_scanned_page(
             angle += skew
 
     # Step 2: binarization (need_binarization, pdf_image_reader.py:76-81)
-    if str(params.get("need_binarization", "false")).lower() == "true":
+    if param_flag(params, "need_binarization"):
         image = adaptive_binarize(image)
         mask = ink_mask(image)
 
@@ -1146,7 +1146,7 @@ def process_scanned_page(
     # Step 3: tables first, flow OCR on the cleaned image
     # (pdf_image_reader.py:83-91 ordering)
     tables: List = []
-    if params.get("need_pdf_table_analysis"):
+    if param_flag(params, "need_pdf_table_analysis"):
         tables, image = recognize_tables_from_image(
             image, page_num, page_seed, language=language,
             table_type=str(params.get("table_type", "")),

@@ -1,11 +1,35 @@
 import os
 import sys
+from pathlib import Path
 
 import pytest
 
 # make sure worker python == driver python
 os.environ.setdefault("PYSPARK_PYTHON", sys.executable)
 os.environ.setdefault("PYSPARK_DRIVER_PYTHON", sys.executable)
+
+# the reference's tests/data, from a dedoc checkout next to this repository
+# unless DEDOC_REFERENCE_DATA names another directory
+REFERENCE_DATA = Path(
+    os.environ.get(
+        "DEDOC_REFERENCE_DATA", Path(__file__).resolve().parents[2] / "reference" / "tests" / "data"
+    )
+)
+
+
+@pytest.fixture
+def reference_file():
+    """``reference_file("scanned/example.jpeg")`` -> path of a file in the
+    reference corpus; the calling test is skipped when that file is
+    missing, and runs (and can fail) when it is present."""
+
+    def get(relpath: str) -> Path:
+        path = REFERENCE_DATA / relpath
+        if not path.is_file():
+            pytest.skip(f"reference corpus file not available: {relpath}")
+        return path
+
+    return get
 
 
 @pytest.fixture(scope="session")

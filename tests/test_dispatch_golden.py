@@ -1,0 +1,183 @@
+"""Golden digests of format dispatch: one small document per format, sent
+through ``extract_document`` under its own extension, a wrong extension
+and no extension, plus broken payloads and text-only rows, under the
+default parameters and under ``need_pdf_table_analysis``.
+
+Every row's md5 is pinned in ``dispatch_golden.json``, so any change in
+which reader a row reaches, in the re-sniff retry or in the error channel
+shows up here. After an intended output change, re-record with
+``python tests/test_dispatch_golden.py --write``.
+"""
+
+from __future__ import annotations
+
+import gzip
+import hashlib
+import io
+import json
+import os
+import pickle
+import sys
+import zipfile
+
+GOLDEN = os.path.join(os.path.dirname(os.path.abspath(__file__)), "dispatch_golden.json")
+PARAMS = {"default": None, "tables": {"need_pdf_table_analysis": True}}
+
+EML = b"""From: Alice <alice@example.com>
+To: bob@example.com
+Subject: Quarterly report
+MIME-Version: 1.0
+Content-Type: multipart/alternative; boundary="B"
+
+--B
+Content-Type: text/plain; charset="utf-8"
+
+1. Budget
+plain body line
+--B
+Content-Type: text/html; charset="utf-8"
+
+<p>html body</p>
+--B--
+"""
+
+MHTML = b"""MIME-Version: 1.0
+Content-Type: multipart/related; boundary="M"
+
+--M
+Content-Type: text/html; charset="utf-8"
+Content-Location: https://p.example/
+
+<html><body><h1>Archived page</h1><p>content</p></body></html>
+--M--
+"""
+
+TEI = b"""<?xml version="1.0" encoding="UTF-8"?>
+<TEI xmlns="http://www.tei-c.org/ns/1.0">
+ <teiHeader><fileDesc><titleStmt><title level="a" type="main">On Readers</title></titleStmt>
+ </fileDesc><profileDesc><abstract><p>One table for all readers.</p></abstract></profileDesc></teiHeader>
+ <text><body><div><head n="1">Introduction</head><p>Dispatch by format.</p></div></body></text>
+</TEI>
+"""
+
+
+def _fixed_time(payload: bytes) -> bytes:
+    """Zip-based fixtures stamp members with the clock; pin the stamps so
+    the payload bytes (and rows that echo them) are the same every run."""
+    if payload[:4] != b"PK\x03\x04":
+        return payload
+    src = zipfile.ZipFile(io.BytesIO(payload))
+    buf = io.BytesIO()
+    with zipfile.ZipFile(buf, "w") as dst:
+        for info in src.infolist():
+            info.date_time = (1980, 1, 1, 0, 0, 0)
+            dst.writestr(info, src.read(info.filename))
+    return buf.getvalue()
+
+
+def _documents():
+    """(extension, payload) — one valid document per format."""
+    from dedoc_spark.sources import docx_fixture as dx
+    from dedoc_spark.sources import office_fixture as of
+    from dedoc_spark.sources.pdf_fixture import build_pdf, table_ops
+
+    paras = ["1. Introduction", "first body line", "2. Method", "second body line"]
+    grid = [["name", "value"], ["alpha", "1"], ["beta", "2"]]
+    docx_body = "".join(dx.paragraph([(p, "")], style="Heading1" if p[0].isdigit() else None) for p in paras)
+    docx_body += dx.table([[(c, 1, None) for c in row] for row in grid])
+    zip_buf = io.BytesIO()
+    with zipfile.ZipFile(zip_buf, "w") as zf:
+        zf.writestr("inner.txt", "inner text")
+    pdf = build_pdf(
+        [[("Section 1", True), ("body line one", False), ("body line two", False)]],
+        extra_content=[table_ops(72, 400, [120, 120], 20, grid)],
+    )
+    docs = [
+        ("html", b"<html><body><h1>Title</h1><p>para</p><ul><li>item</li></ul></body></html>"),
+        ("txt", "\n".join(paras).encode("utf-8")),
+        ("json", json.dumps({"title": "T", "items": [{"name": "a", "text": "b"}]}).encode()),
+        ("csv", b"name,value\nalpha,1\nbeta,2\n"),
+        ("tsv", b"name\tvalue\nalpha\t1\n"),
+        ("eml", EML),
+        ("mhtml", MHTML),
+        ("txt.gz", gzip.compress("\n".join(paras).encode("utf-8"), mtime=0)),
+        ("note.pickle", pickle.dumps({"content": "note body"}, protocol=4)),
+        ("tei.xml", TEI),
+        ("docx", dx.build_docx(docx_body)),
+        ("xlsx", of.build_xlsx([grid])),
+        ("xls", of.build_xls([grid])),
+        ("pptx", of.build_pptx([{"shapes": [["Slide title", "bullet"]], "table": grid}])),
+        ("odt", of.build_odt([("h", 1, paras[0]), ("p", paras[1]), ("list", ["x", "y"])])),
+        ("ods", of.build_ods([grid])),
+        ("odp", of.build_odp([["Slide title", "bullet"]])),
+        ("rtf", b"{\\rtf1\\ansi{\\fonttbl{\\f0 Times;}}\n1. Introduction\\par\nbody\\par\n}"),
+        ("doc", of.build_doc(paras)),
+        ("ppt", of.build_ppt(["Slide text body"])),
+        ("pdf", pdf),
+        ("zip", zip_buf.getvalue()),
+        ("png", b"\x89PNG\r\n\x1a\n" + b"\x00" * 32),
+    ]
+    return [(ext, _fixed_time(payload)) for ext, payload in docs]
+
+
+def _wrong_ext(ext: str) -> str:
+    """A native best-effort extension (parse failure re-sniffs) for every
+    document, and a different one for the .doc payload itself."""
+    return "rtf" if ext == "doc" else "doc"
+
+
+def _cases():
+    """(case name, url, html, text)."""
+    cases = []
+    docs = _documents()
+    for ext, payload in docs:
+        cases.append((f"{ext}/own", f"https://x/d.{ext}", payload, None))
+        cases.append((f"{ext}/wrong", f"https://x/d.{_wrong_ext(ext)}", payload, None))
+        cases.append((f"{ext}/as_xlsx", "https://x/d.xlsx" if ext != "xlsx" else "https://x/d.docx", payload, None))
+        cases.append((f"{ext}/noext", "https://x/download", payload, None))
+    docx = dict(docs)["docx"]
+    broken = {
+        "junk": bytes(range(256)) * 4,
+        "ole2_header": b"\xd0\xcf\x11\xe0\xa1\xb1\x1a\xe1" + b"\x00" * 504,
+        "truncated_zip": docx[: len(docx) // 2],
+        "bad_rtf": b"{\\rtf1 {\\*\\unclosed \\bin999999 body",
+    }
+    for name, payload in broken.items():
+        for ext in ("doc", "ppt", "xls", "rtf", "odt", "docx", "xlsx", "pptx", "pdf", "zip", "txt", ""):
+            url = f"https://x/broken.{ext}" if ext else "https://x/broken"
+            cases.append((f"broken_{name}/{ext or 'noext'}", url, payload, None))
+    for ext in ("txt", "html", "pdf", "docx", ""):
+        url = f"https://x/t.{ext}" if ext else "https://x/t"
+        cases.append((f"text_only/{ext or 'noext'}", url, None, "1. Heading\nplain body"))
+        cases.append((f"empty/{ext or 'noext'}", url, None, None))
+    return cases
+
+
+def _digests():
+    from dedoc_spark.core.document import extract_document
+
+    out = {}
+    for pname, params in PARAMS.items():
+        for name, url, html, text in _cases():
+            row = extract_document(url, html, text, params=None if params is None else dict(params))
+            blob = json.dumps(row, sort_keys=True, ensure_ascii=False).encode("utf-8")
+            out[f"{pname}:{name}"] = hashlib.md5(blob).hexdigest()
+    return out
+
+
+def test_dispatch_golden_digests():
+    with open(GOLDEN, encoding="utf-8") as f:
+        want = json.load(f)
+    got = _digests()
+    assert sorted(got) == sorted(want)
+    changed = sorted(k for k in want if got[k] != want[k])
+    assert not changed, f"{len(changed)} rows changed: {changed[:20]}"
+
+
+if __name__ == "__main__":
+    if sys.argv[1:] != ["--write"]:
+        sys.exit("usage: python tests/test_dispatch_golden.py --write")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    with open(GOLDEN, "w", encoding="utf-8") as f:
+        json.dump(_digests(), f, indent=1, sort_keys=True)
+        f.write("\n")

@@ -31,34 +31,34 @@ def test_non_multiple_of_8_dimensions():
     assert (w, h) == (21, 13) and rgb.shape == (13, 21, 3)
 
 
-def test_reference_scanned_page():
+def test_reference_scanned_page(reference_file):
     """The reference's scanned-page JPEG (827×1170, 4:2:0 color) decodes to
     its SOF dimensions with mostly-white pixel stats."""
-    data = open("/root/reference/tests/data/scanned/example.jpeg", "rb").read()
+    data = reference_file("scanned/example.jpeg").read_bytes()
     w, h, rgb = decode_jpeg(data)
     assert (w, h) == (827, 1170)
     assert rgb.mean() > 240  # a scanned white page
     assert rgb.std() > 5  # but not blank — there is text
 
 
-def test_progressive_real_image():
+def test_progressive_real_image(reference_file):
     """Progressive JPEG (SOF2 with DC/AC spectral-selection + successive-
     approximation scans): the reference's progressive scan decodes to its
     SOF dimensions with scanned-page stats."""
-    data = open("/root/reference/tests/data/tz/small_image.jpg", "rb").read()
+    data = reference_file("tz/small_image.jpg").read_bytes()
     w, h, rgb = decode_jpeg(data)
     assert (w, h) == (1656, 2339)
     assert rgb.mean() > 240 and rgb.std() > 5
 
 
-def test_cross_format_ground_truth():
+def test_cross_format_ground_truth(reference_file):
     """The corpus holds the SAME scanned page as lossless PNG and as JPEG:
     our JPEG decode must match the PNG pixels up to compression noise —
     ground truth fully independent of our own encoder."""
     from dedoc_spark.core.image_decode import decode_image
 
-    png = decode_image(open("/root/reference/tests/data/scanned/example.png", "rb").read())
-    jpg = decode_image(open("/root/reference/tests/data/scanned/example.jpeg", "rb").read())
+    png = decode_image(reference_file("scanned/example.png").read_bytes())
+    jpg = decode_image(reference_file("scanned/example.jpeg").read_bytes())
     assert (png[0], png[1]) == (jpg[0], jpg[1]) == (827, 1170)
     a, b = png[2].astype(float), jpg[2].astype(float)
     diff = np.abs(a - b)

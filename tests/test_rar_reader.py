@@ -13,7 +13,14 @@ from dedoc_spark.core.rar_extract import list_members
 from dedoc_spark.sources.archive_fixture import build_rar4_stored as _rar4_stored
 from dedoc_spark.sources.archive_fixture import build_rar5_stored as _rar5_stored
 
-REF_ARCHIVES = "/root/reference/tests/data/archives"
+
+def _rar4_compressed(members):
+    """A stored RAR4 fixture whose first member claims method 0x33
+    ("normal" compression): the synthetic stand-in for the reference's
+    real compressed archives."""
+    payload = bytearray(_rar4_stored(members))
+    payload[7 + 13 + 25] = 0x33  # signature, MAIN_HEAD, then the file block's METHOD
+    return bytes(payload)
 
 
 @pytest.mark.parametrize("builder", [_rar4_stored, _rar5_stored])
@@ -26,7 +33,13 @@ def test_stored_members_extract(builder):
     assert list_archive_members(payload) == got
 
 
-def test_reference_rar4_compressed_members_typed_error():
+def test_synthetic_compressed_member_typed_error():
+    payload = _rar4_compressed([("doc/english_doc.docx", b"x" * 16)])
+    with pytest.raises(ValueError, match="needs_unpacker:rar compressed member .*english_doc.docx"):
+        list_members(payload)
+
+
+def test_reference_rar4_compressed_members_typed_error(reference_file):
     """The reference's real rar4 archives: the container walk reaches the
     first member (offsets right → the NAME parses), and its proprietary
     compression raises the typed needs_unpacker error."""
@@ -34,7 +47,7 @@ def test_reference_rar4_compressed_members_typed_error():
         ("arch_with_attachs.rar", "arch_with_attachs/english_doc.pdf"),
         ("subfolders.rar", "subfolders/english/doc/english_doc.docx"),
     ]:
-        payload = open(f"{REF_ARCHIVES}/{fname}", "rb").read()
+        payload = reference_file(f"archives/{fname}").read_bytes()
         with pytest.raises(ValueError, match="needs_unpacker:rar compressed"):
             list_members(payload)
         try:
@@ -43,8 +56,8 @@ def test_reference_rar4_compressed_members_typed_error():
             assert member in str(e)
 
 
-def test_reference_rar5_compressed_members_typed_error():
-    payload = open(f"{REF_ARCHIVES}/zipka.rar", "rb").read()
+def test_reference_rar5_compressed_members_typed_error(reference_file):
+    payload = reference_file("archives/zipka.rar").read_bytes()
     with pytest.raises(ValueError, match="zipka/ZD-odin.jpg"):
         list_members(payload)
 
@@ -54,7 +67,7 @@ def test_extract_document_rar_error_row():
     a crash; a stored rar lists its members in the warnings channel."""
     from dedoc_spark.core.document import extract_document
 
-    compressed = open(f"{REF_ARCHIVES}/zipka.rar", "rb").read()
+    compressed = _rar4_compressed([("inner.txt", b"inner text")])
     d = extract_document("x.rar", compressed, None)
     assert d["error"] is not None and "needs_unpacker:rar" in d["error"]
 

@@ -2,7 +2,6 @@
 the reference's own real .7z archives (tests/data/archives), whose member
 bytes are cross-checked against the sibling .zip of the same content."""
 
-import glob
 import zipfile
 
 import pytest
@@ -32,18 +31,20 @@ def test_dispatch_and_archive_channel():
     assert list_archive_members(blob) == MEMBERS
 
 
-def test_reference_corpus_archives():
+def test_reference_corpus_archives(reference_file):
     """Every .7z in the reference's test data must list, with directories
     skipped; zipka.7z member bytes must equal the sibling zipka.zip's."""
-    paths = sorted(glob.glob("/root/reference/tests/data/**/*.7z", recursive=True))
+    zipka_7z = reference_file("archives/zipka.7z")
+    zipka_zip = reference_file("archives/zipka.zip")
+    paths = sorted(zipka_7z.parents[1].rglob("*.7z"))
     assert len(paths) >= 3
     for path in paths:
-        members = list_members(open(path, "rb").read())
+        members = list_members(path.read_bytes())
         assert members, path
         assert all(name.rstrip("/") == name for name, _ in members)
 
-    sz = dict(list_members(open("/root/reference/tests/data/archives/zipka.7z", "rb").read()))
-    zf = zipfile.ZipFile("/root/reference/tests/data/archives/zipka.zip")
+    sz = dict(list_members(zipka_7z.read_bytes()))
+    zf = zipfile.ZipFile(zipka_zip)
     for info in zf.infolist():
         if info.is_dir():
             continue
