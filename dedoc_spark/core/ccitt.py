@@ -124,11 +124,15 @@ def _build_run_lut(decode: Dict[Tuple[int, int], int]) -> List[Optional[Tuple[in
     """14-bit window -> (run, code length) for the unique prefix match
     (the T.4 tables are prefix-free per color, so the windows a code
     covers never overlap another's); None = no code matches. Replaces
-    the per-length probe loop in _read_run with one list index."""
+    the per-length probe loop in _read_run with one list index. A table
+    that is not prefix-free raises here, at import, instead of letting
+    the later code silently win the shared windows."""
     lut: List[Optional[Tuple[int, int]]] = [None] * (1 << 14)
     for (n, v), run in decode.items():
         lo = v << (14 - n)
         for w in range(lo, lo + (1 << (14 - n))):
+            if lut[w] is not None:
+                raise ValueError(f"code {v:0{n}b} overlaps code of run {lut[w][0]}: table is not prefix-free")
             lut[w] = (run, n)
     return lut
 

@@ -70,7 +70,10 @@ def _grid_bounds(n: int) -> Tuple[np.ndarray, np.ndarray]:
     return hit
 
 
+# keyed by crop (h, w): cleared when full, so a long-lived worker that
+# sees many distinct crop sizes keeps a bounded cache
 _grid_outer_cache: Dict[Tuple[int, int], np.ndarray] = {}
+_GRID_OUTER_CACHE_MAX = 1024
 
 
 def grid_features(crop: np.ndarray) -> np.ndarray:
@@ -84,6 +87,8 @@ def grid_features(crop: np.ndarray) -> np.ndarray:
     )
     counts = _grid_outer_cache.get((h, w))
     if counts is None:
+        if len(_grid_outer_cache) >= _GRID_OUTER_CACHE_MAX:
+            _grid_outer_cache.clear()
         counts = _grid_outer_cache[(h, w)] = np.outer(rcounts, ccounts)
     return (summed / counts).reshape(-1)
 

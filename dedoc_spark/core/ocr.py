@@ -213,7 +213,9 @@ def _runs(profile: np.ndarray, min_gap: int = 1) -> List[Tuple[int, int]]:
 
 
 _cell_bounds_cache: dict = {}
+# keyed by crop (h, w): cleared when full (see glyph_ocr._grid_outer_cache)
 _cell_outer_cache: dict = {}
+_CELL_OUTER_CACHE_MAX = 1024
 
 
 def _cell_bounds(n: int):
@@ -246,6 +248,8 @@ def _cell_means(crop: np.ndarray) -> np.ndarray:
     summed = np.add.reduceat(np.add.reduceat(crop.astype(np.float64), rb, axis=0), cb, axis=1)
     counts = _cell_outer_cache.get((h, w))
     if counts is None:
+        if len(_cell_outer_cache) >= _CELL_OUTER_CACHE_MAX:
+            _cell_outer_cache.clear()
         counts = _cell_outer_cache[(h, w)] = np.outer(rcounts, ccounts)
     return summed / counts
 

@@ -21,6 +21,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from dedoc_spark.operators.pipeline import bootstrapped
+
 MEMBER_SCHEMA = T.StructType(
     [
         T.StructField("url", T.StringType()),
@@ -41,15 +43,7 @@ def explode_archives(df: DataFrame, max_members: int = 1000) -> DataFrame:
     detect_format inspects the member list) pass through unchanged with
     kind='passthrough'. Broken archives produce one kind='error' row."""
 
-    from dedoc_spark.operators.pipeline import _REPO_ROOT
-
-    repo = _REPO_ROOT
-
     def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import sys
-
-        if repo not in sys.path:
-            sys.path.insert(0, repo)
         from dedoc_spark.core.formats import detect_format, list_archive_members
 
         for pdf in it:
@@ -70,7 +64,7 @@ def explode_archives(df: DataFrame, max_members: int = 1000) -> DataFrame:
                     out.append({"url": url, "html": None, "text": "", "error": f"{type(e).__name__}: {e}", "kind": "error"})
             yield pd.DataFrame(out, columns=[f.name for f in MEMBER_SCHEMA.fields])
 
-    return df.select("url", "html").mapInPandas(fn, MEMBER_SCHEMA)
+    return df.select("url", "html").mapInPandas(bootstrapped(fn), MEMBER_SCHEMA)
 
 
 def _error_extract_rows(df: DataFrame, error_col, params=None) -> DataFrame:
@@ -195,15 +189,7 @@ def explode_attachments(
     """(url, html) rows → one row per attachment payload (url#name, bytes):
     email parts, office media/embeddings members, mhtml parts, zip members —
     formats.list_attachments. Rows with no attachments produce nothing."""
-    from dedoc_spark.operators.pipeline import _REPO_ROOT
-
-    repo = _REPO_ROOT
-
     def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import sys
-
-        if repo not in sys.path:
-            sys.path.insert(0, repo)
         from dedoc_spark.core.formats import list_attachments
 
         for pdf in it:
@@ -220,7 +206,7 @@ def explode_attachments(
                     out.append({"url": url, "html": None, "text": "", "error": f"{type(e).__name__}: {e}", "kind": "error"})
             yield pd.DataFrame(out, columns=[f.name for f in MEMBER_SCHEMA.fields])
 
-    return df.select("url", "html").mapInPandas(fn, MEMBER_SCHEMA)
+    return df.select("url", "html").mapInPandas(bootstrapped(fn), MEMBER_SCHEMA)
 
 
 def extract_with_attachments(df: DataFrame, max_depth: int = 2, params: dict | None = None) -> DataFrame:

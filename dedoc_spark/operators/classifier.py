@@ -263,6 +263,8 @@ def score_text_quality(df, model: LogisticModel, text_col: str = "text", id_col:
 
     batch_counter: optional Spark accumulator incremented once per BATCH
     predict — lets tests assert the model is never called per row."""
+    from dedoc_spark.operators.pipeline import bootstrapped
+
     spark = df.sparkSession
     bc = spark.sparkContext.broadcast((model.weights, model.bias))
     id_type = df.schema[id_col].dataType.simpleString()
@@ -284,4 +286,4 @@ def score_text_quality(df, model: LogisticModel, text_col: str = "text", id_col:
             )
 
     schema = f"{id_col} {id_type}, quality_proba double, is_good boolean"
-    return df.select(id_col, text_col).mapInPandas(fn, schema)
+    return df.select(id_col, text_col).mapInPandas(bootstrapped(fn), schema)

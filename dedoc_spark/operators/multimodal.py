@@ -21,6 +21,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from dedoc_spark.operators.pipeline import bootstrapped
+
 MEDIA_FEATURES_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.StringType()),
@@ -43,15 +45,7 @@ def media_features(
     """Vectorized (Arrow-batched) media feature extraction with the same
     error-channel semantics as the document pipeline."""
 
-    from dedoc_spark.operators.pipeline import _REPO_ROOT
-
-    repo = _REPO_ROOT
-
     def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import sys
-
-        if repo not in sys.path:
-            sys.path.insert(0, repo)
         from dedoc_spark.core.image_decode import audio_features
         from dedoc_spark.core.image_decode import image_features as decode
 
@@ -82,7 +76,7 @@ def media_features(
                 out.append(row)
             yield pd.DataFrame(out, columns=[f.name for f in MEDIA_FEATURES_SCHEMA.fields])
 
-    return df.select(id_col, type_col, media_col).mapInPandas(fn, MEDIA_FEATURES_SCHEMA)
+    return df.select(id_col, type_col, media_col).mapInPandas(bootstrapped(fn), MEDIA_FEATURES_SCHEMA)
 
 
 def image_exif(df: DataFrame, media_col: str = "media", id_col: str = "media_id") -> DataFrame:
@@ -91,9 +85,6 @@ def image_exif(df: DataFrame, media_col: str = "media", id_col: str = "media_id"
     reference's ImageMetadataExtractor field set."""
     from pyspark.sql import types as T
 
-    from dedoc_spark.operators.pipeline import _REPO_ROOT
-
-    repo = _REPO_ROOT
     schema = T.StructType(
         [
             T.StructField(id_col, df.schema[id_col].dataType),
@@ -102,10 +93,6 @@ def image_exif(df: DataFrame, media_col: str = "media", id_col: str = "media_id"
     )
 
     def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import sys
-
-        if repo not in sys.path:
-            sys.path.insert(0, repo)
         from dedoc_spark.core.metadata import extract_image_metadata
 
         for pdf in it:
@@ -118,7 +105,7 @@ def image_exif(df: DataFrame, media_col: str = "media", id_col: str = "media_id"
                 out.append({id_col: mid, "exif": exif})
             yield pd.DataFrame(out, columns=[id_col, "exif"])
 
-    return df.select(id_col, media_col).mapInPandas(fn, schema)
+    return df.select(id_col, media_col).mapInPandas(bootstrapped(fn), schema)
 
 
 def frame_sample_plan(df: DataFrame, every_n: int = 30) -> DataFrame:
@@ -147,9 +134,6 @@ def with_document_metadata(
     reference parameter surface (return_base64, is_attached)."""
     from pyspark.sql import types as T
 
-    from dedoc_spark.operators.pipeline import _REPO_ROOT
-
-    repo = _REPO_ROOT
     schema = T.StructType(
         [
             T.StructField(url_col, T.StringType()),
@@ -158,10 +142,6 @@ def with_document_metadata(
     )
 
     def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import sys
-
-        if repo not in sys.path:
-            sys.path.insert(0, repo)
         from dedoc_spark.core.metadata import extract_document_metadata
 
         for pdf in it:
@@ -173,7 +153,7 @@ def with_document_metadata(
                 )
             yield pd.DataFrame(out, columns=[url_col, "metadata"])
 
-    return df.select(url_col, payload_col).mapInPandas(fn, schema)
+    return df.select(url_col, payload_col).mapInPandas(bootstrapped(fn), schema)
 
 
 def image_resize(
@@ -189,9 +169,6 @@ def image_resize(
     emit the resized buffer's md5 over its lowercase hex (the DuckDB-
     comparable buffer hash discipline, md5(VARCHAR) only). Error-channel
     semantics as everywhere: undecodable media keep a typed error row."""
-    from dedoc_spark.operators.pipeline import _REPO_ROOT
-
-    repo = _REPO_ROOT
     schema = T.StructType(
         [
             T.StructField("media_id", T.StringType()),
@@ -204,10 +181,7 @@ def image_resize(
 
     def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import hashlib
-        import sys
 
-        if repo not in sys.path:
-            sys.path.insert(0, repo)
         from dedoc_spark.core.image_decode import decode_image, resize_nearest
 
         for pdf in it:
@@ -228,7 +202,7 @@ def image_resize(
                 out.append(row)
             yield pd.DataFrame(out, columns=[f.name for f in schema.fields])
 
-    return df.select(id_col, media_col).mapInPandas(fn, schema)
+    return df.select(id_col, media_col).mapInPandas(bootstrapped(fn), schema)
 
 
 def gif_frame_sample(
@@ -244,9 +218,6 @@ def gif_frame_sample(
     hash. Codec video (mp4/avi) has no from-scratch decoder — those rows
     keep the typed error channel, while the Spark-side plumbing (schema,
     per-frame fan-out, batch shape) is identical and real."""
-    from dedoc_spark.operators.pipeline import _REPO_ROOT
-
-    repo = _REPO_ROOT
     schema = T.StructType(
         [
             T.StructField("media_id", T.StringType()),
@@ -260,10 +231,7 @@ def gif_frame_sample(
 
     def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import hashlib
-        import sys
 
-        if repo not in sys.path:
-            sys.path.insert(0, repo)
         from dedoc_spark.core.image_decode import decode_gif_frames
 
         for pdf in it:
@@ -297,4 +265,4 @@ def gif_frame_sample(
                     )
             yield pd.DataFrame(out, columns=[f.name for f in schema.fields])
 
-    return df.select(id_col, media_col).mapInPandas(fn, schema)
+    return df.select(id_col, media_col).mapInPandas(bootstrapped(fn), schema)

@@ -33,36 +33,54 @@ Scale notes (100 TB / 10^12 rows):
 
 from __future__ import annotations
 
+import functools
 import os
-from typing import Iterator, Optional, Tuple
+from typing import Callable, Iterator, Optional, Tuple
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-# baked into UDF closures so python workers can import dedoc_spark no
-# matter what cwd/PYTHONPATH the driver was launched with
+# baked into bootstrapped() closures so python workers can import
+# dedoc_spark no matter what cwd/PYTHONPATH the driver was launched with
 _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-def bootstrapped(fn_name: str, **kwargs):
-    """Return a closure (pickled BY VALUE by cloudpickle, unlike module
-    functions which pickle by reference) that fixes sys.path on the worker
-    before importing this module and delegating to ``fn_name``; kwargs are
-    baked into the closure (e.g. the extraction params dict)."""
+def bootstrapped(fn: Callable) -> Callable:
+    """Wrap a Python UDF body (``mapInPandas`` function) so a worker can
+    run it whatever cwd/PYTHONPATH the driver was started with.
+
+    ``fn`` is pickled to bytes HERE, on the driver. The returned closure
+    is pickled BY VALUE (cloudpickle does that for nested functions);
+    on the worker it puts the repository root on ``sys.path`` first and
+    only then unpickles ``fn``. So ``fn`` may reference module-level
+    ``dedoc_spark`` names (functions, classes, ``functools.partial`` of a
+    module function) — they resolve after the path is fixed. Broadcasts
+    and accumulators inside ``fn`` ride along: pickling registers them
+    with the SparkContext, and the command that ships this closure
+    carries them.
+
+    The package is not shipped with ``SparkContext.addPyFile``:
+    ``core/glyph_ocr.py`` and ``operators/line_labeler.py`` open model
+    files through paths next to their modules (``models/glyph_bank.json.gz``,
+    the labeler JSON), which a zipped package would break. This is the
+    only place that knows how a worker finds the package."""
+    from pyspark import cloudpickle
+
+    payload = cloudpickle.dumps(fn)
     repo = _REPO_ROOT
 
-    def fn(it):
+    def run(*args):
+        import pickle
         import sys
 
         if repo not in sys.path:
             sys.path.insert(0, repo)
-        import dedoc_spark.operators.pipeline as pl
+        return pickle.loads(payload)(*args)
 
-        yield from getattr(pl, fn_name)(it, **kwargs)
+    return run
 
-    return fn
 
 EXTRACT_SCHEMA = T.StructType(
     [
@@ -151,7 +169,7 @@ def _wants_rendered(params: Optional[dict]) -> bool:
 def _extract_batches(
     it: Iterator[pd.DataFrame], params: Optional[dict] = None
 ) -> Iterator[pd.DataFrame]:
-    # import inside the worker so the function pickles cheaply
+    # lazy: importing this module (driver side) does not load the engine
     from dedoc_spark.core.document import extract_document
 
     columns = [f.name for f in EXTRACT_SCHEMA.fields]
@@ -191,7 +209,9 @@ def extract_stage(
         schema = T.StructType(
             EXTRACT_SCHEMA.fields + [T.StructField("rendered", T.StringType())]
         )
-    return src.mapInPandas(bootstrapped("_extract_batches", params=params), schema=schema)
+    return src.mapInPandas(
+        bootstrapped(functools.partial(_extract_batches, params=params)), schema=schema
+    )
 
 
 def split_oversized(df: DataFrame, big_doc_threshold: int = 1 << 20) -> Tuple[DataFrame, DataFrame]:

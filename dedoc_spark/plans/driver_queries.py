@@ -35,6 +35,7 @@ from dedoc_spark.core.structure import (
     ROMAN_RE,
 )
 from dedoc_spark.functions import digit_mask
+from dedoc_spark.operators.pipeline import bootstrapped
 
 # ---------------------------------------------------------------------------
 # shared inputs
@@ -889,15 +890,7 @@ def _binary_roundtrip(spark: SparkSession, sf_dir: str, builder) -> DataFrame:
     """documents → per-row synthesized binary payload → full extraction."""
     import pandas as pd
 
-    from dedoc_spark.operators.pipeline import _REPO_ROOT
-
-    repo = _REPO_ROOT
-
     def fn(it):
-        import sys
-
-        if repo not in sys.path:
-            sys.path.insert(0, repo)
         from dedoc_spark.core.document import extract_document
 
         for pdf in it:
@@ -910,7 +903,39 @@ def _binary_roundtrip(spark: SparkSession, sf_dir: str, builder) -> DataFrame:
                 )
             yield pd.DataFrame(out, columns=["doc_id", "n_lines", "text_extracted"])
 
-    return _parallel(_docs(spark, sf_dir).select("doc_id", "text")).mapInPandas(fn, _BIN_SCHEMA)
+    return _parallel(_docs(spark, sf_dir).select("doc_id", "text")).mapInPandas(bootstrapped(fn), _BIN_SCHEMA)
+
+
+def _table_roundtrip(spark: SparkSession, sf_dir: str, builder) -> DataFrame:
+    """documents → per-row 2×2 grid [["id", doc_id], [source, lang]] →
+    ``builder(doc_id, grid) -> (payload, url)`` → full extraction → the
+    first table's four cell texts (q24 layout)."""
+    import json
+
+    import pandas as pd
+
+    def fn(it):
+        from dedoc_spark.core.document import extract_document
+
+        for pdf in it:
+            out = []
+            for doc_id, source, lang in zip(pdf["doc_id"], pdf["source"], pdf["lang"]):
+                payload, url = builder(int(doc_id), [["id", str(int(doc_id))], [source, lang]])
+                d = extract_document(url, payload, None)
+                cells = json.loads(d["tables_json"])[0]["cells"]
+                texts = ["\n".join(ln["line"] for ln in c["lines"]) for row in cells for c in row]
+                out.append(
+                    {
+                        "doc_id": int(doc_id),
+                        "n_tables": d["n_tables"],
+                        "c00": texts[0], "c01": texts[1], "c10": texts[2], "c11": texts[3],
+                    }
+                )
+            yield pd.DataFrame(out, columns=["doc_id", "n_tables", "c00", "c01", "c10", "c11"])
+
+    return _parallel(_docs(spark, sf_dir).select("doc_id", "source", "lang")).mapInPandas(
+        bootstrapped(fn), "doc_id long, n_tables long, c00 string, c01 string, c10 string, c11 string"
+    )
 
 
 def q21_docx_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1003,44 +1028,12 @@ Q23_SQL = Q21_SQL
 
 
 def q24_xlsx_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
-    from dedoc_spark.operators.pipeline import _REPO_ROOT
-
-    repo = _REPO_ROOT
-
-    def fn(it):
-        import json as jsonlib
-        import sys
-
-        if repo not in sys.path:
-            sys.path.insert(0, repo)
-        from dedoc_spark.core.document import extract_document
+    def builder(doc_id: int, grid):
         from dedoc_spark.sources.office_fixture import build_xlsx
 
-        for pdf in it:
-            out = []
-            for doc_id, source, lang in zip(pdf["doc_id"], pdf["source"], pdf["lang"]):
-                payload = build_xlsx([[["id", str(int(doc_id))], [source, lang]]])
-                d = extract_document(f"{int(doc_id)}.xlsx", payload, None)
-                cells = jsonlib.loads(d["tables_json"])[0]["cells"]
-                texts = ["\n".join(ln["line"] for ln in c["lines"]) for row in cells for c in row]
-                out.append(
-                    {
-                        "doc_id": int(doc_id),
-                        "n_tables": d["n_tables"],
-                        "c00": texts[0], "c01": texts[1], "c10": texts[2], "c11": texts[3],
-                    }
-                )
-            yield pd.DataFrame(out, columns=["doc_id", "n_tables", "c00", "c01", "c10", "c11"])
+        return build_xlsx([grid]), f"{doc_id}.xlsx"
 
-    return (
-        _parallel(
-            _docs(spark, sf_dir)
-            .select("doc_id", "source", "lang")
-        )
-        .mapInPandas(fn, "doc_id long, n_tables long, c00 string, c01 string, c10 string, c11 string")
-    )
+    return _table_roundtrip(spark, sf_dir, builder)
 
 
 Q24_SQL = """
@@ -1134,43 +1127,12 @@ FROM cand c JOIN e ea ON ea.vec_id = c.a JOIN e eb ON eb.vec_id = c.b
 
 
 def q27_xls_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
-    from dedoc_spark.operators.pipeline import _REPO_ROOT
-
-    repo = _REPO_ROOT
-
-    def fn(it):
-        import json as jsonlib
-        import sys
-
-        if repo not in sys.path:
-            sys.path.insert(0, repo)
-        from dedoc_spark.core.document import extract_document
+    def builder(doc_id: int, grid):
         from dedoc_spark.sources.office_fixture import build_xls
 
-        for pdf in it:
-            out = []
-            for doc_id, source, lang in zip(pdf["doc_id"], pdf["source"], pdf["lang"]):
-                payload = build_xls([[["id", str(int(doc_id))], [source, lang]]])
-                d = extract_document(f"{int(doc_id)}.xls", payload, None)
-                cells = jsonlib.loads(d["tables_json"])[0]["cells"]
-                texts = ["\n".join(ln["line"] for ln in c["lines"]) for row in cells for c in row]
-                out.append(
-                    {
-                        "doc_id": int(doc_id), "n_tables": d["n_tables"],
-                        "c00": texts[0], "c01": texts[1], "c10": texts[2], "c11": texts[3],
-                    }
-                )
-            yield pd.DataFrame(out, columns=["doc_id", "n_tables", "c00", "c01", "c10", "c11"])
+        return build_xls([grid]), f"{doc_id}.xls"
 
-    return (
-        _parallel(
-            _docs(spark, sf_dir)
-            .select("doc_id", "source", "lang")
-        )
-        .mapInPandas(fn, "doc_id long, n_tables long, c00 string, c01 string, c10 string, c11 string")
-    )
+    return _table_roundtrip(spark, sf_dir, builder)
 
 
 Q27_SQL = Q24_SQL
@@ -1185,15 +1147,8 @@ def q28_attachment_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
     from dedoc_spark.operators.archives import extract_with_attachments
-    from dedoc_spark.operators.pipeline import _REPO_ROOT
-
-    repo = _REPO_ROOT
 
     def build(it):
-        import sys
-
-        if repo not in sys.path:
-            sys.path.insert(0, repo)
         for pdf in it:
             out = []
             for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
@@ -1216,7 +1171,7 @@ def q28_attachment_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
             _docs(spark, sf_dir)
             .select("doc_id", "text")
         )
-        .mapInPandas(build, "url string, html binary, text string")
+        .mapInPandas(bootstrapped(build), "url string, html binary, text string")
     )
     out = extract_with_attachments(pages, max_depth=1)
     members = out.filter(F.col("url").endswith("#note.txt"))
@@ -1631,16 +1586,9 @@ SELECT doc_id, u.s.i - 1 AS sent_id, u.s.sent AS sentence FROM (
 def q40_pdf_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
-    from dedoc_spark.operators.pipeline import _REPO_ROOT
-
-    repo = _REPO_ROOT
     schema = "doc_id long, linked_line string, spacing_seq string, sizes string"
 
     def fn(it):
-        import sys
-
-        if repo not in sys.path:
-            sys.path.insert(0, repo)
         from dedoc_spark.core.pdf_extract import extract_pdf_lines
         from dedoc_spark.sources.pdf_fixture import build_pdf
 
@@ -1670,7 +1618,7 @@ def q40_pdf_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             yield pd.DataFrame(out, columns=["doc_id", "linked_line", "spacing_seq", "sizes"])
 
-    return _parallel(_docs(spark, sf_dir).select("doc_id", "text")).mapInPandas(fn, schema)
+    return _parallel(_docs(spark, sf_dir).select("doc_id", "text")).mapInPandas(bootstrapped(fn), schema)
 
 
 # geometry constants: 3 lines of height 12 at top-down tops 20/40/60 → first
@@ -1694,16 +1642,9 @@ FROM documents
 def q41_image_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
-    from dedoc_spark.operators.pipeline import _REPO_ROOT
-
-    repo = _REPO_ROOT
     schema = "doc_id long, width int, height int, px_hash string"
 
     def fn(it):
-        import sys
-
-        if repo not in sys.path:
-            sys.path.insert(0, repo)
         import numpy as np
 
         from dedoc_spark.core.image_decode import encode_png, pixel_hash
@@ -1724,7 +1665,7 @@ def q41_image_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             yield pd.DataFrame(out, columns=["doc_id", "width", "height", "px_hash"])
 
-    return _parallel(_docs(spark, sf_dir).select("doc_id")).mapInPandas(fn, schema)
+    return _parallel(_docs(spark, sf_dir).select("doc_id")).mapInPandas(bootstrapped(fn), schema)
 
 
 Q41_SQL = """
@@ -1885,17 +1826,11 @@ FROM sel WHERE pos >= 3
 def q45_bmp_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
-    from dedoc_spark.operators.pipeline import _REPO_ROOT
-
-    repo = _REPO_ROOT
     schema = "doc_id long, width int, height int, px_hash string"
 
     def fn(it):
         import struct
-        import sys
 
-        if repo not in sys.path:
-            sys.path.insert(0, repo)
         from dedoc_spark.core.image_decode import pixel_hash
 
         W, H = 16, 8
@@ -1924,7 +1859,7 @@ def q45_bmp_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             yield pd.DataFrame(out, columns=["doc_id", "width", "height", "px_hash"])
 
-    return _parallel(_docs(spark, sf_dir).select("doc_id")).mapInPandas(fn, schema)
+    return _parallel(_docs(spark, sf_dir).select("doc_id")).mapInPandas(bootstrapped(fn), schema)
 
 
 Q45_SQL = """
@@ -1954,17 +1889,10 @@ def _field_roundtrip(spark: SparkSession, sf_dir: str, builder, fields) -> DataF
     (doc_id is always prepended)."""
     import pandas as pd
 
-    from dedoc_spark.operators.pipeline import _REPO_ROOT
-
-    repo = _REPO_ROOT
     names = [n for n, _ in fields]
     schema = "doc_id long, " + ", ".join(f"{n} {t}" for n, t in fields)
 
     def fn(it):
-        import sys
-
-        if repo not in sys.path:
-            sys.path.insert(0, repo)
         from dedoc_spark.core.document import extract_document
 
         for pdf in it:
@@ -1984,7 +1912,7 @@ def _field_roundtrip(spark: SparkSession, sf_dir: str, builder, fields) -> DataF
             _docs(spark, sf_dir)
             .select("doc_id", "text", "source", "lang")
         )
-        .mapInPandas(fn, schema)
+        .mapInPandas(bootstrapped(fn), schema)
     )
 
 
@@ -1994,48 +1922,15 @@ _LINEAR_FIELDS = [("n_lines", "long"), ("text_linear", "string")]
 def q46_csv_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CSVReader gate (csv_reader.py:17-58): one Table of stringified
     cells; the reader must undo csv quoting exactly."""
-    import pandas as pd
+    def builder(doc_id: int, grid):
+        import csv
+        import io
 
-    from dedoc_spark.operators.pipeline import _REPO_ROOT
+        buf = io.StringIO()
+        csv.writer(buf, lineterminator="\n").writerows(grid)
+        return buf.getvalue().encode(), f"{doc_id}.csv"
 
-    repo = _REPO_ROOT
-
-    def fn(it):
-        import csv as csvlib
-        import io as iolib
-        import json as jsonlib
-        import sys
-
-        if repo not in sys.path:
-            sys.path.insert(0, repo)
-        from dedoc_spark.core.document import extract_document
-
-        for pdf in it:
-            out = []
-            for doc_id, source, lang in zip(pdf["doc_id"], pdf["source"], pdf["lang"]):
-                buf = iolib.StringIO()
-                w = csvlib.writer(buf, lineterminator="\n")
-                w.writerow(["id", str(int(doc_id))])
-                w.writerow([source, lang])
-                d = extract_document(f"{int(doc_id)}.csv", buf.getvalue().encode(), None)
-                cells = jsonlib.loads(d["tables_json"])[0]["cells"]
-                texts = ["\n".join(ln["line"] for ln in c["lines"]) for row in cells for c in row]
-                out.append(
-                    {
-                        "doc_id": int(doc_id),
-                        "n_tables": d["n_tables"],
-                        "c00": texts[0], "c01": texts[1], "c10": texts[2], "c11": texts[3],
-                    }
-                )
-            yield pd.DataFrame(out, columns=["doc_id", "n_tables", "c00", "c01", "c10", "c11"])
-
-    return (
-        _parallel(
-            _docs(spark, sf_dir)
-            .select("doc_id", "source", "lang")
-        )
-        .mapInPandas(fn, "doc_id long, n_tables long, c00 string, c01 string, c10 string, c11 string")
-    )
+    return _table_roundtrip(spark, sf_dir, builder)
 
 
 Q46_SQL = Q24_SQL
@@ -2145,44 +2040,12 @@ Q51_SQL = Q21_SQL
 
 def q52_ods_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ODS gate: table:table-cell grid → one Table, q24 cell layout."""
-    import pandas as pd
-
-    from dedoc_spark.operators.pipeline import _REPO_ROOT
-
-    repo = _REPO_ROOT
-
-    def fn(it):
-        import json as jsonlib
-        import sys
-
-        if repo not in sys.path:
-            sys.path.insert(0, repo)
-        from dedoc_spark.core.document import extract_document
+    def builder(doc_id: int, grid):
         from dedoc_spark.sources.office_fixture import build_ods
 
-        for pdf in it:
-            out = []
-            for doc_id, source, lang in zip(pdf["doc_id"], pdf["source"], pdf["lang"]):
-                payload = build_ods([[["id", str(int(doc_id))], [source, lang]]])
-                d = extract_document(f"{int(doc_id)}.ods", payload, None)
-                cells = jsonlib.loads(d["tables_json"])[0]["cells"]
-                texts = ["\n".join(ln["line"] for ln in c["lines"]) for row in cells for c in row]
-                out.append(
-                    {
-                        "doc_id": int(doc_id),
-                        "n_tables": d["n_tables"],
-                        "c00": texts[0], "c01": texts[1], "c10": texts[2], "c11": texts[3],
-                    }
-                )
-            yield pd.DataFrame(out, columns=["doc_id", "n_tables", "c00", "c01", "c10", "c11"])
+        return build_ods([grid]), f"{doc_id}.ods"
 
-    return (
-        _parallel(
-            _docs(spark, sf_dir)
-            .select("doc_id", "source", "lang")
-        )
-        .mapInPandas(fn, "doc_id long, n_tables long, c00 string, c01 string, c10 string, c11 string")
-    )
+    return _table_roundtrip(spark, sf_dir, builder)
 
 
 Q52_SQL = Q24_SQL
@@ -2246,18 +2109,11 @@ def q56_archive_members(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
     from dedoc_spark.operators.archives import extract_with_archives
-    from dedoc_spark.operators.pipeline import _REPO_ROOT
-
-    repo = _REPO_ROOT
 
     def fn(it):
         import gzip as gziplib
         import io as iolib
-        import sys
         import tarfile as tarlib
-
-        if repo not in sys.path:
-            sys.path.insert(0, repo)
 
         from dedoc_spark.sources.archive_fixture import build_rar4_stored
 
@@ -2283,7 +2139,7 @@ def q56_archive_members(spark: SparkSession, sf_dir: str) -> DataFrame:
             _docs(spark, sf_dir)
             .select("doc_id", "text")
         )
-        .mapInPandas(fn, "url string, html binary, text string")
+        .mapInPandas(bootstrapped(fn), "url string, html binary, text string")
     )
     out = extract_with_archives(src, max_depth=1)
     return out.select(
@@ -2320,16 +2176,9 @@ def q57_pdf_ruled_tables(spark: SparkSession, sf_dir: str) -> DataFrame:
     unreadable-block exclusion), so n_lines stays 1."""
     import pandas as pd
 
-    from dedoc_spark.operators.pipeline import _REPO_ROOT
-
-    repo = _REPO_ROOT
-
     def fn(it):
         import json as jsonlib
-        import sys
 
-        if repo not in sys.path:
-            sys.path.insert(0, repo)
         from dedoc_spark.core.document import extract_document
         from dedoc_spark.sources.pdf_fixture import build_pdf, table_ops
 
@@ -2370,7 +2219,7 @@ def q57_pdf_ruled_tables(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("doc_id", "text", "source", "lang")
         )
         .mapInPandas(
-            fn,
+            bootstrapped(fn),
             "doc_id long, n_lines long, n_tables long, text_extracted string, "
             "c00 string, c01 string, c10 string, c11 string",
         )
@@ -2420,16 +2269,9 @@ def _law_family_gate(spark: SparkSession, sf_dir: str, doc_type: str, make_lines
     plus the raw line that must carry the document's own text."""
     import pandas as pd
 
-    from dedoc_spark.operators.pipeline import _REPO_ROOT
-
-    repo = _REPO_ROOT
-
     def fn(it):
         import json as jsonlib
-        import sys
 
-        if repo not in sys.path:
-            sys.path.insert(0, repo)
         from dedoc_spark.core.document import extract_document
 
         for pdf in it:
@@ -2460,7 +2302,7 @@ def _law_family_gate(spark: SparkSession, sf_dir: str, doc_type: str, make_lines
             _docs(spark, sf_dir)
             .select("doc_id", "text")
         )
-        .mapInPandas(fn, "doc_id long, n_lines long, types_seq string, text_rest string")
+        .mapInPandas(bootstrapped(fn), "doc_id long, n_lines long, types_seq string, text_rest string")
     )
 
 
@@ -2631,16 +2473,10 @@ def q63_image_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
     from dedoc_spark.operators.multimodal import image_resize
-    from dedoc_spark.operators.pipeline import _REPO_ROOT
-
-    repo = _REPO_ROOT
 
     def fn(it):
         import struct
-        import sys
 
-        if repo not in sys.path:
-            sys.path.insert(0, repo)
         W, H = 16, 8
         row_size = (W * 3 + 3) // 4 * 4
         for batch in it:
@@ -2666,7 +2502,7 @@ def q63_image_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame(out, columns=["media_id", "media"])
 
     media = _parallel(_docs(spark, sf_dir).select("doc_id")).mapInPandas(
-        fn, "media_id string, media binary"
+        bootstrapped(fn), "media_id string, media binary"
     )
     out = image_resize(media, 8, 4)
     return out.select(
@@ -2699,17 +2535,10 @@ def q64_gif_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
     from dedoc_spark.operators.multimodal import gif_frame_sample
-    from dedoc_spark.operators.pipeline import _REPO_ROOT
-
-    repo = _REPO_ROOT
 
     def fn(it):
-        import sys
-
         import numpy as np
 
-        if repo not in sys.path:
-            sys.path.insert(0, repo)
         from dedoc_spark.core.image_decode import encode_gif_frames
 
         palette = bytes(v for g in (0, 85, 170, 255) for v in (g, g, g))
@@ -2727,7 +2556,7 @@ def q64_gif_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame(out, columns=["media_id", "media"])
 
     media = _parallel(_docs(spark, sf_dir).select("doc_id")).mapInPandas(
-        fn, "media_id string, media binary"
+        bootstrapped(fn), "media_id string, media binary"
     )
     out = gif_frame_sample(media, every_n=2)
     return out.select(
@@ -2873,16 +2702,9 @@ def q31_xgb_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     public artifact shapes, abstract_pickled_classifier.py:29-52)."""
     import pandas as pd
 
-    from dedoc_spark.operators.pipeline import _REPO_ROOT
-
-    repo = _REPO_ROOT
     dump = _xgb_gate_dump()
 
     def fn(it):
-        import sys
-
-        if repo not in sys.path:
-            sys.path.insert(0, repo)
         import numpy as np
 
         from dedoc_spark.operators.xgboost_json import load_xgboost_json
@@ -2906,7 +2728,7 @@ def q31_xgb_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         _docs(spark, sf_dir)
         .select("doc_id", "text")
-        .mapInPandas(fn, "doc_id long, xgb_label string, xgb_margin double")
+        .mapInPandas(bootstrapped(fn), "doc_id long, xgb_label string, xgb_margin double")
     )
 
 
@@ -3038,16 +2860,9 @@ def q65_gost_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     come back as a table, and the q57 table contract must hold inside."""
     import pandas as pd
 
-    from dedoc_spark.operators.pipeline import _REPO_ROOT
-
-    repo = _REPO_ROOT
-
     def fn(it):
         import json as jsonlib
-        import sys
 
-        if repo not in sys.path:
-            sys.path.insert(0, repo)
         from dedoc_spark.core.document import extract_document
         from dedoc_spark.sources.pdf_fixture import build_pdf, gost_frame_ops, table_ops
 
@@ -3092,7 +2907,7 @@ def q65_gost_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("doc_id", "text", "source", "lang")
         )
         .mapInPandas(
-            fn,
+            bootstrapped(fn),
             "doc_id long, n_lines long, n_tables long, text_extracted string, "
             "c00 string, c01 string, c10 string, c11 string",
         )
@@ -3117,15 +2932,7 @@ def q66_tei_article(spark: SparkSession, sf_dir: str) -> DataFrame:
     bibliography header, empty item line, "{id}-{id+7}" page scope."""
     import pandas as pd
 
-    from dedoc_spark.operators.pipeline import _REPO_ROOT
-
-    repo = _REPO_ROOT
-
     def fn(it):
-        import sys
-
-        if repo not in sys.path:
-            sys.path.insert(0, repo)
         from xml.sax.saxutils import escape
 
         from dedoc_spark.core.document import extract_document
@@ -3178,7 +2985,7 @@ def q66_tei_article(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("doc_id", "text", "source", "lang")
         )
         .mapInPandas(
-            fn,
+            bootstrapped(fn),
             "doc_id long, n_lines long, n_tables long, text_linear string, fig_warning string",
         )
     )
@@ -3208,16 +3015,9 @@ def q67_scanned_ocr(spark: SparkSession, sf_dir: str) -> DataFrame:
     scanned branch (parameter_utils)."""
     import pandas as pd
 
-    from dedoc_spark.operators.pipeline import _REPO_ROOT
-
-    repo = _REPO_ROOT
-
     def fn(it):
         import json as jsonlib
-        import sys
 
-        if repo not in sys.path:
-            sys.path.insert(0, repo)
         from dedoc_spark.core.document import extract_document
         from dedoc_spark.core.scanfont import render_scan_page, render_table_page
         from dedoc_spark.sources.pdf_fixture import build_scanned_pdf
@@ -3280,7 +3080,7 @@ def q67_scanned_ocr(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         _parallel(_docs(spark, sf_dir).select("doc_id", "source", "lang"))
         .mapInPandas(
-            fn,
+            bootstrapped(fn),
             "doc_id long, n_lines long, n_tables long, text_extracted string, "
             "rot_warning string, c00 string, c01 string, c10 string, c11 string",
         )
@@ -3310,15 +3110,7 @@ def q68_real_font_ocr(spark: SparkSession, sf_dir: str) -> DataFrame:
     pixel-twins in DejaVu), so both sides remap 3333 -> 3334."""
     import pandas as pd
 
-    from dedoc_spark.operators.pipeline import _REPO_ROOT
-
-    repo = _REPO_ROOT
-
     def fn(it):
-        import sys
-
-        if repo not in sys.path:
-            sys.path.insert(0, repo)
         from dedoc_spark.core.document import extract_document
         from dedoc_spark.core.ftrender import render_text_page
         from dedoc_spark.sources.pdf_fixture import build_scanned_pdf
@@ -3355,7 +3147,7 @@ def q68_real_font_ocr(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return (
         _parallel(_docs(spark, sf_dir).select("doc_id"))
-        .mapInPandas(fn, "doc_id long, n_lines long, text_extracted string")
+        .mapInPandas(bootstrapped(fn), "doc_id long, n_lines long, text_extracted string")
     )
 
 

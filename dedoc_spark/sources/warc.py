@@ -116,18 +116,11 @@ def read_warc(spark: SparkSession, path: str) -> DataFrame:
     files are self-contained, so the plan has no shuffle."""
     import pandas as pd
 
-    from dedoc_spark.operators.pipeline import _REPO_ROOT
+    from dedoc_spark.operators.pipeline import bootstrapped
 
-    repo = _REPO_ROOT
     files = spark.read.format("binaryFile").load(path).select("path", "content")
 
     def fn(it: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import sys
-
-        if repo not in sys.path:
-            sys.path.insert(0, repo)
-        from dedoc_spark.sources.warc import warc_response_rows
-
         cols = ["url", "warc_ts", "html", "text", "lang"]
         for pdf in it:
             out = []
@@ -135,7 +128,7 @@ def read_warc(spark: SparkSession, path: str) -> DataFrame:
                 out.extend(warc_response_rows(bytes(content)))
             yield pd.DataFrame(out, columns=cols)
 
-    return files.mapInPandas(fn, WEB_PAGES_DDL)
+    return files.mapInPandas(bootstrapped(fn), WEB_PAGES_DDL)
 
 
 def build_warc(records: List[Dict], per_record_gzip: bool = True) -> bytes:

@@ -19,14 +19,15 @@ REFERENCE_DATA = Path(
 
 @pytest.fixture
 def reference_file():
-    """``reference_file("scanned/example.jpeg")`` -> path of a file in the
-    reference corpus; the calling test is skipped when that file is
-    missing, and runs (and can fail) when it is present."""
+    """``reference_file("scanned/example.jpeg")`` -> path of a file (or,
+    for a corpus sweep, a directory) in the reference corpus; the calling
+    test is skipped when that path is missing, and runs (and can fail)
+    when it is present."""
 
     def get(relpath: str) -> Path:
         path = REFERENCE_DATA / relpath
-        if not path.is_file():
-            pytest.skip(f"reference corpus file not available: {relpath}")
+        if not path.exists():
+            pytest.skip(f"reference corpus path not available: {relpath}")
         return path
 
     return get

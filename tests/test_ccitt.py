@@ -6,7 +6,6 @@ rasterizes via poppler); the encoders exist only to build deterministic
 fixtures for these round-trips.
 """
 
-import pathlib
 
 import numpy as np
 import pytest
@@ -25,8 +24,6 @@ from dedoc_spark.core.pdf_filters import (
     runlength_decode,
     runlength_encode,
 )
-
-REF_DATA = pathlib.Path("/root/reference/tests/data")
 
 
 # ---------------------------------------------------------------------------
@@ -122,15 +119,14 @@ def test_g4_corrupt_stream_raises():
         decode_g4(b"\x00\x00\x00\x00", 100, rows=4)
 
 
-@pytest.mark.skipif(not REF_DATA.is_dir(), reason="reference corpus not available")
-def test_g4_reference_scan_decodes():
+def test_g4_reference_scan_decodes(reference_file):
     """The reference corpus's laws/with_applications.pdf stores its pages
     as /CCITTFaxDecode K=-1 images (2475x3555 and up) — the canonical
     real-world scanned-PDF shape. All 4 pages must decode at full size
     with a document-like ink fraction."""
     from dedoc_spark.core.ocr import extract_pdf_page_images
 
-    payload = (REF_DATA / "laws" / "with_applications.pdf").read_bytes()
+    payload = reference_file("laws/with_applications.pdf").read_bytes()
     pages = extract_pdf_page_images(payload)
     assert [len(p) for p in pages] == [1, 1, 1, 1]
     for imgs in pages:
@@ -361,3 +357,16 @@ def test_ccitt_blackis1_and_decode_inversion():
     assert np.array_equal(
         decode(parms_extra="/BlackIs1 true ", dict_extra="/Decode [1 0] "), img0
     )
+
+
+def test_run_lut_rejects_a_table_that_is_not_prefix_free():
+    """Every window of the 14-bit LUT belongs to at most one code: a table
+    edit where one code is a prefix of another fails when the LUT is
+    built (at import), instead of the later code silently winning."""
+    from dedoc_spark.core.ccitt import _WHITE_DECODE, _build_run_lut
+
+    assert _build_run_lut({(2, 0b01): 5, (3, 0b001): 7}).count(None) == (1 << 14) - (1 << 12) - (1 << 11)
+    with pytest.raises(ValueError, match="prefix-free"):
+        _build_run_lut({(2, 0b01): 5, (3, 0b010): 7})
+    with pytest.raises(ValueError, match="prefix-free"):
+        _build_run_lut({**_WHITE_DECODE, (3, 0b100): 9999})

@@ -5,7 +5,6 @@ recognize_page, and the REAL corpus fax scan. Matching needs only the
 committed bank; page RENDERING for fixtures needs the system FreeType,
 so those tests gate on ft_available()."""
 
-import os
 
 import numpy as np
 import pytest
@@ -15,8 +14,6 @@ from dedoc_spark.core.ftrender import ft_available
 from dedoc_spark.core.ocr import ink_mask, recognize_page
 
 needs_ft = pytest.mark.skipif(not ft_available(), reason="freetype/fonts absent")
-
-FAX_PDF = "/root/reference/tests/data/laws/with_applications.pdf"
 
 LINES = [
     "The quick brown fox jumps over the lazy dog 0123456789",
@@ -227,15 +224,13 @@ def test_missing_bank_falls_back_to_scanfont(monkeypatch):
     assert "Fallback line" == " ".join(w.text for w in lines[0].words)
 
 
-@pytest.mark.skipif(not os.path.exists(FAX_PDF), reason="corpus file absent")
-def test_real_fax_scan_reads_anchor_lines():
+def test_real_fax_scan_reads_anchor_lines(reference_file):
     """The corpus's real 300-dpi G4 fax (laws/with_applications.pdf):
     the glyph engine reads the document header — previously every
     scanned page decoded pixels but matched garbage."""
     from dedoc_spark.core.ocr import extract_pdf_page_images
 
-    with open(FAX_PDF, "rb") as f:
-        payload = f.read()
+    payload = reference_file("laws/with_applications.pdf").read_bytes()
     img = extract_pdf_page_images(payload)[0][0]
     rgb = np.repeat(img[:, :, None], 3, axis=2)
     lines = recognize_page(rgb, mask=ink_mask(rgb))
@@ -291,11 +286,7 @@ def test_skew_zero_on_straight_pages():
     assert estimate_skew(np.zeros((50, 80), dtype=bool)) == 0.0
 
 
-REF_SKEW_DIR = "/root/reference/tests/data/skew_corrector"
-
-
-@pytest.mark.skipif(not os.path.exists(REF_SKEW_DIR), reason="corpus absent")
-def test_reference_skew_corrector_images():
+def test_reference_skew_corrector_images(reference_file):
     """The reference's own skew-corrector corpus: rotated_2.jpg carries
     a real ~1 degree skew; rotated_1/3/4 are 90-degree-family rotations
     whose small-angle skew is zero (the orientation classifier's job,
@@ -304,8 +295,7 @@ def test_reference_skew_corrector_images():
     from dedoc_spark.core.ocr import estimate_skew
 
     def est(name):
-        with open(f"{REF_SKEW_DIR}/{name}", "rb") as f:
-            _, _, rgb = decode_image(f.read())
+        _, _, rgb = decode_image(reference_file(f"skew_corrector/{name}").read_bytes())
         return estimate_skew(ink_mask(rgb))
 
     assert abs(est("rotated_2.jpg") - (-1.1)) <= 0.3
@@ -384,3 +374,17 @@ def test_real_type_ruled_table_cells():
         for row in json.loads(d["tables_json"])[0]["cells"]
     ]
     assert got == cells
+
+
+def test_grid_outer_cache_stays_bounded():
+    """The (h, w)-keyed count cache is cleared when full, so a long-lived
+    worker seeing many crop sizes keeps it at or under its cap; features
+    are the same whether or not the entry was cached."""
+    glyph_ocr._grid_outer_cache.clear()
+    crop = np.random.default_rng(3).random((37, 23))
+    want = glyph_ocr.grid_features(crop)
+    for h in range(1, 70):
+        for w in range(1, 40):
+            glyph_ocr.grid_features(np.ones((h, w)))
+            assert len(glyph_ocr._grid_outer_cache) <= glyph_ocr._GRID_OUTER_CACHE_MAX
+    assert np.array_equal(glyph_ocr.grid_features(crop), want)

@@ -367,24 +367,15 @@ def test_png_gray_bit_depth_16_keeps_high_byte():
     assert np.array_equal(rgb[0, :, 0], [0xAB, 0x12])
 
 
-def test_reference_short_lines_pngs_decode_and_are_straight():
+def test_reference_short_lines_pngs_decode_and_are_straight(reference_file):
     """The reference's skew-corrector corpus short_lines-*.png are 4-bit
     grayscale; its own unit test asserts rotated_angle == 0 on them
     (test_module_skew_corrector.py) — same assertion here through our
     decoder + estimator."""
-    import os
-
-    import numpy as np
-    import pytest as _pytest
-
     from dedoc_spark.core.image_decode import decode_image
     from dedoc_spark.core.ocr import estimate_skew, ink_mask
 
-    path = "/root/reference/tests/data/skew_corrector/short_lines-1.png"
-    if not os.path.exists(path):
-        _pytest.skip("corpus absent")
     for i in range(1, 6):
-        with open(f"/root/reference/tests/data/skew_corrector/short_lines-{i}.png", "rb") as f:
-            w, h, rgb = decode_image(f.read())
+        w, h, rgb = decode_image(reference_file(f"skew_corrector/short_lines-{i}.png").read_bytes())
         assert (w, h) == (1654, 2339)
         assert estimate_skew(ink_mask(rgb)) == 0.0

@@ -5,10 +5,6 @@ Regexp expectations mirror the reference's own unit tests
 sweep runs over the reference's REAL doctype corpus with the exact
 expected types of test_doctype_law_dynamic_classifier.py."""
 
-import os
-
-import pytest
-
 from dedoc_spark.core.document import extract_document
 from dedoc_spark.core.law_structure import (
     classify_law_type,
@@ -174,13 +170,9 @@ REFERENCE_DOCTYPES = {
     "федеральный_закон.txt": "law",
 }
 
-_DOCTYPE_DIR = "/root/reference/tests/data/laws/doctypes"
-
-
-@pytest.mark.skipif(not os.path.isdir(_DOCTYPE_DIR), reason="reference corpus absent")
-def test_routing_on_reference_doctype_corpus():
+def test_routing_on_reference_doctype_corpus(reference_file):
     for name, expected in REFERENCE_DOCTYPES.items():
-        raw = open(os.path.join(_DOCTYPE_DIR, name), "rb").read()
+        raw = reference_file(f"laws/doctypes/{name}").read_bytes()
         try:
             text = raw.decode("utf-8")
         except UnicodeDecodeError:

@@ -415,3 +415,16 @@ def test_spark_identical_to_plain_call():
     a = extract_document("d.png", png, None, params={"pdf_with_text_layer": "false"})
     b = extract_document("d.png", png, None, params={"pdf_with_text_layer": "false"})
     assert a == b
+
+
+def test_cell_outer_cache_stays_bounded():
+    """Same bound as glyph_ocr's grid cache, for the scanfont block means
+    of crops whose size is not a multiple of the glyph grid."""
+    ocr._cell_outer_cache.clear()
+    crop = np.random.default_rng(5).random((37, 23))
+    want = ocr._cell_means(crop)
+    for h in range(1, 70):
+        for w in range(1, 40):
+            ocr._cell_means(np.ones((h, w)))
+            assert len(ocr._cell_outer_cache) <= ocr._CELL_OUTER_CACHE_MAX
+    assert np.array_equal(ocr._cell_means(crop), want)

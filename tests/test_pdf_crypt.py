@@ -3,8 +3,6 @@ primitives against published vectors, fixture round-trips for every
 handler revision, and the reference corpus's real AES-128 document.
 """
 
-import pathlib
-
 import pytest
 
 from dedoc_spark.core.pdf_crypt import (
@@ -16,8 +14,7 @@ from dedoc_spark.core.pdf_crypt import (
     rc4,
 )
 
-REF_DATA = pathlib.Path("/root/reference/tests/data")
-RADIO = REF_DATA / "pdf_auto" / "e09d__cs-pspc-xg-15p-portable-radio-quick-guide.pdf"
+RADIO = "pdf_auto/e09d__cs-pspc-xg-15p-portable-radio-quick-guide.pdf"
 
 
 # ---------------------------------------------------------------------------
@@ -112,8 +109,7 @@ def test_spark_stage_extracts_encrypted_pdf(spark_session=None):
 # the real encrypted document from the reference corpus
 
 
-@pytest.mark.skipif(not RADIO.is_file(), reason="reference corpus not available")
-def test_reference_encrypted_pdf_extracts():
+def test_reference_encrypted_pdf_extracts(reference_file):
     """pdf_auto/e09d__…quick-guide.pdf is AES-128 (V4/R4 AESV2,
     EncryptMetadata false) with an empty user password: text layer,
     embedded CCITT/JPEG rasters and /Info strings must all decrypt."""
@@ -121,7 +117,7 @@ def test_reference_encrypted_pdf_extracts():
     from dedoc_spark.core.metadata import extract_pdf_metadata
     from dedoc_spark.core.ocr import extract_pdf_page_images
 
-    payload = RADIO.read_bytes()
+    payload = reference_file(RADIO).read_bytes()
     d = extract_document("radio.pdf", payload, None, params={})
     assert d.get("error") is None
     assert "Quick Guide" in d["text_extracted"]

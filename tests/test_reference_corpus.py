@@ -2,21 +2,12 @@
 strings (ported from tests/unit_tests/test_format_docx_reader.py:32-60) —
 skipped when the reference checkout is absent."""
 
-import os
-import pathlib
 
-import pytest
-
-REF_DATA = pathlib.Path("/root/reference/tests/data")
-
-pytestmark = pytest.mark.skipif(not REF_DATA.is_dir(), reason="reference corpus not available")
-
-
-def test_reference_example_docx_exact_lines():
+def test_reference_example_docx_exact_lines(reference_file):
     """The reference's own assertions on tests/data/docx/example.docx."""
     from dedoc_spark.core.docx_extract import extract_docx
 
-    payload = (REF_DATA / "docx" / "example.docx").read_bytes()
+    payload = reference_file("docx/example.docx").read_bytes()
     lines, tables, _ = extract_docx(payload, "h")
     texts = [ln.line.strip() for ln in lines]
     assert texts[0] == "Пример документа"
@@ -37,14 +28,14 @@ def test_reference_example_docx_exact_lines():
     assert ann11 == [tables[1].uid]
 
 
-def test_reference_corpus_sweep_no_errors():
+def test_reference_corpus_sweep_no_errors(reference_file):
     """Every real (non-'broken') office document in the reference corpus
     extracts without an error row, and none raises."""
     from dedoc_spark.core.document import extract_document
 
     exts = {"docx", "pdf", "doc", "rtf", "odt", "ods", "odp", "xls", "xlsx", "ppt", "pptx"}
     checked = 0
-    for p in sorted(REF_DATA.rglob("*")):
+    for p in sorted(reference_file(".").rglob("*")):  # the whole corpus
         if not p.is_file() or p.suffix.lstrip(".").lower() not in exts:
             continue
         d = extract_document(p.name, p.read_bytes(), None)
@@ -54,13 +45,13 @@ def test_reference_corpus_sweep_no_errors():
     assert checked > 100
 
 
-def test_reference_english_doc_pdf():
+def test_reference_english_doc_pdf(reference_file):
     """Real text-layer PDF from the reference corpus: title + list items
     extract, and per-line annotations are never duplicated (the reference's
     own assertion, test_format_pdf_reader.py test_pdf_text_layer)."""
     from dedoc_spark.core.pdf_extract import extract_pdf_lines
 
-    payload = (REF_DATA / "pdf_with_text_layer" / "english_doc.pdf").read_bytes()
+    payload = reference_file("pdf_with_text_layer/english_doc.pdf").read_bytes()
     lines, _ = extract_pdf_lines(payload, "h")
     texts = [ln.line.strip() for ln in lines]
     assert texts[0] == "THE GREAT ENGLISH DOCUMENT"
@@ -71,24 +62,24 @@ def test_reference_english_doc_pdf():
         assert len(anns) == len(ln.annotations)
 
 
-def test_reference_cyrillic_pdfs():
+def test_reference_cyrillic_pdfs(reference_file):
     """Real Cyrillic text-layer PDFs decode through ToUnicode/CMaps with
     the CTM-aware line placement: content matches the companion text."""
     from dedoc_spark.core.pdf_extract import extract_pdf_lines
 
-    lines, _ = extract_pdf_lines((REF_DATA / "pdf_with_text_layer" / "example.pdf").read_bytes(), "h")
+    lines, _ = extract_pdf_lines(reference_file("pdf_with_text_layer/example.pdf").read_bytes(), "h")
     texts = [ln.line.strip() for ln in lines]
     assert texts[0] == "Пример документа"
     assert texts[1] == "Глава 1"
 
-    lines, _ = extract_pdf_lines((REF_DATA / "pdf_with_text_layer" / "cp1251.pdf").read_bytes(), "h")
+    lines, _ = extract_pdf_lines(reference_file("pdf_with_text_layer/cp1251.pdf").read_bytes(), "h")
     body = " ".join(ln.line.replace("\t", " ") for ln in lines)
-    expected_head = (REF_DATA / "pdf_with_text_layer" / "cp1251.txt").read_text(encoding="utf-8").split()[:6]
+    expected_head = reference_file("pdf_with_text_layer/cp1251.txt").read_text(encoding="utf-8").split()[:6]
     for word in expected_head:
         assert word in body
 
 
-def test_scanned_table_pdfs_yield_rasters():
+def test_scanned_table_pdfs_yield_rasters(reference_file):
     """The tables/*.pdf scans exercise real-world PDF shapes the parser
     must survive: /XObject as an indirect reference (not_table.pdf,
     example_with_table0.pdf), CR-only line endings after the stream
@@ -104,12 +95,12 @@ def test_scanned_table_pdfs_yield_rasters():
         "gost_multipage_table.pdf": [1, 1],
     }
     for name, counts in expect.items():
-        payload = (REF_DATA / "tables" / name).read_bytes()
+        payload = reference_file(f"tables/{name}").read_bytes()
         pages = extract_pdf_page_images(payload)
         assert [len(p) for p in pages] == counts, name
 
 
-def test_reference_diagram_and_strict_docx():
+def test_reference_diagram_and_strict_docx(reference_file):
     """diagram_1.docx: exactly 1 repacked diagram attachment with the
     annotation on its hosting line (test_format_docx_reader.py:246-253
     count semantics; uid VALUES differ — bs4 serialization). size1.docx:
@@ -118,16 +109,16 @@ def test_reference_diagram_and_strict_docx():
     from dedoc_spark.core.docx_extract import extract_docx
     from dedoc_spark.core.formats import list_attachments
 
-    payload = (REF_DATA / "docx" / "diagram_1.docx").read_bytes()
+    payload = reference_file("docx/diagram_1.docx").read_bytes()
     atts = list_attachments("diagram_1.docx", payload)
     assert len(atts) == 1 and atts[0][0].endswith(".docx")
     lines, _, _ = extract_docx(payload, "h")
     assert any(a.name == "attachment" for a in lines[0].annotations)
 
-    payload2 = (REF_DATA / "with_attachments" / "with_attachments_2.docx").read_bytes()
+    payload2 = reference_file("with_attachments/with_attachments_2.docx").read_bytes()
     assert len(list_attachments("x.docx", payload2)) >= 1
 
-    payload3 = (REF_DATA / "docx" / "size1.docx").read_bytes()
+    payload3 = reference_file("docx/size1.docx").read_bytes()
     lines3, _, _ = extract_docx(payload3, "h")
     assert len(lines3) > 0
     sizes = {a.value for ln in lines3 for a in ln.annotations if a.name == "size"}

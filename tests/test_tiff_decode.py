@@ -334,19 +334,13 @@ def test_multipage_tiff_document_route():
     assert pages == {0, 1}
 
 
-import pathlib
-
-REF_SCANNED = pathlib.Path("/root/reference/tests/data/scanned")
-
-
-@pytest.mark.skipif(not REF_SCANNED.is_dir(), reason="reference corpus not available")
-def test_reference_tiff_cross_format_ground_truth():
+def test_reference_tiff_cross_format_ground_truth(reference_file):
     """The corpus page exists as both TIFF and lossless PNG: the two
     decoders must agree PIXEL-EXACTLY (both 827x1170 RGB)."""
     from dedoc_spark.core.image_decode import decode_image
 
-    tw, th, trgb = decode_tiff((REF_SCANNED / "example.tiff").read_bytes())
-    pw, ph, prgb = decode_image((REF_SCANNED / "example.png").read_bytes())
+    tw, th, trgb = decode_tiff(reference_file("scanned/example.tiff").read_bytes())
+    pw, ph, prgb = decode_image(reference_file("scanned/example.png").read_bytes())
     assert (tw, th) == (pw, ph) == (827, 1170)
     assert np.array_equal(trgb, prgb)
 

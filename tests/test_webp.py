@@ -5,8 +5,6 @@ recognizes a webp scan end-to-end. Everything gates on the shared
 library being present (webp_available) — absence must degrade to the
 typed error, never crash."""
 
-import os
-
 import numpy as np
 import pytest
 
@@ -21,9 +19,6 @@ needs_lib = pytest.mark.skipif(
     not webp_available(), reason="system libwebp not present"
 )
 
-REF_WEBP = "/root/reference/tests/data/scanned/example.webp"
-
-
 @needs_lib
 def test_lossless_roundtrip_exact():
     rgb = np.random.default_rng(81).integers(0, 256, size=(40, 57, 3), dtype=np.uint8)
@@ -35,15 +30,12 @@ def test_lossless_roundtrip_exact():
 
 
 @needs_lib
-@pytest.mark.skipif(not os.path.exists(REF_WEBP), reason="corpus file absent")
-def test_reference_corpus_scanned_webp():
+def test_reference_corpus_scanned_webp(reference_file):
     """The reference's scanned/example.webp (lossy VP8): full-size decode
     with a scanned-document ink profile — mostly light page, a
     substantial band of text rows (same cross-format evidence style as
     the corpus TIFF test)."""
-    with open(REF_WEBP, "rb") as f:
-        data = f.read()
-    w, h, rgb = decode_webp(data)
+    w, h, rgb = decode_webp(reference_file("scanned/example.webp").read_bytes())
     assert (w, h) == (827, 1170)
     gray = rgb.mean(axis=2)
     assert gray.mean() > 160  # page is mostly light
