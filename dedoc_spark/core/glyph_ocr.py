@@ -38,6 +38,8 @@ from typing import Dict, List, Optional, Sequence, Tuple
 
 import numpy as np
 
+from dedoc_spark.core.ocr import _runs
+
 GRID = 16
 BANK_PATH = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
@@ -116,7 +118,7 @@ class GlyphBank:
         """(block x block block-summed template grids with the aspect
         feature appended as one scaled extra dimension, their squared
         norms) — the projection behind the orientation prune's
-        Cauchy-Schwarz lower bound (see _coarse_conf_ub). block=4 gives
+        Cauchy-Schwarz lower bound (see _coarse_conf_ubs). block=4 gives
         the cheap 17-dim level, block=2 the tighter 65-dim level. The
         aspect column is scaled by sqrt(W_ASPECT * block^2 * GRID^2) so
         the single squared-distance GEMM, divided by block^2 * GRID^2,
@@ -200,14 +202,6 @@ def _bank_for_language(language: str) -> Optional[GlyphBank]:
 
         hit = _subsets[key] = bank.subset(charset_for_language(language))
     return hit
-
-
-def _runs(profile: np.ndarray, min_gap: int = 1) -> List[Tuple[int, int]]:
-    # single implementation lives in core.ocr (ocr imports THIS module
-    # only lazily, so the top-level import is cycle-free)
-    from dedoc_spark.core.ocr import _runs as runs
-
-    return runs(profile, min_gap)
 
 
 def _shape_dist(bank: GlyphBank, feats: np.ndarray, aspect: np.ndarray) -> np.ndarray:
@@ -332,16 +326,7 @@ def _match_from_dist1(
     heights: np.ndarray,
     bottoms: np.ndarray,
     topk: int,
-    approx: bool = False,
 ) -> Tuple[np.ndarray, np.ndarray, float]:
-    """``approx=True`` skips the exactness fallback: pass 2 is evaluated
-    on the top-P pass-1 candidates only, and a glyph whose bound check
-    fails keeps the best candidate IN THAT SET instead of re-scoring the
-    whole bank. Deterministic, and identical to exact whenever the bound
-    holds (every clean match); only junk crops — rotated pages scored by
-    orientation_confidences, where the result is a threshold decision
-    with a 0.08+ margin, never text — can differ, by at most the pass-2
-    penalty spread inside the candidate set."""
     m, n = dist1.shape
     rows = np.arange(m)
     k = min(topk, n)
@@ -366,7 +351,6 @@ def _match_from_dist1(
         hr = bank.h_rel[cand]
         dr = bank.desc_rel[cand]
 
-    dist2c = full_rows = full_d2 = None
     for _ in range(2):
         S_in, base_in = S, base_est
         if prune:
@@ -375,22 +359,18 @@ def _match_from_dist1(
             dist2c = d1c + _W_SIZE * size_pen + _W_BASE * base_pen
             loc = dist2c.argmin(axis=1)
             best = cand[rows, loc]
-            if approx:
-                full_rows = full_d2 = None
+            bad = ~(dist2c[rows, loc] < d_bound)
+            full_rows = np.nonzero(bad)[0]
+            if full_rows.size:
+                full_d2 = _pass2_rows(
+                    bank, dist1[full_rows], hs[full_rows], bottoms[full_rows], S, base_est
+                )
+                best[full_rows] = full_d2.argmin(axis=1)
             else:
-                bad = ~(dist2c[rows, loc] < d_bound)
-                full_rows = np.nonzero(bad)[0]
-                if full_rows.size:
-                    full_d2 = _pass2_rows(
-                        bank, dist1[full_rows], hs[full_rows], bottoms[full_rows], S, base_est
-                    )
-                    best[full_rows] = full_d2.argmin(axis=1)
-                else:
-                    full_d2 = None
+                full_d2 = None
         else:
             dist2c = _pass2_rows(bank, dist1, hs, bottoms, S, base_est)
             best = dist2c.argmin(axis=1)
-            full_rows, full_d2 = None, None
         S_new = float(np.median(heights / np.maximum(bank.h_rel[best], 1e-6)))
         if np.isfinite(S_new) and S_new > 0:
             S = S_new
@@ -408,13 +388,10 @@ def _match_from_dist1(
     order = np.argsort(dist2c, axis=1, kind="stable")[:, :k]
     out_d = np.take_along_axis(dist2c, order, axis=1)
     out_i = np.take_along_axis(cand, order, axis=1)
-    if approx:
-        return out_i, out_d, S
     need_full = ~(out_d[:, -1] < d_bound)
-    if full_rows is not None:
-        need_full[full_rows] = True
+    need_full[full_rows] = True
     for i in np.nonzero(need_full)[0]:
-        if full_rows is not None and full_d2 is not None and i in full_rows:
+        if full_d2 is not None and i in full_rows:
             row = full_d2[np.nonzero(full_rows == i)[0][0]]
         else:
             row = _pass2_rows(bank, dist1[i : i + 1], hs[i : i + 1], bottoms[i : i + 1], S_in, base_in)[0]
@@ -1064,17 +1041,6 @@ def _orient_crops(
     return crops, boxes
 
 
-def orientation_confidence(
-    mask: np.ndarray, language: str = "rus+eng",
-    max_bands: int = 3, max_glyphs: int = 60,
-) -> float:
-    """Mean match confidence of the first few bands — the glyph-engine
-    analogue of the scanfont orientation score (rotated/flipped real
-    type matches the bank far worse than upright type). Returns -0.5
-    when nothing segmentable is found."""
-    return orientation_confidences([mask], language, max_bands, max_glyphs)[0]
-
-
 def _match_confidence(
     bank: GlyphBank,
     dist1: np.ndarray,
@@ -1104,14 +1070,15 @@ def _slice_confidence(
     )
 
 
-def _coarse_conf_ub(
+def _coarse_conf_ubs(
     bank: GlyphBank,
-    feats: np.ndarray,
-    aspect: np.ndarray,
+    slices: Sequence[Tuple[np.ndarray, np.ndarray]],
     block: int = 4,
-) -> float:
-    """PROVABLE upper bound on _slice_confidence at ~1/block^2 the GEMM
-    cost.
+) -> List[float]:
+    """PROVABLE upper bound on _slice_confidence of each crop set at
+    ~1/block^2 the GEMM cost, all sets in ONE bank GEMM — small skinny
+    GEMMs pay a fixed BLAS dispatch/thread-sync cost each, and the
+    rotations' crop sets are tiny next to the template matrix.
 
     Per block B of block x block grid cells, Cauchy-Schwarz gives
     (sum_B (f_i - t_i))^2 <= block^2 * sum_B (f_i - t_i)^2, so summing
@@ -1125,17 +1092,6 @@ def _coarse_conf_ub(
     near-symmetric type (digits) from the upright score. The aspect
     penalty rides the same GEMM as a scaled extra dimension (see
     coarse_index), so no separate (m, n) penalty pass is needed."""
-    return _coarse_conf_ubs(bank, [(feats, aspect)], block)[0]
-
-
-def _coarse_conf_ubs(
-    bank: GlyphBank,
-    slices: Sequence[Tuple[np.ndarray, np.ndarray]],
-    block: int = 4,
-) -> List[float]:
-    """_coarse_conf_ub for several crop sets in ONE bank GEMM — small
-    skinny GEMMs pay a fixed BLAS dispatch/thread-sync cost each, and
-    the rotations' crop sets are tiny next to the template matrix."""
     cb, cb_sq = bank.coarse_index(block)
     g = GRID // block
     s = float(np.sqrt(_W_ASPECT * block * block * GRID * GRID))
@@ -1175,7 +1131,10 @@ def orientation_confidences(
     prune_vs_first: bool = False,
     override_floor: Optional[float] = None,
 ) -> List[float]:
-    """orientation_confidence for several page rotations at once.
+    """Mean match confidence of the first few bands of each page
+    rotation — the glyph-engine analogue of the scanfont orientation
+    score (rotated/flipped real type matches the bank far worse than
+    upright type). A rotation with nothing segmentable scores -0.5.
 
     ``prune_vs_first=True`` (the detect_orientation caller): the first
     mask — the upright candidate — is scored exactly, then each other

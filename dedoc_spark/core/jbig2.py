@@ -548,45 +548,6 @@ def encode_generic(
             if a & 0x8000:
                 break
 
-    if h * w <= 4096 and template == 0 and at == _NOMINAL_AT[0]:
-        # tiny bitmaps (symbol-dictionary glyphs): the numpy context
-        # build costs more than the loop it saves — python sliding
-        # windows over the nominal template are cheaper
-        pad = 4
-        rows: List[bytearray] = [bytearray(w + 8) for _ in range(2)]
-        flat = (np.asarray(bitmap) & 1).ravel().tolist()
-        fx = 0
-        for y in range(h):
-            cur = bytearray(w + 8)
-            m1, m2 = rows[-1], rows[-2]
-            r2 = (m2[pad - 2] << 4) | (m2[pad - 1] << 3) | (m2[pad] << 2) \
-                | (m2[pad + 1] << 1) | m2[pad + 2]
-            r1 = 0
-            for k in range(-3, 4):
-                r1 = (r1 << 1) | m1[pad + k]
-            r0 = 0
-            for x in range(w):
-                b = flat[fx]
-                fx += 1
-                cx = (r2 << 11) | (r1 << 4) | r0
-                if b == mps[cx]:  # inline the no-renorm CODEMPS hot path
-                    na = a - qe_t[icx[cx]]
-                    if na & 0x8000:
-                        a = na
-                        c += qe_t[icx[cx]]
-                    else:
-                        _symbol(cx, b)
-                else:
-                    _symbol(cx, b)
-                cur[pad + x] = b
-                r2 = ((r2 << 1) | m2[pad + x + 3]) & 0x1F
-                r1 = ((r1 << 1) | m1[pad + x + 4]) & 0x7F
-                r0 = ((r0 << 1) | b) & 0x0F
-            rows.append(cur)
-            rows.pop(0)
-        enc.a, enc.c, enc.ct = a, c, ct
-        return enc.flush() if standalone else None
-
     bits = (np.asarray(bitmap) != 0).astype(np.uint32)
     pad_top = max(-dy for dy, _ in pos)
     pad_l = max(0, max(-dx for _, dx in pos))

@@ -446,57 +446,3 @@ def span_components(
     return sorted(comps.values(), key=lambda slots: min(slots))
 
 
-def apply_cell_spans(
-    table: LocatedTable,
-    grid: RuledGrid,
-    segments: Sequence[Segment],
-    eps: float = 2.0,
-    split_last_column: bool = False,
-) -> LocatedTable:
-    """Merged-cell structure for grids whose inner boundaries are only
-    partially painted — the CellSplitter contract (cell_splitter.py:10-86):
-    grid slots not separated by a painted rule form ONE spanned cell; the
-    top-left master keeps rowspan/colspan and visibility, every other
-    covered slot becomes an invisible copy carrying the same content
-    (``Cell.copy_from`` + ``invisible = True``, cell_splitter.py:67-84 —
-    the same clone quirk as the html rowspan expansion).
-
-    ``split_last_column`` (table_type.py:5, split_last_hor_union_cells.py:
-    14-60): vertical unions in the LAST column are re-split per row. The
-    reference re-OCRs each row crop of the union; in the grid model each
-    row already keeps the lines whose bbox centers fall inside it, which
-    is the same per-row content split, so the mode simply keeps the
-    per-row cells instead of merging them.
-    """
-    cells = table.cells
-    n_rows = len(cells)
-    n_cols = len(cells[0]) if cells else 0
-    if n_rows == 0 or n_cols == 0:
-        return table
-    for slots in span_components(grid, segments, eps=eps):
-        if len(slots) == 1:
-            continue
-        rows = sorted({r for r, _ in slots})
-        cols = sorted({c for _, c in slots})
-        if split_last_column and cols == [n_cols - 1]:
-            continue  # keep the per-row split in the last column
-        # bounding rectangle of the component (non-rectangular unions
-        # collapse to their bounding rect, like a missing inner rule)
-        r0, r1 = rows[0], rows[-1]
-        c0, c1 = cols[0], cols[-1]
-        merged: List[Line] = []
-        for r in range(r0, r1 + 1):
-            for c in range(c0, c1 + 1):
-                merged.extend(cells[r][c].lines)
-        for r in range(r0, r1 + 1):
-            for c in range(c0, c1 + 1):
-                cell = cells[r][c]
-                cell.lines = list(merged)
-                cell.invisible = True
-                cell.rowspan = 1
-                cell.colspan = 1
-        master = cells[r0][c0]
-        master.invisible = False
-        master.rowspan = r1 - r0 + 1
-        master.colspan = c1 - c0 + 1
-    return table

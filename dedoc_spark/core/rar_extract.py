@@ -43,10 +43,6 @@ RAR4_SIG = b"Rar!\x1a\x07\x00"
 RAR5_SIG = b"Rar!\x1a\x07\x01\x00"
 
 
-def is_rar(payload: bytes) -> bool:
-    return payload.startswith(RAR4_SIG) or payload.startswith(RAR5_SIG)
-
-
 def _rar4_members(payload: bytes, max_members: int) -> List[Tuple[str, bytes]]:
     out: List[Tuple[str, bytes]] = []
     pos = len(RAR4_SIG)

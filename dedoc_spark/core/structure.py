@@ -21,7 +21,7 @@ stripped, lower-cased line text (regexp_pattern.py:73-80).
 from __future__ import annotations
 
 import re
-from typing import List, Optional
+from typing import List
 
 from dedoc_spark.core.model import HierarchyLevel, Line
 
@@ -94,36 +94,6 @@ def get_hierarchy_level(line: Line) -> HierarchyLevel:
     #    unknown type → raw_text; can_be_multiline from the tag HL
     line_type = HierarchyLevel.raw_text if tag.is_unknown() else tag.line_type
     return HierarchyLevel(tag.level_1, tag.level_2, tag.can_be_multiline, line_type)
-
-
-# SQL-expressible rendering of patterns 3..7 for relational classification of
-# raw text lines (used by operators/textstruct.py and the DuckDB oracles):
-# the same regexes, applied to lower(trim(line)). Note Spark's rlike and
-# DuckDB's regexp_matches both search (not anchor) — the regexps above are
-# ^-anchored already.
-LINE_TYPE_CASES: List[tuple] = [
-    ("dotted_list", DOTTED_RE.pattern),
-    ("roman_list", ROMAN_RE.pattern),
-    ("bracket_list", BRACKET_RE.pattern),
-    ("letter_list", LETTER_RE.pattern),
-    ("bullet_list", BULLET_RE.pattern),
-]
-
-
-def classify_line_text(text: str) -> Optional[str]:
-    """Pure-text pattern classification (no tag info) — mirrors patterns 3..7."""
-    t = text.strip().lower()
-    for name, _ in LINE_TYPE_CASES:
-        regex = {
-            "dotted_list": DOTTED_RE,
-            "roman_list": ROMAN_RE,
-            "bracket_list": BRACKET_RE,
-            "letter_list": LETTER_RE,
-            "bullet_list": BULLET_RE,
-        }[name]
-        if regex.match(t):
-            return name
-    return None
 
 
 # --- prefix-split postprocess (abstract_structure_extractor.py:41-113) -------

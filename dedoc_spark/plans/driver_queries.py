@@ -21,6 +21,8 @@ engines; everything rounded to 6 before output.
 
 from __future__ import annotations
 
+import functools
+import json
 from typing import Callable, Dict
 
 from pyspark.sql import DataFrame, SparkSession
@@ -868,11 +870,12 @@ FROM votes GROUP BY doc_id
 
 
 # ---------------------------------------------------------------------------
-# q21..q24: FULL DOCX / PDF / PPTX / XLSX pipelines over per-row synthesized
-# payloads, each with a closed-form oracle — the byte-identity gate for the
-# binary-format readers.
+# per-document gates: one runner (_per_doc) calls each gate's row function,
+# which synthesizes a payload from one documents row and extracts it; the
+# row helpers below are shared by gates with the same output shape.
 
-_BIN_SCHEMA = "doc_id long, n_lines long, text_extracted string"
+_TEXT_SCHEMA = "doc_id long, n_lines long, text_extracted string"
+_GRID_SCHEMA = "doc_id long, n_tables long, c00 string, c01 string, c10 string, c11 string"
 
 
 def _parallel(df: DataFrame) -> DataFrame:
@@ -886,66 +889,86 @@ def _parallel(df: DataFrame) -> DataFrame:
     return df.repartition(sc.defaultParallelism)
 
 
-def _binary_roundtrip(spark: SparkSession, sf_dir: str, builder) -> DataFrame:
-    """documents → per-row synthesized binary payload → full extraction."""
+def _per_doc(spark: SparkSession, sf_dir: str, cols, schema: str, row) -> DataFrame:
+    """The per-document gate runner: documents ``cols`` → _parallel → one
+    bootstrapped mapInPandas that calls ``row(*values)`` once per input
+    row (values in ``cols`` order, as Python scalars). ``row`` returns
+    one output row as a dict, or a list of them (gates that build
+    several source rows per document); columns come out in ``schema``
+    order."""
     import pandas as pd
 
-    def fn(it):
-        from dedoc_spark.core.document import extract_document
-
-        for pdf in it:
-            out = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                payload, url = builder(int(doc_id), text)
-                d = extract_document(url, payload, None)
-                out.append(
-                    {"doc_id": int(doc_id), "n_lines": d["n_lines"], "text_extracted": d["text_extracted"]}
-                )
-            yield pd.DataFrame(out, columns=["doc_id", "n_lines", "text_extracted"])
-
-    return _parallel(_docs(spark, sf_dir).select("doc_id", "text")).mapInPandas(bootstrapped(fn), _BIN_SCHEMA)
-
-
-def _table_roundtrip(spark: SparkSession, sf_dir: str, builder) -> DataFrame:
-    """documents → per-row 2×2 grid [["id", doc_id], [source, lang]] →
-    ``builder(doc_id, grid) -> (payload, url)`` → full extraction → the
-    first table's four cell texts (q24 layout)."""
-    import json
-
-    import pandas as pd
+    names = [field.split()[0] for field in schema.split(",")]
 
     def fn(it):
-        from dedoc_spark.core.document import extract_document
-
         for pdf in it:
             out = []
-            for doc_id, source, lang in zip(pdf["doc_id"], pdf["source"], pdf["lang"]):
-                payload, url = builder(int(doc_id), [["id", str(int(doc_id))], [source, lang]])
-                d = extract_document(url, payload, None)
-                cells = json.loads(d["tables_json"])[0]["cells"]
-                texts = ["\n".join(ln["line"] for ln in c["lines"]) for row in cells for c in row]
-                out.append(
-                    {
-                        "doc_id": int(doc_id),
-                        "n_tables": d["n_tables"],
-                        "c00": texts[0], "c01": texts[1], "c10": texts[2], "c11": texts[3],
-                    }
-                )
-            yield pd.DataFrame(out, columns=["doc_id", "n_tables", "c00", "c01", "c10", "c11"])
+            for values in zip(*(pdf[c].tolist() for c in cols)):
+                r = row(*values)
+                if isinstance(r, list):
+                    out.extend(r)
+                else:
+                    out.append(r)
+            yield pd.DataFrame(out, columns=names)
 
-    return _parallel(_docs(spark, sf_dir).select("doc_id", "source", "lang")).mapInPandas(
-        bootstrapped(fn), "doc_id long, n_tables long, c00 string, c01 string, c10 string, c11 string"
+    return _parallel(_docs(spark, sf_dir).select(*cols)).mapInPandas(bootstrapped(fn), schema)
+
+
+def _extract(url: str, payload: bytes, params=None) -> dict:
+    from dedoc_spark.core.document import extract_document
+
+    return extract_document(url, payload, None, params=params)
+
+
+def _text_row(
+    doc_id: int, url: str, payload: bytes, fields=("n_lines", "text_extracted"), params=None
+) -> dict:
+    """doc_id plus ``fields`` of ``payload`` extracted as ``url``."""
+    d = _extract(url, payload, params)
+    return {"doc_id": doc_id, **{f: d[f] for f in fields}}
+
+
+def _grid(doc_id: int, source: str, lang: str) -> list:
+    """The 2×2 table every table gate synthesizes."""
+    return [["id", str(doc_id)], [source, lang]]
+
+
+def _cells(d: dict) -> dict:
+    """c00..c11: the cell texts of the first extracted table's 2×2 grid."""
+    cells = json.loads(d["tables_json"])[0]["cells"]
+    t = ["\n".join(ln["line"] for ln in c["lines"]) for row in cells for c in row]
+    return {"c00": t[0], "c01": t[1], "c10": t[2], "c11": t[3]}
+
+
+def _grid_row(doc_id: int, url: str, payload: bytes) -> dict:
+    """q24 layout: doc_id, n_tables and the 2×2 cell texts."""
+    d = _extract(url, payload)
+    return {"doc_id": doc_id, "n_tables": d["n_tables"], **_cells(d)}
+
+
+def _by_fmt(spark: SparkSession, sf_dir: str, parts) -> DataFrame:
+    """Same-shaped per-format gates ``[(fmt, gate)]`` as one union gate
+    with a leading ``fmt`` discriminator column."""
+    return functools.reduce(
+        DataFrame.unionByName,
+        [gate(spark, sf_dir).select(F.lit(fmt).alias("fmt"), "*") for fmt, gate in parts],
     )
 
 
+# ---------------------------------------------------------------------------
+# q21..q24: FULL DOCX / PDF / PPTX / XLSX pipelines over per-row synthesized
+# payloads, each with a closed-form oracle — the byte-identity gate for the
+# binary-format readers.
+
+
 def q21_docx_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    def builder(doc_id: int, text: str):
+    def row(doc_id: int, text: str):
         from dedoc_spark.sources.docx_fixture import build_docx, paragraph
 
         body = paragraph([(f"Doc {doc_id}", "")], style="Heading1") + paragraph([(text, "")])
-        return build_docx(body), f"{doc_id}.docx"
+        return _text_row(doc_id, f"{doc_id}.docx", build_docx(body))
 
-    return _binary_roundtrip(spark, sf_dir, builder)
+    return _per_doc(spark, sf_dir, ["doc_id", "text"], _TEXT_SCHEMA, row)
 
 
 # tree: root "" → header "Doc {id}" → raw_text "{text}"; json2txt →
@@ -970,7 +993,7 @@ def q22_pdf_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     password, core/pdf_crypt): decryption is lossless so the closed-form
     oracle is IDENTICAL — the gate attests the decrypt path end-to-end."""
 
-    def builder(doc_id: int, text: str):
+    def row(doc_id: int, text: str):
         from dedoc_spark.sources.pdf_fixture import (
             build_pdf,
             build_pdf_objstm,
@@ -990,9 +1013,9 @@ def q22_pdf_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
             payload = build([[(f"Doc {doc_id}", True), (text, False)]])
         if doc_id % 5 == 1:
             payload = encrypt_pdf(payload, method="aesv2" if doc_id % 2 else "rc4")
-        return payload, f"{doc_id}.pdf"
+        return _text_row(doc_id, f"{doc_id}.pdf", payload)
 
-    return _binary_roundtrip(spark, sf_dir, builder)
+    return _per_doc(spark, sf_dir, ["doc_id", "text"], _TEXT_SCHEMA, row)
 
 
 # both pdf lines are raw_text+multiline → they merge into ONE tree node with
@@ -1015,12 +1038,12 @@ FROM documents
 
 
 def q23_pptx_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    def builder(doc_id: int, text: str):
+    def row(doc_id: int, text: str):
         from dedoc_spark.sources.office_fixture import build_pptx
 
-        return build_pptx([{"shapes": [[f"Doc {doc_id}"], [text]]}]), f"{doc_id}.pptx"
+        return _text_row(doc_id, f"{doc_id}.pptx", build_pptx([{"shapes": [[f"Doc {doc_id}"], [text]]}]))
 
-    return _binary_roundtrip(spark, sf_dir, builder)
+    return _per_doc(spark, sf_dir, ["doc_id", "text"], _TEXT_SCHEMA, row)
 
 
 # first shape is the slide title (header tag) → same tree shape as docx
@@ -1028,12 +1051,12 @@ Q23_SQL = Q21_SQL
 
 
 def q24_xlsx_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    def builder(doc_id: int, grid):
+    def row(doc_id: int, source: str, lang: str):
         from dedoc_spark.sources.office_fixture import build_xlsx
 
-        return build_xlsx([grid]), f"{doc_id}.xlsx"
+        return _grid_row(doc_id, f"{doc_id}.xlsx", build_xlsx([_grid(doc_id, source, lang)]))
 
-    return _table_roundtrip(spark, sf_dir, builder)
+    return _per_doc(spark, sf_dir, ["doc_id", "source", "lang"], _GRID_SCHEMA, row)
 
 
 Q24_SQL = """
@@ -1127,12 +1150,12 @@ FROM cand c JOIN e ea ON ea.vec_id = c.a JOIN e eb ON eb.vec_id = c.b
 
 
 def q27_xls_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    def builder(doc_id: int, grid):
+    def row(doc_id: int, source: str, lang: str):
         from dedoc_spark.sources.office_fixture import build_xls
 
-        return build_xls([grid]), f"{doc_id}.xls"
+        return _grid_row(doc_id, f"{doc_id}.xls", build_xls([_grid(doc_id, source, lang)]))
 
-    return _table_roundtrip(spark, sf_dir, builder)
+    return _per_doc(spark, sf_dir, ["doc_id", "source", "lang"], _GRID_SCHEMA, row)
 
 
 Q27_SQL = Q24_SQL
@@ -1144,35 +1167,23 @@ Q27_SQL = Q24_SQL
 
 
 def q28_attachment_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
     from dedoc_spark.operators.archives import extract_with_attachments
 
-    def build(it):
-        for pdf in it:
-            out = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                import email.mime.application
-                import email.mime.multipart
-                import email.mime.text
+    def row(doc_id: int, text: str):
+        import email.mime.application
+        import email.mime.multipart
+        import email.mime.text
 
-                msg = email.mime.multipart.MIMEMultipart()
-                msg.set_boundary("====dedoc-spark-fixture====")
-                msg["Subject"] = f"doc {int(doc_id)}"
-                msg.attach(email.mime.text.MIMEText("cover", "plain"))
-                att = email.mime.application.MIMEApplication(text.encode("utf-8"), "octet-stream")
-                att.add_header("Content-Disposition", "attachment", filename="note.txt")
-                msg.attach(att)
-                out.append({"url": f"{int(doc_id)}.eml", "html": msg.as_bytes(), "text": ""})
-            yield pd.DataFrame(out, columns=["url", "html", "text"])
+        msg = email.mime.multipart.MIMEMultipart()
+        msg.set_boundary("====dedoc-spark-fixture====")
+        msg["Subject"] = f"doc {doc_id}"
+        msg.attach(email.mime.text.MIMEText("cover", "plain"))
+        att = email.mime.application.MIMEApplication(text.encode("utf-8"), "octet-stream")
+        att.add_header("Content-Disposition", "attachment", filename="note.txt")
+        msg.attach(att)
+        return {"url": f"{doc_id}.eml", "html": msg.as_bytes(), "text": ""}
 
-    pages = (
-        _parallel(
-            _docs(spark, sf_dir)
-            .select("doc_id", "text")
-        )
-        .mapInPandas(bootstrapped(build), "url string, html binary, text string")
-    )
+    pages = _per_doc(spark, sf_dir, ["doc_id", "text"], "url string, html binary, text string", row)
     out = extract_with_attachments(pages, max_depth=1)
     members = out.filter(F.col("url").endswith("#note.txt"))
     return members.select(
@@ -1584,41 +1595,27 @@ SELECT doc_id, u.s.i - 1 AS sent_id, u.s.sent AS sentence FROM (
 
 
 def q40_pdf_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
-    schema = "doc_id long, linked_line string, spacing_seq string, sizes string"
-
-    def fn(it):
+    def row(doc_id: int, text: str):
         from dedoc_spark.core.pdf_extract import extract_pdf_lines
         from dedoc_spark.sources.pdf_fixture import build_pdf
 
-        for pdf_batch in it:
-            out = []
-            for doc_id, text in zip(pdf_batch["doc_id"], pdf_batch["text"]):
-                payload = build_pdf(
-                    [[(f"Doc {doc_id}", True), (text, False), (f"table {doc_id} data", False)]],
-                    images=[[(72, 600, 200, 100)]],
-                )
-                lines, _ = extract_pdf_lines(payload, f"{doc_id}", with_layout=True)
-                linked = next(
-                    (ln.line for ln in lines for a in ln.annotations if a.name == "attachment"),
-                    None,
-                )
-                spacing = [
-                    a.value for ln in lines for a in ln.annotations if a.name == "spacing"
-                ]
-                sizes = sorted({a.value for ln in lines for a in ln.annotations if a.name == "size"})
-                out.append(
-                    {
-                        "doc_id": int(doc_id),
-                        "linked_line": linked,
-                        "spacing_seq": ",".join(spacing),
-                        "sizes": ",".join(sizes),
-                    }
-                )
-            yield pd.DataFrame(out, columns=["doc_id", "linked_line", "spacing_seq", "sizes"])
+        payload = build_pdf(
+            [[(f"Doc {doc_id}", True), (text, False), (f"table {doc_id} data", False)]],
+            images=[[(72, 600, 200, 100)]],
+        )
+        lines, _ = extract_pdf_lines(payload, f"{doc_id}", with_layout=True)
+        notes = [(ln.line, a) for ln in lines for a in ln.annotations]
+        return {
+            "doc_id": doc_id,
+            "linked_line": next((line for line, a in notes if a.name == "attachment"), None),
+            "spacing_seq": ",".join(a.value for _, a in notes if a.name == "spacing"),
+            "sizes": ",".join(sorted({a.value for _, a in notes if a.name == "size"})),
+        }
 
-    return _parallel(_docs(spark, sf_dir).select("doc_id", "text")).mapInPandas(bootstrapped(fn), schema)
+    return _per_doc(
+        spark, sf_dir, ["doc_id", "text"],
+        "doc_id long, linked_line string, spacing_seq string, sizes string", row,
+    )
 
 
 # geometry constants: 3 lines of height 12 at top-down tops 20/40/60 → first
@@ -1640,32 +1637,17 @@ FROM documents
 
 
 def q41_image_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
-    schema = "doc_id long, width int, height int, px_hash string"
-
-    def fn(it):
+    def row(doc_id: int):
         import numpy as np
 
-        from dedoc_spark.core.image_decode import encode_png, pixel_hash
+        from dedoc_spark.core.image_decode import decode_image, encode_png, pixel_hash
 
-        for batch in it:
-            out = []
-            for doc_id in batch["doc_id"]:
-                did = int(doc_id)
-                v = np.arange(256, dtype=np.int64)
-                v = ((3 * did + v) % 256).astype(np.uint8).reshape(16, 16)
-                rgb = np.repeat(v[:, :, None], 3, axis=2)
-                png = encode_png(rgb, color_type=2, filter_type=did % 3)
-                from dedoc_spark.core.image_decode import decode_image
+        v = ((3 * doc_id + np.arange(256, dtype=np.int64)) % 256).astype(np.uint8).reshape(16, 16)
+        png = encode_png(np.repeat(v[:, :, None], 3, axis=2), color_type=2, filter_type=doc_id % 3)
+        w, h, _ = decode_image(png)
+        return {"doc_id": doc_id, "width": w, "height": h, "px_hash": pixel_hash(png)}
 
-                w, h, _ = decode_image(png)
-                out.append(
-                    {"doc_id": did, "width": w, "height": h, "px_hash": pixel_hash(png)}
-                )
-            yield pd.DataFrame(out, columns=["doc_id", "width", "height", "px_hash"])
-
-    return _parallel(_docs(spark, sf_dir).select("doc_id")).mapInPandas(bootstrapped(fn), schema)
+    return _per_doc(spark, sf_dir, ["doc_id"], "doc_id long, width int, height int, px_hash string", row)
 
 
 Q41_SQL = """
@@ -1823,43 +1805,32 @@ FROM sel WHERE pos >= 3
 # BGR byte order to reproduce the oracle's top-down RGB buffer hash.
 
 
+def _bmp_gradient(doc_id: int) -> bytes:
+    """16×8 gray-in-RGB gradient v = (5·doc_id + 16r + c) mod 256 as a
+    real bottom-up, row-padded 24-bit BMP."""
+    import struct
+
+    W, H = 16, 8
+    pad = b"\x00" * ((W * 3 + 3) // 4 * 4 - W * 3)
+    pixel_data = b"".join(
+        bytes(v for c in range(W) for v in [(doc_id * 5 + r * 16 + c) % 256] * 3) + pad
+        for r in range(H - 1, -1, -1)  # bottom-up storage
+    )
+    return (
+        b"BM"
+        + struct.pack("<IHHI", 54 + len(pixel_data), 0, 0, 54)
+        + struct.pack("<IiiHHIIiiII", 40, W, H, 1, 24, 0, len(pixel_data), 0, 0, 0, 0)
+        + pixel_data
+    )
+
+
 def q45_bmp_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
-    schema = "doc_id long, width int, height int, px_hash string"
-
-    def fn(it):
-        import struct
-
+    def row(doc_id: int):
         from dedoc_spark.core.image_decode import pixel_hash
 
-        W, H = 16, 8
-        row_size = (W * 3 + 3) // 4 * 4
-        for batch in it:
-            out = []
-            for doc_id in batch["doc_id"]:
-                did = int(doc_id)
-                rows = []
-                for r in range(H - 1, -1, -1):  # bottom-up storage
-                    row = bytearray()
-                    for c in range(W):
-                        v = (did * 5 + r * 16 + c) % 256
-                        row += bytes([v, v, v])
-                    row += b"\x00" * (row_size - len(row))
-                    rows.append(bytes(row))
-                pixel_data = b"".join(rows)
-                bmp = (
-                    b"BM"
-                    + struct.pack("<IHHI", 54 + len(pixel_data), 0, 0, 54)
-                    + struct.pack("<IiiHHIIiiII", 40, W, H, 1, 24, 0, len(pixel_data), 0, 0, 0, 0)
-                    + pixel_data
-                )
-                out.append(
-                    {"doc_id": did, "width": W, "height": H, "px_hash": pixel_hash(bmp)}
-                )
-            yield pd.DataFrame(out, columns=["doc_id", "width", "height", "px_hash"])
+        return {"doc_id": doc_id, "width": 16, "height": 8, "px_hash": pixel_hash(_bmp_gradient(doc_id))}
 
-    return _parallel(_docs(spark, sf_dir).select("doc_id")).mapInPandas(bootstrapped(fn), schema)
+    return _per_doc(spark, sf_dir, ["doc_id"], "doc_id long, width int, height int, px_hash string", row)
 
 
 Q45_SQL = """
@@ -1877,60 +1848,27 @@ FROM px GROUP BY doc_id
 # q46-q56: driver-oracle gates for every reader that was pytest-only in
 # round 3 (VERDICT r3 "Next round" #1) — csv, json, email, mhtml, rtf,
 # odt/ods/odp, legacy doc/ppt, and the native archive-explosion channel.
-# Pattern is q21's: synthesize the format deterministically from the
-# documents row inside mapInPandas, run the full per-row extraction, emit
-# closed-form columns a DuckDB oracle rebuilds arithmetically.
+# Pattern is q21's: a _per_doc row function synthesizes the format
+# deterministically from the documents row, runs the full extraction and
+# emits closed-form columns a DuckDB oracle rebuilds arithmetically.
 
 
-def _field_roundtrip(spark: SparkSession, sf_dir: str, builder, fields) -> DataFrame:
-    """documents → per-row synthesized payload → full extraction → chosen
-    output fields. ``builder(doc_id, text, source, lang) -> (bytes, url)``;
-    ``fields`` = [(name, spark_type)] pulled from the extract_document dict
-    (doc_id is always prepended)."""
-    import pandas as pd
-
-    names = [n for n, _ in fields]
-    schema = "doc_id long, " + ", ".join(f"{n} {t}" for n, t in fields)
-
-    def fn(it):
-        from dedoc_spark.core.document import extract_document
-
-        for pdf in it:
-            out = []
-            for doc_id, text, source, lang in zip(
-                pdf["doc_id"], pdf["text"], pdf["source"], pdf["lang"]
-            ):
-                payload, url = builder(int(doc_id), text, source, lang)
-                d = extract_document(url, payload, None)
-                row = {"doc_id": int(doc_id)}
-                row.update({n: d[n] for n in names})
-                out.append(row)
-            yield pd.DataFrame(out, columns=["doc_id"] + names)
-
-    return (
-        _parallel(
-            _docs(spark, sf_dir)
-            .select("doc_id", "text", "source", "lang")
-        )
-        .mapInPandas(bootstrapped(fn), schema)
-    )
-
-
-_LINEAR_FIELDS = [("n_lines", "long"), ("text_linear", "string")]
+_LINEAR = ("n_lines", "text_linear")
+_LINEAR_SCHEMA = "doc_id long, n_lines long, text_linear string"
 
 
 def q46_csv_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CSVReader gate (csv_reader.py:17-58): one Table of stringified
     cells; the reader must undo csv quoting exactly."""
-    def builder(doc_id: int, grid):
+    def row(doc_id: int, source: str, lang: str):
         import csv
         import io
 
         buf = io.StringIO()
-        csv.writer(buf, lineterminator="\n").writerows(grid)
-        return buf.getvalue().encode(), f"{doc_id}.csv"
+        csv.writer(buf, lineterminator="\n").writerows(_grid(doc_id, source, lang))
+        return _grid_row(doc_id, f"{doc_id}.csv", buf.getvalue().encode())
 
-    return _table_roundtrip(spark, sf_dir, builder)
+    return _per_doc(spark, sf_dir, ["doc_id", "source", "lang"], _GRID_SCHEMA, row)
 
 
 Q46_SQL = Q24_SQL
@@ -1940,12 +1878,10 @@ def q47_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JsonReader gate (json_reader.py:22-131): stack DFS, sorted keys —
     {"id": N, "txt": text} flattens to key/raw_text pairs in key order."""
 
-    def builder(doc_id: int, text: str, source: str, lang: str):
-        import json as jsonlib
+    def row(doc_id: int, text: str, source: str, lang: str):
+        return _text_row(doc_id, f"{doc_id}.json", json.dumps({"id": doc_id, "txt": text}).encode(), _LINEAR)
 
-        return jsonlib.dumps({"id": doc_id, "txt": text}).encode(), f"{doc_id}.json"
-
-    return _field_roundtrip(spark, sf_dir, builder, _LINEAR_FIELDS)
+    return _per_doc(spark, sf_dir, ["doc_id", "text", "source", "lang"], _LINEAR_SCHEMA, row)
 
 
 # DFS trace: key "id" → raw "{id}" → key "txt" → raw "{text}" (4 lines);
@@ -1962,15 +1898,15 @@ def q48_email_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     (root line + subject field — reference quirk), header fields become
     typed lines, the text/plain body splits into \\n-suffixed lines."""
 
-    def builder(doc_id: int, text: str, source: str, lang: str):
+    def row(doc_id: int, text: str, source: str, lang: str):
         eml = (
             f"Subject: Doc {doc_id}\r\nFrom: alice@example.com\r\nTo: bob@example.com\r\n"
             f"Date: Mon, 01 Jan 2024 00:00:00 +0000\r\nMIME-Version: 1.0\r\n"
             f"Content-Type: text/plain; charset=utf-8\r\n\r\n{text}"
         )
-        return eml.encode(), f"{doc_id}.eml"
+        return _text_row(doc_id, f"{doc_id}.eml", eml.encode(), _LINEAR)
 
-    return _field_roundtrip(spark, sf_dir, builder, _LINEAR_FIELDS)
+    return _per_doc(spark, sf_dir, ["doc_id", "text", "source", "lang"], _LINEAR_SCHEMA, row)
 
 
 # lines: subject-as-root, subject, from, to, date, body ("{text}\n")
@@ -1987,7 +1923,7 @@ def q49_mhtml_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MhtmlReader gate (mhtml_reader.py:33-124): the html part routes
     through the HTML core — output matches q17's closed form."""
 
-    def builder(doc_id: int, text: str, source: str, lang: str):
+    def row(doc_id: int, text: str, source: str, lang: str):
         mh = (
             "From: <Saved by test>\r\nSubject: snap\r\nMIME-Version: 1.0\r\n"
             'Content-Type: multipart/related; boundary="BND"\r\n\r\n'
@@ -1995,11 +1931,9 @@ def q49_mhtml_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"<html><body><h1>Doc {doc_id}</h1><p>{text}</p></body></html>\r\n"
             "--BND--\r\n"
         )
-        return mh.encode(), f"{doc_id}.mhtml"
+        return _text_row(doc_id, f"{doc_id}.mhtml", mh.encode())
 
-    return _field_roundtrip(
-        spark, sf_dir, builder, [("n_lines", "long"), ("text_extracted", "string")]
-    )
+    return _per_doc(spark, sf_dir, ["doc_id", "text", "source", "lang"], _TEXT_SCHEMA, row)
 
 
 Q49_SQL = """
@@ -2014,10 +1948,10 @@ def q50_rtf_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     here the native control-word parser, core/rtf_extract.py): \\par maps
     to a line break, the control word eats one trailing space."""
 
-    def builder(doc_id: int, text: str):
-        return f"{{\\rtf1\\ansi Doc {doc_id}\\par {text}}}".encode(), f"{doc_id}.rtf"
+    def row(doc_id: int, text: str):
+        return _text_row(doc_id, f"{doc_id}.rtf", f"{{\\rtf1\\ansi Doc {doc_id}\\par {text}}}".encode())
 
-    return _binary_roundtrip(spark, sf_dir, builder)
+    return _per_doc(spark, sf_dir, ["doc_id", "text"], _TEXT_SCHEMA, row)
 
 
 Q50_SQL = Q21_SQL
@@ -2027,12 +1961,12 @@ def q51_odt_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ODT gate (native core/odf_extract.py): text:h outline-level 1 →
     header line, text:p → raw line — same tree shape as docx."""
 
-    def builder(doc_id: int, text: str):
+    def row(doc_id: int, text: str):
         from dedoc_spark.sources.office_fixture import build_odt
 
-        return build_odt([("h", 1, f"Doc {doc_id}"), ("p", text)]), f"{doc_id}.odt"
+        return _text_row(doc_id, f"{doc_id}.odt", build_odt([("h", 1, f"Doc {doc_id}"), ("p", text)]))
 
-    return _binary_roundtrip(spark, sf_dir, builder)
+    return _per_doc(spark, sf_dir, ["doc_id", "text"], _TEXT_SCHEMA, row)
 
 
 Q51_SQL = Q21_SQL
@@ -2040,12 +1974,12 @@ Q51_SQL = Q21_SQL
 
 def q52_ods_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ODS gate: table:table-cell grid → one Table, q24 cell layout."""
-    def builder(doc_id: int, grid):
+    def row(doc_id: int, source: str, lang: str):
         from dedoc_spark.sources.office_fixture import build_ods
 
-        return build_ods([grid]), f"{doc_id}.ods"
+        return _grid_row(doc_id, f"{doc_id}.ods", build_ods([_grid(doc_id, source, lang)]))
 
-    return _table_roundtrip(spark, sf_dir, builder)
+    return _per_doc(spark, sf_dir, ["doc_id", "source", "lang"], _GRID_SCHEMA, row)
 
 
 Q52_SQL = Q24_SQL
@@ -2055,12 +1989,12 @@ def q53_odp_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ODP gate: first paragraph of each draw:page is the slide title
     (header tag) — same tree shape as pptx (q23)."""
 
-    def builder(doc_id: int, text: str):
+    def row(doc_id: int, text: str):
         from dedoc_spark.sources.office_fixture import build_odp
 
-        return build_odp([[f"Doc {doc_id}", text]]), f"{doc_id}.odp"
+        return _text_row(doc_id, f"{doc_id}.odp", build_odp([[f"Doc {doc_id}", text]]))
 
-    return _binary_roundtrip(spark, sf_dir, builder)
+    return _per_doc(spark, sf_dir, ["doc_id", "text"], _TEXT_SCHEMA, row)
 
 
 Q53_SQL = Q21_SQL
@@ -2070,12 +2004,12 @@ def q54_doc_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Legacy .doc gate (native piece-table reader, core/doc_extract.py):
     paragraphs join through the txt pipeline."""
 
-    def builder(doc_id: int, text: str):
+    def row(doc_id: int, text: str):
         from dedoc_spark.sources.office_fixture import build_doc
 
-        return build_doc([f"Doc {doc_id}", text]), f"{doc_id}.doc"
+        return _text_row(doc_id, f"{doc_id}.doc", build_doc([f"Doc {doc_id}", text]))
 
-    return _binary_roundtrip(spark, sf_dir, builder)
+    return _per_doc(spark, sf_dir, ["doc_id", "text"], _TEXT_SCHEMA, row)
 
 
 Q54_SQL = Q21_SQL
@@ -2085,12 +2019,12 @@ def q55_ppt_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Legacy .ppt gate (native record-scan reader, core/doc_extract.py):
     TextCharsAtom/TextBytesAtom texts join through the txt pipeline."""
 
-    def builder(doc_id: int, text: str):
+    def row(doc_id: int, text: str):
         from dedoc_spark.sources.office_fixture import build_ppt
 
-        return build_ppt([f"Doc {doc_id}", text]), f"{doc_id}.ppt"
+        return _text_row(doc_id, f"{doc_id}.ppt", build_ppt([f"Doc {doc_id}", text]))
 
-    return _binary_roundtrip(spark, sf_dir, builder)
+    return _per_doc(spark, sf_dir, ["doc_id", "text"], _TEXT_SCHEMA, row)
 
 
 Q55_SQL = Q21_SQL
@@ -2106,41 +2040,31 @@ def q56_archive_members(spark: SparkSession, sf_dir: str) -> DataFrame:
     and extract each through the txt reader. The iterative explode
     itself (DISK_ONLY per-level persist, typed error rows) is the unit
     under test."""
-    import pandas as pd
-
     from dedoc_spark.operators.archives import extract_with_archives
 
-    def fn(it):
-        import gzip as gziplib
-        import io as iolib
-        import tarfile as tarlib
+    def row(doc_id: int, text: str):
+        import gzip
+        import io
+        import tarfile
 
         from dedoc_spark.sources.archive_fixture import build_rar4_stored
 
-        for pdf in it:
-            out = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                raw = iolib.BytesIO()
-                with tarlib.open(fileobj=raw, mode="w", format=tarlib.USTAR_FORMAT) as tf:
-                    for name, body in (("a.txt", text.encode()), ("b.txt", f"Doc {int(doc_id)}".encode())):
-                        info = tarlib.TarInfo(name)
-                        info.size = len(body)
-                        info.mtime = 0
-                        tf.addfile(info, iolib.BytesIO(body))
-                # fixed mtime + no filename → byte-deterministic gzip
-                payload = gziplib.compress(raw.getvalue(), mtime=0)
-                out.append({"url": f"{int(doc_id)}.tgz", "html": payload, "text": ""})
-                rar = build_rar4_stored([("c.txt", f"Rar {int(doc_id)}".encode())])
-                out.append({"url": f"{int(doc_id)}.rar", "html": rar, "text": ""})
-            yield pd.DataFrame(out, columns=["url", "html", "text"])
+        raw = io.BytesIO()
+        with tarfile.open(fileobj=raw, mode="w", format=tarfile.USTAR_FORMAT) as tf:
+            for name, body in (("a.txt", text.encode()), ("b.txt", f"Doc {doc_id}".encode())):
+                info = tarfile.TarInfo(name)
+                info.size = len(body)
+                info.mtime = 0
+                tf.addfile(info, io.BytesIO(body))
+        # fixed mtime + no filename → byte-deterministic gzip
+        tgz = gzip.compress(raw.getvalue(), mtime=0)
+        rar = build_rar4_stored([("c.txt", f"Rar {doc_id}".encode())])
+        return [
+            {"url": f"{doc_id}.tgz", "html": tgz, "text": ""},
+            {"url": f"{doc_id}.rar", "html": rar, "text": ""},
+        ]
 
-    src = (
-        _parallel(
-            _docs(spark, sf_dir)
-            .select("doc_id", "text")
-        )
-        .mapInPandas(bootstrapped(fn), "url string, html binary, text string")
-    )
+    src = _per_doc(spark, sf_dir, ["doc_id", "text"], "url string, html binary, text string", row)
     out = extract_with_archives(src, max_depth=1)
     return out.select(
         F.split(F.split("url", "#")[0], r"\.")[0].cast("long").alias("doc_id"),
@@ -2167,6 +2091,34 @@ SELECT doc_id, 'c.txt' AS member, CAST(1 AS BIGINT) AS n_lines,
 FROM documents
 """
 
+
+_RULED_SCHEMA = (
+    "doc_id long, n_lines long, n_tables long, text_extracted string, "
+    "c00 string, c01 string, c10 string, c11 string"
+)
+
+
+def _ruled_row(doc_id: int, text: str, source: str, lang: str, gost: bool = False) -> dict:
+    """q57 (and, with ``gost``, q65): the body line plus a ruled 2×2 table
+    drawn as line art — inside a GOST drawing frame whose stamp reads
+    "Sheet {doc_id}" when ``gost`` — extracted with table analysis."""
+    from dedoc_spark.sources.pdf_fixture import build_pdf, gost_frame_ops, table_ops
+
+    ops = table_ops(72, 700, [100, 100], 20, _grid(doc_id, source, lang))
+    params = {"need_pdf_table_analysis": True, "with_layout": True}
+    if gost:
+        ops = gost_frame_ops(f"Sheet {doc_id}") + "\n" + ops
+        params = {"need_gost_frame_analysis": True, **params}
+    d = _extract(f"{doc_id}.pdf", build_pdf([[(text, False)]], extra_content=[ops]), params)
+    return {
+        "doc_id": doc_id,
+        "n_lines": d["n_lines"],
+        "n_tables": d["n_tables"],
+        "text_extracted": d["text_extracted"],
+        **_cells(d),
+    }
+
+
 def q57_pdf_ruled_tables(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Txt-layer ruled-table gate (pdf_txtlayer_reader.py:49-73 contract,
     core/pdf_tables.py): each doc is a PDF with one body line plus a ruled
@@ -2174,56 +2126,7 @@ def q57_pdf_ruled_tables(spark: SparkSession, sf_dir: str) -> DataFrame:
     need_pdf_table_analysis the grid must come back as a Table with the
     right cells and the captured text must LEAVE the page flow (the
     unreadable-block exclusion), so n_lines stays 1."""
-    import pandas as pd
-
-    def fn(it):
-        import json as jsonlib
-
-        from dedoc_spark.core.document import extract_document
-        from dedoc_spark.sources.pdf_fixture import build_pdf, table_ops
-
-        for pdf in it:
-            out = []
-            for doc_id, text, source, lang in zip(
-                pdf["doc_id"], pdf["text"], pdf["source"], pdf["lang"]
-            ):
-                ops = table_ops(
-                    72, 700, [100, 100], 20, [["id", str(int(doc_id))], [source, lang]]
-                )
-                payload = build_pdf([[(text, False)]], extra_content=[ops])
-                d = extract_document(
-                    f"{int(doc_id)}.pdf",
-                    payload,
-                    None,
-                    params={"need_pdf_table_analysis": True, "with_layout": True},
-                )
-                cells = jsonlib.loads(d["tables_json"])[0]["cells"]
-                texts = ["\n".join(ln["line"] for ln in c["lines"]) for row in cells for c in row]
-                out.append(
-                    {
-                        "doc_id": int(doc_id),
-                        "n_lines": d["n_lines"],
-                        "n_tables": d["n_tables"],
-                        "text_extracted": d["text_extracted"],
-                        "c00": texts[0], "c01": texts[1], "c10": texts[2], "c11": texts[3],
-                    }
-                )
-            yield pd.DataFrame(
-                out,
-                columns=["doc_id", "n_lines", "n_tables", "text_extracted", "c00", "c01", "c10", "c11"],
-            )
-
-    return (
-        _parallel(
-            _docs(spark, sf_dir)
-            .select("doc_id", "text", "source", "lang")
-        )
-        .mapInPandas(
-            bootstrapped(fn),
-            "doc_id long, n_lines long, n_tables long, text_extracted string, "
-            "c00 string, c01 string, c10 string, c11 string",
-        )
-    )
+    return _per_doc(spark, sf_dir, ["doc_id", "text", "source", "lang"], _RULED_SCHEMA, _ruled_row)
 
 
 Q57_SQL = """
@@ -2239,10 +2142,10 @@ def q58_law_structure(spark: SparkSession, sf_dir: str) -> DataFrame:
     zones (title/body/cellar/application), unit hierarchy (article/item/
     subitem) and prefix-split postprocess checked via the full per-line
     type sequence; the item's split-off rest line carries the document's
-    own text. Runs through the shared _law_family_gate harness."""
+    own text."""
 
-    def make_lines(doc_id, text):
-        return [
+    def row(doc_id: int, text: str):
+        return _typed_lines_row(doc_id, text, "law", [
             "ЗАКОН",
             "Статья 1. Сфера",
             f"1) {text}",
@@ -2250,9 +2153,9 @@ def q58_law_structure(spark: SparkSession, sf_dir: str) -> DataFrame:
             "Президент Российской Федерации",
             "Приложение",
             "Статья 2. Нормы",
-        ]
+        ])
 
-    return _law_family_gate(spark, sf_dir, "law", make_lines, "raw_text")
+    return _per_doc(spark, sf_dir, ["doc_id", "text"], _TYPED_LINES_SCHEMA, row)
 
 
 Q58_SQL = """
@@ -2262,48 +2165,25 @@ SELECT doc_id, CAST(10 AS BIGINT) AS n_lines,
 FROM documents
 """
 
-def _law_family_gate(spark: SparkSession, sf_dir: str, doc_type: str, make_lines, rest_type: str):
-    """Shared q58-pattern runner for the domain structure extractors: build
-    a synthetic document around the row's text, extract with
-    params={"document_type": ...}, emit the full per-line type sequence
-    plus the raw line that must carry the document's own text."""
-    import pandas as pd
+_TYPED_LINES_SCHEMA = "doc_id long, n_lines long, types_seq string, text_rest string"
 
-    def fn(it):
-        import json as jsonlib
 
-        from dedoc_spark.core.document import extract_document
-
-        for pdf in it:
-            out = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                body = "\n".join(make_lines(int(doc_id), text))
-                d = extract_document(
-                    f"{int(doc_id)}.txt", body.encode(), None, params={"document_type": doc_type}
-                )
-                lines = jsonlib.loads(d["lines_json"])
-                types_seq = ",".join(ln["hl"]["line_type"] for ln in lines)
-                rest = next(
-                    (ln["line"] for ln in lines if ln["hl"]["line_type"] == rest_type and text in ln["line"]),
-                    "",
-                )
-                out.append(
-                    {
-                        "doc_id": int(doc_id),
-                        "n_lines": len(lines),
-                        "types_seq": types_seq,
-                        "text_rest": rest,
-                    }
-                )
-            yield pd.DataFrame(out, columns=["doc_id", "n_lines", "types_seq", "text_rest"])
-
-    return (
-        _parallel(
-            _docs(spark, sf_dir)
-            .select("doc_id", "text")
-        )
-        .mapInPandas(bootstrapped(fn), "doc_id long, n_lines long, types_seq string, text_rest string")
-    )
+def _typed_lines_row(doc_id: int, text: str, doc_type: str, body: list) -> dict:
+    """Domain-structure gates (q58-q60, q62): the synthetic document
+    ``body`` (built around the row's text) extracted with
+    params={"document_type": doc_type} → the full per-line type sequence
+    plus the raw_text line that carries the document's own text."""
+    d = _extract(f"{doc_id}.txt", "\n".join(body).encode(), {"document_type": doc_type})
+    lines = json.loads(d["lines_json"])
+    return {
+        "doc_id": doc_id,
+        "n_lines": len(lines),
+        "types_seq": ",".join(ln["hl"]["line_type"] for ln in lines),
+        "text_rest": next(
+            (ln["line"] for ln in lines if ln["hl"]["line_type"] == "raw_text" and text in ln["line"]),
+            "",
+        ),
+    }
 
 
 def q59_tz_structure(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2312,8 +2192,8 @@ def q59_tz_structure(spark: SparkSession, sf_dir: str) -> DataFrame:
     (depth 8), dotted item (9, dot count in level_2), bullet (10), item
     prefix split."""
 
-    def make_lines(doc_id, text):
-        return [
+    def row(doc_id: int, text: str):
+        return _typed_lines_row(doc_id, text, "tz", [
             "ТЕХНИЧЕСКОЕ ЗАДАНИЕ",
             "Содержание",
             "Раздел 1 Общие сведения .......... 2",
@@ -2321,9 +2201,9 @@ def q59_tz_structure(spark: SparkSession, sf_dir: str) -> DataFrame:
             "Раздел 1 Общие сведения",
             f"1.1 {text}",
             "- пункт списка",
-        ]
+        ])
 
-    return _law_family_gate(spark, sf_dir, "tz", make_lines, "raw_text")
+    return _per_doc(spark, sf_dir, ["doc_id", "text"], _TYPED_LINES_SCHEMA, row)
 
 
 Q59_SQL = """
@@ -2339,8 +2219,8 @@ def q60_diploma_structure(spark: SparkSession, sf_dir: str) -> DataFrame:
     diploma_structure_extractor.py:38-71): TOC heuristic detection +
     replacement, named-item keywords, pattern-composition list levels."""
 
-    def make_lines(doc_id, text):
-        return [
+    def row(doc_id: int, text: str):
+        return _typed_lines_row(doc_id, text, "diploma", [
             "ДИПЛОМНАЯ РАБОТА",
             "СОДЕРЖАНИЕ",
             "Введение .......... 3",
@@ -2357,9 +2237,9 @@ def q60_diploma_structure(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"1) {text}",
             "Заключение",
             "итоги работы",
-        ]
+        ])
 
-    return _law_family_gate(spark, sf_dir, "diploma", make_lines, "raw_text")
+    return _per_doc(spark, sf_dir, ["doc_id", "text"], _TYPED_LINES_SCHEMA, row)
 
 
 Q60_SQL = """
@@ -2375,8 +2255,8 @@ def q62_fintoc_structure(spark: SparkSession, sf_dir: str) -> DataFrame:
     body lines matching detected TOC items become headers whose level_2
     is the TOC depth (dotted numbering), everything else raw_text."""
 
-    def make_lines(doc_id, text):
-        return [
+    def row(doc_id: int, text: str):
+        return _typed_lines_row(doc_id, text, "fintoc", [
             "PROSPECTUS",
             "CONTENTS",
             "1 Risk Factors .......... 4",
@@ -2391,9 +2271,9 @@ def q62_fintoc_structure(spark: SparkSession, sf_dir: str) -> DataFrame:
             "2.1 General Allocation",
             "more ordinary prose body",
             "closing ordinary prose line",
-        ]
+        ])
 
-    return _law_family_gate(spark, sf_dir, "fintoc", make_lines, "raw_text")
+    return _per_doc(spark, sf_dir, ["doc_id", "text"], _TYPED_LINES_SCHEMA, row)
 
 
 Q62_SQL = """
@@ -2470,40 +2350,12 @@ def q63_image_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     the q45 BMP gradient downscaled 16×8 → 8×4; NN source index is
     floor(i·in/out) = 2i, so the oracle rebuilds the resized buffer
     arithmetically (v = (5·doc + 2r·16 + 2c) mod 256)."""
-    import pandas as pd
-
     from dedoc_spark.operators.multimodal import image_resize
 
-    def fn(it):
-        import struct
+    def row(doc_id: int):
+        return {"media_id": str(doc_id), "media": _bmp_gradient(doc_id)}
 
-        W, H = 16, 8
-        row_size = (W * 3 + 3) // 4 * 4
-        for batch in it:
-            out = []
-            for doc_id in batch["doc_id"]:
-                did = int(doc_id)
-                rows = []
-                for r in range(H - 1, -1, -1):
-                    row = bytearray()
-                    for c in range(W):
-                        v = (did * 5 + r * 16 + c) % 256
-                        row += bytes([v, v, v])
-                    row += b"\x00" * (row_size - len(row))
-                    rows.append(bytes(row))
-                pixel_data = b"".join(rows)
-                bmp = (
-                    b"BM"
-                    + struct.pack("<IHHI", 54 + len(pixel_data), 0, 0, 54)
-                    + struct.pack("<IiiHHIIiiII", 40, W, H, 1, 24, 0, len(pixel_data), 0, 0, 0, 0)
-                    + pixel_data
-                )
-                out.append({"media_id": str(did), "media": bmp})
-            yield pd.DataFrame(out, columns=["media_id", "media"])
-
-    media = _parallel(_docs(spark, sf_dir).select("doc_id")).mapInPandas(
-        bootstrapped(fn), "media_id string, media binary"
-    )
+    media = _per_doc(spark, sf_dir, ["doc_id"], "media_id string, media binary", row)
     out = image_resize(media, 8, 4)
     return out.select(
         F.col("media_id").cast("long").alias("doc_id"),
@@ -2532,32 +2384,21 @@ def q64_gif_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     GIF of 4×4 index grids over a 4-gray palette; sampling every 2nd frame
     must return frames 0 and 2 with arithmetically reconstructable
     pixels (gray = 85·((doc + frame + 4r + c) mod 4))."""
-    import pandas as pd
-
     from dedoc_spark.operators.multimodal import gif_frame_sample
 
-    def fn(it):
+    def row(doc_id: int):
         import numpy as np
 
         from dedoc_spark.core.image_decode import encode_gif_frames
 
         palette = bytes(v for g in (0, 85, 170, 255) for v in (g, g, g))
-        for batch in it:
-            out = []
-            for doc_id in batch["doc_id"]:
-                did = int(doc_id)
-                frames = [
-                    np.fromfunction(
-                        lambda r, c: (did + f + 4 * r + c) % 4, (4, 4)
-                    ).astype(np.uint8)
-                    for f in range(3)
-                ]
-                out.append({"media_id": str(did), "media": encode_gif_frames(frames, palette)})
-            yield pd.DataFrame(out, columns=["media_id", "media"])
+        frames = [
+            np.fromfunction(lambda r, c: (doc_id + f + 4 * r + c) % 4, (4, 4)).astype(np.uint8)
+            for f in range(3)
+        ]
+        return {"media_id": str(doc_id), "media": encode_gif_frames(frames, palette)}
 
-    media = _parallel(_docs(spark, sf_dir).select("doc_id")).mapInPandas(
-        bootstrapped(fn), "media_id string, media binary"
-    )
+    media = _per_doc(spark, sf_dir, ["doc_id"], "media_id string, media binary", row)
     out = gif_frame_sample(media, every_n=2)
     return out.select(
         F.col("media_id").cast("long").alias("doc_id"),
@@ -2590,8 +2431,7 @@ FROM px GROUP BY doc_id, f
 # folded into one union gate per result shape with a ``fmt``/``op``/
 # ``metric`` discriminator column, and one-row-per-doc scalar gates into
 # equi-joins on doc_id, so EVERY capability family carries a driver-attested
-# oracle row. The per-format builders above stay callable (bench.py and
-# tests reuse them); only the registry entries changed.
+# oracle row.
 
 
 def q21_doc_formats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2600,7 +2440,7 @@ def q21_doc_formats(spark: SparkSession, sf_dir: str) -> DataFrame:
     Every branch must extract the identical closed-form two-line tree
     (header "Doc {id}" + body), so one Q21-family oracle covers all seven,
     discriminated by fmt."""
-    parts = [
+    return _by_fmt(spark, sf_dir, [
         ("docx", q21_docx_extract),
         ("pptx", q23_pptx_extract),
         ("rtf", q50_rtf_extract),
@@ -2608,12 +2448,7 @@ def q21_doc_formats(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("odp", q53_odp_extract),
         ("doc", q54_doc_extract),
         ("ppt", q55_ppt_extract),
-    ]
-    out = None
-    for fmt, fn in parts:
-        branch = fn(spark, sf_dir).select(F.lit(fmt).alias("fmt"), "*")
-        out = branch if out is None else out.unionByName(branch)
-    return out
+    ])
 
 
 Q21F_SQL = """
@@ -2627,17 +2462,12 @@ CROSS JOIN (VALUES ('docx'), ('pptx'), ('rtf'), ('odt'), ('odp'), ('doc'), ('ppt
 def q24_table_formats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Four grid-shaped readers in one gate — xlsx (q24), legacy .xls
     (q27), csv (q46), ods (q52); all share the Q24 2×2-cell closed form."""
-    parts = [
+    return _by_fmt(spark, sf_dir, [
         ("xlsx", q24_xlsx_extract),
         ("xls", q27_xls_extract),
         ("csv", q46_csv_extract),
         ("ods", q52_ods_extract),
-    ]
-    out = None
-    for fmt, fn in parts:
-        branch = fn(spark, sf_dir).select(F.lit(fmt).alias("fmt"), "*")
-        out = branch if out is None else out.unionByName(branch)
-    return out
+    ])
 
 
 Q24F_SQL = """
@@ -2790,9 +2620,7 @@ FROM ({Q32_SQL}) g JOIN ({Q35_SQL}) r ON g.doc_id = r.doc_id
 def q41_image_formats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pure-python image decode round-trips in one gate: PNG with rotating
     scanline filters (q41) and bottom-up padded 24-bit BMP (q45)."""
-    png = q41_image_decode(spark, sf_dir).select(F.lit("png").alias("fmt"), "*")
-    bmp = q45_bmp_decode(spark, sf_dir).select(F.lit("bmp").alias("fmt"), "*")
-    return png.unionByName(bmp)
+    return _by_fmt(spark, sf_dir, [("png", q41_image_decode), ("bmp", q45_bmp_decode)])
 
 
 Q41F_SQL = f"""
@@ -2858,59 +2686,9 @@ def q65_gost_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     With need_gost_frame_analysis + need_pdf_table_analysis the stamp must
     leave the page (outside the readable block), the frame itself must NOT
     come back as a table, and the q57 table contract must hold inside."""
-    import pandas as pd
-
-    def fn(it):
-        import json as jsonlib
-
-        from dedoc_spark.core.document import extract_document
-        from dedoc_spark.sources.pdf_fixture import build_pdf, gost_frame_ops, table_ops
-
-        for pdf in it:
-            out = []
-            for doc_id, text, source, lang in zip(
-                pdf["doc_id"], pdf["text"], pdf["source"], pdf["lang"]
-            ):
-                ops = gost_frame_ops(f"Sheet {int(doc_id)}") + "\n" + table_ops(
-                    72, 700, [100, 100], 20, [["id", str(int(doc_id))], [source, lang]]
-                )
-                payload = build_pdf([[(text, False)]], extra_content=[ops])
-                d = extract_document(
-                    f"{int(doc_id)}.pdf",
-                    payload,
-                    None,
-                    params={
-                        "need_gost_frame_analysis": True,
-                        "need_pdf_table_analysis": True,
-                        "with_layout": True,
-                    },
-                )
-                cells = jsonlib.loads(d["tables_json"])[0]["cells"]
-                texts = ["\n".join(ln["line"] for ln in c["lines"]) for row in cells for c in row]
-                out.append(
-                    {
-                        "doc_id": int(doc_id),
-                        "n_lines": d["n_lines"],
-                        "n_tables": d["n_tables"],
-                        "text_extracted": d["text_extracted"],
-                        "c00": texts[0], "c01": texts[1], "c10": texts[2], "c11": texts[3],
-                    }
-                )
-            yield pd.DataFrame(
-                out,
-                columns=["doc_id", "n_lines", "n_tables", "text_extracted", "c00", "c01", "c10", "c11"],
-            )
-
-    return (
-        _parallel(
-            _docs(spark, sf_dir)
-            .select("doc_id", "text", "source", "lang")
-        )
-        .mapInPandas(
-            bootstrapped(fn),
-            "doc_id long, n_lines long, n_tables long, text_extracted string, "
-            "c00 string, c01 string, c10 string, c11 string",
-        )
+    return _per_doc(
+        spark, sf_dir, ["doc_id", "text", "source", "lang"], _RULED_SCHEMA,
+        functools.partial(_ruled_row, gost=True),
     )
 
 
@@ -2930,64 +2708,36 @@ def q66_tei_article(spark: SparkSession, sf_dir: str) -> DataFrame:
     bibliography item with a page biblScope. Closed-form line list:
     root, Abstract, abstract text, "1. Sec {source}", "{text}\\n",
     bibliography header, empty item line, "{id}-{id+7}" page scope."""
-    import pandas as pd
 
-    def fn(it):
+    def row(doc_id: int, text: str, source: str, lang: str):
         from xml.sax.saxutils import escape
 
-        from dedoc_spark.core.document import extract_document
-
-        for pdf in it:
-            out = []
-            for doc_id, text, source, lang in zip(
-                pdf["doc_id"], pdf["text"], pdf["source"], pdf["lang"]
-            ):
-                did = int(doc_id)
-                tei = (
-                    '<TEI xmlns="http://www.tei-c.org/ns/1.0"><teiHeader><fileDesc>'
-                    f"<titleStmt><title>Doc {did}</title></titleStmt></fileDesc>"
-                    f"<profileDesc><abstract><p>{escape(text)}</p></abstract></profileDesc>"
-                    "</teiHeader><text><body>"
-                    f'<div><head n="1.">Sec {escape(source)}</head><p>{escape(text)}</p></div>'
-                    '<figure type="table" xml:id="tab_0"><head>T</head><figDesc>d</figDesc>'
-                    f"<table><row><cell>id</cell><cell>{did}</cell></row>"
-                    f"<row><cell>{escape(source)}</cell><cell>{escape(lang)}</cell></row></table></figure>"
-                    f'<figure xml:id="fig_{did}"/>'
-                    '</body><back><div type="references"><listBibl><biblStruct xml:id="b0">'
-                    f'<monogr><imprint><biblScope unit="page" from="{did}" to="{did + 7}"/>'
-                    "</imprint></monogr></biblStruct></listBibl></div></back></text></TEI>"
-                )
-                d = extract_document(
-                    f"{did}.tei.xml", tei.encode(), None,
-                    params={"with_attachments": "true"},
-                )
-                out.append(
-                    {
-                        "doc_id": did,
-                        "n_lines": d["n_lines"],
-                        "n_tables": d["n_tables"],
-                        "text_linear": d["text_linear"],
-                        "fig_warning": next(
-                            (w for w in d["warnings"]
-                             if w.startswith("attachment skipped")),
-                            None,
-                        ),
-                    }
-                )
-            yield pd.DataFrame(
-                out,
-                columns=["doc_id", "n_lines", "n_tables", "text_linear", "fig_warning"],
-            )
-
-    return (
-        _parallel(
-            _docs(spark, sf_dir)
-            .select("doc_id", "text", "source", "lang")
+        tei = (
+            '<TEI xmlns="http://www.tei-c.org/ns/1.0"><teiHeader><fileDesc>'
+            f"<titleStmt><title>Doc {doc_id}</title></titleStmt></fileDesc>"
+            f"<profileDesc><abstract><p>{escape(text)}</p></abstract></profileDesc>"
+            "</teiHeader><text><body>"
+            f'<div><head n="1.">Sec {escape(source)}</head><p>{escape(text)}</p></div>'
+            '<figure type="table" xml:id="tab_0"><head>T</head><figDesc>d</figDesc>'
+            f"<table><row><cell>id</cell><cell>{doc_id}</cell></row>"
+            f"<row><cell>{escape(source)}</cell><cell>{escape(lang)}</cell></row></table></figure>"
+            f'<figure xml:id="fig_{doc_id}"/>'
+            '</body><back><div type="references"><listBibl><biblStruct xml:id="b0">'
+            f'<monogr><imprint><biblScope unit="page" from="{doc_id}" to="{doc_id + 7}"/>'
+            "</imprint></monogr></biblStruct></listBibl></div></back></text></TEI>"
         )
-        .mapInPandas(
-            bootstrapped(fn),
-            "doc_id long, n_lines long, n_tables long, text_linear string, fig_warning string",
-        )
+        d = _extract(f"{doc_id}.tei.xml", tei.encode(), {"with_attachments": "true"})
+        return {
+            "doc_id": doc_id,
+            "n_lines": d["n_lines"],
+            "n_tables": d["n_tables"],
+            "text_linear": d["text_linear"],
+            "fig_warning": next((w for w in d["warnings"] if w.startswith("attachment skipped")), None),
+        }
+
+    return _per_doc(
+        spark, sf_dir, ["doc_id", "text", "source", "lang"],
+        "doc_id long, n_lines long, n_tables long, text_linear string, fig_warning string", row,
     )
 
 
@@ -3012,78 +2762,27 @@ def q67_scanned_ocr(spark: SparkSession, sf_dir: str) -> DataFrame:
     page 3 carries a body line plus a ruled 2×2 table recognized from
     PIXELS (table_recognizer.py:34-63) whose region leaves the text flow
     (__clean_image_from_table). pdf_with_text_layer="false" forces the
-    scanned branch (parameter_utils)."""
-    import pandas as pd
+    scanned branch (parameter_utils). The pages and the raster-codec
+    rotation are sources/pdf_fixture.q67_scan_pdf."""
 
-    def fn(it):
-        import json as jsonlib
+    def row(doc_id: int, source: str, lang: str):
+        from dedoc_spark.sources.pdf_fixture import Q67_PARAMS, q67_scan_pdf
 
-        from dedoc_spark.core.document import extract_document
-        from dedoc_spark.core.scanfont import render_scan_page, render_table_page
-        from dedoc_spark.sources.pdf_fixture import build_scanned_pdf
+        d = _extract(f"{doc_id}.pdf", q67_scan_pdf(doc_id, source, lang), Q67_PARAMS)
+        return {
+            "doc_id": doc_id,
+            "n_lines": d["n_lines"],
+            "n_tables": d["n_tables"],
+            "text_extracted": d["text_extracted"],
+            "rot_warning": next((w for w in d["warnings"] if w.startswith("rotated")), None),
+            **_cells(d),
+        }
 
-        for pdf in it:
-            out = []
-            for doc_id, source, lang in zip(pdf["doc_id"], pdf["source"], pdf["lang"]):
-                did = int(doc_id)
-                pages = [
-                    render_scan_page([f"Doc {did} scan"], scale=2),
-                    render_scan_page([f"{source} {lang}"], scale=2, rotate=180),
-                    render_table_page(
-                        [["id", str(did)], [source, lang]],
-                        scale=2,
-                        body_lines=["page three body"],
-                    ),
-                ]
-                # rotate the raster codec per doc — CCITT G4/G3, LZW,
-                # RunLength and JBIG2 (arithmetic + MMR generic regions,
-                # plus symbol-dictionary/text-region coding with the
-                # dictionary in a separate /JBIG2Globals object) must
-                # recognize identically to Flate (the closed-form oracle
-                # is codec-invariant), so the gate attests every scan
-                # codec end-to-end
-                codec = (
-                    "flate", "ccitt", "ccitt_g3", "lzw",
-                    "runlength", "jbig2", "jbig2_mmr", "jbig2_sym",
-                )[did % 8]
-                d = extract_document(
-                    f"{did}.pdf",
-                    build_scanned_pdf(pages, image_filter=codec),
-                    None,
-                    params={
-                        "pdf_with_text_layer": "false",
-                        "need_pdf_table_analysis": True,
-                    },
-                )
-                cells = jsonlib.loads(d["tables_json"])[0]["cells"]
-                texts = ["\n".join(ln["line"] for ln in c["lines"]) for row in cells for c in row]
-                out.append(
-                    {
-                        "doc_id": did,
-                        "n_lines": d["n_lines"],
-                        "n_tables": d["n_tables"],
-                        "text_extracted": d["text_extracted"],
-                        "rot_warning": next(
-                            (w for w in d["warnings"] if w.startswith("rotated")), None
-                        ),
-                        "c00": texts[0], "c01": texts[1], "c10": texts[2], "c11": texts[3],
-                    }
-                )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "doc_id", "n_lines", "n_tables", "text_extracted",
-                    "rot_warning", "c00", "c01", "c10", "c11",
-                ],
-            )
-
-    return (
-        _parallel(_docs(spark, sf_dir).select("doc_id", "source", "lang"))
-        .mapInPandas(
-            bootstrapped(fn),
-            "doc_id long, n_lines long, n_tables long, text_extracted string, "
-            "rot_warning string, c00 string, c01 string, c10 string, c11 string",
-        )
+    return _per_doc(
+        spark, sf_dir, ["doc_id", "source", "lang"],
+        "doc_id long, n_lines long, n_tables long, text_extracted string, "
+        "rot_warning string, c00 string, c01 string, c10 string, c11 string",
+        row,
     )
 
 
@@ -3107,48 +2806,15 @@ def q68_real_font_ocr(spark: SparkSession, sf_dir: str) -> DataFrame:
     is exact, so the oracle reconstructs the text arithmetically.
     The one excluded value: a group of IDENTICAL '3's ("3333") carries
     no distinctive glyph for the word's script vote (З and 3 are
-    pixel-twins in DejaVu), so both sides remap 3333 -> 3334."""
-    import pandas as pd
+    pixel-twins in DejaVu), so both sides remap 3333 -> 3334. The page is
+    sources/pdf_fixture.q68_scan_pdf."""
 
-    def fn(it):
-        from dedoc_spark.core.document import extract_document
-        from dedoc_spark.core.ftrender import render_text_page
-        from dedoc_spark.sources.pdf_fixture import build_scanned_pdf
+    def row(doc_id: int):
+        from dedoc_spark.sources.pdf_fixture import Q68_PARAMS, q68_scan_pdf
 
-        def group(did: int, row: int, i: int) -> str:
-            v = (did * 7919 + row * 104729 + i * 15485863) % 10000
-            if v == 3333:
-                v = 3334
-            return str(v).zfill(4)
+        return _text_row(doc_id, f"{doc_id}.pdf", q68_scan_pdf(doc_id), params=Q68_PARAMS)
 
-        for pdf in it:
-            out = []
-            for doc_id in pdf["doc_id"]:
-                did = int(doc_id)
-                lines = [
-                    " ".join(group(did, row, i) for i in range(3))
-                    for row in range(3)
-                ]
-                raster = render_text_page(lines, face="sans", px=40)
-                d = extract_document(
-                    f"{did}.pdf",
-                    build_scanned_pdf([raster], image_filter="flate"),
-                    None,
-                    params={"pdf_with_text_layer": "false"},
-                )
-                out.append(
-                    {
-                        "doc_id": did,
-                        "n_lines": d["n_lines"],
-                        "text_extracted": d["text_extracted"],
-                    }
-                )
-            yield pd.DataFrame(out, columns=["doc_id", "n_lines", "text_extracted"])
-
-    return (
-        _parallel(_docs(spark, sf_dir).select("doc_id"))
-        .mapInPandas(bootstrapped(fn), "doc_id long, n_lines long, text_extracted string")
-    )
+    return _per_doc(spark, sf_dir, ["doc_id"], _TEXT_SCHEMA, row)
 
 
 Q68_SQL = """

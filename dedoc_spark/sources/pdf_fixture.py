@@ -582,6 +582,57 @@ def build_scanned_pdf(page_rasters, image_filter: str = "flate") -> bytes:
     return b"".join(out)
 
 
+# The scanned documents of the OCR gates (plans/driver_queries q67/q68),
+# built here once for the gates, scripts/profile_ocr_doc.py and
+# scripts/ocr_sweep.py, with the params the gates extract them with.
+
+SCAN_CODECS = (
+    "flate", "ccitt", "ccitt_g3", "lzw",
+    "runlength", "jbig2", "jbig2_mmr", "jbig2_sym",
+)
+Q67_PARAMS = {"pdf_with_text_layer": "false", "need_pdf_table_analysis": True}
+Q68_PARAMS = {"pdf_with_text_layer": "false"}
+
+
+def q67_scan_pdf(did: int, source: str, lang: str) -> bytes:
+    """Three procedural-font pages: "Doc {did} scan" upright,
+    "{source} {lang}" rotated 180°, and a ruled 2×2 table
+    [["id", did], [source, lang]] under the body line "page three body".
+    The raster codec rotates with ``did`` over SCAN_CODECS (CCITT G4/G3,
+    LZW, RunLength and the three JBIG2 codings must recognize exactly
+    like Flate: the closed form is codec-invariant)."""
+    from dedoc_spark.core.scanfont import render_scan_page, render_table_page
+
+    pages = [
+        render_scan_page([f"Doc {did} scan"], scale=2),
+        render_scan_page([f"{source} {lang}"], scale=2, rotate=180),
+        render_table_page(
+            [["id", str(did)], [source, lang]], scale=2, body_lines=["page three body"]
+        ),
+    ]
+    return build_scanned_pdf(pages, image_filter=SCAN_CODECS[did % len(SCAN_CODECS)])
+
+
+def q68_lines(did: int) -> List[str]:
+    """Three lines of three id-derived 4-digit groups. A group of four
+    '3's carries no distinctive glyph for the word's script vote (З and
+    3 are pixel-twins in DejaVu), so 3333 is remapped to 3334."""
+
+    def group(row: int, i: int) -> str:
+        v = (did * 7919 + row * 104729 + i * 15485863) % 10000
+        return str(3334 if v == 3333 else v).zfill(4)
+
+    return [" ".join(group(row, i) for i in range(3)) for row in range(3)]
+
+
+def q68_scan_pdf(did: int) -> bytes:
+    """One page of q68_lines in real anti-aliased type (DejaVu Sans 40 px
+    through FreeType), Flate-coded."""
+    from dedoc_spark.core.ftrender import render_text_page
+
+    return build_scanned_pdf([render_text_page(q68_lines(did), face="sans", px=40)])
+
+
 def encrypt_pdf(
     payload: bytes,
     method: str = "aesv2",

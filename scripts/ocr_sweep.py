@@ -4,6 +4,11 @@ Usage: python scripts/ocr_sweep.py out.json [n_docs]
 Run before and after a matcher/codec change and diff the JSON — every
 value is an md5 of the full extract_document output, so any behavior
 change in decode, orientation, segmentation or matching shows up.
+Each document is also checked against its gate's closed form (Q67_SQL /
+Q68_SQL), and the misses are printed per half: the q67 half uses
+two-character sources ("s0".."s4"), on which the table page is known to
+be read at 270° (see ROADMAP), so its misses are expected until that is
+fixed.
 """
 
 from __future__ import annotations
@@ -15,7 +20,8 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from scripts.profile_ocr_doc import CODECS  # noqa: E402
+from dedoc_spark.sources.pdf_fixture import q68_lines  # noqa: E402
+from scripts.profile_ocr_doc import q67_doc, q67_inputs, q68_doc  # noqa: E402
 
 
 def digest(d) -> str:
@@ -24,47 +30,46 @@ def digest(d) -> str:
     ).hexdigest()
 
 
+def q67_ok(d, did: int, source: str, lang: str) -> bool:
+    tables = json.loads(d["tables_json"])
+    cells = [
+        "\n".join(ln["line"] for ln in c["lines"]) for row in tables[0]["cells"] for c in row
+    ] if tables else None
+    return (
+        d["text_extracted"] == f"\nDoc {did} scan\n{source} {lang}\npage three body\n\n"
+        and d["n_lines"] == 3
+        and d["n_tables"] == 1
+        and next((w for w in d["warnings"] if w.startswith("rotated")), None)
+        == "rotated page angles: [0, 180, 0]"
+        and cells == ["id", str(did), source, lang]
+    )
+
+
+def q68_ok(d, did: int) -> bool:
+    return d["n_lines"] == 3 and d["text_extracted"] == "\n" + "\n".join(q68_lines(did)) + "\n\n"
+
+
 def main() -> None:
     out_path = sys.argv[1]
     n = int(sys.argv[2]) if len(sys.argv) > 2 else 64
 
-    from dedoc_spark.core.document import extract_document
-    from dedoc_spark.core.ftrender import render_text_page
-    from dedoc_spark.core.scanfont import render_scan_page, render_table_page
-    from dedoc_spark.sources.pdf_fixture import build_scanned_pdf
-
     out = {}
+    misses = {"q67": [], "q68": []}
     for did in range(n):
-        source, lang = f"s{did % 5}", ("en", "ru")[did % 2]
-        pages = [
-            render_scan_page([f"Doc {did} scan"], scale=2),
-            render_scan_page([f"{source} {lang}"], scale=2, rotate=180),
-            render_table_page(
-                [["id", str(did)], [source, lang]], scale=2,
-                body_lines=["page three body"],
-            ),
-        ]
-        d = extract_document(
-            f"{did}.pdf", build_scanned_pdf(pages, image_filter=CODECS[did % 8]),
-            None,
-            params={"pdf_with_text_layer": "false", "need_pdf_table_analysis": True},
-        )
+        d = q67_doc(did)
         out[f"q67:{did}"] = digest(d)
+        if not q67_ok(d, *q67_inputs(did)):
+            misses["q67"].append(did)
     for did in range(n):
-        def group(did: int, row: int, i: int) -> str:
-            v = (did * 7919 + row * 104729 + i * 15485863) % 10000
-            return str(v if v != 3333 else 3334).zfill(4)
-
-        lines = [" ".join(group(did, row, i) for i in range(3)) for row in range(3)]
-        raster = render_text_page(lines, face="sans", px=40)
-        d = extract_document(
-            f"{did}.pdf", build_scanned_pdf([raster], image_filter="flate"), None,
-            params={"pdf_with_text_layer": "false"},
-        )
+        d = q68_doc(did)
         out[f"q68:{did}"] = digest(d)
+        if not q68_ok(d, did):
+            misses["q68"].append(did)
     with open(out_path, "w") as f:
         json.dump(out, f, indent=0, sort_keys=True)
     print(f"wrote {len(out)} digests to {out_path}")
+    for half, ids in misses.items():
+        print(f"{half} closed-form misses: {len(ids)}/{n}" + (f" (doc ids {ids})" if ids else ""))
 
 
 if __name__ == "__main__":

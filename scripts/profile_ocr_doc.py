@@ -1,8 +1,8 @@
 """cProfile the q67/q68 per-document pipelines single-process (no Spark).
 
 Usage: python scripts/profile_ocr_doc.py [q67|q68] [n_docs] [--time-only]
-Mirrors the mapInPandas bodies in driver_queries.q67_scanned_ocr /
-q68_real_font_ocr exactly; numbers cited in OPTIMIZATION_r07.md.
+The documents come from sources/pdf_fixture (q67_scan_pdf, q68_scan_pdf),
+the builders the q67/q68 gates use; numbers cited in OPTIMIZATION_r07.md.
 """
 
 from __future__ import annotations
@@ -16,46 +16,25 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from dedoc_spark.core.document import extract_document  # noqa: E402
-from dedoc_spark.core.ftrender import render_text_page  # noqa: E402
-from dedoc_spark.core.scanfont import render_scan_page, render_table_page  # noqa: E402
-from dedoc_spark.sources.pdf_fixture import build_scanned_pdf  # noqa: E402
-
-CODECS = (
-    "flate", "ccitt", "ccitt_g3", "lzw",
-    "runlength", "jbig2", "jbig2_mmr", "jbig2_sym",
+from dedoc_spark.sources.pdf_fixture import (  # noqa: E402
+    Q67_PARAMS,
+    Q68_PARAMS,
+    q67_scan_pdf,
+    q68_scan_pdf,
 )
 
 
-def q67_doc(did: int) -> None:
-    source, lang = f"s{did % 5}", ("en", "ru")[did % 2]
-    pages = [
-        render_scan_page([f"Doc {did} scan"], scale=2),
-        render_scan_page([f"{source} {lang}"], scale=2, rotate=180),
-        render_table_page(
-            [["id", str(did)], [source, lang]], scale=2,
-            body_lines=["page three body"],
-        ),
-    ]
-    codec = CODECS[did % 8]
-    extract_document(
-        f"{did}.pdf", build_scanned_pdf(pages, image_filter=codec), None,
-        params={"pdf_with_text_layer": "false", "need_pdf_table_analysis": True},
-    )
+def q67_inputs(did: int):
+    """(did, source, lang) of profiled/swept q67 document ``did``."""
+    return did, f"s{did % 5}", ("en", "ru")[did % 2]
 
 
-def q68_doc(did: int) -> None:
-    def group(did: int, row: int, i: int) -> str:
-        v = (did * 7919 + row * 104729 + i * 15485863) % 10000
-        if v == 3333:
-            v = 3334
-        return str(v).zfill(4)
+def q67_doc(did: int) -> dict:
+    return extract_document(f"{did}.pdf", q67_scan_pdf(*q67_inputs(did)), None, params=Q67_PARAMS)
 
-    lines = [" ".join(group(did, row, i) for i in range(3)) for row in range(3)]
-    raster = render_text_page(lines, face="sans", px=40)
-    extract_document(
-        f"{did}.pdf", build_scanned_pdf([raster], image_filter="flate"), None,
-        params={"pdf_with_text_layer": "false"},
-    )
+
+def q68_doc(did: int) -> dict:
+    return extract_document(f"{did}.pdf", q68_scan_pdf(did), None, params=Q68_PARAMS)
 
 
 def main() -> None:
