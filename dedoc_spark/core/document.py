@@ -18,7 +18,7 @@ from functools import partial
 from typing import Callable, Dict, List, Optional, Sequence
 
 from dedoc_spark.core.html_extract import HtmlExtractor
-from dedoc_spark.core.model import Line, param_flag
+from dedoc_spark.core.model import Line, param_flag, select_pages
 from dedoc_spark.core.structure import assign_hierarchy_levels
 from dedoc_spark.core.tree import construct_tree, flatten_tree, tree_to_text
 from dedoc_spark.core.txt_extract import extract_txt_lines
@@ -308,33 +308,21 @@ def extract_scanned_image_document(url: str, payload: bytes, params: Optional[Di
 
 def _extract_scanned_pdf(
     url: str,
-    payload: bytes,
+    page_images: List,
     params: Dict,
-    page_images: Optional[List] = None,
     trailing_warnings: Sequence[str] = (),
 ) -> Dict:
     """PdfImageReader branch for PDFs: forced by pdf_with_text_layer=
     "false", or reached from auto mode when the textual layer is
     incorrect (pdf_auto_reader routing table / parameter_utils).
-    Embedded page rasters are decoded directly (core/ocr.
-    extract_pdf_page_images — the pdf2image analogue for scanned pages)
-    and each runs the scanned-page pipeline; ``pages`` prunes like the
-    text-layer path (pdf_base_reader.py:108-128). ``trailing_warnings``
-    mirror pdf_auto_reader.py:67-68 ``result.warnings.extend(warnings)``
-    — the routing warning lands AFTER the reader's own."""
-    from dedoc_spark.core.ocr import extract_pdf_page_images
-
-    if page_images is None:
-        page_images = extract_pdf_page_images(payload)
-    warnings: List[str] = []
-    pages_range = params.get("pages")
-    if pages_range:
-        left, _, right = str(pages_range).partition(":")
-        lo = int(left) if left else 1
-        hi = int(right) if right else len(page_images)
-        if lo > 1 or hi < len(page_images):
-            warnings.append("The document is partially parsed")
-        page_images = page_images[lo - 1 : hi]
+    ``page_images`` are the embedded page rasters of the whole document
+    (core/ocr.extract_pdf_page_images — the pdf2image analogue for
+    scanned pages); each runs the scanned-page pipeline, and ``pages``
+    prunes like the text-layer path (pdf_base_reader.py:108-128).
+    ``trailing_warnings`` mirror pdf_auto_reader.py:67-68
+    ``result.warnings.extend(warnings)`` — the routing warning lands
+    AFTER the reader's own."""
+    page_images, warnings = select_pages(page_images, params.get("pages"))
     return _ocr_document(url, page_images, params, warnings, trailing_warnings)
 
 
@@ -347,9 +335,9 @@ def _ocr_document(
 ) -> Dict:
     """Scanned-page pipeline over ``pages`` (each a list of rasters): one
     core/ocr.process_scanned_page per raster, then page-adjacent table
-    continuations merge (multipage_table_extractor, like the txt-layer path
-    in pdf_extract.py:946-955) into schema Tables. Warnings keep the order
-    ``warnings``, page rotation, ``trailing_warnings``."""
+    continuations merge (multipage_table_extractor, like the txt-layer
+    path in pdf_extract._extract_pdf_full) into schema Tables. Warnings
+    keep the order ``warnings``, page rotation, ``trailing_warnings``."""
     from dedoc_spark.core.ocr import process_scanned_page
 
     seed = url_hash(url)
@@ -384,27 +372,29 @@ def extract_pdf_document(url: str, payload: bytes, params: Optional[Dict] = None
     txt-layer detector classifies the extracted layer and records the
     reference's routing warnings; pdf_with_text_layer="false" forces the
     scanned (PdfImageReader) branch over the embedded page rasters. In
-    auto mode an incorrect layer keeps the extracted lines plus the
-    routing warning instead of re-reading through OCR (the auto->OCR
-    re-read needs a page rasterizer, still de-scoped)."""
+    auto mode an incorrect layer re-reads through OCR when the pages
+    carry embedded rasters, and otherwise keeps the extracted lines plus
+    the routing warning. The payload is parsed once
+    (core/pdf_objects.parse_pdf), for every route."""
     from dedoc_spark.core.pdf_extract import (
         detect_txt_layer,
         extract_pdf_lines,
         extract_pdf_lines_tables,
     )
+    from dedoc_spark.core.pdf_objects import parse_pdf
 
     params = params or {}
-    if b"/Encrypt" in payload:
-        # standard-security-handler documents with the EMPTY user password
-        # decrypt transparently inside _parse_objects (core/pdf_crypt);
-        # a real password is the reference's pdfminer exception path
-        # (PDFPasswordIncorrect -> task error), so surface the typed row
-        from dedoc_spark.core.pdf_crypt import encryption_locked
-
-        if encryption_locked(payload):
-            return _error_row(url, "needs_password:pdf")
+    # one parse serves the lock check and both readers; documents with the
+    # EMPTY user password decrypt transparently inside it (core/pdf_crypt),
+    # and a real password is the reference's pdfminer exception path
+    # (PDFPasswordIncorrect -> task error), so surface the typed row
+    pdf = parse_pdf(payload)
+    if pdf.locked:
+        return _error_row(url, "needs_password:pdf")
     if str(params.get("pdf_with_text_layer", "auto")).lower() == "false":
-        return _extract_scanned_pdf(url, payload, params)
+        from dedoc_spark.core.ocr import extract_pdf_page_images
+
+        return _extract_scanned_pdf(url, extract_pdf_page_images(pdf), params)
     tables = []
     need_para = param_flag(params, "need_paragraph_classification")
     # is_one_column_document (parameter_utils; reference DEFAULT "auto",
@@ -427,10 +417,10 @@ def extract_pdf_document(url: str, payload: bytes, params: Optional[Dict] = None
         # pdf_txtlayer_reader.py:49-73 table path: ruled tables detected
         # from the page's painted line art, captured lines leave the flow
         lines, tables, warnings = extract_pdf_lines_tables(
-            payload, url_hash(url), table_type=str(params.get("table_type", "")), **layout
+            pdf, url_hash(url), table_type=str(params.get("table_type", "")), **layout
         )
     else:
-        lines, warnings = extract_pdf_lines(payload, url_hash(url), **layout)
+        lines, warnings = extract_pdf_lines(pdf, url_hash(url), **layout)
     if params.get("pdf_with_text_layer", "auto") in ("auto", "auto_tabby"):
         fast = param_flag(params, "fast_textual_layer_detection")
         is_correct, first_correct = detect_txt_layer(lines, fast=fast)
@@ -445,16 +435,16 @@ def extract_pdf_document(url: str, payload: bytes, params: Optional[Dict] = None
             # happens exactly when the pages carry embedded rasters — the
             # scanned-PDF shape the OCR branch exists for; garbage
             # text-layer PDFs without rasters keep their extracted lines
-            # (documented deviation, test_auto_reader_routing_warnings)
+            # (documented deviation, test_auto_reader_routing_warnings).
+            # The raster test covers the whole document, not the pages slice
             from dedoc_spark.core.ocr import extract_pdf_page_images
 
-            page_images = extract_pdf_page_images(payload)
+            page_images = extract_pdf_page_images(pdf)
             if any(page_images):
                 return _extract_scanned_pdf(
                     url,
-                    payload,
+                    page_images,
                     params,
-                    page_images=page_images,
                     trailing_warnings=["Assume document has incorrect textual layer"],
                 )
             warnings.append("Assume document has incorrect textual layer")

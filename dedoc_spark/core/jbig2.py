@@ -18,8 +18,10 @@ Scope: the PDF *embedded stream* organisation (no file header) with
 
 Huffman-coded dictionaries/regions, refinement/aggregate coding,
 transposed text regions and halftones raise :class:`Jbig2Error`, and
-the caller (ocr._decode_image_object) skips the image exactly as it
-does for any codec it lacks.
+the caller (core/ocr._decode_image_object, which receives the image
+stream and its /JBIG2Globals already through the core/pdf_objects
+filter cascade) skips the image exactly as it does for any codec it
+lacks.
 
 The reference hands scanned PDFs to pdf2image/poppler, which decodes
 JBIG2 natively (pdf_image_reader/pdf_image_reader.py:60-97 receives

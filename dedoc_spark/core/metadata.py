@@ -58,69 +58,20 @@ def _pdf_text(raw: bytes) -> str:
     return raw.decode("latin-1")
 
 
-def _encrypted_info_object(payload: bytes, info_oid: int) -> Optional[bytes]:
-    """Decrypt ONLY the /Info object's strings (r6 review finding: the
-    old path re-parsed and bulk-decrypted EVERY stream in the document a
-    second time just to read a handful of fields; get_decryptor caches
-    the key derivation per payload, so this costs a few string RC4/AES
-    calls). Falls back to the full parse when /Info hides inside an
-    object stream."""
-    from dedoc_spark.core.pdf_crypt import (
-        PdfCryptError,
-        find_encrypt_ref,
-        get_decryptor,
-    )
-    from dedoc_spark.core.pdf_extract import _decrypt_strings
-
-    def last_obj(oid: int):
-        got = None
-        for m in re.finditer(
-            rb"(?<![0-9])" + str(oid).encode("ascii") + rb"\s+(\d+)\s+obj(.*?)endobj",
-            payload,
-            re.S,
-        ):
-            got = (int(m.group(1)), m.group(2))
-        return got
-
-    enc_oid = find_encrypt_ref(payload)
-    hit = last_obj(info_oid)
-    if hit is None:
-        # /Info inside an object stream: the full parse is the only route
-        from dedoc_spark.core.pdf_extract import _expand_object_streams, _parse_objects
-
-        objects = _parse_objects(payload)
-        _expand_object_streams(objects)
-        return objects.get(info_oid)
-    gen, obj = hit
-    enc_hit = last_obj(enc_oid) if enc_oid is not None else None
-    try:
-        dec = get_decryptor(payload, {enc_oid: enc_hit[1]} if enc_hit else {})
-    except PdfCryptError:
-        return None  # locked document: no readable metadata
-    if dec is None:
-        return obj
-    return _decrypt_strings(obj, dec, info_oid, gen)
-
-
 def extract_pdf_metadata(payload: bytes) -> Dict[str, str]:
     """The /Info dictionary fields; dates converted to unixtime strings.
 
     Encrypted documents decrypt the /Info object's strings in place
     (re-encoded as hex), so the fields here come out as ``<hex>`` tokens
-    instead of literals."""
-    from dedoc_spark.core.pdf_crypt import find_encrypt_ref
+    instead of literals. The /Info object is the one the governing
+    trailer names, read in its newest version without parsing the whole
+    file (core/pdf_objects)."""
+    from dedoc_spark.core.pdf_objects import read_object, trailer_ref
 
     out: Dict[str, str] = {}
-    info = re.search(rb"/Info\s+(\d+)\s+\d+\s+R", payload)
-    if info is None:  # inline Info dict or none
-        return out
-    obj = None
-    if b"/Encrypt" in payload and find_encrypt_ref(payload) is not None:
-        obj = _encrypted_info_object(payload, int(info.group(1)))
-    else:
-        m = re.search(info.group(1) + rb"\s+0\s+obj(.*?)endobj", payload, re.S)
-        obj = m.group(1) if m else None
-    if obj is None:
+    info_oid = trailer_ref(payload, b"/Info")
+    obj = read_object(payload, info_oid) if info_oid is not None else None
+    if obj is None:  # no /Info reference, missing object or locked file
         return out
 
     def field(key: bytes) -> Optional[str]:

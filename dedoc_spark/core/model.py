@@ -37,6 +37,20 @@ def param_flag(params: Optional[Dict], name: str, default: bool = False) -> bool
     return default if value is None else str(value).lower() == "true"
 
 
+def select_pages(pages: List, pages_range: Optional[str]) -> Tuple[List, List[str]]:
+    """The ``pages`` request parameter "l:r" (1-based, inclusive, either
+    side optional) applied to a document's pages, like the reference's
+    pdf_base_reader.py:108-128; returns (selected pages, warnings), with
+    the partial-parse warning when pages were left out."""
+    if not pages_range:
+        return pages, []
+    left, _, right = str(pages_range).partition(":")
+    lo = int(left) if left else 1
+    hi = int(right) if right else len(pages)
+    warnings = ["The document is partially parsed"] if lo > 1 or hi < len(pages) else []
+    return pages[lo - 1 : hi], warnings
+
+
 class Annotation:
     """Span annotation over a line's text: [start, end) with a stringly value."""
 

@@ -51,6 +51,7 @@ import numpy as np
 
 from dedoc_spark.core.model import Annotation, Line, param_flag
 from dedoc_spark.core.pdf_layout import BBox, Location
+from dedoc_spark.core.pdf_objects import PdfFile, decode_filters, decode_stream, stream_parts
 from dedoc_spark.core.scanfont import BOLD_GLYPHS, GLYPH, GLYPHS, charset_for_language
 
 # ---------------------------------------------------------------------------
@@ -1175,54 +1176,26 @@ def process_scanned_page(
 # embedded raster extraction for scanned PDFs
 
 
-def extract_pdf_page_images(payload: bytes) -> List[List[np.ndarray]]:
-    """Decoded image XObjects per page of a PDF: the pdf2image analogue
-    for scanned PDFs whose pages ARE images (pdf_base_reader.py:227-256
+def extract_pdf_page_images(pdf: PdfFile) -> List[List[np.ndarray]]:
+    """Decoded image XObjects per page of a parsed PDF (core/pdf_objects.
+    PdfFile, pages in ``pdf.pages`` order): the pdf2image analogue for
+    scanned PDFs whose pages ARE images (pdf_base_reader.py:227-256
     rasterizes; here the embedded rasters are pulled directly — no
     re-rendering runtime needed for the scanned-page case).
 
-    Supported encodings: DCTDecode (JPEG, via core/image_decode),
-    CCITTFaxDecode for every K (K<0 Group 4 — the canonical scan codec —
-    plus K=0 / K>0 Group 3 incl. /EncodedByteAlign, all via core/ccitt),
-    FlateDecode / LZWDecode / RunLengthDecode (core/pdf_filters) and
-    uncompressed rasters with /DeviceGray or /DeviceRGB at 8 bits per
+    Supported encodings: the core/pdf_objects filter cascade (Flate, LZW,
+    RunLength, predictors) ahead of DCTDecode (JPEG, via
+    core/image_decode), CCITTFaxDecode for every K (K<0 Group 4 — the
+    canonical scan codec — plus K=0 / K>0 Group 3 incl.
+    /EncodedByteAlign, all via core/ccitt) or JBIG2Decode (core/jbig2);
+    or uncompressed rasters with /DeviceGray or /DeviceRGB at 8 bits per
     component, and 1-bit /DeviceGray bilevel scans. Unsupported filters
     are skipped (the caller sees fewer images, never an exception)."""
-    from dedoc_spark.core.pdf_extract import (
-        _dict_value,
-        _expand_object_streams,
-        _page_xobjects,
-        _parse_objects,
-    )
+    from dedoc_spark.core.pdf_extract import _page_xobjects
 
-    objects = _parse_objects(payload)
-    _expand_object_streams(objects)
-    # page walk in document order (same traversal as extract_pdf_pages_layout)
-    root_pages: List[int] = []
-    for oid, obj in sorted(objects.items()):
-        if b"/Type" in obj and b"/Pages" in obj and b"/Kids" in obj:
-            root_pages.append(oid)
-    page_ids: List[int] = []
-    seen = set()
-
-    def walk(oid: int) -> None:
-        if oid in seen or oid not in objects:
-            return
-        seen.add(oid)
-        obj = objects[oid]
-        kids = _dict_value(obj, b"/Kids")
-        if kids is not None:
-            import re as _re
-
-            for m in _re.finditer(rb"(\d+)\s+\d+\s+R", kids):
-                walk(int(m.group(1)))
-        elif b"/Page" in obj:
-            page_ids.append(oid)
-
-    for oid in root_pages:
-        walk(oid)
+    objects = pdf.objects
     out: List[List[np.ndarray]] = []
-    for pid in page_ids:
+    for pid in pdf.pages:
         imgs: List[np.ndarray] = []
         for name, obj_id in sorted(_page_xobjects(objects[pid], objects).items()):
             arr = _decode_image_object(objects.get(obj_id, b""), objects)
@@ -1232,82 +1205,19 @@ def extract_pdf_page_images(payload: bytes) -> List[List[np.ndarray]]:
     return out
 
 
-def _raw_stream(obj: bytes) -> Optional[bytes]:
-    """Stream payload framed by a direct /Length (the only reliable
-    framing — compressed output may legitimately END in 0x0A/0x0D bytes
-    that an endstream scan would strip); indirect /Length falls back to
-    the endstream scan with a trailing-EOL strip."""
-    import re as _re
-
-    sm = _re.search(rb"stream(?:\r\n|\n|\r)", obj)
-    if sm is None:
-        return None
-    lm = _re.search(rb"/Length\s+(\d+)\b(?!\s+\d+\s+R)", obj[: sm.start()])
-    if lm:
-        return obj[sm.end() : sm.end() + int(lm.group(1))]
-    end = obj.rfind(b"endstream")
-    if end < 0:
-        return None
-    data = obj[sm.end() : end]
-    if data.endswith(b"\r\n"):
-        data = data[:-2]
-    elif data.endswith((b"\n", b"\r")):
-        data = data[:-1]
-    return data
-
-
-def _undo_predictor(raw: bytes, head: bytes) -> Optional[bytes]:
-    """Reverse /DecodeParms /Predictor for Flate/LZW image streams:
-    PNG predictors (>= 10, per-row filter byte — reuses the PNG
-    decoder's unfilter) and TIFF horizontal differencing (2)."""
-    import re as _re
-
-    pm = _re.search(rb"/Predictor\s+(\d+)", head)
-    if pm is None:
-        return raw
-    predictor = int(pm.group(1))
-    if predictor <= 1:
-        return raw
-
-    def parm(key: bytes, default: int) -> int:
-        m = _re.search(key + rb"\s+(\d+)", head)
-        return int(m.group(1)) if m else default
-
-    colors = parm(rb"/Colors", 1)
-    bpc = parm(rb"/BitsPerComponent", 8)
-    columns = parm(rb"/Columns", 1)
-    stride = (columns * colors * bpc + 7) // 8
-    bpp = max(1, (colors * bpc) // 8)
-    if predictor >= 10:
-        from dedoc_spark.core.image_decode import _png_unfilter
-
-        height = len(raw) // (stride + 1)
-        if height == 0:
-            return None
-        try:
-            return bytes(_png_unfilter(raw, height, stride, bpp))
-        except (ValueError, IndexError):
-            return None
-    if predictor == 2 and bpc == 8:
-        height = len(raw) // stride
-        rows = np.frombuffer(raw[: height * stride], dtype=np.uint8).reshape(
-            height, columns, colors
-        )
-        return np.add.accumulate(rows, axis=1, dtype=np.uint8).tobytes()
-    return None  # exotic predictor/bit-depth combination
-
-
 def _decode_image_object(
     obj: bytes, objects: Optional[Dict[int, bytes]] = None
 ) -> Optional[np.ndarray]:
     """``objects`` (the document's object map) lets stream filters
     resolve indirect /DecodeParms members — today only /JBIG2Globals."""
     import re as _re
-    import zlib
 
     if b"/Subtype" not in obj or b"/Image" not in obj:
         return None
-    head = obj.split(b"stream", 1)[0]
+    parts = stream_parts(obj)
+    if parts is None:
+        return None
+    head = parts[0]
 
     def num(key: bytes) -> Optional[int]:
         m = _re.search(_re.escape(key) + rb"\s+(\d+)", head)
@@ -1316,110 +1226,72 @@ def _decode_image_object(
     width, height = num(b"/Width"), num(b"/Height")
     if not width or not height:
         return None
-    raw = _raw_stream(obj)
-    if raw is None:
+    # the shared filter cascade runs first (/Filter [/A /B] — e.g. the
+    # corpus's gost_multipage_table.pdf wraps DCT inside Flate); the image
+    # codec it stops at (DCT, CCITT, JBIG2) decodes what it produced
+    decoded = decode_filters(*parts)
+    if decoded is None:
         return None
-    # filters apply as a cascade in array order (/Filter [/A /B] — e.g.
-    # the corpus's gost_multipage_table.pdf wraps DCT inside Flate); the
-    # image codecs (DCT, CCITT) terminate the chain
-    filters = [f.decode("latin-1") for f in _re.findall(rb"/(\w+Decode)\b", head)]
-    for name in filters:
-        if name == "DCTDecode":
-            from dedoc_spark.core.image_decode import decode_image
-
-            try:
-                _, _, rgb = decode_image(raw)
-                return rgb
-            except Exception:
-                return None
-        if name == "CCITTFaxDecode":
-            # the canonical scanned-page codecs: K < 0 = pure G4/T.6 (what
-            # real scanned PDFs use), K = 0 = G3 1-D MH, K > 0 = G3 mixed
-            from dedoc_spark.core.ccitt import CcittError, decode_g3, decode_g4
-
-            km = _re.search(rb"/K\s+(-?\d+)", head)
-            k = int(km.group(1)) if km else 0
-            cm = _re.search(rb"/Columns\s+(\d+)", head)
-            columns = int(cm.group(1)) if cm else 1728
-            byte_align = bool(_re.search(rb"/EncodedByteAlign\s+true", head))
-            try:
-                if k < 0:
-                    img = decode_g4(raw, columns, rows=height)
-                else:
-                    img = decode_g3(raw, columns, rows=height, k=k, byte_align=byte_align)
-            except CcittError:
-                return None
-            if not img.size:
-                return None
-            # /BlackIs1 true: black pixels are 1-samples, which the default
-            # /Decode [0 1] displays WHITE — a net inversion vs our decoder's
-            # ink=0 output. /Decode [1 0] inverts again, so they cancel.
-            black_is_1 = _re.search(rb"/BlackIs1\s+true", head) is not None
-            decode_10 = _re.search(rb"/Decode\s*\[\s*1(?:\.0*)?\s+0", head) is not None
-            if black_is_1 != decode_10:
-                img = 255 - img
-            return img
-        if name == "JBIG2Decode":
-            # generic-region AND symbol/text-region streams decode
-            # natively (core/jbig2); shared symbol dictionaries arrive
-            # via /DecodeParms << /JBIG2Globals N 0 R >>. Modes the
-            # decoder lacks (huffman, refinement, halftones) raise and
-            # the image is skipped like any other missing codec.
-            import zlib as _zlib
-
-            from dedoc_spark.core.jbig2 import Jbig2Error, decode_embedded
-
-            globals_data = b""
-            gm = _re.search(rb"/JBIG2Globals\s+(\d+)\s+\d+\s+R", head)
-            if gm and objects is not None:
-                gobj = objects.get(int(gm.group(1)), b"")
-                graw = _raw_stream(gobj)
-                if graw is not None:
-                    if b"/FlateDecode" in gobj.split(b"stream", 1)[0]:
-                        try:
-                            graw = _zlib.decompress(graw)
-                        except Exception:
-                            graw = b""
-                    globals_data = graw
-            try:
-                bits = decode_embedded(raw, globals_data=globals_data)
-            except Jbig2Error:
-                return None
-            img = np.where(bits != 0, np.uint8(0), np.uint8(255))
-            if _re.search(rb"/Decode\s*\[\s*1(?:\.0*)?\s+0", head):
-                img = 255 - img
-            return img
-        if name == "FlateDecode":
-            try:
-                raw = zlib.decompress(raw)
-            except Exception:
-                return None
-            raw = _undo_predictor(raw, head)
-            if raw is None:
-                return None
-        elif name == "LZWDecode":
-            from dedoc_spark.core.pdf_filters import PdfFilterError, lzw_decode
-
-            em = _re.search(rb"/EarlyChange\s+(\d+)", head)
-            try:
-                raw = lzw_decode(raw, early_change=int(em.group(1)) if em else 1)
-            except PdfFilterError:
-                return None
-            raw = _undo_predictor(raw, head)
-            if raw is None:
-                return None
-        elif name == "RunLengthDecode":
-            try:
-                from dedoc_spark.core.pdf_filters import PdfFilterError, runlength_decode
-
-                raw = runlength_decode(raw)
-            except PdfFilterError:
-                return None
-        else:
-            return None  # no decoder for this filter (e.g. JBIG2)
-    bpc = num(b"/BitsPerComponent") or 8
+    raw, codec = decoded
     # /Decode [1 0] inverts the component range (white-on-black scans)
     inverted = _re.search(rb"/Decode\s*\[\s*1(?:\.0*)?\s+0", head) is not None
+    if codec == "DCTDecode":
+        from dedoc_spark.core.image_decode import decode_image
+
+        try:
+            _, _, rgb = decode_image(raw)
+            return rgb
+        except Exception:
+            return None
+    if codec == "CCITTFaxDecode":
+        # the canonical scanned-page codecs: K < 0 = pure G4/T.6 (what
+        # real scanned PDFs use), K = 0 = G3 1-D MH, K > 0 = G3 mixed
+        from dedoc_spark.core.ccitt import CcittError, decode_g3, decode_g4
+
+        km = _re.search(rb"/K\s+(-?\d+)", head)
+        k = int(km.group(1)) if km else 0
+        cm = _re.search(rb"/Columns\s+(\d+)", head)
+        columns = int(cm.group(1)) if cm else 1728
+        byte_align = bool(_re.search(rb"/EncodedByteAlign\s+true", head))
+        try:
+            if k < 0:
+                img = decode_g4(raw, columns, rows=height)
+            else:
+                img = decode_g3(raw, columns, rows=height, k=k, byte_align=byte_align)
+        except CcittError:
+            return None
+        if not img.size:
+            return None
+        # /BlackIs1 true: black pixels are 1-samples, which the default
+        # /Decode [0 1] displays WHITE — a net inversion vs our decoder's
+        # ink=0 output. /Decode [1 0] inverts again, so they cancel.
+        black_is_1 = _re.search(rb"/BlackIs1\s+true", head) is not None
+        if black_is_1 != inverted:
+            img = 255 - img
+        return img
+    if codec == "JBIG2Decode":
+        # generic-region AND symbol/text-region streams decode natively
+        # (core/jbig2); shared symbol dictionaries arrive via /DecodeParms
+        # << /JBIG2Globals N 0 R >>. Modes the decoder lacks (huffman,
+        # refinement, halftones) raise and the image is skipped like any
+        # other missing codec.
+        from dedoc_spark.core.jbig2 import Jbig2Error, decode_embedded
+
+        globals_data = b""
+        gm = _re.search(rb"/JBIG2Globals\s+(\d+)\s+\d+\s+R", head)
+        if gm and objects is not None:
+            globals_data = decode_stream(objects.get(int(gm.group(1)), b"")) or b""
+        try:
+            bits = decode_embedded(raw, globals_data=globals_data)
+        except Jbig2Error:
+            return None
+        img = np.where(bits != 0, np.uint8(0), np.uint8(255))
+        if inverted:
+            img = 255 - img
+        return img
+    if codec is not None:
+        return None  # no decoder for this filter
+    bpc = num(b"/BitsPerComponent") or 8
     if b"/DeviceRGB" in head and bpc == 8 and len(raw) >= width * height * 3:
         return np.frombuffer(raw[: width * height * 3], dtype=np.uint8).reshape(height, width, 3)
     if bpc == 8 and len(raw) >= width * height:

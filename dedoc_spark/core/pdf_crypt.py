@@ -364,42 +364,11 @@ class PdfDecryptor:
     decrypt_string = decrypt  # same per-object key and cipher
 
 
-_ENC_REF_RE = re.compile(rb"/Encrypt\s+(\d+)\s+\d+\s+R")
-
-
-def find_encrypt_ref(payload: bytes) -> Optional[int]:
-    """Object id of the GOVERNING /Encrypt dict: the reference named by
-    the last trailer dict, or (xref-stream PDFs) by the dict the final
-    startxref offset points at — never a '/Encrypt N G R' byte sequence
-    floating in arbitrary content (a plaintext stream about PDF internals
-    must not mark the document encrypted)."""
-    trailers = list(re.finditer(rb"trailer", payload))
-    if trailers:
-        t = trailers[-1]
-        em = _ENC_REF_RE.search(payload, t.end(), t.end() + 4096)
-        return int(em.group(1)) if em else None
-    sxs = re.findall(rb"startxref\s+(\d+)", payload)
-    if sxs:
-        off = int(sxs[-1])
-        em = _ENC_REF_RE.search(payload, off, off + 4096)
-        if em:
-            return int(em.group(1))
-        return None
-    # no trailer, no startxref: damaged file — fall back to the last
-    # reference anywhere (matches recovery-mode readers)
-    encs = _ENC_REF_RE.findall(payload)
-    return int(encs[-1]) if encs else None
-
-
-def build_decryptor(payload: bytes, objects: Dict[int, bytes]) -> Optional[PdfDecryptor]:
-    """The document's decryptor when its trailer names an /Encrypt dict
-    this handler can open with the EMPTY user password; None for
-    unencrypted documents. Raises PdfCryptError for encryption that
-    needs a real password or an unsupported handler."""
-    enc_oid = find_encrypt_ref(payload)
-    if enc_oid is None:
-        return None
-    enc = objects.get(enc_oid)
+def build_decryptor(payload: bytes, enc: Optional[bytes]) -> PdfDecryptor:
+    """The document's decryptor for ``enc``, the /Encrypt dict its trailer
+    names (None when that object is missing; core/pdf_objects finds it),
+    opened with the EMPTY user password. Raises PdfCryptError for
+    encryption that needs a real password or an unsupported handler."""
     if enc is None:
         raise PdfCryptError("missing /Encrypt object")
     if b"/Standard" not in enc:
@@ -445,49 +414,3 @@ def build_decryptor(payload: bytes, objects: Dict[int, bytes]) -> Optional[PdfDe
             raise PdfCryptError("password required (user password not empty)")
         return PdfDecryptor(key, v, cfm, encrypt_metadata)
     raise PdfCryptError(f"unsupported encryption V={v} R={r}")
-
-
-# process-level cache: key derivation runs once per document even though
-# _parse_objects and the document-level lock check both need it (the R6
-# hardening loop is ~1 s; everything is content-keyed and deterministic)
-_CACHE: Dict[bytes, object] = {}
-
-
-def get_decryptor(payload: bytes, objects: Dict[int, bytes]) -> Optional[PdfDecryptor]:
-    h = hashlib.md5(payload).digest()
-    if h in _CACHE:
-        hit = _CACHE[h]
-        if isinstance(hit, str):
-            raise PdfCryptError(hit)
-        return hit  # type: ignore[return-value]
-    if len(_CACHE) > 32:
-        _CACHE.clear()
-    try:
-        dec = build_decryptor(payload, objects)
-    except PdfCryptError as e:
-        _CACHE[h] = str(e)
-        raise
-    _CACHE[h] = dec
-    return dec
-
-
-def encryption_locked(payload: bytes) -> bool:
-    """True when the trailer names an /Encrypt dict this handler cannot
-    open with the empty user password (real password / unsupported).
-    The LAST ``N G obj`` occurrence wins — incremental updates append
-    newer object versions (same rule as pdf_extract._parse_objects)."""
-    oid = find_encrypt_ref(payload)
-    if oid is None:
-        return False
-    enc_obj = None
-    for m in re.finditer(
-        rb"(?<![0-9])" + str(oid).encode("ascii") + rb"\s+\d+\s+obj(.*?)endobj",
-        payload,
-        re.S,
-    ):
-        enc_obj = m.group(1)
-    try:
-        get_decryptor(payload, {oid: enc_obj} if enc_obj is not None else {})
-        return False
-    except PdfCryptError:
-        return True

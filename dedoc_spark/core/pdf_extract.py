@@ -14,14 +14,14 @@ References:
     pattern kept if frequency > 0.4 (step 2) / 0.7 (step 1); matching
     lines removed.
 
-The parser covers the text-layer subset pdfminer handles for the
-reference's tests: uncompressed or FlateDecode content streams, BT/ET
-blocks, Tf/Td/TD/Tm/T* positioning, Tj/TJ/quote shows, literal and hex
-strings, PDF 1.5+ object streams (/ObjStm — xref streams are irrelevant to
-the full-scan object parser), and composite Type0/Identity-H fonts with
-/ToUnicode CMap decoding (bfchar + bfrange, both increment and array
-forms) so Cyrillic/CID text layers come out as real Unicode. Page fan-out
-at scale: explode (url, page_id, page_lines) rows — SURVEY.md §2.1.
+The readers take a ``PdfFile`` (core/pdf_objects.parse_pdf: objects,
+page order, streams and their filters). The parser covers the text-layer
+subset pdfminer handles for the reference's tests: BT/ET blocks,
+Tf/Td/TD/Tm/T* positioning, Tj/TJ/quote shows, literal and hex strings,
+and composite Type0/Identity-H fonts with /ToUnicode CMap decoding
+(bfchar + bfrange, both increment and array forms) so Cyrillic/CID text
+layers come out as real Unicode. Page fan-out at scale: explode (url,
+page_id, page_lines) rows — SURVEY.md §2.1.
 """
 
 from __future__ import annotations
@@ -29,246 +29,11 @@ from __future__ import annotations
 import difflib
 import hashlib
 import re
-import zlib
 from collections import Counter
 from typing import Dict, List, Optional, Tuple
 
-from dedoc_spark.core.model import Annotation, HierarchyLevel, Line
-
-#  the spec says CRLF or LF after the keyword, but CR-only writers exist
-#  in the wild (reference corpus tables/example_with_table1.pdf)
-_STREAM_START_RE = re.compile(rb"stream(?:\r\n|\n|\r)")
-_REF_RE = re.compile(rb"(\d+)\s+\d+\s+R")
-
-
-def _parse_objects(data: bytes) -> Dict[int, bytes]:
-    """Full-scan object parser: every ``N G obj … endobj`` span, with stream
-    payloads skipped via /Length (or an endstream scan) so binary stream
-    bytes can't truncate an object or fabricate a fake one.
-
-    Encrypted documents (trailer /Encrypt + standard security handler +
-    EMPTY user password — the common "protected" shape) are decrypted in
-    place here, so every downstream consumer (layout, images, detector,
-    ObjStm expansion) sees plaintext objects. Documents needing a real
-    password are left as parsed (their streams stay opaque and extraction
-    degrades to the unsupported-input path, never an exception)."""
-    objects: Dict[int, bytes] = {}
-    gens: Dict[int, int] = {}
-    pos = 0
-    for m in re.finditer(rb"(\d+)\s+(\d+)\s+obj\b", data):
-        if m.start() < pos:  # match is inside a previous object's stream
-            continue
-        start = m.end()
-        sm = _STREAM_START_RE.search(data, start)
-        endobj = data.find(b"endobj", start)
-        if endobj == -1:
-            continue
-        if sm and sm.start() < endobj:
-            lm = re.search(rb"/Length\s+(\d+)\b(?!\s+\d+\s+R)", data[start : sm.start()])
-            search_from = sm.end() + int(lm.group(1)) if lm else sm.end()
-            es = data.find(b"endstream", search_from)
-            if es != -1:
-                endobj = data.find(b"endobj", es)
-                if endobj == -1:
-                    continue
-        oid = int(m.group(1))
-        objects[oid] = data[start:endobj]
-        gens[oid] = int(m.group(2))
-        pos = endobj
-    if b"/Encrypt" in data:
-        _decrypt_objects(data, objects, gens)
-    return objects
-
-
-def _raw_stream_bytes(obj: bytes, head_end: int, start: int) -> Optional[bytes]:
-    """Undecoded stream payload framed by /Length or an endstream scan."""
-    lm = re.search(rb"/Length\s+(\d+)\b(?!\s+\d+\s+R)", obj[:head_end])
-    if lm:
-        return obj[start : start + int(lm.group(1))]
-    end = obj.find(b"endstream", start)
-    if end == -1:
-        return None
-    data = obj[start:end]
-    if data.endswith(b"\r\n"):
-        return data[:-2]
-    if data.endswith((b"\n", b"\r")):
-        return data[:-1]
-    return data
-
-
-def _decrypt_objects(data: bytes, objects: Dict[int, bytes], gens: Dict[int, int]) -> None:
-    """In-place stream + string decryption (core/pdf_crypt). Streams are
-    re-framed with an exact direct /Length; strings re-encode as hex."""
-    from dedoc_spark.core.pdf_crypt import (
-        PdfCryptError,
-        find_encrypt_ref,
-        get_decryptor,
-    )
-
-    try:
-        dec = get_decryptor(data, objects)
-    except PdfCryptError:
-        return  # needs a real password / unsupported handler: leave opaque
-    if dec is None:
-        return
-    enc_oid = find_encrypt_ref(data)
-    for oid, obj in list(objects.items()):
-        if oid == enc_oid:
-            continue
-        gen = gens.get(oid, 0)
-        sm = _STREAM_START_RE.search(obj)
-        if sm is None:
-            objects[oid] = _decrypt_strings(obj, dec, oid, gen)
-            continue
-        head = obj[: sm.start()]
-        if b"/XRef" in head:
-            continue  # cross-reference streams are never encrypted
-        if b"/Metadata" in head and not dec.encrypt_metadata:
-            continue  # /EncryptMetadata false: already plaintext
-        raw = _raw_stream_bytes(obj, sm.start(), sm.end())
-        if raw is None:
-            continue
-        try:
-            pt = dec.decrypt(oid, gen, raw)
-        except PdfCryptError:
-            continue
-        new_len = b"/Length " + str(len(pt)).encode("ascii")
-        head2, n = re.subn(rb"/Length\s+\d+\s+\d+\s+R", new_len, head, count=1)
-        if not n:
-            head2, n = re.subn(rb"/Length\s+\d+", new_len, head, count=1)
-        if not n:
-            head2 = head
-        # trailing \r\n before endstream: exact strip whatever pt ends with
-        objects[oid] = head2 + b"stream\r\n" + pt + b"\r\nendstream"
-
-
-def _decrypt_strings(obj: bytes, dec, oid: int, gen: int) -> bytes:
-    """Replace every literal/hex string in a (non-stream) object body
-    with the hex form of its decrypted bytes."""
-    from dedoc_spark.core.pdf_crypt import PdfCryptError, _pdf_string
-
-    out = bytearray()
-    i = 0
-    n = len(obj)
-    while i < n:
-        c = obj[i]
-        if c == 0x3C and obj[i + 1 : i + 2] != b"<":  # "<" hex string
-            j = obj.find(b">", i)
-            if j == -1:
-                out += obj[i:]
-                break
-            hexstr = re.sub(rb"\s", b"", obj[i + 1 : j])
-            if len(hexstr) % 2:
-                hexstr += b"0"
-            try:
-                pt = dec.decrypt_string(oid, gen, bytes.fromhex(hexstr.decode("ascii")))
-                out += b"<" + pt.hex().encode("ascii") + b">"
-            except (PdfCryptError, ValueError):
-                out += obj[i : j + 1]
-            i = j + 1
-            continue
-        if c == 0x3C:  # "<<" dict open
-            out += b"<<"
-            i += 2
-            continue
-        if c != 0x28:  # "("
-            out.append(c)
-            i += 1
-            continue
-        # literal string: find the matching ")" honoring escapes/nesting
-        depth = 1
-        j = i + 1
-        while j < n and depth:
-            cj = obj[j]
-            if cj == 0x5C:
-                j += 2
-                continue
-            if cj == 0x28:
-                depth += 1
-            elif cj == 0x29:
-                depth -= 1
-            j += 1
-        raw = _pdf_string(b"\x00" + obj[i:j], b"\x00")
-        if raw is None:
-            out += obj[i:j]
-        else:
-            try:
-                pt = dec.decrypt_string(oid, gen, raw)
-                out += b"<" + pt.hex().encode("ascii") + b">"
-            except PdfCryptError:
-                out += obj[i:j]
-        i = j
-    return bytes(out)
-
-
-def _stream_data(obj: bytes) -> Optional[bytes]:
-    """Stream payload of an object body, FlateDecode-decompressed."""
-    sm = _STREAM_START_RE.search(obj)
-    if not sm:
-        return None
-    start = sm.end()
-    lm = re.search(rb"/Length\s+(\d+)\b(?!\s+\d+\s+R)", obj[: sm.start()])
-    if lm:
-        data = obj[start : start + int(lm.group(1))]
-    else:
-        end = obj.find(b"endstream", start)
-        if end == -1:
-            return None
-        data = obj[start:end]
-        if data.endswith(b"\r\n"):
-            data = data[:-2]
-        elif data.endswith((b"\n", b"\r")):
-            data = data[:-1]
-    if b"/FlateDecode" in obj[: sm.start()]:
-        try:
-            data = zlib.decompress(data)
-        except zlib.error:
-            return None
-    return data
-
-
-def _expand_object_streams(objects: Dict[int, bytes]) -> None:
-    """PDF 1.5 object streams: unpack /Type /ObjStm members into the object
-    table (xref streams never need parsing — the full scan already found
-    every top-level object)."""
-    for obj in list(objects.values()):
-        if b"/ObjStm" not in obj:
-            continue
-        data = _stream_data(obj)
-        nm = re.search(rb"/N\s+(\d+)", obj)
-        fm = re.search(rb"/First\s+(\d+)", obj)
-        if data is None or not nm or not fm:
-            continue
-        n, first = int(nm.group(1)), int(fm.group(1))
-        header = data[:first].split()
-        pairs = [int(x) for x in header[: 2 * n]]
-        ids, offs = pairs[0::2], pairs[1::2]
-        for i, (sid, off) in enumerate(zip(ids, offs)):
-            end = first + offs[i + 1] if i + 1 < len(offs) else len(data)
-            objects.setdefault(sid, data[first + off : end])
-
-
-def _dict_value(obj: bytes, key: bytes) -> Optional[bytes]:
-    m = re.search(re.escape(key) + rb"\s*", obj)
-    if not m:
-        return None
-    rest = obj[m.end():]
-    if rest.startswith(b"["):
-        depth = 0
-        for i, ch in enumerate(rest):
-            if ch == ord("["):
-                depth += 1
-            elif ch == ord("]"):
-                depth -= 1
-                if depth == 0:
-                    return rest[: i + 1]
-    m2 = re.match(rb"[^/>\]\r\n]*", rest)
-    return m2.group(0).strip() if m2 else None
-
-
-def _resolve_refs(value: bytes) -> List[int]:
-    return [int(m.group(1)) for m in _REF_RE.finditer(value)]
-
+from dedoc_spark.core.model import Annotation, HierarchyLevel, Line, select_pages
+from dedoc_spark.core.pdf_objects import PdfFile, decode_stream, dict_value, refs
 
 class _FontInfo:
     """Resolved font: base name (bold detection), optional ToUnicode map,
@@ -364,7 +129,7 @@ def _page_fonts(page_obj: bytes, objects: Dict[int, bytes]) -> Dict[str, _FontIn
         to_unicode: Optional[Dict[int, str]] = None
         tum = re.search(rb"/ToUnicode\s+(\d+)\s+\d+\s+R", font_obj)
         if tum:
-            cmap_data = _stream_data(objects.get(int(tum.group(1)), b""))
+            cmap_data = decode_stream(objects.get(int(tum.group(1)), b""))
             if cmap_data:
                 to_unicode = _parse_tounicode(cmap_data)
         fonts[fm.group(1).decode("latin-1")] = _FontInfo(base, to_unicode, two_byte)
@@ -694,11 +459,11 @@ def _page_media(page_obj: bytes, objects: Dict[int, bytes]) -> Tuple[float, floa
     return (612.0, 792.0)
 
 
-def extract_pdf_pages(payload: bytes) -> List[List[Tuple[str, bool]]]:
-    """Payload → per-page list of (line_text, is_bold), lines top-down."""
+def extract_pdf_pages(pdf: PdfFile) -> List[List[Tuple[str, bool]]]:
+    """Per-page list of (line_text, is_bold), lines top-down."""
     return [
         [(text, bold) for text, bold, _bbox in page["lines"]]
-        for page in extract_pdf_pages_layout(payload)
+        for page in extract_pdf_pages_layout(pdf)
     ]
 
 
@@ -731,9 +496,9 @@ def _looks_two_column(
 
 
 def extract_pdf_pages_layout(
-    payload: bytes, collect_rules: bool = True, one_column: Optional[bool] = True
+    pdf: PdfFile, collect_rules: bool = True, one_column: Optional[bool] = True
 ) -> List[Dict]:
-    """Payload → per-page layout dicts:
+    """Per-page layout dicts, pages in ``pdf.pages`` order:
 
       {"width": w, "height": h,
        "lines":  [(text, is_bold, (x0, y0, x1, y1))],   top-down coords
@@ -744,46 +509,22 @@ def extract_pdf_pages_layout(
     Line bboxes union the member shows' device extents and are flipped to
     top-down (y_top = page_height − device_y_top) so downstream layout ops
     share the reference's image-pixel orientation (pdf_layout module)."""
-    objects = _parse_objects(payload)
-    _expand_object_streams(objects)
-
-    # page objects in document order via the /Pages tree when present
-    page_ids: List[int] = []
-
-    def walk_pages(obj_id: int) -> None:
-        obj = objects.get(obj_id, b"")
-        if b"/Type" in obj and b"/Pages" in obj:
-            kids = _dict_value(obj, b"/Kids") or b""
-            for kid in _resolve_refs(kids):
-                walk_pages(kid)
-        elif b"/Type" in obj and b"/Page" in obj:
-            page_ids.append(obj_id)
-
-    roots = [oid for oid, obj in objects.items() if b"/Type" in obj and b"/Catalog" in obj]
-    if roots:
-        pages_ref = _resolve_refs(_dict_value(objects[roots[0]], b"/Pages") or b"")
-        for r in pages_ref:
-            walk_pages(r)
-    if not page_ids:  # fallback: any /Page objects in id order
-        page_ids = sorted(
-            oid for oid, obj in objects.items() if b"/Type" in obj and rb"/Page" in obj and b"/Pages" not in obj
-        )
-
+    objects = pdf.objects
     pages: List[Dict] = []
-    for pid in page_ids:
+    for pid in pdf.pages:
         page_obj = objects[pid]
         fonts = _page_fonts(page_obj, objects)
         xobjects = _page_xobjects(page_obj, objects)
         width, height = _page_media(page_obj, objects)
-        contents = _dict_value(page_obj, b"/Contents") or b""
+        contents = dict_value(page_obj, b"/Contents") or b""
         shows: List[Tuple[float, float, str, str, float, float]] = []
         images_dev: List[Tuple[str, Tuple[float, float, float, float]]] = []
         # rules/per-show bboxes feed ONLY the ruled-table detector —
         # collect_rules=False keeps the default extraction hot path free
         # of the line-art CTM mapping and the per-show tuple build
         rules_dev: Optional[List[Tuple[float, float, float, float]]] = [] if collect_rules else None
-        for cid in _resolve_refs(contents):
-            data = _stream_data(objects.get(cid, b""))
+        for cid in refs(contents):
+            data = decode_stream(objects.get(cid, b""))
             if data is None:
                 continue
             shows.extend(_extract_page_shows(data, fonts, xobjects, images_dev, rules_dev))
@@ -864,7 +605,7 @@ def extract_pdf_pages_layout(
 
 
 def extract_pdf_lines(
-    payload: bytes,
+    pdf: PdfFile,
     url_hash: str = "",
     pages_range: Optional[str] = None,
     with_layout: bool = False,
@@ -886,7 +627,7 @@ def extract_pdf_lines(
     bbox sanity filter, per-page size/indentation/spacing annotations, and
     the line↔object linker over the page's placed images."""
     lines, _tables, warnings = _extract_pdf_full(
-        payload, url_hash, pages_range, with_layout, detect_tables=False,
+        pdf, url_hash, pages_range, with_layout, detect_tables=False,
         need_paragraph_classification=need_paragraph_classification,
         need_header_footer_analysis=need_header_footer_analysis,
         one_column=one_column,
@@ -896,7 +637,7 @@ def extract_pdf_lines(
 
 
 def extract_pdf_lines_tables(
-    payload: bytes,
+    pdf: PdfFile,
     url_hash: str = "",
     pages_range: Optional[str] = None,
     with_layout: bool = False,
@@ -916,7 +657,7 @@ def extract_pdf_lines_tables(
     continuations are merged by core/multipage.extract_multipage_tables.
     Returns (lines, tables, warnings)."""
     return _extract_pdf_full(
-        payload, url_hash, pages_range, with_layout, detect_tables=True,
+        pdf, url_hash, pages_range, with_layout, detect_tables=True,
         need_paragraph_classification=need_paragraph_classification,
         need_header_footer_analysis=need_header_footer_analysis,
         one_column=one_column,
@@ -926,7 +667,7 @@ def extract_pdf_lines_tables(
 
 
 def _extract_pdf_full(
-    payload: bytes,
+    pdf: PdfFile,
     url_hash: str,
     pages_range: Optional[str],
     with_layout: bool,
@@ -949,18 +690,11 @@ def _extract_pdf_full(
     )
 
     pages = extract_pdf_pages_layout(
-        payload,
+        pdf,
         collect_rules=detect_tables or need_gost_frame_analysis,
         one_column=one_column,
     )
-    warnings: List[str] = []
-    if pages_range:
-        left, _, right = pages_range.partition(":")
-        lo = int(left) if left else 1
-        hi = int(right) if right else len(pages)
-        if lo > 1 or hi < len(pages):
-            warnings.append("The document is partially parsed")
-        pages = pages[lo - 1 : hi]
+    pages, warnings = select_pages(pages, pages_range)
     page_lines: List[List[Line]] = []
     image_objects: List[PageObject] = []
     table_objects: List[PageObject] = []

@@ -1597,13 +1597,14 @@ SELECT doc_id, u.s.i - 1 AS sent_id, u.s.sent AS sentence FROM (
 def q40_pdf_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     def row(doc_id: int, text: str):
         from dedoc_spark.core.pdf_extract import extract_pdf_lines
+        from dedoc_spark.core.pdf_objects import parse_pdf
         from dedoc_spark.sources.pdf_fixture import build_pdf
 
         payload = build_pdf(
             [[(f"Doc {doc_id}", True), (text, False), (f"table {doc_id} data", False)]],
             images=[[(72, 600, 200, 100)]],
         )
-        lines, _ = extract_pdf_lines(payload, f"{doc_id}", with_layout=True)
+        lines, _ = extract_pdf_lines(parse_pdf(payload), f"{doc_id}", with_layout=True)
         notes = [(ln.line, a) for ln in lines for a in ln.annotations]
         return {
             "doc_id": doc_id,

@@ -391,7 +391,8 @@ def build_scanned_pdf(page_rasters, image_filter: str = "flate") -> bytes:
     PdfImageReader exists for. ``page_rasters``: list of HxW uint8 numpy
     arrays (e.g. scanfont.render_scan_page).
 
-    ``image_filter`` picks the stream encoding (all decoded by
+    ``image_filter`` picks the stream encoding (all read through the
+    core/pdf_objects filter cascade, then the image codec dispatch in
     core/ocr._decode_image_object): "flate" (8 bpc /DeviceGray, the
     default), "ccitt" (1-bit /CCITTFaxDecode K=-1 Group 4 — the codec
     real-world scanned PDFs use; the raster is binarized at 128),

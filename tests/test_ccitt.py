@@ -24,6 +24,7 @@ from dedoc_spark.core.pdf_filters import (
     runlength_decode,
     runlength_encode,
 )
+from dedoc_spark.core.pdf_objects import parse_pdf, stream_parts
 
 
 # ---------------------------------------------------------------------------
@@ -127,7 +128,7 @@ def test_g4_reference_scan_decodes(reference_file):
     from dedoc_spark.core.ocr import extract_pdf_page_images
 
     payload = reference_file("laws/with_applications.pdf").read_bytes()
-    pages = extract_pdf_page_images(payload)
+    pages = extract_pdf_page_images(parse_pdf(payload))
     assert [len(p) for p in pages] == [1, 1, 1, 1]
     for imgs in pages:
         img = imgs[0]
@@ -214,7 +215,7 @@ def test_scanned_pdf_unsupported_filter_skipped():
     raster = scanfont.render_scan_page(["Unsupported filter"], scale=2)
     pdf = build_scanned_pdf([raster], image_filter="ccitt")
     pdf_bad = pdf.replace(b"/CCITTFaxDecode", b"/JBIG2Decode   ", 1)  # same length
-    assert extract_pdf_page_images(pdf_bad) == [[]]
+    assert extract_pdf_page_images(parse_pdf(pdf_bad)) == [[]]
 
 
 def test_ccitt_pdf_bytes_deterministic():
@@ -239,9 +240,9 @@ def test_scanned_pdf_predictor_variants(image_filter):
     from dedoc_spark.sources.pdf_fixture import build_scanned_pdf
 
     raster = scanfont.render_scan_page(["Predictor variant line"], scale=2)
-    plain = extract_pdf_page_images(build_scanned_pdf([raster]))[0][0]
+    plain = extract_pdf_page_images(parse_pdf(build_scanned_pdf([raster])))[0][0]
     pred = extract_pdf_page_images(
-        build_scanned_pdf([raster], image_filter=image_filter)
+        parse_pdf(build_scanned_pdf([raster], image_filter=image_filter))
     )[0][0]
     assert np.array_equal(pred, plain)
 
@@ -255,11 +256,11 @@ def test_decode_array_inversion():
     from dedoc_spark.sources.pdf_fixture import build_scanned_pdf
 
     raster = scanfont.render_scan_page(["Inverted scan line"], scale=2)
-    plain = extract_pdf_page_images(build_scanned_pdf([raster]))[0][0]
+    plain = extract_pdf_page_images(parse_pdf(build_scanned_pdf([raster])))[0][0]
     inv_pdf = build_scanned_pdf([255 - raster]).replace(
         b"/BitsPerComponent 8 ", b"/BitsPerComponent 8 /Decode [1 0] ", 1
     )
-    assert np.array_equal(extract_pdf_page_images(inv_pdf)[0][0], plain)
+    assert np.array_equal(extract_pdf_page_images(parse_pdf(inv_pdf))[0][0], plain)
     # 1-bit path: G4-encode the inverted page, flip back via /Decode
     bin_plain = np.where(raster < 128, np.uint8(0), np.uint8(255))
     ccitt_inv = build_scanned_pdf([255 - raster], image_filter="ccitt")
@@ -289,7 +290,7 @@ def test_raw_stream_payload_ending_in_eol_bytes():
     """r6 review finding: a stream payload legitimately ending in EOL
     bytes must not be truncated — the direct /Length frames it exactly
     (the old endstream-scan stripped up to 2 trailing bytes)."""
-    from dedoc_spark.core.ocr import _decode_image_object, _raw_stream
+    from dedoc_spark.core.ocr import _decode_image_object
 
     arr = np.full((6, 7), 200, np.uint8)
     arr[-1, -2:] = [0x0D, 0x0A]  # payload ends "\r\n"
@@ -298,7 +299,7 @@ def test_raw_stream_payload_ending_in_eol_bytes():
         f"/ColorSpace /DeviceGray /BitsPerComponent 8 /Length {arr.size} >>"
     ).encode()
     obj = head + b"\nstream\n" + arr.tobytes() + b"\nendstream"
-    assert _raw_stream(obj) == arr.tobytes()
+    assert stream_parts(obj)[1] == arr.tobytes()
     img = _decode_image_object(obj)
     assert img is not None and np.array_equal(img, arr)
 

@@ -5,7 +5,13 @@ default parameters and under ``need_pdf_table_analysis``.
 
 Every row's md5 is pinned in ``dispatch_golden.json``, so any change in
 which reader a row reaches, in the re-sniff retry or in the error channel
-shows up here. After an intended output change, re-record with
+shows up here.
+
+``pdf_golden.json`` pins the PDF file-structure cases the per-format slice
+does not reach: object streams, Type0 fonts, the three encryption methods
+and a locked document, every scan codec under auto and forced OCR and
+with a ``pages`` range, and the /Info metadata of plain and encrypted
+files. After an intended output change, re-record both files with
 ``python tests/test_dispatch_golden.py --write``.
 """
 
@@ -17,10 +23,12 @@ import io
 import json
 import os
 import pickle
+import re
 import sys
 import zipfile
 
 GOLDEN = os.path.join(os.path.dirname(os.path.abspath(__file__)), "dispatch_golden.json")
+PDF_GOLDEN = os.path.join(os.path.dirname(os.path.abspath(__file__)), "pdf_golden.json")
 PARAMS = {"default": None, "tables": {"need_pdf_table_analysis": True}}
 
 EML = b"""From: Alice <alice@example.com>
@@ -153,6 +161,11 @@ def _cases():
     return cases
 
 
+def _md5(value) -> str:
+    blob = json.dumps(value, sort_keys=True, ensure_ascii=False).encode("utf-8")
+    return hashlib.md5(blob).hexdigest()
+
+
 def _digests():
     from dedoc_spark.core.document import extract_document
 
@@ -160,24 +173,95 @@ def _digests():
     for pname, params in PARAMS.items():
         for name, url, html, text in _cases():
             row = extract_document(url, html, text, params=None if params is None else dict(params))
-            blob = json.dumps(row, sort_keys=True, ensure_ascii=False).encode("utf-8")
-            out[f"{pname}:{name}"] = hashlib.md5(blob).hexdigest()
+            out[f"{pname}:{name}"] = _md5(row)
     return out
 
 
-def test_dispatch_golden_digests():
-    with open(GOLDEN, encoding="utf-8") as f:
+PDF_PAGES = [
+    [("1. Encrypted heading", True), ("first page body line", False)],
+    [("second page line", False), ("2. Closing heading", False)],
+]
+TYPE0_PAGES = [[("Заголовок первый", True), ("mixed Кириллица line", False)]]
+INFO = {"Title": "Golden title", "Author": "Jo Roe", "CreationDate": "D:20200601120000Z"}
+
+
+def _with_info(pdf: bytes) -> bytes:
+    """A plain (unencrypted) fixture with an /Info dict named by its trailer."""
+    oid = int(re.search(rb"/Size (\d+)", pdf).group(1))
+    fields = " ".join(f"/{k} ({v})" for k, v in INFO.items())
+    info = f"{oid} 0 obj\n<< {fields} >>\nendobj\n".encode("latin-1")
+    head, tail = pdf.split(b"xref\n", 1)
+    tail = tail.replace(b"trailer\n<< ", f"trailer\n<< /Info {oid} 0 R ".encode(), 1)
+    return head + info + b"xref\n" + tail
+
+
+def _pdf_cases():
+    """(case name, payload, params) for the PDF file-structure rows."""
+    from dedoc_spark.core.scanfont import render_scan_page
+    from dedoc_spark.sources.pdf_fixture import (
+        SCAN_CODECS,
+        build_pdf,
+        build_pdf_objstm,
+        build_pdf_type0,
+        build_scanned_pdf,
+        encrypt_pdf,
+    )
+
+    plain = build_pdf(PDF_PAGES)
+    cases = [
+        ("objstm", build_pdf_objstm(PDF_PAGES), None),
+        ("type0", build_pdf_type0(TYPE0_PAGES), None),
+        ("locked", encrypt_pdf(plain, user_password=b"x"), None),
+    ]
+    for method in ("rc4", "aesv2", "aesv3"):
+        cases.append((f"encrypted_{method}", encrypt_pdf(plain, method=method, info=INFO), None))
+    one = [render_scan_page(["Scan 7 page"], scale=2)]
+    two = one + [render_scan_page(["Second 8 page"], scale=2)]
+    for codec in SCAN_CODECS:
+        single = build_scanned_pdf(one, image_filter=codec)
+        cases.append((f"scan_{codec}/auto", single, None))
+        cases.append((f"scan_{codec}/forced", single, {"pdf_with_text_layer": "false"}))
+        cases.append((f"scan_{codec}/pages_2", build_scanned_pdf(two, image_filter=codec), {"pages": "2:"}))
+    return cases
+
+
+def _pdf_digests():
+    from dedoc_spark.core.document import extract_document
+    from dedoc_spark.core.metadata import extract_pdf_metadata
+    from dedoc_spark.sources.pdf_fixture import build_pdf, encrypt_pdf
+
+    out = {}
+    for name, payload, params in _pdf_cases():
+        out[f"extract:{name}"] = _md5(extract_document("https://x/d.pdf", payload, None, params=params))
+    plain = build_pdf(PDF_PAGES)
+    out["metadata:plain"] = _md5(extract_pdf_metadata(_with_info(plain)))
+    for method in ("rc4", "aesv2", "aesv3"):
+        enc = encrypt_pdf(plain, method=method, info=INFO)
+        out[f"metadata:encrypted_{method}"] = _md5(extract_pdf_metadata(enc))
+    return out
+
+
+def _check(path: str, got) -> None:
+    with open(path, encoding="utf-8") as f:
         want = json.load(f)
-    got = _digests()
     assert sorted(got) == sorted(want)
     changed = sorted(k for k in want if got[k] != want[k])
     assert not changed, f"{len(changed)} rows changed: {changed[:20]}"
+
+
+def test_dispatch_golden_digests():
+    _check(GOLDEN, _digests())
+
+
+def test_pdf_golden_digests():
+    _check(PDF_GOLDEN, _pdf_digests())
 
 
 if __name__ == "__main__":
     if sys.argv[1:] != ["--write"]:
         sys.exit("usage: python tests/test_dispatch_golden.py --write")
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    with open(GOLDEN, "w", encoding="utf-8") as f:
-        json.dump(_digests(), f, indent=1, sort_keys=True)
-        f.write("\n")
+    for path, digests in ((GOLDEN, _digests()), (PDF_GOLDEN, _pdf_digests())):
+        with open(path, "w", encoding="utf-8") as f:
+            json.dump(digests, f, indent=1, sort_keys=True)
+            f.write("\n")

@@ -12,6 +12,7 @@ import pytest
 from dedoc_spark.core import glyph_ocr
 from dedoc_spark.core.ftrender import ft_available
 from dedoc_spark.core.ocr import ink_mask, recognize_page
+from dedoc_spark.core.pdf_objects import parse_pdf
 
 needs_ft = pytest.mark.skipif(not ft_available(), reason="freetype/fonts absent")
 
@@ -231,7 +232,7 @@ def test_real_fax_scan_reads_anchor_lines(reference_file):
     from dedoc_spark.core.ocr import extract_pdf_page_images
 
     payload = reference_file("laws/with_applications.pdf").read_bytes()
-    img = extract_pdf_page_images(payload)[0][0]
+    img = extract_pdf_page_images(parse_pdf(payload))[0][0]
     rgb = np.repeat(img[:, :, None], 3, axis=2)
     lines = recognize_page(rgb, mask=ink_mask(rgb))
     text = "\n".join(" ".join(w.text for w in l.words) for l in lines)

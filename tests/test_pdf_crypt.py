@@ -13,6 +13,7 @@ from dedoc_spark.core.pdf_crypt import (
     aes_ecb_encrypt,
     rc4,
 )
+from dedoc_spark.core.pdf_objects import parse_pdf, trailer_ref
 
 RADIO = "pdf_auto/e09d__cs-pspc-xg-15p-portable-radio-quick-guide.pdf"
 
@@ -125,7 +126,7 @@ def test_reference_encrypted_pdf_extracts(reference_file):
     meta = extract_pdf_metadata(payload)
     assert meta["author"] == "L3Harris Technologies"
     assert meta["title"].startswith("14221-1450-1000")
-    pages = extract_pdf_page_images(payload)
+    pages = extract_pdf_page_images(parse_pdf(payload))
     assert len(pages) == 2 and all(len(p) > 20 for p in pages)
 
 
@@ -147,23 +148,21 @@ def test_encrypt_ref_in_content_text_not_locked():
     not mark the document encrypted — the governing reference comes from
     the trailer, never arbitrary content bytes."""
     from dedoc_spark.core.document import extract_document
-    from dedoc_spark.core.pdf_crypt import encryption_locked, find_encrypt_ref
     from dedoc_spark.sources.pdf_fixture import build_pdf
 
     pdf = build_pdf([[("This text mentions /Encrypt 5 0 R inline.", False)]])
-    assert find_encrypt_ref(pdf) is None
-    assert not encryption_locked(pdf)
+    assert trailer_ref(pdf, b"/Encrypt") is None
+    assert not parse_pdf(pdf).locked
     d = extract_document("plain.pdf", pdf, None, params={})
     assert d.get("error") is None
     assert "/Encrypt 5 0 R" in d["text_extracted"]
 
 
 def test_encrypt_ref_found_in_trailer():
-    from dedoc_spark.core.pdf_crypt import find_encrypt_ref
     from dedoc_spark.sources.pdf_fixture import build_pdf, encrypt_pdf
 
     enc = encrypt_pdf(build_pdf(PAGES), method="rc4")
-    oid = find_encrypt_ref(enc)
+    oid = trailer_ref(enc, b"/Encrypt")
     assert oid is not None
     assert f"{oid} 0 obj".encode() in enc
 
@@ -171,16 +170,15 @@ def test_encrypt_ref_found_in_trailer():
 def test_encryption_locked_uses_newest_object_version():
     """Incremental updates append newer object versions; a stale /Encrypt
     object earlier in the file must not shadow the real one."""
-    from dedoc_spark.core.pdf_crypt import encryption_locked, find_encrypt_ref
     from dedoc_spark.sources.pdf_fixture import build_pdf, encrypt_pdf
 
     enc = encrypt_pdf(build_pdf(PAGES), method="rc4")
-    oid = find_encrypt_ref(enc)
+    oid = trailer_ref(enc, b"/Encrypt")
     stale = (
         f"{oid} 0 obj\n<< /Filter /Standard /V 9 /R 9 >>\nendobj\n".encode()
     )
     patched = stale + enc  # stale version first; real object later wins
-    assert not encryption_locked(patched)
+    assert not parse_pdf(patched).locked
 
 
 def test_pdf_string_malformed_never_raises():

@@ -4,6 +4,7 @@ line_object_linker.py / metadata_extractor.py / ocr_line_extractor.py
 
 from dedoc_spark.core.model import Line
 from dedoc_spark.core.pdf_extract import extract_pdf_lines, extract_pdf_pages_layout
+from dedoc_spark.core.pdf_objects import parse_pdf
 from dedoc_spark.core.pdf_layout import (
     BBox,
     Location,
@@ -133,12 +134,12 @@ def test_end_to_end_image_link_and_metadata():
         [[("Title line", True), ("body text here", False), ("table 1 caption", False)]],
         images=[[(72, 600, 200, 100)]],
     )
-    page = extract_pdf_pages_layout(pdf)[0]
+    page = extract_pdf_pages_layout(parse_pdf(pdf))[0]
     assert (page["width"], page["height"]) == (612.0, 792.0)
     assert page["lines"][0][2] == (72.0, 20.0, 132.0, 32.0)  # 10 chars · 6pt, 12pt tall
     assert page["images"] == [("Im1", (72.0, 92.0, 272.0, 192.0))]
 
-    lines, _ = extract_pdf_lines(pdf, "h", with_layout=True)
+    lines, _ = extract_pdf_lines(parse_pdf(pdf), "h", with_layout=True)
     by_text = {ln.line: ln for ln in lines}
     names = {a.name for ln in lines for a in ln.annotations}
     assert {"size", "spacing"} <= names
@@ -151,7 +152,7 @@ def test_default_path_unchanged():
     """with_layout=False (the default) must not add layout annotations or
     extras — byte parity with rounds 1-2 output."""
     pdf = build_pdf([[("Title", True), ("body", False)]], images=[[(72, 600, 100, 50)]])
-    lines, _ = extract_pdf_lines(pdf, "h")
+    lines, _ = extract_pdf_lines(parse_pdf(pdf), "h")
     assert all("location" not in ln.extras for ln in lines)
     assert {a.name for ln in lines for a in ln.annotations} <= {"bold"}
 
@@ -163,7 +164,7 @@ def test_bbox_annotation_relative_roundtrip():
     import json
 
     pdf = build_pdf([[("Title line", True)]])
-    lines, _ = extract_pdf_lines(pdf, "h", with_layout=True)
+    lines, _ = extract_pdf_lines(parse_pdf(pdf), "h", with_layout=True)
     ann = next(a for a in lines[0].annotations if a.name == "bounding box")
     d = json.loads(ann.value)
     assert (d["page_width"], d["page_height"]) == (612.0, 792.0)

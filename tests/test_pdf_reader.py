@@ -5,12 +5,13 @@ PDF fixtures)."""
 from dedoc_spark.core.pdf_extract import extract_pdf_lines, extract_pdf_pages, footer_header_analysis
 from dedoc_spark.core.document import extract_document
 from dedoc_spark.core.model import Line
+from dedoc_spark.core.pdf_objects import parse_pdf
 from dedoc_spark.sources.pdf_fixture import build_pdf, example_pdf
 
 
 def test_single_page_lines_top_down():
     pdf = build_pdf([[("first line", False), ("second line", True), ("third", False)]])
-    pages = extract_pdf_pages(pdf)
+    pages = extract_pdf_pages(parse_pdf(pdf))
     assert len(pages) == 1
     assert [t for t, _ in pages[0]] == ["first line", "second line", "third"]
     assert [b for _, b in pages[0]] == [False, True, False]
@@ -18,7 +19,7 @@ def test_single_page_lines_top_down():
 
 def test_multi_page_order_and_page_ids():
     pdf = build_pdf([[("page one text", False)], [("page two text", False)]])
-    lines, _ = extract_pdf_lines(pdf)
+    lines, _ = extract_pdf_lines(parse_pdf(pdf))
     assert [(ln.page_id, ln.line) for ln in lines] == [
         (0, "page one text"),
         (1, "page two text"),
@@ -28,20 +29,20 @@ def test_multi_page_order_and_page_ids():
 
 def test_bold_annotation():
     pdf = build_pdf([[("normal", False), ("heading", True)]])
-    lines, _ = extract_pdf_lines(pdf)
+    lines, _ = extract_pdf_lines(parse_pdf(pdf))
     assert lines[0].annotations == []
     assert [(a.name, a.value) for a in lines[1].annotations] == [("bold", "True")]
 
 
 def test_string_escapes_and_parens():
     pdf = build_pdf([[("with (parens) and \\ backslash", False)]])
-    pages = extract_pdf_pages(pdf)
+    pages = extract_pdf_pages(parse_pdf(pdf))
     assert pages[0][0][0] == "with (parens) and \\ backslash"
 
 
 def test_header_footer_removed_on_multipage():
     pdf = example_pdf(n_pages=8)
-    lines, warnings = extract_pdf_lines(pdf)
+    lines, warnings = extract_pdf_lines(parse_pdf(pdf))
     texts = [ln.line for ln in lines]
     assert not any("ACME Corp" in t for t in texts)
     assert not any(t.startswith("- ") and t.endswith(" -") for t in texts)
@@ -51,7 +52,7 @@ def test_header_footer_removed_on_multipage():
 
 def test_header_footer_kept_when_not_repeating():
     pdf = example_pdf(n_pages=3, with_header_footer=False)
-    lines, warnings = extract_pdf_lines(pdf)
+    lines, warnings = extract_pdf_lines(parse_pdf(pdf))
     assert warnings == []
     assert sum(1 for ln in lines if "body " in ln.line) == 18
 
@@ -109,8 +110,8 @@ def test_objstm_packaging_same_text():
         [("Doc 7", True), ("first body line", False), ("second body line", False)],
         [("Page two", True), ("tail content", False)],
     ]
-    classic = extract_pdf_pages(build_pdf(pages))
-    modern = extract_pdf_pages(build_pdf_objstm(pages))
+    classic = extract_pdf_pages(parse_pdf(build_pdf(pages)))
+    modern = extract_pdf_pages(parse_pdf(build_pdf_objstm(pages)))
     assert modern == classic == [list(p) for p in pages]
 
 
@@ -120,7 +121,7 @@ def test_type0_cmap_cyrillic():
     from dedoc_spark.sources.pdf_fixture import build_pdf_type0
 
     pages = [[("Заголовок отчёта", True), ("Привет, мир — кириллица работает.", False)]]
-    got = extract_pdf_pages(build_pdf_type0(pages))
+    got = extract_pdf_pages(parse_pdf(build_pdf_type0(pages)))
     assert got == [list(p) for p in pages]
     # bold detection still works through the Type0 BaseFont
     assert got[0][0][1] is True and got[0][1][1] is False

@@ -50,9 +50,10 @@ def test_reference_english_doc_pdf(reference_file):
     extract, and per-line annotations are never duplicated (the reference's
     own assertion, test_format_pdf_reader.py test_pdf_text_layer)."""
     from dedoc_spark.core.pdf_extract import extract_pdf_lines
+    from dedoc_spark.core.pdf_objects import parse_pdf
 
     payload = reference_file("pdf_with_text_layer/english_doc.pdf").read_bytes()
-    lines, _ = extract_pdf_lines(payload, "h")
+    lines, _ = extract_pdf_lines(parse_pdf(payload), "h")
     texts = [ln.line.strip() for ln in lines]
     assert texts[0] == "THE GREAT ENGLISH DOCUMENT"
     assert any(t.startswith("1) Fisrst item") for t in texts)
@@ -66,13 +67,14 @@ def test_reference_cyrillic_pdfs(reference_file):
     """Real Cyrillic text-layer PDFs decode through ToUnicode/CMaps with
     the CTM-aware line placement: content matches the companion text."""
     from dedoc_spark.core.pdf_extract import extract_pdf_lines
+    from dedoc_spark.core.pdf_objects import parse_pdf
 
-    lines, _ = extract_pdf_lines(reference_file("pdf_with_text_layer/example.pdf").read_bytes(), "h")
+    lines, _ = extract_pdf_lines(parse_pdf(reference_file("pdf_with_text_layer/example.pdf").read_bytes()), "h")
     texts = [ln.line.strip() for ln in lines]
     assert texts[0] == "Пример документа"
     assert texts[1] == "Глава 1"
 
-    lines, _ = extract_pdf_lines(reference_file("pdf_with_text_layer/cp1251.pdf").read_bytes(), "h")
+    lines, _ = extract_pdf_lines(parse_pdf(reference_file("pdf_with_text_layer/cp1251.pdf").read_bytes()), "h")
     body = " ".join(ln.line.replace("\t", " ") for ln in lines)
     expected_head = reference_file("pdf_with_text_layer/cp1251.txt").read_text(encoding="utf-8").split()[:6]
     for word in expected_head:
@@ -87,6 +89,7 @@ def test_scanned_table_pdfs_yield_rasters(reference_file):
     [/FlateDecode /DCTDecode] (gost_multipage_table.pdf). Every page
     must produce a decoded raster."""
     from dedoc_spark.core.ocr import extract_pdf_page_images
+    from dedoc_spark.core.pdf_objects import parse_pdf
 
     expect = {
         "example_with_table0.pdf": [1, 1],
@@ -96,7 +99,7 @@ def test_scanned_table_pdfs_yield_rasters(reference_file):
     }
     for name, counts in expect.items():
         payload = reference_file(f"tables/{name}").read_bytes()
-        pages = extract_pdf_page_images(payload)
+        pages = extract_pdf_page_images(parse_pdf(payload))
         assert [len(p) for p in pages] == counts, name
 
 
