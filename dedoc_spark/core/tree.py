@@ -26,7 +26,10 @@ from dedoc_spark.core.model import Annotation, HierarchyLevel, Line
 
 
 class TreeNode:
-    __slots__ = ("node_id", "text", "annotations", "hl", "page_id", "line_id", "subparagraphs", "parent")
+    __slots__ = (
+        "node_id", "text", "annotations", "hl", "page_id", "line_id", "subparagraphs", "parent",
+        "_parts", "_length",
+    )
 
     def __init__(
         self,
@@ -46,6 +49,9 @@ class TreeNode:
         self.line_id = line_id
         self.subparagraphs: List["TreeNode"] = []
         self.parent = parent
+        # text merged by add_text, joined once by _merge_tree_annotations
+        self._parts: Optional[List[str]] = None
+        self._length = 0
 
     def add_child(self, line: Line) -> "TreeNode":
         node = TreeNode(
@@ -61,11 +67,18 @@ class TreeNode:
         return node
 
     def add_text(self, line: Line) -> None:
-        shift = len(self.text)
+        """Merge a multiline line into this node. The parts are joined once,
+        by the tree's finishing pass: ``self.text += ...`` on a slot
+        attribute copies the whole text each time, which is quadratic over
+        a long run of merged lines (a big plain-text file)."""
+        if self._parts is None:
+            self._parts, self._length = [self.text], len(self.text)
+        shift = self._length
         self.annotations.extend(
             Annotation(a.start + shift, a.end + shift, a.name, a.value) for a in line.annotations
         )
-        self.text += line.line
+        self._parts.append(line.line)
+        self._length += len(line.line)
 
     def to_dict(self) -> Dict:
         return {
@@ -119,16 +132,8 @@ def _create_root(lines: List[Line]) -> TreeNode:
         line_id=line_id,
         parent=None,
     )
-    text_length = 0
-    parts: List[str] = []
     for line in lines:
-        root.annotations.extend(
-            Annotation(a.start + text_length, a.end + text_length, a.name, a.value)
-            for a in line.annotations
-        )
-        text_length += len(line.line)
-        parts.append(line.line)
-    root.text = "".join(parts)
+        root.add_text(line)
     return root
 
 
@@ -160,9 +165,13 @@ def _add_list_nodes(lines: List[Line]) -> List[Line]:
 
 
 def _merge_tree_annotations(root: TreeNode) -> None:
+    """Finishing pass over a built tree: join the text that add_text
+    collected, then merge each node's annotations."""
     stack = [root]
     while stack:
         node = stack.pop()
+        if node._parts is not None:
+            node.text, node._parts = "".join(node._parts), None
         node.annotations = merge_annotations(node.annotations, node.text)
         stack.extend(node.subparagraphs)
 

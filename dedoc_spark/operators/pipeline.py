@@ -65,7 +65,25 @@ def bootstrapped(fn: Callable) -> Callable:
     ``core/glyph_ocr.py`` and ``operators/line_labeler.py`` open model
     files through paths next to their modules (``models/glyph_bank.json.gz``,
     the labeler JSON), which a zipped package would break. This is the
-    only place that knows how a worker finds the package."""
+    only place that knows how a worker finds the package.
+
+    The closure also stops a reused worker from re-reading its zip
+    archives on every task. Before each task Spark's
+    ``worker_util.setup_spark_files`` calls ``importlib.invalidate_caches()``,
+    and every cached ``zipimporter`` (about a dozen ``pyspark.zip``
+    subpackages plus the spark-core jar on the worker PYTHONPATH) then
+    re-reads its whole archive directory: about 225 ms per task on a
+    4-vCPU host. ``run`` gives each zipimporter in
+    ``sys.path_importer_cache`` a no-op ``invalidate_caches`` of its own.
+    Zipimporters that lazy imports create later are patched when the next
+    task enters, and a fresh worker's first task still pays once, because
+    Spark invalidates before the UDF runs. This is safe because Spark
+    invalidates only so that files shipped with ``addFile``/
+    ``addPyFile``/``addArchive`` become importable. Those arrive as NEW
+    ``sys.path`` entries with new importers, which the patch does not
+    touch, and this repository ships none of them
+    (``tests/test_worker_bootstrap.py`` checks that). ``pyspark.zip`` and
+    the Spark jars never change during a worker's life."""
     from pyspark import cloudpickle
 
     payload = cloudpickle.dumps(fn)
@@ -74,7 +92,16 @@ def bootstrapped(fn: Callable) -> Callable:
     def run(*args):
         import pickle
         import sys
+        import zipimport
 
+        # defined here, not at module level: a module function would be
+        # pickled by reference and need the package before the path is set
+        def keep_directory():
+            pass
+
+        for importer in list(sys.path_importer_cache.values()):
+            if isinstance(importer, zipimport.zipimporter):
+                importer.invalidate_caches = keep_directory
         if repo not in sys.path:
             sys.path.insert(0, repo)
         return pickle.loads(payload)(*args)

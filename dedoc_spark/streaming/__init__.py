@@ -75,6 +75,7 @@ def streaming_dedup(
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     from dedoc_spark.functions import normalized_fingerprint
+    from dedoc_spark.operators.pipeline import bootstrapped
 
     with_fp = stream_df.select(
         F.col(id_col), F.col(text_col),
@@ -104,7 +105,7 @@ def streaming_dedup(
         GroupStateTimeout.ProcessingTimeTimeout if timeout_ms > 0 else GroupStateTimeout.NoTimeout
     )
     return with_fp.groupBy("fp").applyInPandasWithState(
-        dedup_fn, out_schema, state_schema, "update", timeout_conf
+        bootstrapped(dedup_fn), out_schema, state_schema, "update", timeout_conf
     )
 
 
@@ -179,6 +180,7 @@ def streaming_near_dedup(
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     from dedoc_spark.functions import minhash_signature, word_shingles, word_tokens
+    from dedoc_spark.operators.pipeline import bootstrapped
 
     if bands < 1 or num_hashes % bands != 0:
         raise ValueError(f"bands ({bands}) must divide num_hashes ({num_hashes})")
@@ -292,5 +294,5 @@ def streaming_near_dedup(
     # key on (band_idx, band_key) like the batch LSH join — a band-0 key
     # equal to another doc's band-2 key is NOT a collision
     return banded.groupBy("band_idx", "band_key").applyInPandasWithState(
-        collide_fn, out_schema, state_schema, "update", timeout_conf
+        bootstrapped(collide_fn), out_schema, state_schema, "update", timeout_conf
     )

@@ -2,13 +2,17 @@
 (tests/unit_tests/test_misc_prefix.py / test_misc_hierarchy_level.py /
 tree_constructor.py behaviors)."""
 
-from dedoc_spark.core.model import HierarchyLevel, Line
+import gc
+import time
+
+from dedoc_spark.core.model import Annotation, HierarchyLevel, Line
 from dedoc_spark.core.structure import (
     assign_hierarchy_levels,
     get_dotted_item_depth,
     get_hierarchy_level,
 )
 from dedoc_spark.core.tree import construct_tree, tree_to_text
+from dedoc_spark.core.txt_extract import extract_txt_lines
 
 
 def line(text, tag_hl=None):
@@ -58,6 +62,43 @@ def test_multiline_raw_text_merges_into_one_node():
     root = construct_tree(lines)
     assert len(root.subparagraphs) == 1
     assert root.subparagraphs[0].text == "a\nb\nc\n"
+
+
+def test_merged_annotations_shift_by_running_text_length():
+    lines = [line("ab\n"), line("cde\n"), line("f\n")]
+    for ln, value in zip(lines, ("x", "y", "z")):
+        ln.annotations = [Annotation(0, 1, "bold", value)]
+    assign_hierarchy_levels(lines)
+    for i, ln in enumerate(lines):
+        ln.line_id = i
+    (node,) = construct_tree(lines).subparagraphs
+    assert node.text == "ab\ncde\nf\n"
+    bold = sorted((a.start, a.end, a.value) for a in node.annotations if a.name == "bold")
+    assert bold == [(0, 1, "x"), (3, 4, "y"), (7, 8, "z")]
+
+
+def _construct_seconds(n_lines):
+    text = "".join(f"line {i:06d} of a plain text log file, words to fill eighty bytes\n" for i in range(n_lines))
+    lines = extract_txt_lines(text)
+    assign_hierarchy_levels(lines)
+    best = float("inf")
+    gc.disable()
+    try:
+        for _ in range(5):
+            t0 = time.perf_counter()
+            root = construct_tree(lines)
+            best = min(best, time.perf_counter() - t0)
+    finally:
+        gc.enable()
+    assert len(root.subparagraphs) == 1 and len(root.subparagraphs[0].text) == len(text)
+    return best
+
+
+def test_merging_many_text_lines_is_linear():
+    # every raw-text line of a .txt file merges into one node; building its
+    # text with `+=` on a slot attribute was quadratic (4x per doubling)
+    small, big = _construct_seconds(13_000), _construct_seconds(26_000)
+    assert big <= 2.5 * small, (small, big)
 
 
 def test_header_starts_new_subtree():

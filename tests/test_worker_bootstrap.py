@@ -1,16 +1,22 @@
-"""Every Python UDF finds the package in a FRESH worker.
+"""Every Python UDF finds the package in a fresh worker, and a reused
+worker keeps its zip-import directories.
 
 The driver below is started from an empty directory with the repository
-on its own ``sys.path`` only (not on PYTHONPATH), and Spark starts a new
-Python worker for every task (``spark.python.worker.reuse=false``). So a
-UDF body that is not wrapped in ``operators.pipeline.bootstrapped`` fails
-with ``ModuleNotFoundError: No module named 'dedoc_spark'``, instead of
-passing because an earlier bootstrapped UDF already fixed the path of a
-reused worker.
+on its own ``sys.path`` only (not on PYTHONPATH). With
+``spark.python.worker.reuse=false`` Spark starts a new Python worker for
+every task, so a UDF body that is not wrapped in
+``operators.pipeline.bootstrapped`` fails with ``ModuleNotFoundError: No
+module named 'dedoc_spark'``, instead of passing because an earlier
+bootstrapped UDF already fixed the path of a reused worker. With
+``reuse=true`` and one task slot, every task runs in one worker: from the
+second task on, ``bootstrapped`` must keep Spark's per-task
+``importlib.invalidate_caches()`` from re-reading the zip archives, and
+every UDF family must still import through the patched importers.
 
-The static check keeps it that way: under ``dedoc_spark/`` only
-``operators/pipeline.py`` knows about ``sys.path``, and every
-``.mapInPandas(`` argument is a ``bootstrapped(...)`` call.
+The static checks keep it that way: under ``dedoc_spark/`` only
+``operators/pipeline.py`` knows about ``sys.path``, every Python UDF
+argument is a ``bootstrapped(...)`` call, and nothing ships files to the
+workers, which the no-op invalidation relies on.
 """
 
 import ast
@@ -18,6 +24,7 @@ import json
 import os
 import subprocess
 import sys
+from collections import Counter
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parents[1]
@@ -35,8 +42,8 @@ sys.path.insert(0, REPO)
 from pyspark.sql import SparkSession
 
 spark = (
-    SparkSession.builder.master("local[2]")
-    .config("spark.python.worker.reuse", "false")
+    SparkSession.builder.master("local[1]" if REUSE else "local[2]")
+    .config("spark.python.worker.reuse", "true" if REUSE else "false")
     .config("spark.sql.shuffle.partitions", "2")
     .config("spark.ui.enabled", "false")
     .getOrCreate()
@@ -117,7 +124,26 @@ def warc():
     return [r.url for r in rows] == ["http://a.example/"]
 
 
+def zip_directories(pdf_iter):
+    import os
+    import zipimport
+
+    snapshot = sorted((archive, id(files)) for archive, files in zipimport._zip_directory_cache.items())
+    for pdf in pdf_iter:
+        yield pdf.assign(pid=os.getpid(), snapshot=json.dumps(snapshot))
+
+
 results = {}
+if REUSE:
+    # first, so that task 1 is the worker's first task
+    from dedoc_spark.operators.pipeline import bootstrapped
+
+    rows = (
+        spark.range(0, 6, numPartitions=6)
+        .mapInPandas(bootstrapped(zip_directories), "id long, pid long, snapshot string")
+        .collect()
+    )
+    results["zip_directories"] = [[r.pid, json.loads(r.snapshot)] for r in sorted(rows)]
 for check in (classifier, extract, archives, attachments, media, warc):
     try:
         results[check.__name__] = "ok" if check() else "wrong result"
@@ -129,7 +155,10 @@ print("RESULTS " + json.dumps(results))
 """
 
 
-def test_fresh_workers_find_the_package(tmp_path):
+FAMILIES = ("classifier", "extract", "archives", "attachments", "media", "warc")
+
+
+def _run_driver(cwd, reuse):
     env = dict(os.environ)
     kept = [
         p for p in env.get("PYTHONPATH", "").split(os.pathsep)
@@ -138,15 +167,29 @@ def test_fresh_workers_find_the_package(tmp_path):
     env["PYTHONPATH"] = os.pathsep.join(kept)
     env.setdefault("PYSPARK_PYTHON", sys.executable)
     proc = subprocess.run(
-        [sys.executable, "-c", f"REPO = {str(REPO)!r}\n" + DRIVER],
-        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600,
+        [sys.executable, "-c", f"REPO = {str(REPO)!r}\nREUSE = {reuse!r}\n" + DRIVER],
+        cwd=cwd, env=env, capture_output=True, text=True, timeout=600,
     )
     lines = [ln for ln in proc.stdout.splitlines() if ln.startswith("RESULTS ")]
     assert lines, proc.stderr[-3000:]
-    results = json.loads(lines[-1][len("RESULTS "):])
-    assert results == {
-        name: "ok" for name in ("classifier", "extract", "archives", "attachments", "media", "warc")
-    }
+    return json.loads(lines[-1][len("RESULTS "):])
+
+
+def test_fresh_workers_find_the_package(tmp_path):
+    assert _run_driver(tmp_path, reuse=False) == {name: "ok" for name in FAMILIES}
+
+
+def test_reused_worker_keeps_its_zip_directories(tmp_path):
+    results = _run_driver(tmp_path, reuse=True)
+    tasks = results.pop("zip_directories")
+    assert results == {name: "ok" for name in FAMILIES}
+    assert len(tasks) == 6
+    assert len({pid for pid, _ in tasks}) == 1, tasks
+    # pyspark.zip is always imported from, so it is always cached
+    assert any(archive.endswith("pyspark.zip") for archive, _ in tasks[0][1]), tasks[0]
+    # the first task paid Spark's re-read; no later one may
+    snapshots = {json.dumps(snapshot) for _, snapshot in tasks[1:]}
+    assert len(snapshots) == 1, tasks
 
 
 def _package_files():
@@ -165,16 +208,20 @@ def test_only_pipeline_knows_the_worker_path():
     assert offenders == []
 
 
+# the DataFrame methods that take a Python function as their first argument
+UDF_METHODS = {"mapInPandas", "mapInArrow", "applyInPandas", "applyInPandasWithState"}
+
+
 def test_every_map_in_pandas_udf_is_bootstrapped():
-    calls, offenders = 0, []
+    calls, offenders = Counter(), []
     for path in _package_files():
         tree = ast.parse(path.read_text(encoding="utf-8"))
         for node in ast.walk(tree):
             if not (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)):
                 continue
-            if node.func.attr != "mapInPandas":
+            if node.func.attr not in UDF_METHODS:
                 continue
-            calls += 1
+            calls[node.func.attr] += 1
             arg = node.args[0] if node.args else None
             ok = (
                 isinstance(arg, ast.Call)
@@ -183,5 +230,27 @@ def test_every_map_in_pandas_udf_is_bootstrapped():
             )
             if not ok:
                 offenders.append(f"{path.relative_to(PACKAGE)}:{node.lineno}")
-    assert calls > 0
+    assert calls["mapInPandas"] > 0 and calls["applyInPandasWithState"] > 0
     assert offenders == []
+
+
+SHIPPING_CALLS = {"addFile", "addPyFile", "addArchive"}
+SHIPPING_CONFIGS = {"spark.submit.pyFiles", "spark.files", "spark.archives", "--py-files", "--files", "--archives"}
+
+
+def test_nothing_ships_files_to_the_workers():
+    offenders = []
+    for path in sorted(PACKAGE.rglob("*.py")) + sorted((REPO / "scripts").rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text(encoding="utf-8"))):
+            shipping = (
+                isinstance(node, ast.Attribute) and node.attr in SHIPPING_CALLS
+            ) or (
+                isinstance(node, ast.Constant) and node.value in SHIPPING_CONFIGS
+            )
+            if shipping:
+                offenders.append(f"{path.relative_to(REPO)}:{node.lineno}")
+    assert offenders == [], (
+        "operators/pipeline.bootstrapped keeps reused workers from re-reading their "
+        "zip archives, which is sound only while no files are shipped to the workers; "
+        "read its docstring before shipping any"
+    )
