@@ -6,7 +6,8 @@ Rules reproduced:
   1. Annotations are grouped by (name, value); within a group, spans that
      overlap or touch — including *through whitespace runs of the text* —
      are merged into one [min(start), max(end)) annotation.
-  2. Groups whose name is non-mergeable (e.g. linked_text) pass through.
+  2. Groups whose name is non-mergeable (e.g. linked_text), and lone
+     annotations, pass through.
   3. Contradiction filter: per name, sorted by start, keep the first
      annotation; a later overlapping annotation is dropped — unless the
      kept one covers text that *starts with whitespace*, in which case it
@@ -34,30 +35,29 @@ def merge_annotations(annotations: List[Annotation], text: str) -> List[Annotati
     for a in annotations:
         groups.setdefault((a.name, a.value), []).append(a)
 
-    # whitespace runs act as glue between same-(name,value) spans
-    spaces = [(m.start(), m.end()) for m in _SPACES.finditer(text)]
-
     merged: List[Annotation] = []
+    spaces = None  # whitespace runs glue spans; scanned only for a group that merges
     for group in groups.values():
-        merged.extend(_merge_one_group(group, spaces))
+        if len(group) > 1 and group[0].is_mergeable:
+            if spaces is None:
+                spaces = [(m.start(), m.end(), None) for m in _SPACES.finditer(text)]
+            group = _merge_one_group(group, spaces)
+        merged.extend(group)
 
     return _filter_contradicting(merged, text)
 
 
 def _merge_one_group(
-    annotations: List[Annotation], spaces: List[Tuple[int, int]]
+    annotations: List[Annotation], spaces: List[Tuple[int, int, None]]
 ) -> List[Annotation]:
     """Merge one (name, value) group; spans may be glued by whitespace runs.
 
     Mirrors annotation_merger.py:86-108 including the stable sort of
-    annotations-then-spaces by start.
+    annotations-then-spaces by start; lone and non-mergeable groups never get here.
     """
-    if len(annotations) <= 1 or not annotations[0].is_mergeable:
-        return annotations
-
     # events: (start, end, annotation or None-for-space); stable sort by start
     events: List[Tuple[int, int, object]] = [(a.start, a.end, a) for a in annotations]
-    events += [(s, e, None) for (s, e) in spaces]
+    events += spaces
     events.sort(key=lambda ev: ev[0])
 
     result: List[Annotation] = []

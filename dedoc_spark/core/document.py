@@ -18,7 +18,7 @@ from functools import partial
 from typing import Callable, Dict, List, Optional, Sequence
 
 from dedoc_spark.core.html_extract import HtmlExtractor
-from dedoc_spark.core.model import Line, param_flag, select_pages
+from dedoc_spark.core.model import Line, lines_json, param_flag, select_pages, tables_json
 from dedoc_spark.core.structure import assign_hierarchy_levels
 from dedoc_spark.core.tree import construct_tree, flatten_tree, tree_to_text
 from dedoc_spark.core.txt_extract import extract_txt_lines
@@ -96,6 +96,7 @@ def _finalize(url: str, lines: List[Line], tables, warnings, params: Optional[Di
     else:
         tree = construct_tree(lines)
     text_extracted = tree_to_text(tree)
+    tree_json, nodes_json = flatten_tree(tree)
     # UnstructuredDocument.get_text() semantics (unstructured_document.py:44-45)
     text_linear = "\n".join(line.line for line in lines)
     out = {
@@ -104,10 +105,10 @@ def _finalize(url: str, lines: List[Line], tables, warnings, params: Optional[Di
         "text_linear": text_linear,
         "n_lines": len(lines),
         "n_tables": len(tables),
-        "lines_json": json.dumps([ln.to_dict() for ln in lines], ensure_ascii=False),
-        "tree_json": json.dumps(tree.to_dict(), ensure_ascii=False),
-        "nodes_json": json.dumps(flatten_tree(tree), ensure_ascii=False),
-        "tables_json": json.dumps([t.to_dict() for t in tables], ensure_ascii=False),
+        "lines_json": lines_json(lines),
+        "tree_json": tree_json,
+        "nodes_json": nodes_json,
+        "tables_json": tables_json(tables),
         "warnings": list(warnings),
         "error": None,
     }

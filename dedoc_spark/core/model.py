@@ -14,6 +14,8 @@ resumable (SURVEY.md §7.0).
 
 from __future__ import annotations
 
+import json
+from json.encoder import encode_basestring
 from typing import Dict, List, Optional, Tuple
 
 _INF = float("inf")
@@ -77,9 +79,6 @@ class Annotation:
 
     def __repr__(self) -> str:
         return f"{self.name.capitalize()}({self.start}:{self.end}, {self.value})"
-
-    def to_dict(self) -> Dict:
-        return {"start": self.start, "end": self.end, "name": self.name, "value": self.value}
 
 
 class HierarchyLevel:
@@ -166,14 +165,6 @@ class HierarchyLevel:
     def create_root() -> "HierarchyLevel":
         return HierarchyLevel(0, 0, True, HierarchyLevel.root)
 
-    def to_dict(self) -> Dict:
-        return {
-            "level_1": self.level_1,
-            "level_2": self.level_2,
-            "can_be_multiline": self.can_be_multiline,
-            "line_type": self.line_type,
-        }
-
 
 class Line:
     """A document line with metadata and span annotations.
@@ -236,18 +227,6 @@ class Line:
             extras=self.extras,
         )
 
-    def to_dict(self) -> Dict:
-        return {
-            "line": self.line,
-            "page_id": self.page_id,
-            "line_id": self.line_id,
-            "tag_hl": self.tag_hl.to_dict() if self.tag_hl is not None else None,
-            "hl": self.hl.to_dict() if self.hl is not None else None,
-            "annotations": [a.to_dict() for a in self.annotations],
-            "uid": self.uid,
-            "extras": {k: str(v) for k, v in self.extras.items()},
-        }
-
 
 class Cell:
     """Table cell (cell_with_meta.py:9-57): lines + span info."""
@@ -269,14 +248,6 @@ class Cell:
     def get_text(self) -> str:
         return "\n".join(line.line for line in self.lines)
 
-    def to_dict(self) -> Dict:
-        return {
-            "lines": [line.to_dict() for line in self.lines],
-            "colspan": self.colspan,
-            "rowspan": self.rowspan,
-            "invisible": self.invisible,
-        }
-
 
 class Table:
     """Rectangular row-major table (table.py:9-32): merged cells are
@@ -290,10 +261,87 @@ class Table:
         self.uid = uid
         self.title = title
 
-    def to_dict(self) -> Dict:
-        return {
-            "cells": [[c.to_dict() for c in row] for row in self.cells],
-            "page_id": self.page_id,
-            "uid": self.uid,
-            "title": self.title,
-        }
+
+# JSON columns: lines_json, tables_json and tree.flatten_tree write their text
+# in one pass, byte-equal to json.dumps(shape, ensure_ascii=False) of shapes
+# Annotation {start, end, name, value}; HierarchyLevel {level_1, level_2,
+# can_be_multiline, line_type}; Line {line, page_id, line_id, tag_hl: HL|null,
+# hl: HL|null, annotations, uid, extras: {key: str(value)}}; Cell {lines,
+# colspan, rowspan, invisible}; Table {cells: [[Cell]], page_id, uid, title}.
+
+_ENCODE = json.JSONEncoder(ensure_ascii=False).encode
+_HL_JSON: Dict[tuple, str] = {}
+_HL_JSON_CAP = 256
+
+
+def json_value(v) -> str:
+    """One JSON scalar as json.dumps(v, ensure_ascii=False) writes it; str
+    subclasses (dom.Text) take json's own C string encoder too."""
+    if isinstance(v, str):
+        return encode_basestring(v)
+    if type(v) is int:
+        return int.__repr__(v)
+    return "null" if v is None else _ENCODE(v)
+
+
+def _key_json(k) -> str:
+    # json's object-key rules: 1 -> "1", True -> "true", a tuple raises
+    return encode_basestring(k) if isinstance(k, str) else _ENCODE({k: None})[1:-7]
+
+
+def _array(items: List[str]) -> str:
+    return "[" + ", ".join(items) + "]"
+
+
+def _hl_json(hl: Optional[HierarchyLevel]) -> str:
+    if hl is None:
+        return "null"
+    l1, l2, ml, lt = hl.level_1, hl.level_2, hl.can_be_multiline, hl.line_type
+    key = (type(l1), l1, type(l2), l2, type(ml), ml, lt)  # 1, 1.0, True: one hash, three texts
+    out = _HL_JSON.get(key)
+    if out is None:
+        out = (
+            f'{{"level_1": {json_value(l1)}, "level_2": {json_value(l2)}, '
+            f'"can_be_multiline": {json_value(ml)}, "line_type": {json_value(lt)}}}'
+        )
+        if len(_HL_JSON) >= _HL_JSON_CAP:
+            _HL_JSON.clear()
+        if not (type(l1) is float and l1 == 0 or type(l2) is float and l2 == 0):  # -0.0 == 0.0
+            _HL_JSON[key] = out
+    return out
+
+
+def annotations_json(annotations: List[Annotation]) -> str:
+    return _array([
+        f'{{"start": {json_value(a.start)}, "end": {json_value(a.end)}, '
+        f'"name": {json_value(a.name)}, "value": {json_value(a.value)}}}'
+        for a in annotations
+    ])
+
+
+def lines_json(lines: List[Line]) -> str:
+    return _array([
+        f'{{"line": {json_value(ln.line)}, "page_id": {json_value(ln.page_id)}, '
+        f'"line_id": {json_value(ln.line_id)}, "tag_hl": {_hl_json(ln.tag_hl)}, '
+        f'"hl": {_hl_json(ln.hl)}, '
+        f'"annotations": {annotations_json(ln.annotations) if ln.annotations else "[]"}, '
+        f'"uid": {json_value(ln.uid)}, "extras": {{'
+        # most lines carry no annotations or extras: skip those calls
+        + (", ".join([f"{_key_json(k)}: {encode_basestring(str(v))}" for k, v in ln.extras.items()])
+           if ln.extras else "")
+        + "}}"
+        for ln in lines
+    ])
+
+
+def tables_json(tables: List[Table]) -> str:
+    return _array([
+        '{"cells": '
+        + _array([_array([
+            f'{{"lines": {lines_json(c.lines)}, "colspan": {json_value(c.colspan)}, '
+            f'"rowspan": {json_value(c.rowspan)}, "invisible": {json_value(c.invisible)}}}'
+            for c in row
+        ]) for row in t.cells])
+        + f', "page_id": {json_value(t.page_id)}, "uid": {json_value(t.uid)}, "title": {json_value(t.title)}}}'
+        for t in tables
+    ])

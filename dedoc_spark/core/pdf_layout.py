@@ -56,14 +56,6 @@ class BBox:
     def y_bottom_right(self) -> float:
         return self.y_top_left + self.height
 
-    def to_dict(self) -> Dict:
-        return {
-            "x_top_left": self.x_top_left,
-            "y_top_left": self.y_top_left,
-            "width": self.width,
-            "height": self.height,
-        }
-
     def to_relative_dict(self, page_width: float, page_height: float) -> Dict:
         """Relative-coordinate dict, the BBoxAnnotation value contract
         (inverse of bbox_annotation.py:32-43 get_bbox_from_value)."""
@@ -100,7 +92,7 @@ class Location:
         return self._key() < other._key()
 
     def __repr__(self) -> str:
-        # content-only repr: Line.to_dict str()s extras values, so the
+        # content-only repr: lines_json str()s extras values, so the
         # default object repr's memory address would leak into lines_json
         # and break byte determinism
         return f"Location({self.page_number},{self.bbox!r})"

@@ -19,10 +19,10 @@ Reproduced behaviors:
 
 from __future__ import annotations
 
-from typing import Dict, List, Optional
+from typing import List, Optional, Tuple
 
 from dedoc_spark.core.annotation_merger import merge_annotations
-from dedoc_spark.core.model import Annotation, HierarchyLevel, Line
+from dedoc_spark.core.model import Annotation, HierarchyLevel, Line, annotations_json, json_value
 
 
 class TreeNode:
@@ -79,19 +79,6 @@ class TreeNode:
         )
         self._parts.append(line.line)
         self._length += len(line.line)
-
-    def to_dict(self) -> Dict:
-        return {
-            "node_id": self.node_id,
-            "text": self.text,
-            "annotations": [a.to_dict() for a in self.annotations],
-            "metadata": {
-                "paragraph_type": self.hl.line_type if self.hl is not None else HierarchyLevel.raw_text,
-                "page_id": self.page_id,
-                "line_id": self.line_id,
-            },
-            "subparagraphs": [c.to_dict() for c in self.subparagraphs],
-        }
 
 
 def construct_tree(lines: List[Line]) -> TreeNode:
@@ -183,22 +170,24 @@ def tree_to_text(node: TreeNode) -> str:
     return f"{node.text}\n{sub}"
 
 
-def flatten_tree(node: TreeNode) -> List[Dict]:
-    """Queryable flat nodes view: (node_id, parent_id, depth, paragraph_type,
-    text, n_annotations) — the relational complement of the JSON tree."""
-    out: List[Dict] = []
-    stack = [node]
-    while stack:
-        n = stack.pop()
-        out.append(
-            {
-                "node_id": n.node_id,
-                "parent_id": n.parent.node_id if n.parent is not None else None,
-                "depth": n.node_id.count("."),
-                "paragraph_type": n.hl.line_type,
-                "text": n.text,
-                "n_annotations": len(n.annotations),
-            }
-        )
-        stack.extend(reversed(n.subparagraphs))
-    return out
+def flatten_tree(node: TreeNode) -> Tuple[str, str]:
+    """One walk: (tree_json, nodes_json), each node's text encoded once. tree_json
+    nests {node_id, text, annotations, metadata: {paragraph_type, page_id,
+    line_id}, subparagraphs}; nodes_json, the flat view, lists {node_id,
+    parent_id, depth, paragraph_type, text, n_annotations} in pre-order."""
+    nodes: List[str] = []
+    return _node_json(node, "null", nodes), "[" + ", ".join(nodes) + "]"
+
+
+def _node_json(n: TreeNode, parent_id: str, nodes: List[str]) -> str:
+    node_id, text, ptype = json_value(n.node_id), json_value(n.text), json_value(n.hl.line_type)
+    nodes.append(
+        f'{{"node_id": {node_id}, "parent_id": {parent_id}, "depth": {n.node_id.count(".")}, '
+        f'"paragraph_type": {ptype}, "text": {text}, "n_annotations": {len(n.annotations)}}}'
+    )
+    children = ", ".join([_node_json(c, node_id, nodes) for c in n.subparagraphs])
+    return (
+        f'{{"node_id": {node_id}, "text": {text}, "annotations": {annotations_json(n.annotations)}, '
+        f'"metadata": {{"paragraph_type": {ptype}, "page_id": {json_value(n.page_id)}, '
+        f'"line_id": {json_value(n.line_id)}}}, "subparagraphs": [{children}]}}'
+    )
