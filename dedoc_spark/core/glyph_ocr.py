@@ -38,7 +38,7 @@ from typing import Dict, List, Optional, Sequence, Tuple
 
 import numpy as np
 
-from dedoc_spark.core.ocr import _runs
+from dedoc_spark.core.ocr import _runs, block_means
 
 GRID = 16
 BANK_PATH = os.path.join(
@@ -57,42 +57,10 @@ _W_BASE = 0.45
 _CONF_SLOPE = 2.2
 
 
-_grid_bounds_cache: Dict[int, Tuple[np.ndarray, np.ndarray]] = {}
-
-
-def _grid_bounds(n: int) -> Tuple[np.ndarray, np.ndarray]:
-    """Cached (reduceat boundaries, per-cell counts) for one crop extent —
-    crops within a band share a handful of heights/widths, and the arange/
-    diff/maximum chain was ~1/3 of grid_features' cost per crop."""
-    hit = _grid_bounds_cache.get(n)
-    if hit is None:
-        b = (np.arange(GRID) * n) // GRID
-        counts = np.maximum(np.diff(np.concatenate([b, [n]])), 1)
-        hit = _grid_bounds_cache[n] = (b, counts)
-    return hit
-
-
-# keyed by crop (h, w): cleared when full, so a long-lived worker that
-# sees many distinct crop sizes keeps a bounded cache
-_grid_outer_cache: Dict[Tuple[int, int], np.ndarray] = {}
-_GRID_OUTER_CACHE_MAX = 1024
-
-
 def grid_features(crop: np.ndarray) -> np.ndarray:
     """Float HxW coverage crop (0..1, tight bbox) -> flattened GRIDxGRID
-    area-mean vector. Mirrors core/ocr._cell_means at GRID resolution."""
-    h, w = crop.shape
-    rb, rcounts = _grid_bounds(h)
-    cb, ccounts = _grid_bounds(w)
-    summed = np.add.reduceat(
-        np.add.reduceat(crop.astype(np.float64), rb, axis=0), cb, axis=1
-    )
-    counts = _grid_outer_cache.get((h, w))
-    if counts is None:
-        if len(_grid_outer_cache) >= _GRID_OUTER_CACHE_MAX:
-            _grid_outer_cache.clear()
-        counts = _grid_outer_cache[(h, w)] = np.outer(rcounts, ccounts)
-    return (summed / counts).reshape(-1)
+    area-mean vector."""
+    return block_means(crop, GRID).reshape(-1)
 
 
 class GlyphBank:
@@ -112,29 +80,6 @@ class GlyphBank:
         self.desc_rel = np.array([e["d"] for e in t], dtype=np.float64)
         self._sq = (self.grids**2).sum(axis=1)
         self._pairs: Optional[Tuple[np.ndarray, np.ndarray, np.ndarray]] = None
-        self._coarse: Dict[int, Tuple[np.ndarray, np.ndarray]] = {}
-
-    def coarse_index(self, block: int = 4) -> Tuple[np.ndarray, np.ndarray]:
-        """(block x block block-summed template grids with the aspect
-        feature appended as one scaled extra dimension, their squared
-        norms) — the projection behind the orientation prune's
-        Cauchy-Schwarz lower bound (see _coarse_conf_ubs). block=4 gives
-        the cheap 17-dim level, block=2 the tighter 65-dim level. The
-        aspect column is scaled by sqrt(W_ASPECT * block^2 * GRID^2) so
-        the single squared-distance GEMM, divided by block^2 * GRID^2,
-        yields the block-MSE lower bound PLUS the exact aspect penalty
-        in one pass."""
-        hit = self._coarse.get(block)
-        if hit is None:
-            g = GRID // block
-            cg = self.grids.reshape(-1, g, block, g, block).sum(axis=(2, 4))
-            cg = cg.reshape(-1, g * g)
-            s = float(np.sqrt(_W_ASPECT * block * block * GRID * GRID))
-            cg = np.concatenate([cg, (self.aspect * s)[:, None]], axis=1)
-            hit = self._coarse[block] = (
-                np.ascontiguousarray(cg), (cg**2).sum(axis=1)
-            )
-        return hit
 
     def pair_index(self) -> Tuple[np.ndarray, np.ndarray, np.ndarray]:
         """(unique h_rel values, unique desc_rel values, template -> pair
@@ -165,7 +110,6 @@ class GlyphBank:
         sub.desc_rel = self.desc_rel[keep]
         sub._sq = self._sq[keep]
         sub._pairs = None
-        sub._coarse = {}
         return sub
 
 
@@ -1057,189 +1001,42 @@ def _match_confidence(
     return float(np.mean(np.maximum(0.0, 1.0 - _CONF_SLOPE * cand_dist[:, 0])))
 
 
-def _slice_confidence(
-    bank: GlyphBank,
-    feats: np.ndarray,
-    heights: np.ndarray,
-    aspect: np.ndarray,
-    boxes: List[Tuple[int, int, int, int]],
-) -> float:
-    """Exact mean match confidence of one rotation's crop set."""
-    return _match_confidence(
-        bank, _shape_dist(bank, feats, aspect), heights, boxes
-    )
-
-
-def _coarse_conf_ubs(
-    bank: GlyphBank,
-    slices: Sequence[Tuple[np.ndarray, np.ndarray]],
-    block: int = 4,
-) -> List[float]:
-    """PROVABLE upper bound on _slice_confidence of each crop set at
-    ~1/block^2 the GEMM cost, all sets in ONE bank GEMM — small skinny
-    GEMMs pay a fixed BLAS dispatch/thread-sync cost each, and the
-    rotations' crop sets are tiny next to the template matrix.
-
-    Per block B of block x block grid cells, Cauchy-Schwarz gives
-    (sum_B (f_i - t_i))^2 <= block^2 * sum_B (f_i - t_i)^2, so summing
-    over the blocks bounds the full 256-cell MSE from below:
-    dist1 >= [sum_B delta_B^2 / block^2] / GRID^2 + aspect penalty, and
-    the pass-2 penalties are non-negative, so every dist2 >= this
-    bound. Confidence is antitone in distance, hence the mean
-    confidence over the crop set is bounded above by the bound's
-    confidence. block=4 is the cheap 17-dim level; block=2 (65-dim)
-    is 4x the cost but tight enough to separate a 180-degree flip of
-    near-symmetric type (digits) from the upright score. The aspect
-    penalty rides the same GEMM as a scaled extra dimension (see
-    coarse_index), so no separate (m, n) penalty pass is needed."""
-    cb, cb_sq = bank.coarse_index(block)
-    g = GRID // block
-    s = float(np.sqrt(_W_ASPECT * block * block * GRID * GRID))
-    cfs = []
-    for feats, aspect in slices:
-        cf = feats.reshape(-1, g, block, g, block).sum(axis=(2, 4)).reshape(-1, g * g)
-        cfs.append(np.concatenate([cf, (aspect * s)[:, None]], axis=1))
-    cf_all = np.concatenate(cfs, axis=0) if len(cfs) > 1 else cfs[0]
-    d = cf_all @ cb.T
-    d *= -2.0
-    d += (cf_all**2).sum(axis=1)[:, None]
-    d += cb_sq[None, :]
-    d /= float(block * block) * (GRID * GRID)
-    lb = d.min(axis=1)
-    conf = np.maximum(0.0, 1.0 - _CONF_SLOPE * lb)
-    out: List[float] = []
-    off = 0
-    for feats, _ in slices:
-        m = feats.shape[0]
-        out.append(float(np.mean(conf[off : off + m])))
-        off += m
-    return out
-
-
-# a pruned rotation is provably below the upright score by more than the
-# prune margin; the sentinel only needs to lose every argmax comparison
-_PRUNED = -1.0
-_PRUNE_MARGIN = 1e-6
-# level-2 bounds tighten level-4 ones by roughly this much at most on
-# real pages; farther gaps go straight to the exact evaluation
-_L2_GAP = 0.20
-
-
 def orientation_confidences(
     masks: Sequence[np.ndarray], language: str = "rus+eng",
     max_bands: int = 3, max_glyphs: int = 60,
-    prune_vs_first: bool = False,
-    override_floor: Optional[float] = None,
 ) -> List[float]:
     """Mean match confidence of the first few bands of each page
     rotation — the glyph-engine analogue of the scanfont orientation
     score (rotated/flipped real type matches the bank far worse than
     upright type). A rotation with nothing segmentable scores -0.5.
 
-    ``prune_vs_first=True`` (the detect_orientation caller): the first
-    mask — the upright candidate — is scored exactly, then each other
-    rotation is first bounded from above by the cheaper coarse
-    projections (_coarse_conf_ubs, 4x4 then 2x2 blocks) and skipped
-    with the _PRUNED sentinel when the bound proves it cannot reach the
-    first mask's score (the margin absorbs bound-side float rounding,
-    and a true score inside the margin still loses the argmax to the
-    first mask, so the caller's (argmax, scores[argmax], scores[0])
-    decision triple is unchanged). Real upright type scores ~0.5-0.9
-    while its rotations bound well below — the three junk GEMMs vanish.
-
-    ``override_floor`` (the caller's minimum score for the glyph vote
-    to matter, 0.35 in detect_orientation): when EVERY rotation's upper
-    bound lands under the floor, no exact score is needed at all — the
-    caller's `scores[argmax] >= floor` test fails for any argmax — so
-    all rotations return _PRUNED without touching the full bank. This
-    is the junk-everywhere page (ruled tables, photos), which
-    previously paid four exact GEMMs to learn what the bounds prove."""
+    Every scored rotation is exact. Their crops share ONE bank GEMM:
+    the template matrix is the expensive operand, and per-rotation
+    skinny GEMMs each pay a BLAS dispatch/thread-sync cost (measured 2x
+    slower on table pages). Matching then runs per rotation."""
+    out = [-0.5] * len(masks)
     bank = _bank_for_language(language)
     if bank is None:
-        return [-0.5] * len(masks)
-    entries: List[Optional[Tuple]] = []
-    for mask in masks:
+        return out
+    entries = []
+    for i, mask in enumerate(masks):
         crops, boxes = _orient_crops(mask, max_bands, max_glyphs)
-        if len(crops) < 3:
-            entries.append(None)
-        else:
+        if len(crops) >= 3:
             feats, heights, _, aspect = _crop_feats(crops, boxes)
-            entries.append((feats, heights, aspect, boxes))
-    out: List[Optional[float]] = [
-        -0.5 if e is None else None for e in entries
-    ]
-    live = [i for i in range(len(entries)) if entries[i] is not None]
-    ub: Dict[int, float] = {}  # tightest bound computed so far
-    lvl: Dict[int, int] = {}  # block size of that bound (4 coarsest)
-    if override_floor is not None and live:
-        # cheapest level only: when it clears every rotation the save is
-        # ~4 exact GEMMs; when it cannot (most text pages) the overhead
-        # stays one skinny GEMM, and the bounds are reused below
-        thr = override_floor - _PRUNE_MARGIN
-        ubs = _coarse_conf_ubs(
-            bank, [(entries[i][0], entries[i][2]) for i in live], 4
-        )
-        for i, u in zip(live, ubs):
-            ub[i] = u
-            lvl[i] = 4
-        if all(u < thr for u in ubs):
-            for i in live:
-                out[i] = _PRUNED
-            return out  # type: ignore[return-value]
-    if out[0] is None:
-        out[0] = _slice_confidence(bank, *entries[0])
-    pending = [i for i in range(1, len(entries)) if out[i] is None]
-    # bounds are >= 0, so they can only prune against a positive
-    # first-mask score; skip the bound GEMMs entirely otherwise
-    if prune_vs_first and pending and out[0] > _PRUNE_MARGIN:
-        s_thr = out[0] - _PRUNE_MARGIN
-        # one batched bound GEMM per level, coarsest first, reusing any
-        # bounds the override-floor phase already computed. The 4x-
-        # costlier level 2 runs only when level 4 came close (within
-        # _L2_GAP of the threshold) — a pure speed dispatch: skipping a
-        # level can only turn a prune into an exact score, never the
-        # reverse, so the returned decision triple is unchanged.
-        for block in (4, 2):
-            nxt: List[int] = []
-            todo: List[int] = []
-            for i in pending:
-                u = ub.get(i)
-                if u is not None and u < s_thr:
-                    out[i] = _PRUNED
-                elif lvl.get(i, 8) > block and (
-                    block == 4 or u is None or u - s_thr <= _L2_GAP
-                ):
-                    todo.append(i)
-                else:
-                    nxt.append(i)
-            if todo:
-                ubs = _coarse_conf_ubs(
-                    bank, [(entries[i][0], entries[i][2]) for i in todo], block
-                )
-                for i, u in zip(todo, ubs):
-                    ub[i] = u
-                    lvl[i] = block
-                    if u < s_thr:
-                        out[i] = _PRUNED
-                    else:
-                        nxt.append(i)
-            pending = nxt
-    if pending:
-        # all surviving slices share ONE bank GEMM (the template matrix
-        # is the expensive operand; per-slice skinny GEMMs each pay a
-        # BLAS dispatch/thread-sync cost), then match per slice
-        feats_u = np.concatenate([entries[i][0] for i in pending], axis=0)
-        aspect_u = np.concatenate([entries[i][2] for i in pending], axis=0)
-        dist1_u = _shape_dist(bank, feats_u, aspect_u)
-        off = 0
-        for i in pending:
-            feats_i, heights_i, _aspect_i, boxes_i = entries[i]
-            m = feats_i.shape[0]
-            out[i] = _match_confidence(
-                bank, dist1_u[off : off + m], heights_i, boxes_i
-            )
-            off += m
-    return out  # type: ignore[return-value]
+            entries.append((i, feats, heights, aspect, boxes))
+    if not entries:
+        return out
+    dist1 = _shape_dist(
+        bank,
+        np.concatenate([e[1] for e in entries], axis=0),
+        np.concatenate([e[3] for e in entries], axis=0),
+    )
+    off = 0
+    for i, feats, heights, _aspect, boxes in entries:
+        m = feats.shape[0]
+        out[i] = _match_confidence(bank, dist1[off : off + m], heights, boxes)
+        off += m
+    return out
 
 
 def recognize_block(

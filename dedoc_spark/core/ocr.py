@@ -213,22 +213,43 @@ def _runs(profile: np.ndarray, min_gap: int = 1) -> List[Tuple[int, int]]:
     return list(zip(starts.tolist(), ends.tolist()))
 
 
-_cell_bounds_cache: dict = {}
-# keyed by crop (h, w): cleared when full (see glyph_ocr._grid_outer_cache)
-_cell_outer_cache: dict = {}
-_CELL_OUTER_CACHE_MAX = 1024
+# keyed by (cells, extent) and (cells, h, w): glyph crops within a band
+# repeat a handful of sizes, and the arange/diff/maximum chain dominated
+# small-crop block means. Each is cleared when full, so a long-lived
+# worker that sees many distinct crop sizes keeps them bounded.
+_block_bounds_cache: Dict[Tuple[int, int], Tuple[np.ndarray, np.ndarray]] = {}
+_block_outer_cache: Dict[Tuple[int, int, int], np.ndarray] = {}
+_BLOCK_CACHE_MAX = 1024
 
 
-def _cell_bounds(n: int):
-    """Cached (reduceat boundaries, per-cell counts) for one crop
-    extent — glyph crops within a band repeat a handful of sizes, and
-    the arange/diff/maximum chain dominated small-crop block-means."""
-    hit = _cell_bounds_cache.get(n)
+def _block_bounds(cells: int, n: int) -> Tuple[np.ndarray, np.ndarray]:
+    """(reduceat boundaries, per-cell counts) splitting ``n`` rows or
+    columns into ``cells`` blocks."""
+    hit = _block_bounds_cache.get((cells, n))
     if hit is None:
-        b = (np.arange(GLYPH) * n) // GLYPH
+        if len(_block_bounds_cache) >= _BLOCK_CACHE_MAX:
+            _block_bounds_cache.clear()
+        b = (np.arange(cells) * n) // cells
+        # crops shorter than ``cells`` repeat reduceat boundaries (count 0
+        # but value = the single row at that index): clamp to 1 row/col
         counts = np.maximum(np.diff(np.concatenate([b, [n]])), 1)
-        hit = _cell_bounds_cache[n] = (b, counts)
+        hit = _block_bounds_cache[(cells, n)] = (b, counts)
     return hit
+
+
+def block_means(crop: np.ndarray, cells: int) -> np.ndarray:
+    """Area-mean a crop of any size down to a ``cells`` x ``cells`` grid
+    (the scanfont matcher uses GLYPH, the glyph engine its 16 grid)."""
+    h, w = crop.shape
+    rb, rcounts = _block_bounds(cells, h)
+    cb, ccounts = _block_bounds(cells, w)
+    summed = np.add.reduceat(np.add.reduceat(crop.astype(np.float64), rb, axis=0), cb, axis=1)
+    counts = _block_outer_cache.get((cells, h, w))
+    if counts is None:
+        if len(_block_outer_cache) >= _BLOCK_CACHE_MAX:
+            _block_outer_cache.clear()
+        counts = _block_outer_cache[(cells, h, w)] = np.outer(rcounts, ccounts)
+    return summed / counts
 
 
 def _cell_means(crop: np.ndarray) -> np.ndarray:
@@ -237,22 +258,12 @@ def _cell_means(crop: np.ndarray) -> np.ndarray:
     h, w = crop.shape
     if h % GLYPH == 0 and w % GLYPH == 0:
         # exact integer scale (the common case for clean scans): a
-        # reshape-mean is ~3x cheaper than the double reduceat below
+        # reshape-mean is ~3x cheaper than block_means' double reduceat
         return (
             crop.reshape(GLYPH, h // GLYPH, GLYPH, w // GLYPH)
             .mean(axis=(1, 3))
         )
-    # crops shorter than GLYPH rows repeat reduceat boundaries (count 0 but
-    # value = the single row at that index): clamp to 1 row/col
-    rb, rcounts = _cell_bounds(h)
-    cb, ccounts = _cell_bounds(w)
-    summed = np.add.reduceat(np.add.reduceat(crop.astype(np.float64), rb, axis=0), cb, axis=1)
-    counts = _cell_outer_cache.get((h, w))
-    if counts is None:
-        if len(_cell_outer_cache) >= _CELL_OUTER_CACHE_MAX:
-            _cell_outer_cache.clear()
-        counts = _cell_outer_cache[(h, w)] = np.outer(rcounts, ccounts)
-    return summed / counts
+    return block_means(crop, GLYPH)
 
 
 def _match_glyphs(bitmaps: np.ndarray, language: str) -> Tuple[str, np.ndarray]:
@@ -412,22 +423,11 @@ def detect_orientation(
             scores = glyph_ocr.orientation_confidences(
                 [np.ascontiguousarray(np.rot90(mask, k)) for k in range(4)],
                 language,
-                prune_vs_first=True,
-                # the 0.35 readability floor below: rotations that
-                # provably cannot reach it need no exact score
-                override_floor=0.35,
             )
             g = int(np.argmax(scores))
-            # the bank must actually READ the winner before its vote
-            # replaces the scanfont one: pages the bank cannot read
-            # (the procedural fixture font, photos, ruled forms) score
-            # junk (<0.35 measured: fixture table page maxes 0.28 while
-            # a real 300-dpi fax reads 0.47 and FreeType type 0.84) at
-            # EVERY rotation — there the scanfont argmax stands (a
-            # fixture table page polluted by rules still peaks upright).
-            # A nonzero override additionally needs the decisive margin
-            # over upright.
-            if scores[g] >= 0.35 and (g == 0 or scores[g] >= scores[0] + 0.08):
+            if scores[g] >= _GLYPH_VOTE_FLOOR and (
+                g == 0 or scores[g] >= scores[0] + _GLYPH_VOTE_MARGIN
+            ):
                 best_k = g
     return best_k * 90
 
@@ -504,6 +504,14 @@ def rotate_small(image: np.ndarray, deg: float, fill: int = 255) -> np.ndarray:
 # anything below this means the page is NOT that font (a real scan) and
 # the real-font glyph engine should read it instead
 _SCANFONT_CONF_FLOOR = 0.92
+# the glyph engine's orientation vote replaces the scanfont one only when
+# the bank actually READS the winner: pages it cannot read (the
+# procedural fixture font, photos, ruled forms) score junk at EVERY
+# rotation (measured: a fixture table page maxes 0.28, a real 300-dpi
+# fax reads 0.47 and FreeType type 0.84), and there the scanfont argmax
+# stands. A nonzero override also needs a decisive margin over upright.
+_GLYPH_VOTE_FLOOR = 0.35
+_GLYPH_VOTE_MARGIN = 0.08
 
 
 def choose_engine(mask: np.ndarray, language: str, engine: str = "auto") -> str:
@@ -1197,7 +1205,7 @@ def extract_pdf_page_images(pdf: PdfFile) -> List[List[np.ndarray]]:
     out: List[List[np.ndarray]] = []
     for pid in pdf.pages:
         imgs: List[np.ndarray] = []
-        for name, obj_id in sorted(_page_xobjects(objects[pid], objects).items()):
+        for name, obj_id in sorted(_page_xobjects(objects, pid).items()):
             arr = _decode_image_object(objects.get(obj_id, b""), objects)
             if arr is not None:
                 imgs.append(arr)

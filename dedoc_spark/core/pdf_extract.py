@@ -33,7 +33,7 @@ from collections import Counter
 from typing import Dict, List, Optional, Tuple
 
 from dedoc_spark.core.model import Annotation, HierarchyLevel, Line, select_pages
-from dedoc_spark.core.pdf_objects import PdfFile, decode_stream, dict_value, refs
+from dedoc_spark.core.pdf_objects import PdfFile, decode_stream, dict_value, inherited, refs
 
 class _FontInfo:
     """Resolved font: base name (bold detection), optional ToUnicode map,
@@ -91,37 +91,12 @@ def _parse_tounicode(data: bytes) -> Dict[int, str]:
     return cmap
 
 
-def _page_fonts(page_obj: bytes, objects: Dict[int, bytes]) -> Dict[str, _FontInfo]:
-    """Font resources for a page: resolves indirect /Resources and /Font
-    refs and walks /Parent inheritance (pages-tree nodes may own the
-    resources). Each entry resolves BaseFont, Type0/Identity-H 2-byte
-    coding, and the ToUnicode CMap when present."""
+def _page_fonts(objects: Dict[int, bytes], pid: int) -> Dict[str, _FontInfo]:
+    """Font resources of page ``pid`` (inherited, see pdf_objects.inherited).
+    Each entry resolves BaseFont, Type0/Identity-H 2-byte coding, and the
+    ToUnicode CMap when present."""
     fonts: Dict[str, _FontInfo] = {}
-    src = page_obj
-    region = None
-    for _ in range(6):  # page → parents, bounded
-        m = re.search(rb"/Font\s*<<(.*?)>>", src, re.S)
-        if m:
-            region = m.group(1)
-            break
-        rres = re.search(rb"/Resources\s+(\d+)\s+\d+\s+R", src)
-        if rres:
-            res_obj = objects.get(int(rres.group(1)), b"")
-            m = re.search(rb"/Font\s*<<(.*?)>>", res_obj, re.S)
-            if m:
-                region = m.group(1)
-                break
-            rf = re.search(rb"/Font\s+(\d+)\s+\d+\s+R", res_obj)
-            if rf:
-                region = objects.get(int(rf.group(1)), b"")
-                break
-        pm = re.search(rb"/Parent\s+(\d+)\s+\d+\s+R", src)
-        if not pm:
-            break
-        src = objects.get(int(pm.group(1)), b"")
-    if region is None:
-        return fonts
-    for fm in re.finditer(rb"/(\w+)\s+(\d+)\s+\d+\s+R", region):
+    for fm in re.finditer(rb"/(\w+)\s+(\d+)\s+\d+\s+R", inherited(objects, pid, b"/Font") or b""):
         font_obj = objects.get(int(fm.group(2)), b"")
         base_m = re.search(rb"/BaseFont\s*/([^\s/<>\[\]]+)", font_obj)
         base = base_m.group(1).decode("latin-1") if base_m else ""
@@ -399,64 +374,30 @@ def _extract_page_shows(
     return shows
 
 
-def _page_xobjects(page_obj: bytes, objects: Dict[int, bytes]) -> Dict[str, int]:
-    """Image XObject resources of a page: {name: object id} for entries
-    whose object is /Subtype /Image (Form XObjects are ignored — their
-    nested content streams are out of the txt-layer subset)."""
+def _page_xobjects(objects: Dict[int, bytes], pid: int) -> Dict[str, int]:
+    """Image XObject resources of page ``pid`` (inherited): {name: object
+    id} for entries whose object is /Subtype /Image (Form XObjects are
+    ignored — their nested content streams are out of the txt-layer
+    subset)."""
     out: Dict[str, int] = {}
-    src = page_obj
-    region = None
-    def xobject_region(scope: bytes) -> Optional[bytes]:
-        m = re.search(rb"/XObject\s*<<(.*?)>>", scope, re.S)
-        if m:
-            return m.group(1)
-        # /XObject as an indirect reference to the name->image dict
-        m = re.search(rb"/XObject\s+(\d+)\s+\d+\s+R", scope)
-        if m:
-            ref = objects.get(int(m.group(1)), b"")
-            dm = re.search(rb"<<(.*?)>>", ref, re.S)
-            if dm:
-                return dm.group(1)
-        return None
-
-    for _ in range(6):
-        region = xobject_region(src)
-        if region is not None:
-            break
-        rres = re.search(rb"/Resources\s+(\d+)\s+\d+\s+R", src)
-        if rres:
-            region = xobject_region(objects.get(int(rres.group(1)), b""))
-            if region is not None:
-                break
-        pm = re.search(rb"/Parent\s+(\d+)\s+\d+\s+R", src)
-        if not pm:
-            break
-        src = objects.get(int(pm.group(1)), b"")
-    if region is None:
-        return out
-    for xm in re.finditer(rb"/(\w+)\s+(\d+)\s+\d+\s+R", region):
+    for xm in re.finditer(rb"/(\w+)\s+(\d+)\s+\d+\s+R", inherited(objects, pid, b"/XObject") or b""):
         oid = int(xm.group(2))
         if b"/Image" in objects.get(oid, b""):
             out[xm.group(1).decode("latin-1")] = oid
     return out
 
 
-def _page_media(page_obj: bytes, objects: Dict[int, bytes]) -> Tuple[float, float]:
-    """Page (width, height) from /MediaBox, walking /Parent inheritance;
-    US-Letter (612×792) when absent."""
-    src = page_obj
-    for _ in range(6):
-        m = re.search(
-            rb"/MediaBox\s*\[\s*([-\d.]+)\s+([-\d.]+)\s+([-\d.]+)\s+([-\d.]+)\s*\]", src
-        )
-        if m:
-            x0, y0, x1, y1 = (float(m.group(i)) for i in range(1, 5))
-            return (x1 - x0, y1 - y0)
-        pm = re.search(rb"/Parent\s+(\d+)\s+\d+\s+R", src)
-        if not pm:
-            break
-        src = objects.get(int(pm.group(1)), b"")
-    return (612.0, 792.0)
+def _page_media(objects: Dict[int, bytes], pid: int) -> Tuple[float, float]:
+    """Page (width, height) from the inherited /MediaBox; US-Letter
+    (612×792) when absent."""
+    m = re.search(
+        rb"\[\s*([-\d.]+)\s+([-\d.]+)\s+([-\d.]+)\s+([-\d.]+)\s*\]",
+        inherited(objects, pid, b"/MediaBox") or b"",
+    )
+    if not m:
+        return (612.0, 792.0)
+    x0, y0, x1, y1 = (float(m.group(i)) for i in range(1, 5))
+    return (x1 - x0, y1 - y0)
 
 
 def extract_pdf_pages(pdf: PdfFile) -> List[List[Tuple[str, bool]]]:
@@ -513,9 +454,9 @@ def extract_pdf_pages_layout(
     pages: List[Dict] = []
     for pid in pdf.pages:
         page_obj = objects[pid]
-        fonts = _page_fonts(page_obj, objects)
-        xobjects = _page_xobjects(page_obj, objects)
-        width, height = _page_media(page_obj, objects)
+        fonts = _page_fonts(objects, pid)
+        xobjects = _page_xobjects(objects, pid)
+        width, height = _page_media(objects, pid)
         contents = dict_value(page_obj, b"/Contents") or b""
         shows: List[Tuple[float, float, str, str, float, float]] = []
         images_dev: List[Tuple[str, Tuple[float, float, float, float]]] = []

@@ -14,7 +14,8 @@ The module also owns:
     JBIG2Globals and image objects all go through it; an image codec
     (DCT, CCITT, JBIG2) ends the cascade and is left to core/ocr.
   - the page walk: /Catalog → /Pages in /Kids order, falling back to the
-    id-ordered /Page objects.
+    id-ordered /Page objects; and the inherited page entries (resources,
+    /MediaBox) up the /Parent chain (``inherited``).
   - the trailer-governed reference lookup (``trailer_ref``) and the cheap
     single-object read (``read_object``) that metadata uses for /Info.
 
@@ -284,6 +285,42 @@ def _page_ids(objects: Dict[int, bytes]) -> List[int]:
             oid for oid, obj in objects.items() if b"/Type" in obj and b"/Page" in obj and b"/Pages" not in obj
         )
     return ids
+
+
+_RESOURCES_REF_RE = re.compile(rb"/Resources\s+(\d+)\s+\d+\s+R")
+_PARENT_RE = re.compile(rb"/Parent\s+(\d+)\s+\d+\s+R")
+# the page and at most five ancestors
+_INHERIT_DEPTH = 6
+
+
+def inherited(objects: Dict[int, bytes], pid: int, key: bytes) -> Optional[bytes]:
+    """Page ``pid``'s value for an inheritable ``key`` (b"/Font",
+    b"/XObject", b"/MediaBox"): its own entry, else the nearest /Parent's.
+    Each node is searched directly (an inline /Resources included), then
+    through an indirect ``/Resources N 0 R``. The value is the body of an
+    inline ``<< … >>``, a ``[ … ]`` array, or, for ``key N 0 R``, the
+    referenced object's body. The walk is bounded, and a node already on
+    the path is not entered again (a /Parent cycle)."""
+    value_re = re.compile(re.escape(key) + rb"\s*(?:<<(.*?)>>|(\[[^\]]*\])|(\d+)\s+\d+\s+R)", re.S)
+    path = []
+    oid: Optional[int] = pid
+    while oid is not None and oid not in path and len(path) < _INHERIT_DEPTH:
+        path.append(oid)
+        node = objects.get(oid, b"")
+        scopes = [node]
+        rm = _RESOURCES_REF_RE.search(node)
+        if rm:
+            scopes.append(objects.get(int(rm.group(1)), b""))
+        for scope in scopes:
+            m = value_re.search(scope)
+            if m:
+                inline, array, ref = m.groups()
+                if ref is not None:
+                    return objects.get(int(ref), b"")
+                return inline if inline is not None else array
+        pm = _PARENT_RE.search(node)
+        oid = int(pm.group(1)) if pm else None
+    return None
 
 
 # ---------------------------------------------------------------------------

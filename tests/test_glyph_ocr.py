@@ -240,19 +240,30 @@ def test_real_fax_scan_reads_anchor_lines(reference_file):
     assert "ФСТЭК России" in text
 
 
+_ROTATED_LINES = ["Rotated real type page", "with two text lines here"]
+# digits are near-symmetric under a 180-degree flip, and 16 px type is
+# small: both bring a rotation's score close to the upright one
+_MIXED_LINES = ["1234 5678 9012", "The quick brown", "Пример текста"]
+
+
 @needs_ft
-@pytest.mark.parametrize("k", [1, 2, 3])
-def test_orientation_real_type(k):
+@pytest.mark.parametrize(
+    "face, px, lines, k",
+    [pytest.param("serif", 32, _ROTATED_LINES, k, id=str(k)) for k in (1, 2, 3)]
+    + [
+        pytest.param(face, px, _MIXED_LINES, k, id=f"{face}{px}-{k}")
+        for face, px in (("sans", 40), ("mono", 16))
+        for k in range(4)
+    ],
+)
+def test_orientation_real_type(face, px, lines, k):
     """Rotated REAL-type pages are detected via the glyph-engine
     re-score (the scanfont orientation scorer is noise on real fonts);
     a decisive-margin rule keeps unreadable pages unrotated."""
     from dedoc_spark.core.ftrender import render_text_page
     from dedoc_spark.core.ocr import detect_orientation
 
-    page = render_text_page(
-        ["Rotated real type page", "with two text lines here"],
-        face="serif", px=32,
-    )
+    page = render_text_page(lines, face=face, px=px)
     rgb = np.repeat(page[:, :, None], 3, axis=2)
     rot = np.ascontiguousarray(np.rot90(rgb, -k))
     assert detect_orientation(rot) == k * 90
@@ -375,17 +386,3 @@ def test_real_type_ruled_table_cells():
         for row in json.loads(d["tables_json"])[0]["cells"]
     ]
     assert got == cells
-
-
-def test_grid_outer_cache_stays_bounded():
-    """The (h, w)-keyed count cache is cleared when full, so a long-lived
-    worker seeing many crop sizes keeps it at or under its cap; features
-    are the same whether or not the entry was cached."""
-    glyph_ocr._grid_outer_cache.clear()
-    crop = np.random.default_rng(3).random((37, 23))
-    want = glyph_ocr.grid_features(crop)
-    for h in range(1, 70):
-        for w in range(1, 40):
-            glyph_ocr.grid_features(np.ones((h, w)))
-            assert len(glyph_ocr._grid_outer_cache) <= glyph_ocr._GRID_OUTER_CACHE_MAX
-    assert np.array_equal(glyph_ocr.grid_features(crop), want)

@@ -417,17 +417,25 @@ def test_spark_identical_to_plain_call():
     assert a == b
 
 
-def test_cell_outer_cache_stays_bounded():
-    """Same bound as glyph_ocr's grid cache, for the scanfont block means
-    of crops whose size is not a multiple of the glyph grid."""
-    ocr._cell_outer_cache.clear()
+@pytest.mark.parametrize("cells", [ocr.GLYPH, 16])
+def test_block_cache_stays_bounded(cells):
+    """The bounds and (h, w) count caches behind block_means (the
+    scanfont GLYPH grid and the glyph engine's 16 grid) are cleared when
+    full, so a long-lived worker seeing many crop sizes keeps each at or
+    under its cap; means are the same whether or not the entry was
+    cached."""
+    ocr._block_bounds_cache.clear()
+    ocr._block_outer_cache.clear()
     crop = np.random.default_rng(5).random((37, 23))
-    want = ocr._cell_means(crop)
+    want = ocr.block_means(crop, cells)
     for h in range(1, 70):
         for w in range(1, 40):
-            ocr._cell_means(np.ones((h, w)))
-            assert len(ocr._cell_outer_cache) <= ocr._CELL_OUTER_CACHE_MAX
-    assert np.array_equal(ocr._cell_means(crop), want)
+            ocr.block_means(np.ones((h, w)), cells)
+            assert len(ocr._block_outer_cache) <= ocr._BLOCK_CACHE_MAX
+    for n in range(1, 2 * ocr._BLOCK_CACHE_MAX):
+        ocr.block_means(np.ones((1, n)), cells)
+        assert len(ocr._block_bounds_cache) <= ocr._BLOCK_CACHE_MAX
+    assert np.array_equal(ocr.block_means(crop, cells), want)
 
 
 def _q67_table_page(source: str):

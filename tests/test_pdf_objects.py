@@ -135,6 +135,45 @@ def test_unknown_content_filter_reads_nothing():
     assert extract_pdf_pages(parse_pdf(pdf)) == [[]]
 
 
+@pytest.mark.parametrize(
+    "page_resources, pages_resources",
+    [
+        (b"/Resources << /Font << /F1 4 0 R >> >>", b""),
+        (b"/Resources << /Font 6 0 R >>", b""),
+        (b"/Resources 7 0 R", b""),
+        (b"", b"/Resources << /Font 6 0 R >>"),
+    ],
+    ids=["inline", "indirect_font", "indirect_resources", "inherited_indirect_font"],
+)
+def test_page_fonts_resolve_in_every_resource_shape(page_resources, pages_resources):
+    """The bold font is found whether /Font is inline, an indirect
+    dictionary inside inline /Resources, inside an indirect /Resources, or
+    inherited from the /Pages node."""
+    pdf = _pdf(
+        {
+            1: b"<< /Type /Catalog /Pages 2 0 R >>",
+            2: b"<< /Type /Pages /Kids [3 0 R] /Count 1 " + pages_resources + b" >>",
+            3: b"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] " + page_resources + b" /Contents 5 0 R >>",
+            4: b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica-Bold >>",
+            5: _stream("", b"BT /F1 12 Tf 72 720 Td (Bold line) Tj ET"),
+            6: b"<< /F1 4 0 R >>",
+            7: b"<< /Font 6 0 R >>",
+        },
+        b"/Size 8 /Root 1 0 R",
+    )
+    assert extract_pdf_pages(parse_pdf(pdf)) == [[("Bold line", True)]]
+
+
+def test_inherited_lookup_stops_on_a_parent_cycle():
+    objects = {
+        2: b"<< /Type /Pages /Parent 8 0 R >>",
+        3: b"<< /Type /Page /Parent 2 0 R >>",
+        8: b"<< /Type /Pages /Parent 2 0 R /MediaBox [0 0 100 200] >>",
+    }
+    assert pdf_objects.inherited(objects, 3, b"/MediaBox") == b"[0 0 100 200]"
+    assert pdf_objects.inherited(objects, 3, b"/Font") is None
+
+
 def test_info_lookup_uses_trailer_reference_and_exact_id():
     """``2 0 obj`` is also a suffix of ``12 0 obj``; object 12 comes first
     and a stray /Info reference precedes the trailer's."""

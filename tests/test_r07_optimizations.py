@@ -286,67 +286,3 @@ def test_pass2_rows_unique_pair_gather_bit_identical():
         a = direct(dist1, hs, bottoms, S, base)
         b = g._pass2_rows(bank, dist1, hs, bottoms, S, base)
         assert np.array_equal(a, b)
-
-
-# --- orientation prune: bound validity and decision equivalence ---------------
-
-
-def test_orientation_prune_decisions_match_exact():
-    """The pruned orientation path must reproduce detect_orientation's
-    decision triple (argmax, scores[argmax], scores[0]) exactly, and
-    every coarse bound must genuinely upper-bound the exact score."""
-    from dedoc_spark.core import glyph_ocr as g
-    from dedoc_spark.core import ocr
-    from dedoc_spark.core.ftrender import render_text_page
-    from dedoc_spark.core.scanfont import render_scan_page, render_table_page
-
-    if not g.bank_available():
-        pytest.skip("glyph bank not built")
-
-    def decision(scores):
-        gi = int(np.argmax(scores))
-        fires = scores[gi] >= 0.35 and (gi == 0 or scores[gi] >= scores[0] + 0.08)
-        return gi if fires else None
-
-    masks = []
-    for px, face in ((40, "sans"), (16, "mono")):
-        r = render_text_page(
-            ["1234 5678 9012", "The quick brown", "Пример текста"],
-            face=face, px=px,
-        )
-        for rot in range(4):
-            masks.append(np.rot90(ocr.ink_mask(r), rot))
-    masks.append(ocr.ink_mask(render_scan_page(["Doc 5 scan"], scale=2)))
-    masks.append(
-        ocr.ink_mask(
-            render_table_page(
-                [["id", "5"], ["s3", "ru"]], scale=2,
-                body_lines=["page three body"],
-            )
-        )
-    )
-    bank = g._bank_for_language("rus+eng")
-    for m in masks:
-        rots = [np.ascontiguousarray(np.rot90(m, k)) for k in range(4)]
-        exact = g.orientation_confidences(rots, "rus+eng")
-        pruned = g.orientation_confidences(
-            rots, "rus+eng", prune_vs_first=True, override_floor=0.35
-        )
-        assert decision(exact) == decision(pruned)
-        # unpruned entries carry the exact score; pruned entries must be
-        # provably below the upright score or the floor
-        for k in range(4):
-            if pruned[k] == g._PRUNED:
-                assert exact[k] < max(0.35, exact[0])
-            else:
-                assert abs(pruned[k] - exact[k]) < 1e-9
-        # bound validity on the raw crop sets
-        for k in range(4):
-            crops, boxes = g._orient_crops(rots[k], 3, 60)
-            if len(crops) < 3:
-                continue
-            feats, heights, _, aspect = g._crop_feats(crops, boxes)
-            sc = g._slice_confidence(bank, feats, heights, aspect, boxes)
-            for block in (4, 2):
-                ub = g._coarse_conf_ubs(bank, [(feats, aspect)], block)[0]
-                assert ub >= sc - 1e-9
