@@ -519,23 +519,10 @@ def _write_run(w: _BitWriter, run: int, white: bool) -> None:
     w.write(*table[run])
 
 
-def _transitions(row: np.ndarray) -> List[int]:
-    """Changing-element positions of a 0/255 row (white start)."""
-    black = row == 0
-    d = np.diff(np.concatenate([[False], black, [False]]).astype(np.int8))
-    starts = np.nonzero(d == 1)[0]
-    ends = np.nonzero(d == -1)[0]
-    out: List[int] = []
-    for s, e in zip(starts.tolist(), ends.tolist()):
-        out.append(s)
-        out.append(e)
-    return out
-
-
 def _all_transitions(img: np.ndarray) -> List[List[int]]:
-    """Per-row changing elements for a whole 0/255 image in ONE numpy
-    pass (the per-row diff/nonzero chain cost ~20 us of numpy-call
-    overhead per row). Identical values to _transitions row by row."""
+    """Per-row changing-element positions (white start) of a 0/255
+    image, in one numpy pass over the whole image (a per-row diff costs
+    ~20 us of numpy-call overhead per row)."""
     h, _ = img.shape
     black = img == 0
     padded = np.zeros((h, black.shape[1] + 2), dtype=np.int8)

@@ -230,13 +230,15 @@ def _topk_stable_row(row: np.ndarray, k: int) -> Tuple[np.ndarray, np.ndarray]:
     return cand[o], vals[o]
 
 
-def _match_band(
+def _match_from_dist1(
     bank: GlyphBank,
-    crops: Sequence[np.ndarray],
-    boxes: Sequence[Tuple[int, int, int, int]],
-    topk: int = 5,
+    dist1: np.ndarray,
+    heights: np.ndarray,
+    bottoms: np.ndarray,
+    topk: int,
 ) -> Tuple[np.ndarray, np.ndarray, float]:
-    """Two-pass joint match of one band's glyphs.
+    """Two-pass joint match of one band's glyphs from their pass-1
+    shape distances ``dist1`` (_shape_dist over _crop_feats).
 
     Returns (cand_idx (m, topk) template indices best-first,
     cand_dist (m, topk), band em scale S). Ties (pixel-twin templates at
@@ -257,20 +259,6 @@ def _match_band(
     bank — identical maths, just evaluated over all templates. The
     second iteration is skipped when the first left (S, base) exactly
     unchanged: the same inputs would reproduce the same distances."""
-    feats, heights, _, aspect = _crop_feats(crops, boxes)
-    bottoms = np.array([y1 for _, _, _, y1 in boxes], dtype=np.float64)
-
-    dist1 = _shape_dist(bank, feats, aspect)
-    return _match_from_dist1(bank, dist1, heights, bottoms, topk)
-
-
-def _match_from_dist1(
-    bank: GlyphBank,
-    dist1: np.ndarray,
-    heights: np.ndarray,
-    bottoms: np.ndarray,
-    topk: int,
-) -> Tuple[np.ndarray, np.ndarray, float]:
     m, n = dist1.shape
     rows = np.arange(m)
     k = min(topk, n)
@@ -458,13 +446,6 @@ def _refine_runs(
     columns [x0, x1) — produced by the SEAM fallback for pairs that
     overlap horizontally (the serif f-hood reaches over 'o', so no
     straight column separates them; a min-ink connected seam does)."""
-    # the whole-run scores feed only the split logic (width-gated) and
-    # its noise floor: a band whose runs are ALL too narrow to try
-    # splitting — every clean proportional-type line — never reads
-    # them, so skip the bank GEMM outright
-    min_try_w = max(6, _SPLIT_TRY_W * S)
-    if all(b - a < min_try_w for a, b in col_runs):
-        return [(a, b, None) for a, b in col_runs]
     whole_d, _ = _seg_dists(band, col_runs, bank)
     # page-quality noise floor: on a degraded scan EVERY distance is
     # inflated by a shared offset, which double-counts in a sum-cost

@@ -470,16 +470,9 @@ def encode_generic(
     """Fixture-side generic-region MQ encoder (no TPGDON), the exact
     mirror of decode_generic — round-trip tested. With an external
     ``encoder`` the bits join its stream (symbol-dictionary use) and
-    None is returned; standalone, the flushed bytes come back.
-
-    Unlike the decoder, the encoder knows every pixel up front, so the
-    per-pixel context values are computed for the WHOLE region with a
-    handful of shifted-array adds (every JBIG2 template is causal:
-    dy < 0, or dy == 0 and dx < 0), and the remaining Python loop runs
-    only the sequential MQ state machine, inlined — the per-pixel
-    method call plus sliding-window bookkeeping was ~4x the cost of the
-    arithmetic itself. Emitted bytes are identical: same context
-    sequence, same T.88 E.2 operations."""
+    None is returned; standalone, the flushed bytes come back. Every
+    template is causal, so each pixel's context comes from a few
+    shifted-array adds over the whole region."""
     if template not in _TEMPLATES:
         raise Jbig2Error(f"jbig2: bad template {template}")
     at = list(at) if at else list(_NOMINAL_AT[template])
@@ -494,62 +487,6 @@ def encode_generic(
         if dy > 0 or (dy == 0 and dx >= 0):
             raise Jbig2Error(f"jbig2: non-causal template pixel {(dy, dx)}")
 
-    a = enc.a
-    c = enc.c
-    ct = enc.ct
-    out = enc.out
-    qe_t, nmps_t, nlps_t, sw_t = _QE, _NMPS, _NLPS, _SWITCH
-
-    def _symbol(cx: int, d: int) -> None:
-        nonlocal a, c, ct
-        i = icx[cx]
-        qe = qe_t[i]
-        if d == mps[cx]:  # CODEMPS
-            a -= qe
-            if a & 0x8000:
-                c += qe
-                return
-            if a < qe:
-                a = qe
-            else:
-                c += qe
-            icx[cx] = nmps_t[i]
-        else:  # CODELPS
-            a -= qe
-            if a < qe:
-                c += qe
-            else:
-                a = qe
-            if sw_t[i]:
-                mps[cx] ^= 1
-            icx[cx] = nlps_t[i]
-        while True:  # RENORME
-            if ct == 0:  # BYTEOUT
-                if out[-1] == 0xFF:
-                    out.append((c >> 20) & 0xFF)
-                    c &= 0xFFFFF
-                    ct = 7
-                elif c < 0x8000000:
-                    out.append((c >> 19) & 0xFF)
-                    c &= 0x7FFFF
-                    ct = 8
-                else:
-                    out[-1] += 1
-                    if out[-1] == 0xFF:
-                        c &= 0x7FFFFFF
-                        out.append((c >> 20) & 0xFF)
-                        c &= 0xFFFFF
-                        ct = 7
-                    else:
-                        out.append((c >> 19) & 0xFF)
-                        c &= 0x7FFFF
-                        ct = 8
-            a = (a << 1) & 0xFFFF
-            c = (c << 1) & 0xFFFFFFF
-            ct -= 1
-            if a & 0x8000:
-                break
-
     bits = (np.asarray(bitmap) != 0).astype(np.uint32)
     pad_top = max(-dy for dy, _ in pos)
     pad_l = max(0, max(-dx for _, dx in pos))
@@ -561,36 +498,8 @@ def encode_generic(
         shift = np.uint32(nbits - 1 - k)
         ctx += pb[pad_top + dy : pad_top + dy + h, pad_l + dx : pad_l + dx + w] << shift
 
-    # inlined T.88 E.2 over the precomputed (context, bit) stream. The
-    # stream is mostly (ctx=0, bit=0) — blank paper — and a run of k MPS
-    # symbols at one context with no renormalization is exactly
-    # a -= k*qe, c += k*qe (no state-table traffic), so only the
-    # "events" (ink or an inked context neighborhood) and the
-    # renormalization boundaries run the full per-symbol body.
-    flat_ctx = ctx.ravel()
-    flat_bits = bits.ravel()
-    n_px = flat_ctx.shape[0]
-    events = np.nonzero((flat_ctx | flat_bits) != 0)[0].tolist()
-    idx = 0
-    for eidx in events + [n_px]:
-        gap = eidx - idx
-        while gap > 0:  # blank stretch: all (ctx=0, bit=0)
-            if mps[0] == 0:
-                qe = qe_t[icx[0]]
-                k = (a - 0x8000) // qe
-                if k > gap:
-                    k = gap
-                if k > 0:
-                    a -= k * qe
-                    c += k * qe
-                    gap -= k
-                    continue
-            _symbol(0, 0)  # renormalization step (or flipped-MPS state)
-            gap -= 1
-        if eidx < n_px:
-            _symbol(int(flat_ctx[eidx]), int(flat_bits[eidx]))
-        idx = eidx + 1
-    enc.a, enc.c, enc.ct = a, c, ct
+    for cx, d in zip(ctx.ravel().tolist(), bits.ravel().tolist()):
+        enc.encode(icx, mps, cx, d)
     return enc.flush() if standalone else None
 
 

@@ -178,15 +178,6 @@ def extract_pptx(payload: bytes, url_hash: str = "") -> Tuple[List[Line], List[T
     return lines, tables, warnings
 
 
-def _shape_paragraph_texts(sp: ET.Element) -> List[str]:
-    out: List[str] = []
-    for p in sp.iter(f"{_DRAW}p"):
-        text = "".join(t.text or "" for t in p.iter(f"{_DRAW}t"))
-        if text.strip():
-            out.append(text)
-    return out
-
-
 # ST_TextAutonumberScheme rendering (pptx numbering_extractor.py:1-52,
 # including its quirks: alpha wraps as aa/bb/cc and roman is additive-only)
 _PPTX_NUM_FMT = {"ParenBoth": "({}) ", "ParenR": "{}) ", "Period": "{}. ", "Plain": "{} "}

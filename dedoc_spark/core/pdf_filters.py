@@ -64,24 +64,11 @@ def lzw_decode(data: bytes, early_change: int = 1) -> bytes:
 def lzw_encode(data: bytes, early_change: int = 1) -> bytes:
     """Fixture-side LZW writer (round-trip tests only).
 
-    The dictionary keys on (prefix code, next byte) pairs — the classic
-    LZW automaton — instead of the byte-string prefixes themselves:
-    byte-for-byte the same code stream, but hashing a 2-int tuple is
-    O(1) where hashing ever-longer prefix strings made the encoder
-    quadratic in the length of repetitive runs (a flat scan raster is
-    exactly that).
-
-    Runs of one repeated byte — most of a scan raster is 0x00/0xFF
-    paper — additionally skip the per-byte automaton walk: the codes
-    for b, bb, bbb, ... form a chain (each table hit steps one link),
-    so a cached per-byte chain list jumps to the chain's end in O(1)
-    and only the O(sqrt(run)) dictionary misses run the normal emit/
-    insert path. The chain list mirrors the table exactly (entries
-    appended whenever ANY path inserts (chain_end, b); cleared on
-    Clear), so the emitted code stream is byte-identical to the
-    per-byte walk."""
+    The dictionary keys on (prefix code, next byte) pairs, the classic
+    LZW automaton: hashing an int is O(1), where hashing ever-longer
+    prefix strings made the encoder quadratic in the length of
+    repetitive runs (a flat scan raster is exactly that)."""
     table: Dict[int, int] = {}  # (prefix_code << 8 | byte) -> code
-    chains: Dict[int, list] = {}  # byte -> [code(b), code(bb), ...]
     next_code = 258
     width = 9
     chunks = bytearray()
@@ -98,97 +85,30 @@ def lzw_encode(data: bytes, early_change: int = 1) -> bytes:
         acc &= (1 << nacc) - 1
 
     emit(256)
-    data = bytes(data)
-    # run boundaries: starts[i] is the first index of run i
-    if len(data) > 1:
-        import numpy as np
-
-        arr = np.frombuffer(data, dtype=np.uint8)
-        starts = np.concatenate(
-            [[0], np.nonzero(arr[1:] != arr[:-1])[0] + 1, [len(data)]]
-        ).tolist()
-    else:
-        starts = [0, len(data)]
-
     seq_code = -1  # code of the current prefix; single bytes are their own code
-    for ri in range(len(starts) - 1):
-        i = starts[ri]
-        end = starts[ri + 1]
-        if i >= end:
+    for byte in bytes(data):
+        if seq_code < 0:
+            seq_code = byte
             continue
-        byte = data[i]
-        # normal per-byte walk until the prefix resets to the bare run
-        # byte (a miss) — transitions into a run ride mixed-prefix table
-        # entries that the chain cache cannot represent
-        while i < end:
-            if seq_code < 0:
-                seq_code = byte
-                i += 1
-                continue
-            key = (seq_code << 8) | byte
-            hit = table.get(key)
-            if hit is not None:
-                seq_code = hit
-                i += 1
-                continue
-            emit(seq_code)
-            if next_code + early_change >= (1 << 12):
-                # table full: Clear before any code could outgrow 12 bits
-                emit(256)
-                table.clear()
-                chains.clear()
-                next_code = 258
-                width = 9
-            else:
-                table[key] = next_code
-                # keep the pure-run chain an exact mirror of the table:
-                # this insert extends it iff its prefix IS the chain end
-                # (inserting b^2 may have to create the chain first)
-                ch = chains.get(byte)
-                if ch is not None:
-                    if ch[-1] == seq_code:
-                        ch.append(next_code)
-                elif seq_code == byte:
-                    chains[byte] = [byte, next_code]
-                next_code += 1
-                # one behind the decoder's check (its table lags one entry)
-                if next_code + early_change - 1 >= (1 << width) and width < 12:
-                    width += 1
-            seq_code = byte
-            i += 1
-            break
-        # fast path: seq_code == byte means the prefix is b^1 = chain[0];
-        # every subsequent byte of the run follows the chain
-        while i < end and seq_code == byte:
-            ch = chains.get(byte)
-            if ch is None:
-                ch = chains[byte] = [byte]
-            # seq_code == byte == ch[0]: jump straight to the chain end
-            # (each link is a guaranteed table hit consuming one byte)
-            take = len(ch) - 1
-            if take > end - i:
-                take = end - i
-            if take:
-                seq_code = ch[take]
-                i += take
-            if i >= end:
-                break
-            # at the chain end with another b pending: guaranteed miss
-            emit(seq_code)
-            if next_code + early_change >= (1 << 12):
-                emit(256)
-                table.clear()
-                chains.clear()
-                next_code = 258
-                width = 9
-            else:
-                table[(seq_code << 8) | byte] = next_code
-                ch.append(next_code)
-                next_code += 1
-                if next_code + early_change - 1 >= (1 << width) and width < 12:
-                    width += 1
-            seq_code = byte
-            i += 1
+        key = (seq_code << 8) | byte
+        hit = table.get(key)
+        if hit is not None:
+            seq_code = hit
+            continue
+        emit(seq_code)
+        if next_code + early_change >= (1 << 12):
+            # table full: Clear before any code could outgrow 12 bits
+            emit(256)
+            table.clear()
+            next_code = 258
+            width = 9
+        else:
+            table[key] = next_code
+            next_code += 1
+            # one behind the decoder's check (its table lags one entry)
+            if next_code + early_change - 1 >= (1 << width) and width < 12:
+                width += 1
+        seq_code = byte
     if seq_code >= 0:
         emit(seq_code)
     # the decoder adds one last entry after the final data code and
@@ -224,47 +144,23 @@ def runlength_decode(data: bytes) -> bytes:
 
 
 def runlength_encode(data: bytes) -> bytes:
-    """Fixture-side RunLength writer (round-trip tests only).
-
-    Byte-identical to the original greedy per-byte scanner, but driven
-    by the maximal-run list (one numpy diff over the buffer) so cost is
-    O(runs), not O(bytes) — a scan raster is a few ink transitions per
-    row. Greedy semantics preserved exactly: runs emit in 128-chunks, a
-    length-129-mod-128 leftover single byte joins the following literal
-    stretch, literal stretches chunk at 128."""
-    import numpy as np
-
-    n = len(data)
-    if n == 0:
-        return b"\x80"
-    arr = np.frombuffer(data, dtype=np.uint8)
-    starts = np.concatenate(([0], np.nonzero(np.diff(arr))[0] + 1))
-    lengths = np.diff(np.concatenate((starts, [n]))).tolist()
-    starts = starts.tolist()
+    """Fixture-side RunLength writer (round-trip tests only): greedy
+    runs of 2..128 equal bytes, literal stretches of at most 128."""
     out = bytearray()
-    lit = bytearray()
-
-    def flush_lit() -> None:
-        nonlocal out
-        o = 0
-        while o < len(lit):
-            chunk = lit[o : o + 128]
-            out.append(len(chunk) - 1)
-            out += chunk
-            o += 128
-        lit.clear()
-
-    for s, L in zip(starts, lengths):
-        v = data[s]
-        while L >= 2:
-            r = L if L < 128 else 128
-            if r < 2:
-                break
-            flush_lit()
-            out += bytes((257 - r, v))
-            L -= r
-        if L == 1:
-            lit.append(v)
-    flush_lit()
+    i = 0
+    n = len(data)
+    while i < n:
+        run = 1
+        while i + run < n and run < 128 and data[i + run] == data[i]:
+            run += 1
+        if run >= 2:
+            out += bytes([257 - run, data[i]])
+            i += run
+            continue
+        j = i + 1
+        while j < n and (j + 1 >= n or data[j] != data[j + 1]) and j - i < 128:
+            j += 1
+        out += bytes([j - i - 1]) + data[i:j]
+        i = j
     out.append(128)
     return bytes(out)

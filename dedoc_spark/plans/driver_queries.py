@@ -61,29 +61,11 @@ def _tokens(col):
     return F.filter(F.split(F.lower(col), r"[^0-9a-zа-яё]+"), lambda t: F.length(t) > 0)
 
 
-def _shingles3(col):
-    toks = _tokens(col)
-    return F.array_distinct(
-        F.when(F.size(toks) < 3, F.array(F.concat_ws(" ", toks))).otherwise(
-            F.transform(
-                F.sequence(F.lit(0), F.size(toks) - 3),
-                lambda i: F.concat_ws(" ", F.slice(toks, i + 1, 3)),
-            )
-        )
-    )
-
-
 _SQL_TOKENS = "list_filter(string_split_regex(lower({c}), '[^0-9a-zа-яё]+'), t -> len(t) > 0)"
 _SQL_SHINGLES3 = (
     "list_distinct(CASE WHEN len(toks) < 3 THEN [array_to_string(toks, ' ')] "
     "ELSE list_transform(generate_series(1, len(toks) - 2), i -> array_to_string(toks[i:i+2], ' ')) END)"
 )
-
-
-def _minhash_hex(shingles, seed: int):
-    return F.array_min(
-        F.transform(shingles, lambda s: F.substring(F.md5(F.concat(s, F.lit(f"#{seed}"))), 1, 8))
-    )
 
 
 def _sql_minhash_hex(seed: int) -> str:

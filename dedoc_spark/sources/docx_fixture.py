@@ -3,9 +3,9 @@ zip + hand-built XML, no external tooling."""
 
 from __future__ import annotations
 
-import io
-import zipfile
 from typing import List, Optional, Sequence, Tuple
+
+from dedoc_spark.sources.office_fixture import zip_bytes
 
 W_NS = 'xmlns:w="http://schemas.openxmlformats.org/wordprocessingml/2006/main"'
 
@@ -114,15 +114,15 @@ def build_docx(body_xml: str, with_footnotes: bool = False) -> bytes:
         f'<?xml version="1.0" encoding="UTF-8" standalone="yes"?>'
         f"<w:document {W_NS}><w:body>{body_xml}</w:body></w:document>"
     )
-    buf = io.BytesIO()
-    with zipfile.ZipFile(buf, "w") as zf:
-        zf.writestr("[Content_Types].xml", CONTENT_TYPES)
-        zf.writestr("word/document.xml", document)
-        zf.writestr("word/styles.xml", STYLES)
-        zf.writestr("word/numbering.xml", NUMBERING)
-        if with_footnotes:
-            zf.writestr("word/footnotes.xml", FOOTNOTES)
-    return buf.getvalue()
+    members = [
+        ("[Content_Types].xml", CONTENT_TYPES),
+        ("word/document.xml", document),
+        ("word/styles.xml", STYLES),
+        ("word/numbering.xml", NUMBERING),
+    ]
+    if with_footnotes:
+        members.append(("word/footnotes.xml", FOOTNOTES))
+    return zip_bytes(members)
 
 
 def example_docx() -> bytes:

@@ -4,7 +4,7 @@ from __future__ import annotations
 
 import io
 import zipfile
-from typing import List, Sequence
+from typing import List, Sequence, Tuple, Union
 
 _SS = 'xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main"'
 _A = 'xmlns:a="http://schemas.openxmlformats.org/drawingml/2006/main"'
@@ -18,6 +18,19 @@ def _col_ref(i: int) -> str:
         i, rem = divmod(i - 1, 26)
         out = chr(65 + rem) + out
     return out
+
+
+def zip_bytes(members: Sequence[Tuple[str, Union[str, bytes]]]) -> bytes:
+    """A stored zip of ``(name, data)`` members in order. Every member is
+    stamped 1980-01-01 with ``writestr(name)``'s 0o600 mode, so the bytes
+    depend only on the members, never on the wall clock."""
+    buf = io.BytesIO()
+    with zipfile.ZipFile(buf, "w") as zf:
+        for name, data in members:
+            info = zipfile.ZipInfo(name, date_time=(1980, 1, 1, 0, 0, 0))
+            info.external_attr = 0o600 << 16
+            zf.writestr(info, data)
+    return buf.getvalue()
 
 
 def build_xlsx(sheets: Sequence[Sequence[Sequence[str]]]) -> bytes:
@@ -38,17 +51,17 @@ def build_xlsx(sheets: Sequence[Sequence[Sequence[str]]]) -> bytes:
             rows.append(f'<row r="{r}">{cells}</row>')
         sheet_xmls.append(f'<?xml version="1.0"?><worksheet {_SS}><sheetData>{"".join(rows)}</sheetData></worksheet>')
     shared = "".join(f"<si><t>{s}</t></si>" for s in strings)
-    buf = io.BytesIO()
-    with zipfile.ZipFile(buf, "w") as zf:
-        zf.writestr("[Content_Types].xml", "<Types/>")
-        zf.writestr("xl/workbook.xml", f'<?xml version="1.0"?><workbook {_SS}/>')
-        zf.writestr(
-            "xl/sharedStrings.xml",
-            f'<?xml version="1.0"?><sst {_SS} count="{len(strings)}">{shared}</sst>',
-        )
-        for i, xml in enumerate(sheet_xmls, start=1):
-            zf.writestr(f"xl/worksheets/sheet{i}.xml", xml)
-    return buf.getvalue()
+    return zip_bytes(
+        [
+            ("[Content_Types].xml", "<Types/>"),
+            ("xl/workbook.xml", f'<?xml version="1.0"?><workbook {_SS}/>'),
+            (
+                "xl/sharedStrings.xml",
+                f'<?xml version="1.0"?><sst {_SS} count="{len(strings)}">{shared}</sst>',
+            ),
+        ]
+        + [(f"xl/worksheets/sheet{i}.xml", xml) for i, xml in enumerate(sheet_xmls, start=1)]
+    )
 
 
 def _pptx_shape(texts: Sequence[str]) -> str:
@@ -87,32 +100,30 @@ def build_pptx(slides: Sequence[dict]) -> bytes:
     """slides: [{'shapes': [[line, ...], ...], 'table': [[...]] or None,
     'picture': 'image1.png' or None}] — picture emits a p:pic with an
     a:blip rel resolved through the slide's rels part."""
-    buf = io.BytesIO()
-    with zipfile.ZipFile(buf, "w") as zf:
-        zf.writestr("[Content_Types].xml", "<Types/>")
-        zf.writestr("ppt/presentation.xml", f'<?xml version="1.0"?><p:presentation {_P} {_A}/>')
-        for i, slide in enumerate(slides, start=1):
-            body = "".join(_pptx_shape(s) for s in slide.get("shapes", []))
-            if slide.get("table"):
-                body += _pptx_table(slide["table"])
-            if slide.get("picture"):
-                body += (
-                    '<p:pic xmlns:r="http://schemas.openxmlformats.org/officeDocument/2006/relationships">'
-                    '<p:blipFill><a:blip r:embed="rId2"/></p:blipFill></p:pic>'
-                )
-                zf.writestr(
-                    f"ppt/slides/_rels/slide{i}.xml.rels",
-                    '<?xml version="1.0"?>'
-                    '<Relationships xmlns="http://schemas.openxmlformats.org/package/2006/relationships">'
-                    f'<Relationship Id="rId2" Type="image" Target="../media/{slide["picture"]}"/>'
-                    "</Relationships>",
-                )
-                zf.writestr(f"ppt/media/{slide['picture']}", b"\x89PNG\r\n\x1a\n" + b"\x00" * 8)
-            xml = (
-                f'<?xml version="1.0"?><p:sld {_P} {_A}><p:cSld><p:spTree>{body}</p:spTree></p:cSld></p:sld>'
+    members = [
+        ("[Content_Types].xml", "<Types/>"),
+        ("ppt/presentation.xml", f'<?xml version="1.0"?><p:presentation {_P} {_A}/>'),
+    ]
+    for i, slide in enumerate(slides, start=1):
+        body = "".join(_pptx_shape(s) for s in slide.get("shapes", []))
+        if slide.get("table"):
+            body += _pptx_table(slide["table"])
+        if slide.get("picture"):
+            body += (
+                '<p:pic xmlns:r="http://schemas.openxmlformats.org/officeDocument/2006/relationships">'
+                '<p:blipFill><a:blip r:embed="rId2"/></p:blipFill></p:pic>'
             )
-            zf.writestr(f"ppt/slides/slide{i}.xml", xml)
-    return buf.getvalue()
+            members.append((
+                f"ppt/slides/_rels/slide{i}.xml.rels",
+                '<?xml version="1.0"?>'
+                '<Relationships xmlns="http://schemas.openxmlformats.org/package/2006/relationships">'
+                f'<Relationship Id="rId2" Type="image" Target="../media/{slide["picture"]}"/>'
+                "</Relationships>",
+            ))
+            members.append((f"ppt/media/{slide['picture']}", b"\x89PNG\r\n\x1a\n" + b"\x00" * 8))
+        xml = f'<?xml version="1.0"?><p:sld {_P} {_A}><p:cSld><p:spTree>{body}</p:spTree></p:cSld></p:sld>'
+        members.append((f"ppt/slides/slide{i}.xml", xml))
+    return zip_bytes(members)
 
 
 # --- legacy .xls (BIFF8 in an OLE2 compound file) ---------------------------
@@ -354,11 +365,7 @@ def _odf_zip(mimetype: str, body: str, auto_styles: str = "") -> bytes:
         f'<?xml version="1.0"?><office:document-content {_ODF_NS}>'
         f"{styles_part}<office:body>{body}</office:body></office:document-content>"
     )
-    buf = io.BytesIO()
-    with zipfile.ZipFile(buf, "w") as zf:
-        zf.writestr("mimetype", mimetype)
-        zf.writestr("content.xml", content)
-    return buf.getvalue()
+    return zip_bytes([("mimetype", mimetype), ("content.xml", content)])
 
 
 def build_odt(items: Sequence[tuple]) -> bytes:

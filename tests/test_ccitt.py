@@ -101,7 +101,7 @@ def test_g3_1d_rows_none_stops_at_padding():
 def test_g3_optional_eols_tolerated():
     """K=0 streams written with EndOfLine=true carry EOLs between rows —
     the decoder consumes them transparently."""
-    from dedoc_spark.core.ccitt import _BitWriter, _encode_1d_row, _transitions
+    from dedoc_spark.core.ccitt import _BitWriter, _all_transitions, _encode_1d_row
 
     img = np.full((4, 30), 255, dtype=np.uint8)
     img[1, 5:20] = 0
@@ -109,7 +109,7 @@ def test_g3_optional_eols_tolerated():
     w = _BitWriter()
     for y in range(4):
         w.write(0b000000000001, 12)  # EOL before every row
-        _encode_1d_row(w, _transitions(img[y]), 30)
+        _encode_1d_row(w, _all_transitions(img)[y], 30)
     out = decode_g3(w.bytes(), 30, rows=4)
     assert np.array_equal(out, img)
 

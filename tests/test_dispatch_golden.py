@@ -11,7 +11,8 @@ shows up here.
 does not reach: object streams, Type0 fonts, the three encryption methods
 and a locked document, every scan codec under auto and forced OCR and
 with a ``pages`` range, and the /Info metadata of plain and encrypted
-files. After an intended output change, re-record both files with
+files. Its ``fixture:`` entries pin the raw bytes the fixture encoders
+write. After an intended output change, re-record both files with
 ``python tests/test_dispatch_golden.py --write``.
 """
 
@@ -19,13 +20,11 @@ from __future__ import annotations
 
 import gzip
 import hashlib
-import io
 import json
 import os
 import pickle
 import re
 import sys
-import zipfile
 
 GOLDEN = os.path.join(os.path.dirname(os.path.abspath(__file__)), "dispatch_golden.json")
 PDF_GOLDEN = os.path.join(os.path.dirname(os.path.abspath(__file__)), "pdf_golden.json")
@@ -69,20 +68,6 @@ TEI = b"""<?xml version="1.0" encoding="UTF-8"?>
 """
 
 
-def _fixed_time(payload: bytes) -> bytes:
-    """Zip-based fixtures stamp members with the clock; pin the stamps so
-    the payload bytes (and rows that echo them) are the same every run."""
-    if payload[:4] != b"PK\x03\x04":
-        return payload
-    src = zipfile.ZipFile(io.BytesIO(payload))
-    buf = io.BytesIO()
-    with zipfile.ZipFile(buf, "w") as dst:
-        for info in src.infolist():
-            info.date_time = (1980, 1, 1, 0, 0, 0)
-            dst.writestr(info, src.read(info.filename))
-    return buf.getvalue()
-
-
 def _documents():
     """(extension, payload) — one valid document per format."""
     from dedoc_spark.sources import docx_fixture as dx
@@ -93,14 +78,11 @@ def _documents():
     grid = [["name", "value"], ["alpha", "1"], ["beta", "2"]]
     docx_body = "".join(dx.paragraph([(p, "")], style="Heading1" if p[0].isdigit() else None) for p in paras)
     docx_body += dx.table([[(c, 1, None) for c in row] for row in grid])
-    zip_buf = io.BytesIO()
-    with zipfile.ZipFile(zip_buf, "w") as zf:
-        zf.writestr("inner.txt", "inner text")
     pdf = build_pdf(
         [[("Section 1", True), ("body line one", False), ("body line two", False)]],
         extra_content=[table_ops(72, 400, [120, 120], 20, grid)],
     )
-    docs = [
+    return [
         ("html", b"<html><body><h1>Title</h1><p>para</p><ul><li>item</li></ul></body></html>"),
         ("txt", "\n".join(paras).encode("utf-8")),
         ("json", json.dumps({"title": "T", "items": [{"name": "a", "text": "b"}]}).encode()),
@@ -122,10 +104,9 @@ def _documents():
         ("doc", of.build_doc(paras)),
         ("ppt", of.build_ppt(["Slide text body"])),
         ("pdf", pdf),
-        ("zip", zip_buf.getvalue()),
+        ("zip", of.zip_bytes([("inner.txt", "inner text")])),
         ("png", b"\x89PNG\r\n\x1a\n" + b"\x00" * 32),
     ]
-    return [(ext, _fixed_time(payload)) for ext, payload in docs]
 
 
 def _wrong_ext(ext: str) -> str:
@@ -238,7 +219,57 @@ def _pdf_digests():
     for method in ("rc4", "aesv2", "aesv3"):
         enc = encrypt_pdf(plain, method=method, info=INFO)
         out[f"metadata:encrypted_{method}"] = _md5(extract_pdf_metadata(enc))
+    for name, payload in _fixture_cases():
+        out[f"fixture:{name}"] = hashlib.md5(payload).hexdigest()
     return out
+
+
+def _fixture_cases():
+    """(case name, bytes) straight from the fixture writers. Extraction
+    goldens accept any valid encoding, so these pin the encoders' own
+    output: the scanned gate documents, and each writer on the inputs
+    that reach its edge cases (LZW Clear, RunLength 128-chunking, G3
+    K>0 with byte-aligned EOLs, every JBIG2 template and a custom AT,
+    symbol-dictionary strips and corners, MMR)."""
+    import numpy as np
+
+    from dedoc_spark.core.ccitt import encode_g3, encode_g4
+    from dedoc_spark.core.jbig2 import encode_embedded, encode_generic, encode_symbol_text
+    from dedoc_spark.core.pdf_filters import lzw_encode, runlength_encode
+    from dedoc_spark.core.scanfont import render_scan_page
+    from dedoc_spark.sources.pdf_fixture import SCAN_CODECS, q67_scan_pdf, q68_scan_pdf
+
+    for did, codec in enumerate(SCAN_CODECS):
+        yield f"q67_{codec}", q67_scan_pdf(did, f"s{did % 5}", ("en", "ru")[did % 2])
+    yield "q68_0", q68_scan_pdf(0)
+
+    rng = np.random.default_rng(5)
+    page = render_scan_page(["Fixture 42 bytes"], scale=2)
+    # random bytes fill the 12-bit table (Clear) twice; the raster adds runs
+    lzw_in = rng.integers(0, 256, 12000, dtype=np.uint8).tobytes() + page.tobytes()
+    for early in (0, 1):
+        yield f"lzw_early{early}", lzw_encode(lzw_in, early_change=early)
+    for n in (1, 2, 128, 129, 130):
+        yield f"runlength_run{n}", runlength_encode(b"r" * n + b"xyz")
+    yield "runlength_literal300", runlength_encode(bytes(i % 251 for i in range(300)))
+
+    yield "ccitt_g3_k4_aligned", encode_g3(page, k=4, byte_align=True)
+    yield "ccitt_g4", encode_g4(page)
+
+    ink = (page < 128).astype(np.uint8)
+    for template in range(4):
+        yield f"jbig2_generic_t{template}", encode_generic(ink, template)
+    yield "jbig2_generic_t0_at", encode_generic(ink, 0, [(4, -1), (-3, -1), (2, -2), (-1, -2)])
+    glyphs = [
+        (rng.random((7, 5)) < 0.5).astype(np.uint8),
+        (rng.random((7, 4)) < 0.5).astype(np.uint8),
+        (rng.random((9, 6)) < 0.5).astype(np.uint8),
+    ]
+    placements = [(0, 2, 3), (1, 9, 3), (0, 15, 3), (2, 22, 2), (2, 5, 13), (1, 13, 13), (0, 40, 14)]
+    sd, region = encode_symbol_text(glyphs, placements, 60, 24, parts=True, log_strips=1, ref_corner=0)
+    yield "jbig2_symbol_dict", sd
+    yield "jbig2_symbol_region", region
+    yield "jbig2_embedded_mmr", encode_embedded(ink, mmr=True)
 
 
 def _check(path: str, got) -> None:

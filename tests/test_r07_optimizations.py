@@ -8,7 +8,7 @@ import pandas as pd
 import pytest
 
 
-# --- RunLength encoder: run-list walker vs the original greedy scanner ------
+# --- RunLength encoder vs the greedy reference scanner -----------------------
 
 
 def _runlength_greedy(data: bytes) -> bytes:
@@ -73,7 +73,7 @@ def test_lzw_spec_example_and_clear_boundary():
 
 
 def test_match_band_ties_order_by_template_index():
-    from dedoc_spark.core.glyph_ocr import GRID, GlyphBank, _match_band
+    from dedoc_spark.core.glyph_ocr import GRID, GlyphBank, _crop_feats, _match_from_dist1, _shape_dist
 
     rng = np.random.default_rng(5)
     g_dup = rng.integers(0, 256, GRID * GRID).tolist()
@@ -89,7 +89,9 @@ def test_match_band_ties_order_by_template_index():
     crop = np.array(g_dup, dtype=np.float64).reshape(GRID, GRID) / 255.0
     crops = [crop] * 4
     boxes = [(i * 20, 0, i * 20 + GRID, GRID) for i in range(4)]
-    idx, dist, _ = _match_band(bank, crops, boxes, topk=5)
+    feats, heights, _, aspect = _crop_feats(crops, boxes)
+    bottoms = np.array([y1 for _, _, _, y1 in boxes], dtype=np.float64)
+    idx, dist, _ = _match_from_dist1(bank, _shape_dist(bank, feats, aspect), heights, bottoms, 5)
     for row_i, row_d in zip(idx, dist):
         # the three exact twins come first, in ascending template index
         assert list(row_i[:3]) == [40, 170, 260]
@@ -130,8 +132,19 @@ def test_feature_dicts_pinned_values():
 # --- CCITT: batched per-row transitions ----------------------------------------
 
 
+def _row_transitions(row) -> list:
+    """Per-row reference: every x where the colour changes, starting
+    from white, with a row ending black closed at its width."""
+    out, black = [], False
+    for x, v in enumerate(row.tolist() + [255]):
+        if (v == 0) != black:
+            out.append(x)
+            black = not black
+    return out
+
+
 def test_all_transitions_matches_per_row():
-    from dedoc_spark.core.ccitt import _all_transitions, _transitions
+    from dedoc_spark.core.ccitt import _all_transitions
 
     rng = np.random.default_rng(3)
     for _ in range(20):
@@ -139,7 +152,7 @@ def test_all_transitions_matches_per_row():
         img = np.where(rng.random((h, w)) < 0.3, 0, 255).astype(np.uint8)
         batched = _all_transitions(img)
         for y in range(h):
-            assert batched[y] == _transitions(img[y])
+            assert batched[y] == _row_transitions(img[y])
 
 
 # --- JBIG2: blank-stretch batching around renorm/ink boundaries ----------------
@@ -164,12 +177,12 @@ def test_jbig2_blank_stretch_roundtrip():
         assert np.array_equal(decode_generic(encode_generic(bm2), 300, 16), bm2)
 
 
-# --- LZW encoder: run-chain fast path vs the per-byte automaton ---------------
+# --- LZW encoder vs the per-byte reference automaton ---------------------------
 
 
 def _lzw_encode_per_byte(data: bytes, early_change: int = 1) -> bytes:
-    """The pre-fast-path per-byte automaton (kept as the behavioral
-    reference for the run-chain encoder)."""
+    """The per-byte (prefix code, byte) automaton, kept as the
+    behavioural reference for lzw_encode."""
     table = {}
     next_code = 258
     width = 9
@@ -229,7 +242,7 @@ def test_lzw_run_chain_matches_per_byte_automaton():
         style = trial % 4
         if style == 0:
             data = bytes(rng.integers(0, 256, n, dtype=np.uint8))
-        elif style == 1:  # run-heavy: the fast-path target
+        elif style == 1:  # run-heavy
             pieces = []
             total = 0
             while total < n:
@@ -248,7 +261,7 @@ def test_lzw_run_chain_matches_per_byte_automaton():
                 for _ in range(max(1, n // 4))
             )
         cases.append(data)
-    # long enough to force the 12-bit table Clear with live run chains
+    # long enough to force the 12-bit table Clear
     a = np.zeros(300000, dtype=np.uint8)
     a[rng.integers(0, 300000, 25000)] = 7
     cases.append(bytes(a))
