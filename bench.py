@@ -115,7 +115,8 @@ def main() -> None:
     timed("q68_real_font_ocr", lambda: dq.q68_real_font_ocr(spark, SF_DIR).agg(F.count("*")).collect())
 
     # broadcast-model batch classifier over the extracted pages
-    from dedoc_spark.operators.classifier import score_text_quality, train_default_model
+    from dedoc_spark.core.txtlayer import train_default_model
+    from dedoc_spark.operators.classifier import score_text_quality
 
     model = train_default_model()
     timed(

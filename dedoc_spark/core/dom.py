@@ -23,7 +23,7 @@ from __future__ import annotations
 
 import re
 from html.parser import HTMLParser
-from typing import Iterator, List, Optional, Union
+from typing import Dict, Iterator, List, Optional, Union
 
 # bs4.builder.HTMLTreeBuilder.empty_element_tags (public knowledge: the
 # HTML5 void element list + historical additions)
@@ -136,6 +136,9 @@ class _TreeParser(HTMLParser):
         super().__init__(convert_charrefs=True)
         self.root = Element("[document]")
         self.stack: List[Element] = [self.root]
+        # open elements per tag name, so an end tag that matches none is
+        # ignored without scanning the stack (unmatched runs stay linear)
+        self.open: Dict[str, int] = {}
 
     # html.parser reports attrs as (name, value|None) pairs; bs4 maps
     # valueless attrs to "" and keeps the last duplicate.
@@ -148,15 +151,19 @@ class _TreeParser(HTMLParser):
         self.stack[-1].append(el)
         if tag not in VOID_TAGS:
             self.stack.append(el)
+            self.open[tag] = self.open.get(tag, 0) + 1
 
     def handle_startendtag(self, tag: str, attrs) -> None:
         self.stack[-1].append(Element(tag, self._attrs(attrs)))
 
     def handle_endtag(self, tag: str) -> None:
         # pop to the nearest open tag with this name; ignore if none is open
-        for i in range(len(self.stack) - 1, 0, -1):
-            if self.stack[i].name == tag:
-                del self.stack[i:]
+        if not self.open.get(tag):
+            return
+        while True:
+            name = self.stack.pop().name
+            self.open[name] -= 1
+            if name == tag:
                 return
 
     def handle_data(self, data: str) -> None:

@@ -18,23 +18,25 @@ separate large feature family tied to the reference's list-label task).
 
 The reference loads a downloaded XGBoost artifact; that is
 reference-internal, so the model here is the repo's deterministic
-pure-numpy logistic harness (operators/classifier.py) trained on a
+pure-numpy logistic harness (core/txtlayer.py) trained on a
 synthetic fixed corpus of indented-paragraph pages —
 ``train_default_paragraph_model``. Any stronger model with the same
 ``predict_proba(X)`` surface can be swapped in.
 
-Pure Python/numpy/pandas — no Spark imports (CLAUDE.md core invariant);
-runs identically in unit tests and inside mapInPandas.
+Pure Python/numpy; pandas is imported only where the reference-shaped
+frame is built, so a worker loads it only under
+need_paragraph_classification (CLAUDE.md core invariant).
 """
 
 from __future__ import annotations
 
+import functools
 from typing import List, Optional, Sequence
 
 import numpy as np
-import pandas as pd
 
 from dedoc_spark.core.model import Line
+from dedoc_spark.core.txtlayer import train_logistic
 
 # order is the sorted-columns order the transform() contract produces
 FEATURE_NAMES = [
@@ -120,6 +122,8 @@ def _intersection(this_bbox, that_bbox) -> Optional[float]:
 
 def _quantile(col: pd.Series) -> pd.Series:
     """abstract_extractor.py:327-337 verbatim."""
+    import pandas as pd
+
     col = col.fillna(col.min() - 1)
     s = np.sort(col)
     q = np.searchsorted(s, col, "left") + np.searchsorted(s, col, "right")
@@ -129,6 +133,8 @@ def _quantile(col: pd.Series) -> pd.Series:
 def paragraph_features(lines: Sequence[Line]) -> pd.DataFrame:
     """One document's lines (layout path: bbox in extras["location"]) →
     feature frame, columns sorted, float dtype (transform() contract)."""
+    import pandas as pd
+
     rows = []
     for i, line in enumerate(lines):
         prev_line = lines[i - 1] if i > 0 else None
@@ -219,8 +225,6 @@ def _synthetic_paragraph_doc(seed: int):
 def train_default_paragraph_model():
     """Deterministic logistic model over the ported feature set (see
     module docstring for why not the reference's XGBoost artifact)."""
-    from dedoc_spark.operators.classifier import train_logistic
-
     Xs, ys = [], []
     for seed in range(8):
         lines, labels = _synthetic_paragraph_doc(seed)
@@ -230,16 +234,11 @@ def train_default_paragraph_model():
     return train_logistic(X, np.asarray(ys, dtype=np.float64), epochs=400, lr=0.5)
 
 
-_DEFAULT_MODEL = None
-
-
+@functools.lru_cache(maxsize=None)
 def default_paragraph_model():
     """Process-cached default model (trained once per executor worker —
     the same load-once shape as the reference's lazy _unpickle)."""
-    global _DEFAULT_MODEL
-    if _DEFAULT_MODEL is None:
-        _DEFAULT_MODEL = train_default_paragraph_model()
-    return _DEFAULT_MODEL
+    return train_default_paragraph_model()
 
 
 def classify_paragraphs(lines: List[Line], model=None) -> List[Line]:

@@ -803,9 +803,7 @@ def detect_txt_layer(lines: List[Line], fast: bool = False) -> Tuple[bool, bool]
     of is_correct, unlike the classifier path).
     """
     global _TXT_LAYER_MODEL
-    import pandas as pd
-
-    from dedoc_spark.operators.classifier import features_frame, train_default_model
+    from dedoc_spark.core.txtlayer import features_frame, train_default_model
 
     sample = [ln for ln in lines if (ln.page_id or 0) < 8]  # pages "1:8"
     if fast:
@@ -818,14 +816,14 @@ def detect_txt_layer(lines: List[Line], fast: bool = False) -> Tuple[bool, bool]
     text = "\n".join(ln.line for ln in sample)
     if not text.strip():
         return False, False
-    proba = float(_TXT_LAYER_MODEL.predict_proba(features_frame(pd.Series([text])))[0])
+    proba = float(_TXT_LAYER_MODEL.predict_proba(features_frame([text]))[0])
     is_correct = proba >= 0.5
     if not is_correct:
         return False, False
     first = "\n".join(ln.line for ln in sample if (ln.page_id or 0) == 0)
     if not first.strip():
         return True, False
-    p_first = float(_TXT_LAYER_MODEL.predict_proba(features_frame(pd.Series([first])))[0])
+    p_first = float(_TXT_LAYER_MODEL.predict_proba(features_frame([first]))[0])
     return True, p_first >= 0.5
 
 

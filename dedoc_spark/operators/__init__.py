@@ -1,59 +1,7 @@
 """Spark DataFrame operators: the extraction stage and the web-scale
 training-data pipeline operators (dedup, similarity, text stats,
-archives/attachments, classifier, snapshots, crawl e2e)."""
+archives/attachments, classifier, snapshots, crawl e2e).
 
-from dedoc_spark.operators.archives import (  # noqa: F401
-    explode_archives,
-    explode_attachments,
-    extract_with_archives,
-    extract_with_attachments,
-)
-from dedoc_spark.operators.classifier import (  # noqa: F401
-    score_text_quality,
-    train_default_model,
-)
-from dedoc_spark.operators.crawl import process_crawl, quality_gate  # noqa: F401
-from dedoc_spark.operators.dedup import (  # noqa: F401
-    connected_components,
-    cosine_for_pairs,
-    dedup_corpus,
-    embedding_lsh_pairs,
-    exact_dedup,
-    jaccard_for_pairs,
-    minhash_lsh_pairs,
-    simhash64,
-)
-from dedoc_spark.operators.multimodal import (  # noqa: F401
-    image_exif,
-    media_features,
-    with_document_metadata,
-)
-from dedoc_spark.operators.pipeline import (  # noqa: F401
-    extract_stage,
-    extract_with_skew_routing,
-    lineage_metrics,
-    resume_anti_join,
-)
-from dedoc_spark.operators.similarity import (  # noqa: F401
-    cosine_topk,
-    cosine_topk_ivf,
-    cosine_topk_lsh,
-    cosine_topk_multi,
-    kmeans_fit,
-    with_ivf_cluster,
-)
-from dedoc_spark.operators.snapshots import (  # noqa: F401
-    commit_batch,
-    read_committed,
-    resume_uncommitted,
-    run_with_snapshots,
-)
-from dedoc_spark.operators.textstats import (  # noqa: F401
-    boilerplate_patterns,
-    c4_clean_text,
-    c4_line_flags,
-    gopher_quality_flags,
-    gopher_repetition_flags,
-    remove_boilerplate,
-    text_profile,
-)
+Import each operator from its submodule. This package imports nothing, so
+a worker that unpickles the extraction UDF loads ``pipeline`` alone, not
+every operator and pandas with them."""

@@ -71,13 +71,10 @@ def _error_extract_rows(df: DataFrame, error_col, params=None) -> DataFrame:
     """Shape (url, error) rows into the EXTRACT_SCHEMA error channel (plus
     the opt-in null ``rendered`` column when return_format is set, so the
     union with extract_stage output stays schema-aligned)."""
-    from dedoc_spark.operators.pipeline import _wants_rendered
+    from dedoc_spark.operators.pipeline import _stage_schema
 
-    extra = (
-        [F.lit(None).cast("string").alias("rendered")]
-        if _wants_rendered(params)
-        else []
-    )
+    rendered = "rendered" in _stage_schema(params).names
+    extra = [F.lit(None).cast("string").alias("rendered")] if rendered else []
     return df.select(
         F.col("url"),
         F.lit("").alias("text_extracted"),

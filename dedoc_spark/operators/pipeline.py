@@ -4,11 +4,14 @@ Design (SURVEY.md §1.4, §7.0 — Spark-first, not a port):
 
   read (url, html, text only — column pruning reaches the scan)
     → repartition on salted xxhash64(url)     (absorbs oversized-doc skew)
-    → mapInPandas(extract_batch)              (Arrow batches; one Python
-      call per batch, never per row — the per-document object tree lives
-      only inside the UDF)
+    → mapInArrow(_extract_batches)            (Arrow record batches in and
+      out; one Python call per batch, never per row — the per-document
+      object tree lives only inside the UDF)
     → output columns url, text_extracted, …, error
     → lineage/metrics = aggregation over spark_partition_id()
+
+The UDF reads with ``to_pylist`` and writes with ``arrow_column``, so an
+extraction worker never loads pandas: a third less memory per core.
 
 The reference's three process boundaries (soffice/java subprocesses,
 joblib per-page pools, API child process — dedoc_manager.py, §3) all
@@ -35,9 +38,12 @@ from __future__ import annotations
 
 import functools
 import os
-from typing import Callable, Iterator, Optional, Tuple
+from array import array
+from itertools import accumulate
+from typing import Callable, Iterator, List, Optional, Tuple
 
-import pandas as pd
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -48,7 +54,7 @@ _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__f
 
 
 def bootstrapped(fn: Callable) -> Callable:
-    """Wrap a Python UDF body (``mapInPandas`` function) so a worker can
+    """Wrap a Python UDF body (a ``mapIn*`` function) so a worker can
     run it whatever cwd/PYTHONPATH the driver was started with.
 
     ``fn`` is pickled to bytes HERE, on the driver. The returned closure
@@ -125,6 +131,15 @@ EXTRACT_SCHEMA = T.StructType(
     ]
 )
 
+# one hierarchy level: tag_hl and hl share the shape
+_LEVEL_SCHEMA = T.StructType(
+    [
+        T.StructField("level_1", T.DoubleType()),
+        T.StructField("level_2", T.DoubleType()),
+        T.StructField("can_be_multiline", T.BooleanType()),
+        T.StructField("line_type", T.StringType()),
+    ]
+)
 # typed view of lines_json for relational ops (from_json is JVM-side)
 LINE_SCHEMA = T.ArrayType(
     T.StructType(
@@ -132,28 +147,8 @@ LINE_SCHEMA = T.ArrayType(
             T.StructField("line", T.StringType()),
             T.StructField("page_id", T.IntegerType()),
             T.StructField("line_id", T.IntegerType()),
-            T.StructField(
-                "tag_hl",
-                T.StructType(
-                    [
-                        T.StructField("level_1", T.DoubleType()),
-                        T.StructField("level_2", T.DoubleType()),
-                        T.StructField("can_be_multiline", T.BooleanType()),
-                        T.StructField("line_type", T.StringType()),
-                    ]
-                ),
-            ),
-            T.StructField(
-                "hl",
-                T.StructType(
-                    [
-                        T.StructField("level_1", T.DoubleType()),
-                        T.StructField("level_2", T.DoubleType()),
-                        T.StructField("can_be_multiline", T.BooleanType()),
-                        T.StructField("line_type", T.StringType()),
-                    ]
-                ),
-            ),
+            T.StructField("tag_hl", _LEVEL_SCHEMA),
+            T.StructField("hl", _LEVEL_SCHEMA),
             T.StructField(
                 "annotations",
                 T.ArrayType(
@@ -186,33 +181,84 @@ NODE_SCHEMA = T.ArrayType(
 )
 
 
-def _wants_rendered(params: Optional[dict]) -> bool:
-    """return_format != json asks for an extra response rendering — the
-    stage schema grows a nullable ``rendered`` column ONLY then, so the
-    default output bytes (and schema) stay stable."""
-    return str((params or {}).get("return_format", "json")).lower() != "json"
+def _stage_schema(params: Optional[dict]) -> T.StructType:
+    """EXTRACT_SCHEMA, plus a nullable ``rendered`` column ONLY when
+    return_format != json asks for a response rendering, so the default
+    output bytes (and schema) stay stable."""
+    if str((params or {}).get("return_format", "json")).lower() == "json":
+        return EXTRACT_SCHEMA
+    return T.StructType(EXTRACT_SCHEMA.fields + [T.StructField("rendered", T.StringType())])
+
+
+# pyarrow 16's pa.array, RecordBatch.from_pydict and from_pylist import
+# pandas on their first call (_is_array_like → pandas_api), which grows an
+# extraction worker by about 48 MB; Array.from_buffers, from_arrays,
+# to_pylist and IPC do not. So the extraction path lays out its output
+# buffers itself, and never calls those three.
+_MAX_OFFSET = (1 << 31) - 1  # Spark's string and array columns use int32 offsets
+
+
+def _offsets(lengths) -> pa.Buffer:
+    ends = list(accumulate(lengths, initial=0))
+    if ends[-1] > _MAX_OFFSET:
+        raise OverflowError("a column passes the int32 offsets of one record batch")
+    return pa.py_buffer(array("i", ends))
+
+
+def arrow_column(values: list, typ: pa.DataType) -> pa.Array:
+    """``pa.array(values, typ)`` for ``string``, ``int32`` and
+    ``list<string>``, built from buffers (see above). None is null.
+    Raises OverflowError when the bytes (or list items) pass int32 offsets."""
+    valid = [v is not None for v in values]
+    nulls = len(values) - sum(valid)
+    bitmap = pa.py_buffer(np.packbits(valid, bitorder="little")) if nulls else None
+    if pa.types.is_int32(typ):
+        data = pa.py_buffer(array("i", [v or 0 for v in values]))
+        return pa.Array.from_buffers(typ, len(values), [bitmap, data], nulls)
+    if pa.types.is_list(typ):
+        lists = [v or () for v in values]
+        items = arrow_column([x for v in lists for x in v], typ.value_type)
+        return pa.Array.from_buffers(
+            typ, len(values), [bitmap, _offsets(map(len, lists))], nulls, children=[items]
+        )
+    encoded = [b"" if v is None else v.encode() for v in values]
+    return pa.Array.from_buffers(
+        typ, len(values), [bitmap, _offsets(map(len, encoded)), pa.py_buffer(b"".join(encoded))], nulls
+    )
+
+
+def _record_batches(rows: List[dict], schema: pa.Schema) -> Iterator[pa.RecordBatch]:
+    """Output dicts → one record batch, or several when a column of
+    ``rows`` would pass the int32 offsets (halved until each fits)."""
+    try:
+        arrays = [arrow_column([r.get(f.name) for r in rows], f.type) for f in schema]
+    except OverflowError:
+        if len(rows) < 2:
+            raise
+        half = len(rows) // 2
+        yield from _record_batches(rows[:half], schema)
+        yield from _record_batches(rows[half:], schema)
+        return
+    yield pa.RecordBatch.from_arrays(arrays, schema=schema)
 
 
 def _extract_batches(
-    it: Iterator[pd.DataFrame], params: Optional[dict] = None
-) -> Iterator[pd.DataFrame]:
+    batches: Iterator[pa.RecordBatch], params: Optional[dict] = None
+) -> Iterator[pa.RecordBatch]:
     # lazy: importing this module (driver side) does not load the engine
+    from pyspark.sql.pandas.types import to_arrow_schema
+
     from dedoc_spark.core.document import extract_document
 
-    columns = [f.name for f in EXTRACT_SCHEMA.fields]
-    if _wants_rendered(params):
-        columns.append("rendered")
-    for pdf in it:
-        urls = pdf["url"].tolist()
-        htmls = pdf["html"].tolist() if "html" in pdf.columns else [None] * len(urls)
-        texts = pdf["text"].tolist() if "text" in pdf.columns else [None] * len(urls)
+    schema = to_arrow_schema(_stage_schema(params))
+    for batch in batches:
+        names = batch.schema.names
+        urls = batch.column("url").to_pylist()
+        htmls = batch.column("html").to_pylist() if "html" in names else [None] * len(urls)
+        texts = batch.column("text").to_pylist() if "text" in names else [None] * len(urls)
         out = [extract_document(u, h, t, params=params) for u, h, t in zip(urls, htmls, texts)]
-        if "rendered" in columns:
-            for d in out:  # error rows carry no rendering — explicit null
-                d.setdefault("rendered", None)
-        # column-wise construction: pandas builds each column in one
-        # pass instead of per-cell dict probing over a row list
-        yield pd.DataFrame({c: [d.get(c) for d in out] for c in columns}, columns=columns)
+        # error rows carry no ``rendered`` key: .get gives the null
+        yield from _record_batches(out, schema)
 
 
 def extract_stage(
@@ -231,13 +277,8 @@ def extract_stage(
         # explicit salting on url hash: uniform placement regardless of the
         # input file layout; keeps oversized-doc clusters apart
         src = src.repartition(salt_partitions, F.pmod(F.xxhash64("url"), F.lit(salt_partitions)))
-    schema = EXTRACT_SCHEMA
-    if _wants_rendered(params):
-        schema = T.StructType(
-            EXTRACT_SCHEMA.fields + [T.StructField("rendered", T.StringType())]
-        )
-    return src.mapInPandas(
-        bootstrapped(functools.partial(_extract_batches, params=params)), schema=schema
+    return src.mapInArrow(
+        bootstrapped(functools.partial(_extract_batches, params=params)), schema=_stage_schema(params)
     )
 
 
@@ -253,12 +294,14 @@ def extract_with_skew_routing(
     salt_partitions: Optional[int] = None,
     big_doc_threshold: int = 1 << 20,
     big_doc_partitions: Optional[int] = None,
+    params: Optional[dict] = None,
 ) -> DataFrame:
     """extract_stage with the oversized-document route: big docs get one
-    document per task (repartition by url) so they can't stall a batch."""
+    document per task (repartition by url) so they can't stall a batch.
+    Both halves run with the same request ``params``."""
     small, big = split_oversized(df, big_doc_threshold)
-    out_small = extract_stage(small, salt_partitions)
-    out_big = extract_stage(big.repartition(big_doc_partitions or 32, "url"))
+    out_small = extract_stage(small, salt_partitions, params=params)
+    out_big = extract_stage(big.repartition(big_doc_partitions or 32, "url"), params=params)
     return out_small.unionByName(out_big)
 
 

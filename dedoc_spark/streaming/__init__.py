@@ -2,7 +2,7 @@
 
 The reference is strictly batch (SURVEY.md §2.13); this is the new
 engine's streaming front door for continuous crawls: readStream on the
-web_pages source → the same mapInPandas extraction (mapInPandas works
+web_pages source → the same mapInArrow extraction (mapInArrow works
 unchanged on streaming DataFrames) → writeStream with checkpointing.
 Exactly-once comes from the sink checkpoint + deterministic extraction
 (same url+bytes → same output bytes), so replays are idempotent.

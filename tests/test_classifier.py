@@ -4,13 +4,13 @@ pattern, txtlayer_classifier.py:26-57, without the pickled artifact)."""
 import numpy as np
 import pandas as pd
 
-from dedoc_spark.operators.classifier import (
+from dedoc_spark.core.txtlayer import (
     LogisticModel,
     features_frame,
-    score_text_quality,
     synthetic_training_set,
     train_default_model,
 )
+from dedoc_spark.operators.classifier import score_text_quality
 
 
 def test_model_separates_text_from_garbage():

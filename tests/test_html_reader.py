@@ -283,3 +283,38 @@ def test_dom_end_tag_mismatch_ignored():
     root = parse_html("<div><p>a</p></b></div><p>tail</p>")
     names = [getattr(n, "name", None) for n in root.children]
     assert names == ["div", "p"]
+
+
+def test_unmatched_end_tags_parse_in_linear_time():
+    """``<b>``×n then ``</i>``×n: no end tag matches an open element, so
+    each one must be ignored in O(1), not after a scan of the n-deep open
+    stack (that scan made 54 KB take seconds). Doubling the input may at
+    most 2.5× the time; the tree builder's share stays a small multiple of
+    html.parser's own tokenizing time."""
+    import time
+    from html.parser import HTMLParser
+
+    def best(fn, doc):
+        times = []
+        for _ in range(5):
+            t0 = time.perf_counter()
+            fn(doc)
+            times.append(time.perf_counter() - t0)
+        return min(times)
+
+    def tokenize(doc):
+        parser = HTMLParser()
+        parser.feed(doc)
+        parser.close()
+
+    docs = ["<b>" * n + "</i>" * n for n in (4000, 8000, 16000)]  # 28, 56, 112 KB
+    times = [best(parse_html, doc) for doc in docs]
+    for small, big in zip(times, times[1:]):
+        assert big <= 2.5 * small, times
+    assert times[-1] <= 3 * best(tokenize, docs[-1]), times
+    # the ignored end tags leave the n nested <b> in place
+    node, depth = parse_html(docs[0]), 0
+    while node.children:
+        (node,) = node.children
+        depth += 1
+    assert depth == 4000 and node.name == "b"

@@ -4,11 +4,14 @@ Key invariant: the Spark path produces byte-identical output to the plain
 function path, and the same output at any parallelism/partitioning."""
 
 import json
+import unicodedata
 
+import pyarrow as pa
 import pytest
 
 from dedoc_spark.core.document import extract_document
 from dedoc_spark.operators.pipeline import (
+    arrow_column,
     extract_stage,
     extract_with_skew_routing,
     lineage_metrics,
@@ -70,6 +73,129 @@ def test_skew_routing_same_results(spark, web_pages, extracted):
         ).collect()
     }
     assert base == routed
+
+
+def _rows_by_url(df):
+    return {r.url: r.asDict() for r in df.collect()}
+
+
+def test_skew_routing_forwards_params(spark):
+    """Both halves of the skew route run with the request params: the
+    oversized row's output equals extract_stage's under the same params,
+    and differs from its default output."""
+    big_url = "https://big.example/page"
+    big = (
+        "<html><body>"
+        + "".join(f"<h2>Part {k}</h2><p>{'word ' * 40}</p>" for k in range(120))
+        + "</body></html>"
+    ).encode()
+    rows = [(r["url"], bytearray(r["html"]), r["text"]) for r in map(make_row, range(1, 7))]
+    rows.append((big_url, bytearray(big), ""))
+    df = spark.createDataFrame(rows, "url string, html binary, text string")
+    params = {"structure_type": "linear", "return_format": "html"}
+    routed = _rows_by_url(
+        extract_with_skew_routing(df, big_doc_threshold=20_000, big_doc_partitions=2, params=params)
+    )
+    assert len(big) > 20_000
+    assert routed == _rows_by_url(extract_stage(df, params=params))
+    assert routed[big_url]["rendered"]
+    assert routed[big_url]["tree_json"] != extract_document(big_url, big, "")["tree_json"]
+
+
+def _zip(members):
+    import io
+    import zipfile
+
+    buf = io.BytesIO()
+    with zipfile.ZipFile(buf, "w") as zf:
+        for name, data in members:
+            zf.writestr(name, data)
+    return buf.getvalue()
+
+
+ODD_TEXT = "nul\x00 sep\u2028 clef\U0001d11e e\u0301 \u0410\u0308 end"
+EDGE_ROWS = [
+    ("https://e.example/null-html.txt", None, "only text"),
+    ("https://e.example/null-text.html", b"<p>only html</p>", None),
+    ("https://e.example/both-null", None, None),
+    ("https://e.example/empty.html", b"", ""),
+    ("https://e.example/odd.txt", None, ODD_TEXT),
+    ("https://e.example/odd.html", f"<h1>{ODD_TEXT}</h1><p>{ODD_TEXT}</p>".encode(), None),
+    # an error row that carries several warnings (one per member)
+    ("https://e.example/pack.zip", _zip([("a.txt", "one"), ("b.txt", "two"), ("c.txt", "three")]), None),
+    (None, b"<p>a row without url</p>", None),
+]
+
+
+@pytest.mark.parametrize("params", [None, {"return_format": "html"}], ids=["default", "rendered"])
+def test_arrow_output_matches_plain_function_on_edge_rows(spark, params):
+    """mapInArrow output, column for column, equals extract_document on
+    null and empty inputs, control/separator/astral/combining characters,
+    several warnings and error rows — with and without ``rendered``."""
+    df = spark.createDataFrame(
+        [(u, None if h is None else bytearray(h), t) for u, h, t in EDGE_ROWS],
+        "url string, html binary, text string",
+    )
+    out = extract_stage(df, params=params)
+    got = _rows_by_url(out)
+    assert len(got) == len(EDGE_ROWS)
+    assert ("rendered" in out.columns) == (params is not None)
+    for url, html, text in EDGE_ROWS:
+        want = extract_document(url, html, text, params=params)
+        assert got[url] == {c: want.get(c) for c in out.columns}, url
+    assert got["https://e.example/pack.zip"]["error"] and len(got["https://e.example/pack.zip"]["warnings"]) == 3
+    assert got[None]["error"]
+    # the text reader composes combining sequences (NFC); the rest survives
+    assert unicodedata.normalize("NFC", ODD_TEXT) in got["https://e.example/odd.txt"]["text_extracted"]
+
+
+STR, I32 = pa.string(), pa.int32()
+LIST = pa.list_(pa.field("element", pa.string()))
+
+
+@pytest.mark.parametrize(
+    "values, typ",
+    [
+        (["a", None, "", ODD_TEXT, "\u00fc" * 3], STR),
+        ([None, None, None], STR),
+        ([], STR),
+        ([0, None, -5, 2**31 - 1], I32),
+        ([None, None], I32),
+        ([], I32),
+        ([["a", "b"], [], None, ["", None, ODD_TEXT]], LIST),
+        ([[], [], []], LIST),
+        ([None, None], LIST),
+        ([], LIST),
+    ],
+)
+def test_arrow_column_equals_pa_array(values, typ):
+    got = arrow_column(values, typ)
+    got.validate(full=True)
+    assert got.equals(pa.array(values, typ))
+
+
+def test_record_batches_split_before_offsets_overflow(monkeypatch):
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from dedoc_spark.operators import pipeline
+
+    schema = to_arrow_schema(pipeline.EXTRACT_SCHEMA)
+    rows = [extract_document(f"u{i}.txt", None, f"line {i}") for i in range(7)]
+    (whole,) = pipeline._record_batches(rows, schema)
+    assert whole.equals(pa.RecordBatch.from_pylist(rows, schema=schema))
+    (empty,) = pipeline._record_batches([], schema)
+    assert empty.num_rows == 0 and empty.schema == schema
+
+    # no column of one batch may pass the int32 offsets: lower the limit
+    monkeypatch.setattr(pipeline, "_MAX_OFFSET", 2 * max(len(r["lines_json"]) for r in rows))
+    parts = list(pipeline._record_batches(rows, schema))
+    assert len(parts) > 1
+    for part in parts:
+        part.validate(full=True)
+    assert pa.Table.from_batches(parts).equals(pa.Table.from_batches([whole]))
+    monkeypatch.setattr(pipeline, "_MAX_OFFSET", 3)
+    with pytest.raises(OverflowError):
+        list(pipeline._record_batches(rows, schema))
 
 
 def test_lines_table_explode(spark, extracted):

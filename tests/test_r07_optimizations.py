@@ -102,7 +102,7 @@ def test_match_band_ties_order_by_template_index():
 
 
 def test_feature_dicts_pinned_values():
-    from dedoc_spark.operators.classifier import _feature_dicts
+    from dedoc_spark.core.txtlayer import _feature_dicts
 
     texts = ["", " ", "aA", "Hello Мир 123 [ok]? \x1f", "ё" * 7 + "\U0001d11e"]
     rows = _feature_dicts(pd.Series(texts))

@@ -17,6 +17,12 @@ The static checks keep it that way: under ``dedoc_spark/`` only
 ``operators/pipeline.py`` knows about ``sys.path``, every Python UDF
 argument is a ``bootstrapped(...)`` call, and nothing ships files to the
 workers, which the no-op invalidation relies on.
+
+An extraction worker loads the engine and nothing else: after
+``extract_stage`` has run over one row of each kind of input, a probe task
+in the same reused worker finds neither pandas nor the other operator
+modules imported, and statically no ``core/`` module imports them at module
+level.
 """
 
 import ast
@@ -60,7 +66,8 @@ def zip_bytes():
 
 
 def classifier():
-    from dedoc_spark.operators.classifier import score_text_quality, train_default_model
+    from dedoc_spark.core.txtlayer import train_default_model
+    from dedoc_spark.operators.classifier import score_text_quality
 
     df = spark.createDataFrame(
         [("u1", "A plain sentence about documents and their structure."), ("u2", "@@@ ### 123")],
@@ -158,7 +165,7 @@ print("RESULTS " + json.dumps(results))
 FAMILIES = ("classifier", "extract", "archives", "attachments", "media", "warc")
 
 
-def _run_driver(cwd, reuse):
+def _run_driver(cwd, reuse, driver=DRIVER):
     env = dict(os.environ)
     kept = [
         p for p in env.get("PYTHONPATH", "").split(os.pathsep)
@@ -167,7 +174,7 @@ def _run_driver(cwd, reuse):
     env["PYTHONPATH"] = os.pathsep.join(kept)
     env.setdefault("PYSPARK_PYTHON", sys.executable)
     proc = subprocess.run(
-        [sys.executable, "-c", f"REPO = {str(REPO)!r}\nREUSE = {reuse!r}\n" + DRIVER],
+        [sys.executable, "-c", f"REPO = {str(REPO)!r}\nREUSE = {reuse!r}\n" + driver],
         cwd=cwd, env=env, capture_output=True, text=True, timeout=600,
     )
     lines = [ln for ln in proc.stdout.splitlines() if ln.startswith("RESULTS ")]
@@ -190,6 +197,103 @@ def test_reused_worker_keeps_its_zip_directories(tmp_path):
     # the first task paid Spark's re-read; no later one may
     snapshots = {json.dumps(snapshot) for _, snapshot in tasks[1:]}
     assert len(snapshots) == 1, tasks
+
+
+EXTRACTION_DRIVER = r"""
+import json
+import sys
+
+sys.path.insert(0, REPO)
+
+from pyspark.sql import SparkSession
+
+from dedoc_spark.core.scanfont import render_scan_page
+from dedoc_spark.operators.pipeline import bootstrapped, extract_stage
+from dedoc_spark.sources.docx_fixture import example_docx
+from dedoc_spark.sources.pdf_fixture import build_scanned_pdf, example_pdf
+
+spark = (
+    SparkSession.builder.master("local[1]")
+    .config("spark.python.worker.reuse", "true")
+    .config("spark.ui.enabled", "false")
+    .getOrCreate()
+)
+spark.sparkContext.setLogLevel("ERROR")
+
+rows = [
+    ("a.html", bytearray(b"<html><body><h1>Title</h1><p>Body text</p></body></html>"), None),
+    ("b.txt", None, "plain text line\nsecond line"),
+    ("c.docx", bytearray(example_docx()), None),
+    ("d.pdf", bytearray(example_pdf(1)), None),
+    ("e.pdf", bytearray(build_scanned_pdf([render_scan_page(["Scanned page"], scale=2)])), None),
+]
+df = spark.createDataFrame(rows, "url string, html binary, text string").coalesce(1)
+out = extract_stage(df, params={"need_pdf_table_analysis": True}).collect()
+
+
+def probe(batches):
+    import os
+
+    import pyarrow as pa
+
+    from dedoc_spark.operators.pipeline import arrow_column
+
+    for _ in batches:
+        pass
+    mods = sorted(m for m in sys.modules if m.split(".")[0] in ("pandas", "dedoc_spark"))
+    report = json.dumps({"pid": os.getpid(), "modules": mods})
+    yield pa.RecordBatch.from_arrays([arrow_column([report], pa.string())], names=["report"])
+
+
+(probe_row,) = spark.range(0, 1, numPartitions=1).mapInArrow(bootstrapped(probe), "report string").collect()
+results = {"errors": {r.url: r.error for r in out}, "texts": {r.url: r.text_extracted for r in out}}
+results.update(json.loads(probe_row.report))
+spark.stop()
+print("RESULTS " + json.dumps(results))
+"""
+
+
+def test_extraction_worker_loads_only_the_engine(tmp_path):
+    results = _run_driver(tmp_path, reuse=True, driver=EXTRACTION_DRIVER)
+    assert results["errors"] == {u: None for u in ("a.html", "b.txt", "c.docx", "d.pdf", "e.pdf")}
+    assert "Scanned page" in results["texts"]["e.pdf"]
+    mods = set(results["modules"])
+    # the probe ran in the worker that extracted every kind of row ...
+    for engine in ("document", "html_extract", "txt_extract", "docx_extract", "pdf_extract", "txtlayer", "ocr"):
+        assert f"dedoc_spark.core.{engine}" in mods, engine
+    # ... and that worker never imported pandas or another operator
+    assert not {m for m in mods if m == "pandas" or m.startswith("pandas.")}
+    for name in ("archives", "classifier", "dedup", "multimodal", "similarity"):
+        assert f"dedoc_spark.operators.{name}" not in mods, name
+
+
+def _module_level_imports(tree):
+    """Modules imported by statements that run at import time (not inside
+    a function body)."""
+    stack = list(tree.body)
+    while stack:
+        node = stack.pop()
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)):
+            continue
+        if isinstance(node, ast.Import):
+            yield from (alias.name for alias in node.names)
+        elif isinstance(node, ast.ImportFrom):
+            yield node.module or ""
+        stack.extend(ast.iter_child_nodes(node))
+
+
+def test_core_and_the_operators_package_import_no_pandas():
+    init = ast.parse((PACKAGE / "operators" / "__init__.py").read_text(encoding="utf-8"))
+    assert len(init.body) == 1 and isinstance(init.body[0].value, ast.Constant), (
+        "operators/__init__.py keeps only its docstring: every import there "
+        "lands in each extraction worker"
+    )
+    offenders = []
+    for path in sorted((PACKAGE / "core").rglob("*.py")):
+        for module in _module_level_imports(ast.parse(path.read_text(encoding="utf-8"))):
+            if module.split(".")[0] == "pandas" or module.startswith("dedoc_spark.operators"):
+                offenders.append(f"{path.relative_to(PACKAGE)}: {module}")
+    assert offenders == []
 
 
 def _package_files():
