@@ -6,7 +6,7 @@ html_line_postprocessing.py:10-39.
 
 Reproduced behaviors (same dispatch order, same md5 uid chains, same
 html_tag assignment cascade):
-  - recursive block walk: service tags (script/style), comments, doctypes
+  - block walk: service tags (script/style), comments, doctypes
     dropped; block tags recurse; list tags synthesize textual markers;
     leaf text tags become single lines with inline span annotations;
   - headers h1..h6 → tag hierarchy level (1, n, False, "header");
@@ -33,12 +33,11 @@ import hashlib
 import string
 from typing import Dict, List, Optional, Tuple
 
-from dedoc_spark.core.dom import Comment, Doctype, Element, Node, Text, parse_html
+from dedoc_spark.core.dom import Element, Text, parse_html
 from dedoc_spark.core.model import Annotation, Cell, HierarchyLevel, Line, Table
 
 # --- tag taxonomy (html_tags.py:1-34) -------------------------------------
 
-SERVICE_TAGS = frozenset({"script", "style"})
 LIST_ITEMS = ("li", "dd", "dt")
 BLOCK_TAGS = frozenset(
     ["aside", "article", "body", "div", "blockquote", "footer", "header", "html",
@@ -73,6 +72,9 @@ PARAGRAPH_TAGS = frozenset({"p"}) | BLOCK_TAGS | set(LIST_ITEMS) | HEADER_TAGS
 AVAILABLE_TAGS = (
     BLOCK_TAGS | LIST_TAGS | HEADER_TAGS | TEXT_TAGS | set(SPECIAL_SYMBOL_TAGS) | PARAGRAPH_TAGS
 )
+# the available tags read as one line each: what the reference's
+# _handle_block leaves to _handle_single_tag
+LINE_TAGS = AVAILABLE_TAGS - BLOCK_TAGS - LIST_TAGS - set(SPECIAL_SYMBOL_TAGS)
 
 # alignment values accepted by the reference AlignmentAnnotation
 ALIGNMENT_VALUES = frozenset({"left", "right", "both", "center"})
@@ -85,24 +87,62 @@ def _md5(s: str) -> str:
 # --- inline annotation parser (html_tag_annotation_parser.py:21-128) ------
 
 
-def _parse_annotations(tag: Node, start: int = 0) -> Tuple[int, List[Annotation]]:
-    if isinstance(tag, str):
-        return len(tag), []
-    if tag.name not in TEXT_TAGS:
-        return 0, []
+def _inline_text(tag: Element) -> Tuple[str, List[Annotation]]:
+    """One walk over a text tag's subtree, with an explicit stack, for what
+    the reference reads in three (html_reader.py:202-223 and
+    html_tag_annotation_parser.py:21-128):
 
+      - every ``br`` is replaced by a ``"\\n"`` Text node in place, as
+        ``br.replace_with("\\n")`` does;
+      - the text is every Text node's, comments and doctypes excluded
+        (bs4 ``get_text``);
+      - the annotations: a text tag spans the length of its counted
+        children, and its children's annotations come first. Counted are
+        the str children (comments too) of a chain of text tags from
+        ``tag`` down; any other element counts 0 and adds no annotations,
+        though its text stays in the line.
+    """
+    children = tag.children
+    if len(children) == 1 and children[0].__class__ is Text:  # most tags: one text run
+        text = str(children[0])
+        return text, _element_annotations(tag, 0, len(text)) if tag.name in TEXT_TAGS else []
+    parts: List[str] = []
     annotations: List[Annotation] = []
-    curr_len = 0
-    for sub in tag:
-        part_len, part_ann = _parse_annotations(sub, start + curr_len)
-        annotations.extend(part_ann)
-        curr_len += part_len
+    pos = 0
+    el, counted, start, children, i = tag, tag.name in TEXT_TAGS, 0, tag.children, 0
+    open_elements = []  # the (el, counted, start, children, i) of el's ancestors
+    while True:
+        if i < len(children):
+            child = children[i]
+            i += 1
+            if child.__class__ is Element:
+                if child.name != "br":
+                    open_elements.append((el, counted, start, children, i))
+                    el, start, children, i = child, pos, child.children, 0
+                    counted = counted and el.name in TEXT_TAGS
+                    continue
+                child = children[i - 1] = Text("\n")
+            if child.__class__ is Text:
+                parts.append(child)
+            if counted:
+                pos += len(child)
+            continue
+        if counted:  # el is done: its annotations follow its children's
+            annotations.extend(_element_annotations(el, start, pos))
+        if not open_elements:
+            break
+        el, counted, start, children, i = open_elements.pop()
+    return "".join(parts), annotations
 
-    annotations.extend(_tag_annotations(tag, start, start + curr_len))
+
+def _element_annotations(tag: Element, start: int, end: int) -> List[Annotation]:
+    """A text tag's own annotations over [start, end): its tag's, then its
+    style attribute's."""
+    annotations = _tag_annotations(tag, start, end)
     style = tag.attrs.get("style")
     if style is not None:
-        annotations.extend(_parse_style_string(style, start, start + curr_len))
-    return curr_len, annotations
+        annotations = annotations + _parse_style_string(style, start, end)
+    return annotations
 
 
 def _tag_annotations(tag: Element, start: int, end: int) -> List[Annotation]:
@@ -118,7 +158,7 @@ def _tag_annotations(tag: Element, start: int, end: int) -> List[Annotation]:
     if name in SUBSCRIPT_TAGS:
         return [Annotation(start, end, "subscript", "True")]
     if name in LINK_TAGS:
-        return [Annotation(start, end, "linked_text", tag.get("href", ""))]
+        return [Annotation(start, end, "linked_text", tag.attrs.get("href", ""))]
     if name in STRIKE_TAGS:
         return [Annotation(start, end, "strike", "True")]
     return []
@@ -179,6 +219,10 @@ def _parse_font_size(value: str) -> Optional[str]:
 # --- the reader -------------------------------------------------------------
 
 
+# modes of the block walk's stack entries (HtmlExtractor._read_blocks)
+_TOP, _NESTED, _ITEM, _ITEM_END = 0, 1, 2, 3
+
+
 class HtmlExtractor:
     """Stateless per-document HTML extraction (one instance reusable across
     documents; all state is per-call)."""
@@ -190,14 +234,15 @@ class HtmlExtractor:
         file-content hash in uid chains (html_reader.py:38)."""
         warnings: List[str] = []
         root = parse_html(html)
+        visible: Dict[Element, bool] = {}
         lines = self._read_blocks(
-            root, url_hash, handle_invisible_table=handle_invisible_table
+            root, url_hash, visible, handle_invisible_table=handle_invisible_table
         )
         tables = []
-        for index, table_el in enumerate(root.find_all("table")):
-            if self._visible_table(table_el, handle_invisible_table):
+        for index, table_el in enumerate(root.tables):
+            if handle_invisible_table or self._visible_table(table_el, visible):
                 try:
-                    tables.append(self._read_table(table_el, url_hash, index))
+                    tables.append(self._read_table(table_el, url_hash, index, visible))
                 except Exception as e:  # hostile table structure: degrade, don't fail
                     warnings.append(f"table {index} skipped: {type(e).__name__}")
         self._postprocess(lines)
@@ -209,110 +254,94 @@ class HtmlExtractor:
         self,
         block: Element,
         url_hash: str,
+        visible: Dict[Element, bool],
         handle_invisible_table: bool = False,
         table: bool = False,
-        uid: str = "",
     ) -> List[Line]:
-        tag_uid = _md5(url_hash + uid + str(block.name))
-        if not self._is_content_tag(block, handle_invisible_table):
-            return []
+        """The reference's block walk under ``block`` (the document root or
+        a table cell) in one pass over an explicit stack, so the nesting
+        depth never reaches the interpreter's stack.
+
+        Each line is appended once, its ``html_tag`` set as it is made: the
+        name of the nearest enclosing element the reference hands to
+        ``_handle_block`` (None for text right under ``block``), or the
+        list's name for a list item's marker line. A list item's lines are
+        joined to its marker when its subtree is done. The uids follow the
+        reference's md5 chains: ``md5(uid + name)`` for each node handled,
+        then ``md5(url_hash + that + name)`` for a block's children.
+
+        ``handle_invisible_table`` and ``table`` apply to ``block``'s own
+        children only: the reference does not forward them into nested
+        blocks (html_reader.py:70)."""
         lines: List[Line] = []
-        for tag in block:
-            lines.extend(
-                self._handle_block(
-                    tag, url_hash, handle_invisible_table=handle_invisible_table,
-                    table=table, uid=tag_uid,
-                )
-            )
+        # (node, uid, html_tag, mode) where uid is the parent's uid and
+        # html_tag the name a text child's line takes. Mode _ITEM: node is a
+        # list item and html_tag its marker line. Mode _ITEM_END closes an
+        # item: node is its marker line and uid the index of its first line.
+        uid = _md5(url_hash + block.name)
+        stack = [(child, uid, None, _TOP) for child in reversed(block.children)]
+        while stack:
+            node, uid, html_tag, mode = stack.pop()
+            if mode == _ITEM_END:
+                item_lines = lines[uid:]
+                del lines[uid:]
+                self._join_list_item(node, item_lines, lines)
+                continue
+            if mode == _ITEM:
+                stack.append((html_tag, len(lines), None, _ITEM_END))
+            if node.__class__ is not Element:
+                if node.__class__ is Text and node.strip():  # comments, doctypes: nothing
+                    lines.append(self._make_line(node, _md5(_md5(uid + "None") + node), url_hash, html_tag))
+                continue
+            # the reference's _handle_block cascade; its branches take
+            # disjoint sets of names, so the most frequent goes first
+            name = node.name
+            if name in LINE_TAGS:
+                line = self._read_single_tag(node, url_hash, uid, table and mode == _TOP)
+                if line is not None:
+                    lines.append(line)
+            elif name in BLOCK_TAGS:
+                child_uid = _md5(url_hash + _md5(uid + name) + name)
+                stack.extend([(child, child_uid, name, _NESTED) for child in reversed(node.children)])
+            elif name in LIST_TAGS:
+                self._push_list_items(node, url_hash, _md5(uid + name), stack)
+            elif name == "table":
+                if not (handle_invisible_table and mode == _TOP) and not self._visible_table(node, visible):
+                    self._handle_invisible_table(node, url_hash, _md5(uid + name), visible, lines)
+            elif name in SPECIAL_SYMBOL_TAGS:
+                symbol = SPECIAL_SYMBOL_TAGS[name]
+                lines.append(self._make_line(symbol, _md5(_md5(uid + name) + symbol), url_hash, name))
+            # service tags (script, style) and any other name: no lines
         return lines
 
-    def _handle_block(
-        self,
-        tag: Node,
-        url_hash: str,
-        handle_invisible_table: bool,
-        table: bool = False,
-        uid: str = "",
-    ) -> List[Line]:
-        tag_uid = _md5(uid + str(tag.name))
-        if not self._is_content_tag(tag, handle_invisible_table):
-            block_lines: List[Line] = []
-        elif isinstance(tag, Element) and tag.name == "table" and not self._visible_table(
-            tag, handle_invisible_table
-        ):
-            block_lines = self._handle_invisible_table(tag, url_hash, tag_uid)
-        elif isinstance(tag, str):
-            block_lines = self._handle_text_line(tag, url_hash, tag_uid)
-        elif tag.name not in AVAILABLE_TAGS:
-            block_lines = []
-        elif tag.name in SPECIAL_SYMBOL_TAGS:
-            block_lines = self._handle_text_line(
-                SPECIAL_SYMBOL_TAGS[tag.name], url_hash, tag_uid, ignore_space=False
-            )
-        elif tag.name in BLOCK_TAGS:
-            # NOTE: the reference does not forward handle_invisible_table /
-            # table into nested blocks (html_reader.py:70) — kept as-is.
-            block_lines = self._read_blocks(tag, url_hash, uid=tag_uid)
-        elif tag.name in LIST_TAGS:
-            block_lines = self._read_list(tag, tag_uid, url_hash, handle_invisible_table)
-        else:
-            block_lines = self._handle_single_tag(tag, url_hash, tag_uid, table)
-
-        tag_name = tag.name if isinstance(tag, Element) else None
-        for line in block_lines:
-            if not line.extras.get("html_tag"):
-                line.extras["html_tag"] = tag_name
-        return block_lines
-
-    def _handle_single_tag(
-        self, tag: Element, url_hash: str, uid: str, table: bool = False
-    ) -> List[Line]:
-        text = self._get_text(tag, table)
+    def _read_single_tag(self, tag: Element, url_hash: str, uid: str, table: bool) -> Optional[Line]:
+        """A text or header tag as one line; ``uid`` is its parent's."""
+        text, annotations = _inline_text(tag)
+        if tag.name == "p" and not table:
+            text += "\n"
         if not text or text.isspace():
-            return []
-        annotations = _parse_annotations(tag)[1]
+            return None
         header_level = int(tag.name[1:]) if tag.name in HEADER_TAGS else 0
-        line_type = HierarchyLevel.unknown if header_level == 0 else HierarchyLevel.header
-        tag_uid = _md5(uid + text)
-        line = self._make_line(text, line_type, header_level, tag_uid, url_hash, annotations)
-        line.extras["html_tag"] = tag.name
-        return [line]
-
-    def _handle_text_line(
-        self, block: str, url_hash: str, uid: str, ignore_space: bool = True
-    ) -> List[Line]:
-        if not block.strip() and ignore_space:
-            return []
-        tag_uid = _md5(uid + block)
-        return [self._make_line(block, HierarchyLevel.unknown, 0, tag_uid, url_hash)]
+        line_uid = _md5(_md5(uid + tag.name) + text)
+        return self._make_line(text, line_uid, url_hash, tag.name, header_level, annotations)
 
     @staticmethod
     def _make_line(
         line: str,
-        line_type: str,
+        uid: str,
+        url_hash: str,
+        html_tag: Optional[str],
         header_level: int = 0,
-        uid: str = "",
-        url_hash: str = "",
         annotations: Optional[List[Annotation]] = None,
     ) -> Line:
-        tag_hl = (
-            None
-            if header_level == 0
-            else HierarchyLevel(1, header_level, False, line_type)
-        )
-        return Line(
-            line=line,
-            page_id=0,
-            line_id=None,
-            tag_hl=tag_hl,
-            annotations=annotations or [],
-            uid=f"{url_hash}_{uid}",
-        )
+        tag_hl = None if header_level == 0 else HierarchyLevel(1, header_level, False, HierarchyLevel.header)
+        # Line(line, page_id, line_id, tag_hl, hl, annotations, uid, extras)
+        return Line(line, 0, None, tag_hl, None, annotations or [], f"{url_hash}_{uid}", {"html_tag": html_tag})
 
     # -- lists (html_reader.py:138-200) -------------------------------------
 
     @staticmethod
-    def _li_marker(list_type: str, index: int) -> Line:
+    def _li_marker(list_type: str, index: int, html_tag: str) -> Line:
         end = ") " if list_type in ("a", "A") else ". "
         if list_type == "":
             header = ""
@@ -330,87 +359,51 @@ class HtmlExtractor:
             page_id=0,
             line_id=0,
             tag_hl=HierarchyLevel(2, 1, False, HierarchyLevel.list_item),
+            extras={"html_tag": html_tag},
         )
 
-    def _read_list(
-        self, lst: Element, uid: str, url_hash: str, handle_invisible_table: bool
-    ) -> List[Line]:
-        tag_uid = _md5(uid + str(lst.name))
-        lines: List[Line] = []
-        list_type = lst.get("type", "1" if lst.name in ORDERED_LIST else "")
-        item_index = 0
-        for item in lst:
-            if isinstance(item, Element) and item.name in LIST_ITEMS:
-                lines.extend(
-                    self._handle_list_item(
-                        item, item_index, list_type, url_hash, tag_uid, handle_invisible_table
-                    )
-                )
-                item_index += 1
-        return lines
+    def _push_list_items(self, lst: Element, url_hash: str, uid: str, stack: list) -> None:
+        """Queue ``lst``'s li/dd/dt children for the block walk, each with
+        its marker line; any other child of a list is skipped."""
+        list_uid = _md5(uid + lst.name)
+        list_type = lst.attrs.get("type", "1" if lst.name in ORDERED_LIST else "")
+        items = [item for item in lst.children if isinstance(item, Element) and item.name in LIST_ITEMS]
+        for index in range(len(items) - 1, -1, -1):
+            item_uid = _md5(list_uid + items[index].name)
+            marker = self._li_marker(list_type, index, lst.name)
+            # deterministic replacement for the reference's uuid1 marker uid
+            marker.uid = f"{url_hash}_{_md5(item_uid + f'li#{index}')}"
+            stack.append((items[index], item_uid, marker, _ITEM))
 
-    def _handle_list_item(
-        self,
-        item: Element,
-        item_index: int,
-        list_type: str,
-        url_hash: str,
-        uid: str,
-        handle_invisible_table: bool,
-    ) -> List[Line]:
-        tag_uid = _md5(uid + str(item.name))
-        lines: List[Line] = []
-        header_line = self._li_marker(list_type, item_index)
-        # deterministic replacement for the reference's uuid1 marker uid
-        header_line.uid = f"{url_hash}_{_md5(tag_uid + f'li#{item_index}')}"
-        block_lines = self._handle_block(
-            item, url_hash, handle_invisible_table=handle_invisible_table, uid=tag_uid
-        )
-        hl_depth = header_line.tag_hl.level_1
-        for line in block_lines:
+    @staticmethod
+    def _join_list_item(marker: Line, item_lines: List[Line], lines: List[Line]) -> None:
+        """Append a list item's lines to ``lines``: plain lines join the
+        marker (or the last nested line), nested list items and headers
+        start a new line two levels deeper."""
+        header_line = marker
+        hl_depth = marker.tag_hl.level_1
+        for line in item_lines:
             if line.tag_hl.is_unknown():
                 header_line = header_line.concat(line)
             else:
-                # nested lists / headers inside the item
                 lines.append(header_line)
                 line.tag_hl.level_1 += hl_depth
                 header_line = line
         lines.append(header_line)
-        return lines
-
-    # -- text & content predicates (html_reader.py:202-223) -----------------
-
-    @staticmethod
-    def _get_text(tag: Element, table: bool = False) -> str:
-        tag.replace_brs_with_newlines()
-        text = tag.get_text() + "\n" if tag.name == "p" and not table else tag.get_text()
-        return "" if text is None else text
-
-    def _is_content_tag(self, tag: Node, handle_invisible_table: bool = False) -> bool:
-        if isinstance(tag, Element):
-            if tag.name in SERVICE_TAGS:
-                return False
-            if tag.name == "table" and not self._visible_table(tag, handle_invisible_table):
-                return True
-            return True
-        return not isinstance(tag, (Doctype, Comment))
 
     # -- tables (html_reader.py:225-314) -------------------------------------
 
-    def _handle_invisible_table(self, block: Element, url_hash: str, uid: str) -> List[Line]:
-        result: List[Line] = []
+    def _handle_invisible_table(
+        self, block: Element, url_hash: str, uid: str, visible: Dict[Element, bool], lines: List[Line]
+    ) -> None:
         try:
-            rows = self._read_table(block, url_hash, 0).cells
+            rows = self._read_table(block, url_hash, 0, visible).cells
         except Exception:
-            return []
+            return
         for row in rows:
             text = "\t".join(cell.get_text() for cell in row)
             if text.strip() != "":
-                tag_uid = _md5(uid + text)
-                result.append(
-                    self._make_line(text, HierarchyLevel.unknown, 0, tag_uid, url_hash)
-                )
-        return result
+                lines.append(self._make_line(text, _md5(uid + text), url_hash, "table"))
 
     @staticmethod
     def _clone_cell(el: Element) -> Element:
@@ -427,9 +420,13 @@ class HtmlExtractor:
         except (TypeError, ValueError):
             return 1
 
-    def _split_table_cells(self, table: Element, table_list: List[List[Element]]) -> None:
-        for row_index, row in enumerate(table.find_all(TABLE_ROWS)):
-            for cell_index, cell in enumerate(row.find_all(TABLE_CELLS)):
+    def _fix_table(self, table: Element) -> List[List[Element]]:
+        """The table's cells row by row, a merged cell repeated as an
+        invisible clone in every further slot it covers."""
+        rows = [row.find_all(TABLE_CELLS) for row in table.find_all(TABLE_ROWS)]
+        table_list = [list(cells) for cells in rows]
+        for row_index, cells in enumerate(rows):
+            for cell_index, cell in enumerate(cells):
                 cell_rowspan = self._int_attr(cell, "rowspan")
                 cell_colspan = self._int_attr(cell, "colspan")
                 if cell_rowspan > 1 or cell_colspan > 1:
@@ -439,20 +436,16 @@ class HtmlExtractor:
                     )
                     for index in range(row_index + 1, min(row_index + cell_rowspan, len(table_list))):
                         table_list[index][cell_index:cell_index] = [cell_copy] * cell_colspan
-
-    def _fix_table(self, table: Element) -> List[List[Element]]:
-        table_list = [list(row.find_all(TABLE_CELLS)) for row in table.find_all(TABLE_ROWS)]
-        self._split_table_cells(table, table_list)
         return table_list
 
-    def _read_table(self, table: Element, url_hash: str, index: int) -> Table:
+    def _read_table(self, table: Element, url_hash: str, index: int, visible: Dict[Element, bool]) -> Table:
         cells_with_meta: List[List[Cell]] = []
         for row in self._fix_table(table):
             row_cells = []
             for cell in row:
                 row_cells.append(
                     Cell(
-                        lines=self._read_blocks(cell, url_hash, table=True),
+                        lines=self._read_blocks(cell, url_hash, visible, table=True),
                         colspan=self._int_attr(cell, "colspan"),
                         rowspan=self._int_attr(cell, "rowspan"),
                         invisible=bool(cell.hidden),
@@ -464,23 +457,27 @@ class HtmlExtractor:
         return Table(cells=cells_with_meta, page_id=0, uid=uid)
 
     @staticmethod
-    def _visible_table(table: Element, handle_invisible_table: bool) -> bool:
-        if handle_invisible_table:
-            return True
-        for td in table.find_all("td"):
-            style = td.attrs.get("style", "")
-            if "border-bottom-style:solid" in style or "border-top-style:solid" in style:
-                return True
-        return table.attrs.get("border", "0") != "0"
+    def _visible_table(table: Element, visible: Dict[Element, bool]) -> bool:
+        """A table with a ``border`` other than "0", or a td styled with a
+        solid top or bottom border, is read as a table; other tables are
+        flattened to lines. Worked out once per table element."""
+        seen = visible.get(table)
+        if seen is None:
+            seen = visible[table] = table.attrs.get("border", "0") != "0" or any(
+                "border-bottom-style:solid" in style or "border-top-style:solid" in style
+                for style in (td.attrs.get("style", "") for td in table.find_all("td"))
+            )
+        return seen
 
     # -- postprocess (html_line_postprocessing.py:10-39) --------------------
 
     @staticmethod
     def _postprocess(lines: List[Line]) -> None:
-        for line, next_line in zip(lines[:-1], lines[1:]):
-            next_tag = next_line.extras.get("html_tag")
-            if not line.line.endswith("\n") and next_tag in PARAGRAPH_TAGS:
-                line.line = line.line + "\n"
         for line_id, line in enumerate(lines):
-            line.line = line.line.replace("\xa0", " ")
+            text = line.line
+            # a line followed by a paragraph tag ends in "\n"
+            if line_id + 1 < len(lines) and lines[line_id + 1].extras.get("html_tag") in PARAGRAPH_TAGS:
+                if not text.endswith("\n"):
+                    text = text + "\n"
+            line.line = text.replace("\xa0", " ")
             line.line_id = line_id

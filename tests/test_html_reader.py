@@ -289,29 +289,39 @@ def test_unmatched_end_tags_parse_in_linear_time():
     """``<b>``×n then ``</i>``×n: no end tag matches an open element, so
     each one must be ignored in O(1), not after a scan of the n-deep open
     stack (that scan made 54 KB take seconds). Doubling the input may at
-    most 2.5× the time; the tree builder's share stays a small multiple of
-    html.parser's own tokenizing time."""
+    most 2.5× the time, and building the whole tree may take no longer
+    than stdlib html.parser takes just to tokenize the same text. The four
+    timings take turns, so a slow spell of a shared host hits them all
+    alike; each is the best of 9, with the cyclic GC off (a full
+    collection's cost depends on the whole process's heap) and the tree
+    freed outside the timed call."""
+    import gc
     import time
     from html.parser import HTMLParser
-
-    def best(fn, doc):
-        times = []
-        for _ in range(5):
-            t0 = time.perf_counter()
-            fn(doc)
-            times.append(time.perf_counter() - t0)
-        return min(times)
 
     def tokenize(doc):
         parser = HTMLParser()
         parser.feed(doc)
         parser.close()
+        return parser
 
     docs = ["<b>" * n + "</i>" * n for n in (4000, 8000, 16000)]  # 28, 56, 112 KB
-    times = [best(parse_html, doc) for doc in docs]
+    runs = [(parse_html, doc) for doc in docs] + [(tokenize, docs[-1])]
+    best = [float("inf")] * len(runs)
+    gc.disable()
+    try:
+        for _ in range(9):
+            for k, (fn, doc) in enumerate(runs):
+                t0 = time.perf_counter()
+                out = fn(doc)
+                best[k] = min(best[k], time.perf_counter() - t0)
+                del out
+    finally:
+        gc.enable()
+    times, stdlib = best[:3], best[3]
     for small, big in zip(times, times[1:]):
-        assert big <= 2.5 * small, times
-    assert times[-1] <= 3 * best(tokenize, docs[-1]), times
+        assert big <= 2.5 * small, best
+    assert times[-1] <= stdlib, best
     # the ignored end tags leave the n nested <b> in place
     node, depth = parse_html(docs[0]), 0
     while node.children:

@@ -149,6 +149,39 @@ def test_arrow_output_matches_plain_function_on_edge_rows(spark, params):
     assert unicodedata.normalize("NFC", ODD_TEXT) in got["https://e.example/odd.txt"]["text_extracted"]
 
 
+DEPTH = 2000
+DEEP_PAGES = [
+    ("https://deep.example/div.html", "<body>" + "<div>" * DEPTH + "deep text" + "</div>" * DEPTH + "</body>"),
+    ("https://deep.example/b.html", "<body><p>" + "<b>" * DEPTH + "deep bold" + "</b>" * DEPTH + "</p></body>"),
+    (
+        "https://deep.example/colspan.html",
+        "<body><table border='1'><tr><td colspan='2'>" + "<div>" * DEPTH + "cell text" + "</div>" * DEPTH
+        + "</td></tr><tr><td>x</td><td>y</td></tr></table></body>",
+    ),
+]
+
+
+def test_deep_html_gives_the_same_content_row_on_every_path(spark):
+    """Nesting 2,000 deep (blocks, inline tags, a merged cell's subtree)
+    is content, not a RecursionError row, and the row does not depend on
+    the caller's stack: extract_document and a Python worker of
+    extract_stage give the same bytes."""
+    df = spark.createDataFrame(
+        [(url, bytearray(html.encode()), None) for url, html in DEEP_PAGES],
+        "url string, html binary, text string",
+    ).coalesce(1)
+    out = extract_stage(df)
+    got = _rows_by_url(out)
+    for url, html in DEEP_PAGES:
+        want = extract_document(url, html.encode(), None)
+        assert want["error"] is None and want["warnings"] == [], url
+        assert got[url] == {c: want.get(c) for c in out.columns}, url
+    assert "deep text" in got["https://deep.example/div.html"]["text_extracted"]
+    assert "deep bold" in got["https://deep.example/b.html"]["text_extracted"]
+    cells = json.loads(got["https://deep.example/colspan.html"]["tables_json"])[0]["cells"]
+    assert [[c["lines"][0]["line"] for c in row] for row in cells] == [["cell text", "cell text"], ["x", "y"]]
+
+
 STR, I32 = pa.string(), pa.int32()
 LIST = pa.list_(pa.field("element", pa.string()))
 
