@@ -18,6 +18,7 @@ from functools import partial
 from typing import Callable, Dict, List, Optional, Sequence
 
 from dedoc_spark.core.html_extract import HtmlExtractor
+from dedoc_spark.core.limits import ResourceLimit
 from dedoc_spark.core.model import Line, lines_json, param_flag, select_pages, tables_json
 from dedoc_spark.core.structure import assign_hierarchy_levels
 from dedoc_spark.core.tree import construct_tree, flatten_tree, tree_to_text
@@ -591,6 +592,8 @@ def extract_document(
                 return retry
             return _error_row(url, f"needs_conversion:{fmt}", warnings=[f"native parse failed: {e}"])
         return _finalize(url, lines, tables, warnings, params)
+    except ResourceLimit as e:  # past a fixed budget: the same row on every path
+        return _error_row(url, str(e))
     except Exception as e:  # error channel, never job failure
         if html:
             retry = _content_resniff(url, html, fmt, params)

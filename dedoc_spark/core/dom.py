@@ -31,6 +31,8 @@ import re
 from html import unescape
 from typing import Dict, List, Optional, Tuple, Union
 
+from dedoc_spark.core.limits import MAX_HTML_DEPTH, ResourceLimit
+
 # bs4.builder.HTMLTreeBuilder.empty_element_tags (public knowledge: the
 # HTML5 void element list + historical additions)
 VOID_TAGS = frozenset(
@@ -264,7 +266,9 @@ def _markup(text: str, i: int) -> Tuple[int, int, object]:
 
 
 def parse_html(data: Union[bytes, str]) -> Document:
-    """Parse HTML bytes/str into a DOM rooted at a ``[document]`` element."""
+    """Parse HTML bytes/str into a DOM rooted at a ``[document]`` element.
+    Raises ResourceLimit("depth") once more than MAX_HTML_DEPTH elements
+    are open at once."""
     text = decode_html(data) if isinstance(data, bytes) else data
     root = Document()
     tables = root.tables
@@ -309,6 +313,8 @@ def parse_html(data: Union[bytes, str]) -> Document:
                 if name == "table":
                     tables.append(el)
                 if not self_closing and name not in VOID_TAGS:
+                    if len(stack) > MAX_HTML_DEPTH:
+                        raise ResourceLimit("depth")
                     stack.append(el)
                     kids = el.children
                     open_count[name] = open_count.get(name, 0) + 1

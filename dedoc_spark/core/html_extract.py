@@ -262,36 +262,38 @@ class HtmlExtractor:
         a table cell) in one pass over an explicit stack, so the nesting
         depth never reaches the interpreter's stack.
 
-        Each line is appended once, its ``html_tag`` set as it is made: the
+        Each line is added once, its ``html_tag`` set as it is made: the
         name of the nearest enclosing element the reference hands to
         ``_handle_block`` (None for text right under ``block``), or the
-        list's name for a list item's marker line. A list item's lines are
-        joined to its marker when its subtree is done. The uids follow the
-        reference's md5 chains: ``md5(uid + name)`` for each node handled,
-        then ``md5(url_hash + that + name)`` for a block's children.
+        list's name for a list item's marker line. Inside list items it is
+        joined as ``_add_line`` says. The uids follow the reference's md5
+        chains: ``md5(uid + name)`` for each node handled, then
+        ``md5(url_hash + that + name)`` for a block's children.
 
         ``handle_invisible_table`` and ``table`` apply to ``block``'s own
         children only: the reference does not forward them into nested
         blocks (html_reader.py:70)."""
         lines: List[Line] = []
+        items = 0  # list items open around the node being read
         # (node, uid, html_tag, mode) where uid is the parent's uid and
         # html_tag the name a text child's line takes. Mode _ITEM: node is a
         # list item and html_tag its marker line. Mode _ITEM_END closes an
-        # item: node is its marker line and uid the index of its first line.
+        # item.
         uid = _md5(url_hash + block.name)
         stack = [(child, uid, None, _TOP) for child in reversed(block.children)]
         while stack:
             node, uid, html_tag, mode = stack.pop()
             if mode == _ITEM_END:
-                item_lines = lines[uid:]
-                del lines[uid:]
-                self._join_list_item(node, item_lines, lines)
+                items -= 1
                 continue
             if mode == _ITEM:
-                stack.append((html_tag, len(lines), None, _ITEM_END))
+                self._add_line(lines, html_tag, items)
+                items += 1
+                stack.append((None, None, None, _ITEM_END))
             if node.__class__ is not Element:
                 if node.__class__ is Text and node.strip():  # comments, doctypes: nothing
-                    lines.append(self._make_line(node, _md5(_md5(uid + "None") + node), url_hash, html_tag))
+                    line = self._make_line(node, _md5(_md5(uid + "None") + node), url_hash, html_tag)
+                    self._add_line(lines, line, items)
                 continue
             # the reference's _handle_block cascade; its branches take
             # disjoint sets of names, so the most frequent goes first
@@ -299,7 +301,7 @@ class HtmlExtractor:
             if name in LINE_TAGS:
                 line = self._read_single_tag(node, url_hash, uid, table and mode == _TOP)
                 if line is not None:
-                    lines.append(line)
+                    self._add_line(lines, line, items)
             elif name in BLOCK_TAGS:
                 child_uid = _md5(url_hash + _md5(uid + name) + name)
                 stack.extend([(child, child_uid, name, _NESTED) for child in reversed(node.children)])
@@ -307,12 +309,28 @@ class HtmlExtractor:
                 self._push_list_items(node, url_hash, _md5(uid + name), stack)
             elif name == "table":
                 if not (handle_invisible_table and mode == _TOP) and not self._visible_table(node, visible):
-                    self._handle_invisible_table(node, url_hash, _md5(uid + name), visible, lines)
+                    for line in self._invisible_table_lines(node, url_hash, _md5(uid + name), visible):
+                        self._add_line(lines, line, items)
             elif name in SPECIAL_SYMBOL_TAGS:
                 symbol = SPECIAL_SYMBOL_TAGS[name]
-                lines.append(self._make_line(symbol, _md5(_md5(uid + name) + symbol), url_hash, name))
+                line = self._make_line(symbol, _md5(_md5(uid + name) + symbol), url_hash, name)
+                self._add_line(lines, line, items)
             # service tags (script, style) and any other name: no lines
         return lines
+
+    @staticmethod
+    def _add_line(lines: List[Line], line: Line, items: int) -> None:
+        """Add ``line`` read inside ``items`` open list items as the
+        reference's item join leaves it (html_reader.py:138-160): a plain
+        line joins the line before it, which is the item's marker or the
+        last nested marker or header; any other line goes two levels
+        deeper per open item."""
+        if items:
+            if line.tag_hl.is_unknown():
+                lines[-1] = lines[-1].concat(line)
+                return
+            line.tag_hl.level_1 += 2 * items
+        lines.append(line)
 
     def _read_single_tag(self, tag: Element, url_hash: str, uid: str, table: bool) -> Optional[Line]:
         """A text or header tag as one line; ``uid`` is its parent's."""
@@ -375,35 +393,22 @@ class HtmlExtractor:
             marker.uid = f"{url_hash}_{_md5(item_uid + f'li#{index}')}"
             stack.append((items[index], item_uid, marker, _ITEM))
 
-    @staticmethod
-    def _join_list_item(marker: Line, item_lines: List[Line], lines: List[Line]) -> None:
-        """Append a list item's lines to ``lines``: plain lines join the
-        marker (or the last nested line), nested list items and headers
-        start a new line two levels deeper."""
-        header_line = marker
-        hl_depth = marker.tag_hl.level_1
-        for line in item_lines:
-            if line.tag_hl.is_unknown():
-                header_line = header_line.concat(line)
-            else:
-                lines.append(header_line)
-                line.tag_hl.level_1 += hl_depth
-                header_line = line
-        lines.append(header_line)
-
     # -- tables (html_reader.py:225-314) -------------------------------------
 
-    def _handle_invisible_table(
-        self, block: Element, url_hash: str, uid: str, visible: Dict[Element, bool], lines: List[Line]
-    ) -> None:
+    def _invisible_table_lines(
+        self, block: Element, url_hash: str, uid: str, visible: Dict[Element, bool]
+    ) -> List[Line]:
+        """A border-less table as one tab-joined line per non-blank row."""
         try:
             rows = self._read_table(block, url_hash, 0, visible).cells
         except Exception:
-            return
+            return []
+        lines = []
         for row in rows:
             text = "\t".join(cell.get_text() for cell in row)
             if text.strip() != "":
                 lines.append(self._make_line(text, _md5(uid + text), url_hash, "table"))
+        return lines
 
     @staticmethod
     def _clone_cell(el: Element) -> Element:

@@ -13,8 +13,12 @@ Reproduced behaviors:
     (annotations shifted), otherwise pop while tree.hl >= line.hl and add
     a child; node_id is the dotted path f"{parent}.{index}";
   - annotation merge applied to every node post-construction;
-  - json2txt: text = f"{node.text}\\n{join(children)}" (recursive), which
-    *is* the per-url extracted-text definition for byte identity.
+  - json2txt: text = f"{node.text}\\n{join(children)}" (recursive in the
+    reference), which *is* the per-url extracted-text definition for byte
+    identity.
+
+Every walk here uses an explicit stack, so a tree of any depth renders
+the same whatever the caller's stack.
 """
 
 from __future__ import annotations
@@ -164,30 +168,53 @@ def _merge_tree_annotations(root: TreeNode) -> None:
 
 
 def tree_to_text(node: TreeNode) -> str:
-    """json2txt semantics (api_utils.py:271-274): recursive '\\n' join; note
-    the unconditional trailing newline after each node's text."""
-    sub = "\n".join(tree_to_text(child) for child in node.subparagraphs)
-    return f"{node.text}\n{sub}"
+    """json2txt semantics (api_utils.py:271-274): a node's text, "\\n", then
+    its children's texts joined by "\\n"; note the unconditional trailing
+    newline after each node's text. Written in pre-order: every node but a
+    first child starts with the "\\n" that separates it from its sibling."""
+    parts: List[str] = []
+    stack = [(node, "")]
+    while stack:
+        n, sep = stack.pop()
+        parts.append(f"{sep}{n.text}\n")
+        kids = n.subparagraphs
+        if kids:
+            for kid in reversed(kids):
+                stack.append((kid, "\n"))
+            stack[-1] = (kids[0], "")
+    return "".join(parts)
 
 
 def flatten_tree(node: TreeNode) -> Tuple[str, str]:
     """One walk: (tree_json, nodes_json), each node's text encoded once. tree_json
     nests {node_id, text, annotations, metadata: {paragraph_type, page_id,
     line_id}, subparagraphs}; nodes_json, the flat view, lists {node_id,
-    parent_id, depth, paragraph_type, text, n_annotations} in pre-order."""
+    parent_id, depth, paragraph_type, text, n_annotations} in pre-order.
+
+    Both are written in pre-order. A node's subparagraphs list stays open
+    until the walk comes back up past its depth, so the "]}" that close it
+    are written then."""
     nodes: List[str] = []
-    return _node_json(node, "null", nodes), "[" + ", ".join(nodes) + "]"
-
-
-def _node_json(n: TreeNode, parent_id: str, nodes: List[str]) -> str:
-    node_id, text, ptype = json_value(n.node_id), json_value(n.text), json_value(n.hl.line_type)
-    nodes.append(
-        f'{{"node_id": {node_id}, "parent_id": {parent_id}, "depth": {n.node_id.count(".")}, '
-        f'"paragraph_type": {ptype}, "text": {text}, "n_annotations": {len(n.annotations)}}}'
-    )
-    children = ", ".join([_node_json(c, node_id, nodes) for c in n.subparagraphs])
-    return (
-        f'{{"node_id": {node_id}, "text": {text}, "annotations": {annotations_json(n.annotations)}, '
-        f'"metadata": {{"paragraph_type": {ptype}, "page_id": {json_value(n.page_id)}, '
-        f'"line_id": {json_value(n.line_id)}}}, "subparagraphs": [{children}]}}'
-    )
+    tree: List[str] = []
+    stack = [(node, "null")]  # (node, its parent's node_id JSON)
+    last = -1  # depth of the node written last
+    while stack:
+        n, parent_id = stack.pop()
+        node_id, text, ptype = json_value(n.node_id), json_value(n.text), json_value(n.hl.line_type)
+        depth = n.node_id.count(".")
+        if depth <= last:  # not the first child of the node written last
+            tree.append("]}" * (last - depth + 1) + ", ")
+        last = depth
+        nodes.append(
+            f'{{"node_id": {node_id}, "parent_id": {parent_id}, "depth": {depth}, '
+            f'"paragraph_type": {ptype}, "text": {text}, "n_annotations": {len(n.annotations)}}}'
+        )
+        tree.append(
+            f'{{"node_id": {node_id}, "text": {text}, "annotations": {annotations_json(n.annotations)}, '
+            f'"metadata": {{"paragraph_type": {ptype}, "page_id": {json_value(n.page_id)}, '
+            f'"line_id": {json_value(n.line_id)}}}, "subparagraphs": ['
+        )
+        for kid in reversed(n.subparagraphs):
+            stack.append((kid, node_id))
+    tree.append("]}" * (last + 1))
+    return "".join(tree), "[" + ", ".join(nodes) + "]"

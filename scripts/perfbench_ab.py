@@ -2,14 +2,15 @@
 
 Usage, from anywhere:
 
-    python3 scripts/perfbench_ab.py --parent DIR --change DIR --workload web_pages [--seed 1] [--pairs 10] [--claim docs_per_s] [--out FILE]
+    python3 scripts/perfbench_ab.py --parent DIR --change DIR --workload web_pages [--seed 1] [--pairs 10] [--claim docs_per_s]
 
 Each pair runs ``python3 perfbench/run.py --workload W --seed S --trace 0``
 once in each checkout, one after the other; the parent goes first in even
 pairs and the change in odd ones. The last JSON line of each run is its
-result. For every end-to-end metric of ``BENCHMARK.json`` (read from the
-change's checkout) the summary prints each side's median and quartiles and
-how many pairs the change won, by the metric's ``better`` direction. It
+result, printed as it comes on a ``pair K SIDE: {...}`` line. For every
+end-to-end metric of ``BENCHMARK.json`` (read from the change's checkout)
+the summary prints each side's median and quartiles and how many pairs
+the change won, by the metric's ``better`` direction. It
 then says whether the claimed metric passes the claim rule — the change
 wins at least 9 of 10 pairs and the medians lie further apart than the
 parent's quartiles — and whether every other metric stays within its
@@ -101,7 +102,6 @@ def main(argv=None) -> int:
     ap.add_argument("--seed", type=int, default=1)
     ap.add_argument("--pairs", type=int, default=10)
     ap.add_argument("--claim", default="docs_per_s", help="the end-to-end metric the change claims to improve")
-    ap.add_argument("--out", help="write every pair's two results to this JSON file")
     args = ap.parse_args(argv)
 
     with open(os.path.join(args.change, "BENCHMARK.json")) as f:
@@ -112,11 +112,8 @@ def main(argv=None) -> int:
         pair = {}
         for side in SIDES if k % 2 == 0 else SIDES[::-1]:
             pair[side] = run_once(dirs[side], args.workload, args.seed)
-            print(f"pair {k} {side}: " + json.dumps({m: v["value"] for m, v in pair[side]["metrics"].items()}), flush=True)
+            print(f"pair {k} {side}: " + json.dumps(pair[side]), flush=True)
         pairs.append(pair)
-        if args.out:
-            with open(args.out, "w") as f:
-                json.dump(pairs, f, indent=1)
 
     lines, claim_holds, bounds_hold = summarize(pairs, end_to_end, args.claim)
     print(f"{args.workload} seed {args.seed}, {len(pairs)} pairs:")

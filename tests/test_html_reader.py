@@ -5,9 +5,12 @@ reference corpus, no copied files)."""
 
 import json
 
+import pytest
+
 from dedoc_spark.core.document import extract_html_document
 from dedoc_spark.core.html_extract import HtmlExtractor
-from dedoc_spark.core.dom import parse_html
+from dedoc_spark.core.dom import Text, parse_html
+from dedoc_spark.core.limits import MAX_HTML_DEPTH, ResourceLimit
 
 
 def tree_of(doc):
@@ -286,11 +289,12 @@ def test_dom_end_tag_mismatch_ignored():
 
 
 def test_unmatched_end_tags_parse_in_linear_time():
-    """``<b>``×n then ``</i>``×n: no end tag matches an open element, so
-    each one must be ignored in O(1), not after a scan of the n-deep open
-    stack (that scan made 54 KB take seconds). Doubling the input may at
-    most 2.5× the time, and building the whole tree may take no longer
-    than stdlib html.parser takes just to tokenize the same text. The four
+    """2,000 open ``<b>`` then ``</i>``×n: no end tag matches an open
+    element, so each one must be ignored in O(1), not after a scan of the
+    open stack (that scan made 54 KB take seconds when the stack could be
+    as deep as the input). Doubling n may at most 2.5× the time, and
+    building the whole tree may take no longer than stdlib html.parser
+    takes just to tokenize the same text. The four
     timings take turns, so a slow spell of a shared host hits them all
     alike; each is the best of 9, with the cyclic GC off (a full
     collection's cost depends on the whole process's heap) and the tree
@@ -305,7 +309,7 @@ def test_unmatched_end_tags_parse_in_linear_time():
         parser.close()
         return parser
 
-    docs = ["<b>" * n + "</i>" * n for n in (4000, 8000, 16000)]  # 28, 56, 112 KB
+    docs = ["<b>" * 2000 + "</i>" * n for n in (7000, 14000, 28000)]  # 34, 62, 118 KB
     runs = [(parse_html, doc) for doc in docs] + [(tokenize, docs[-1])]
     best = [float("inf")] * len(runs)
     gc.disable()
@@ -327,4 +331,18 @@ def test_unmatched_end_tags_parse_in_linear_time():
     while node.children:
         (node,) = node.children
         depth += 1
-    assert depth == 4000 and node.name == "b"
+    assert depth == 2000 and node.name == "b"
+
+
+def test_nesting_past_the_depth_limit_stops_the_parse():
+    """MAX_HTML_DEPTH elements may be open at once; the next start tag
+    stops the parse. Void, self-closed and closed elements do not count."""
+    node, depth = parse_html("<div>" * MAX_HTML_DEPTH + "x"), 0
+    while node.children[0].__class__ is not Text:
+        (node,) = node.children
+        depth += 1
+    assert depth == MAX_HTML_DEPTH
+    for html in ("<div>" * (MAX_HTML_DEPTH + 1), "<b>" * 16000 + "</i>" * 16000):
+        with pytest.raises(ResourceLimit, match="^resource_limit:depth$"):
+            parse_html(html)
+    parse_html("<div>" * (MAX_HTML_DEPTH - 1) + "<br><img/><b></b><script>s</script>" * 5000)

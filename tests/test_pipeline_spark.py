@@ -4,6 +4,7 @@ Key invariant: the Spark path produces byte-identical output to the plain
 function path, and the same output at any parallelism/partitioning."""
 
 import json
+import time
 import unicodedata
 
 import pyarrow as pa
@@ -158,12 +159,19 @@ DEEP_PAGES = [
         "<body><table border='1'><tr><td colspan='2'>" + "<div>" * DEPTH + "cell text" + "</div>" * DEPTH
         + "</td></tr><tr><td>x</td><td>y</td></tr></table></body>",
     ),
+    # each list level is two document-tree levels: the tree walks go as deep
+    ("https://deep.example/ul.html", "<ul><li>item" * (DEPTH // 2)),
+]
+# nesting past MAX_HTML_DEPTH: a list 20,000 deep (180 KB) and a block
+LIMIT_PAGES = [
+    ("https://deep.example/ul20k.html", "<body>" + "<ul><li>a" * 20_000),
+    ("https://deep.example/div20k.html", "<div>" * 20_000 + "x" + "</div>" * 20_000),
 ]
 
 
 def test_deep_html_gives_the_same_content_row_on_every_path(spark):
-    """Nesting 2,000 deep (blocks, inline tags, a merged cell's subtree)
-    is content, not a RecursionError row, and the row does not depend on
+    """Nesting 2,000 deep (blocks, inline tags, a merged cell's subtree,
+    a list) is content, not a RecursionError row, and the row does not depend on
     the caller's stack: extract_document and a Python worker of
     extract_stage give the same bytes."""
     df = spark.createDataFrame(
@@ -180,6 +188,27 @@ def test_deep_html_gives_the_same_content_row_on_every_path(spark):
     assert "deep bold" in got["https://deep.example/b.html"]["text_extracted"]
     cells = json.loads(got["https://deep.example/colspan.html"]["tables_json"])[0]["cells"]
     assert [[c["lines"][0]["line"] for c in row] for row in cells] == [["cell text", "cell text"], ["x", "y"]]
+    assert got["https://deep.example/ul.html"]["text_extracted"].count("item") == DEPTH // 2
+
+
+def test_html_past_the_depth_limit_gives_the_same_limit_row_on_every_path(spark):
+    """Nesting past MAX_HTML_DEPTH stops the parse where it passes the
+    limit: a quick ``resource_limit:depth`` row, the same from
+    extract_document and from extract_stage."""
+    for url, html in LIMIT_PAGES:
+        t0 = time.perf_counter()
+        want = extract_document(url, html.encode(), None)
+        assert time.perf_counter() - t0 < 1.0, url
+        assert want["error"] == "resource_limit:depth" and want["text_extracted"] == "", url
+    df = spark.createDataFrame(
+        [(url, bytearray(html.encode()), None) for url, html in LIMIT_PAGES],
+        "url string, html binary, text string",
+    ).coalesce(1)
+    out = extract_stage(df)
+    got = _rows_by_url(out)
+    for url, html in LIMIT_PAGES:
+        want = extract_document(url, html.encode(), None)
+        assert got[url] == {c: want.get(c) for c in out.columns}, url
 
 
 STR, I32 = pa.string(), pa.int32()

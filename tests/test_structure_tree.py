@@ -3,6 +3,7 @@
 tree_constructor.py behaviors)."""
 
 import gc
+import json
 import time
 
 from dedoc_spark.core.model import Annotation, HierarchyLevel, Line
@@ -11,7 +12,7 @@ from dedoc_spark.core.structure import (
     get_dotted_item_depth,
     get_hierarchy_level,
 )
-from dedoc_spark.core.tree import construct_tree, tree_to_text
+from dedoc_spark.core.tree import construct_tree, flatten_tree, tree_to_text
 from dedoc_spark.core.txt_extract import extract_txt_lines
 
 
@@ -152,6 +153,27 @@ def test_tree_to_text_trailing_newlines():
     root = construct_tree(lines)
     # root text "" + "\n" + child "a\n" + "\n"
     assert tree_to_text(root) == "\na\n\n"
+
+
+def test_tree_walks_take_any_depth():
+    """A chain of 5,000 headers, each one level under the last, renders
+    without recursion: five times the interpreter's default limit."""
+    lines = []
+    for k in range(5000):
+        ln = line(f"t{k}")
+        ln.hl, ln.line_id = HierarchyLevel(1, k + 1, False, "header"), k
+        lines.append(ln)
+    root = construct_tree(lines)
+    assert tree_to_text(root) == "\n" + "".join(f"t{k}\n" for k in range(5000))
+    tree_json, nodes_json = flatten_tree(root)
+    nodes = json.loads(nodes_json)
+    assert [n["depth"] for n in nodes] == list(range(5001))
+    assert [n["parent_id"] for n in nodes[:3]] == [None, "0", "0.0"]
+    last = (
+        '{"node_id": "0' + ".0" * 5000 + '", "text": "t4999", "annotations": [], '
+        '"metadata": {"paragraph_type": "header", "page_id": 0, "line_id": 4999}, "subparagraphs": ['
+    )
+    assert tree_json.count('"node_id"') == 5001 and tree_json.endswith(last + "]}" * 5001)
 
 
 def test_prefix_split_postprocess_reference_examples():
