@@ -201,7 +201,7 @@ def flatten_tree(node: TreeNode) -> Tuple[str, str]:
     while stack:
         n, parent_id = stack.pop()
         node_id, text, ptype = json_value(n.node_id), json_value(n.text), json_value(n.hl.line_type)
-        depth = n.node_id.count(".")
+        depth = n.node_id.count(".")  # add_child's dotted ids spell the tree path
         if depth <= last:  # not the first child of the node written last
             tree.append("]}" * (last - depth + 1) + ", ")
         last = depth

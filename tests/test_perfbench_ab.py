@@ -38,8 +38,8 @@ PARENT = [1600, 1620, 1640, 1610, 1630, 1650, 1605, 1615, 1625, 1635]
 
 def test_claim_holds_when_every_pair_wins_beyond_the_parent_iqr():
     ab = _ab()
-    lines, claim, bounds = ab.summarize(_pairs(PARENT, [d * 1.2 for d in PARENT]), END_TO_END, "docs_per_s")
-    assert claim and bounds
+    lines, gains, bounds = ab.summarize(_pairs(PARENT, [d * 1.2 for d in PARENT]), END_TO_END)
+    assert gains == ["docs_per_s"] and bounds
     docs = next(ln for ln in lines if ln.startswith("docs_per_s"))
     assert "change wins 10/10" in docs and "claim rule holds" in docs
     assert "parent 1622 [1611, 1634]" in docs
@@ -50,16 +50,16 @@ def test_claim_needs_nine_wins_in_ten():
     ab = _ab()
     change = [d * 1.2 for d in PARENT]
     change[0] = change[1] = 1500  # two losses: 8/10
-    assert not ab.summarize(_pairs(PARENT, change), END_TO_END, "docs_per_s")[1]
+    assert ab.summarize(_pairs(PARENT, change), END_TO_END)[1] == []
     change[1] = PARENT[1] * 1.2  # one loss: 9/10
-    assert ab.summarize(_pairs(PARENT, change), END_TO_END, "docs_per_s")[1]
+    assert ab.summarize(_pairs(PARENT, change), END_TO_END)[1] == ["docs_per_s"]
 
 
 def test_claim_needs_a_gain_beyond_the_parent_iqr():
     ab = _ab()
     # every pair wins by 1/s, but the parent's quartiles lie 22.5/s apart
-    lines, claim, _ = ab.summarize(_pairs(PARENT, [d + 1 for d in PARENT]), END_TO_END, "docs_per_s")
-    assert not claim
+    lines, gains, _ = ab.summarize(_pairs(PARENT, [d + 1 for d in PARENT]), END_TO_END)
+    assert gains == []
     assert "change wins 10/10; claim rule fails" in lines[0]
 
 
@@ -67,15 +67,16 @@ def test_lower_is_better_metrics_and_bounds():
     ab = _ab()
     # rss 12% higher: worse than its 10% bound; setup 20% slower: within 25%
     pairs = _pairs(PARENT, PARENT, rss=112.0, setup=3.6)
-    lines, _, bounds = ab.summarize(pairs, END_TO_END, "docs_per_s")
+    lines, _, bounds = ab.summarize(pairs, END_TO_END)
     assert not bounds
     rss = next(ln for ln in lines if ln.startswith("peak_worker_rss_mb"))
     assert "change wins 0/10" in rss and "OUTSIDE its bound 10%" in rss
     setup = next(ln for ln in lines if ln.startswith("setup_s"))
     assert "within its bound 25%" in setup
     # lower rss wins every pair
-    lines, _, bounds = ab.summarize(_pairs(PARENT, PARENT, rss=90.0), END_TO_END, "docs_per_s")
-    assert bounds and "change wins 10/10" in next(ln for ln in lines if ln.startswith("peak_worker_rss_mb"))
+    lines, gains, bounds = ab.summarize(_pairs(PARENT, PARENT, rss=90.0), END_TO_END)
+    assert bounds and gains == ["peak_worker_rss_mb"]
+    assert "change wins 10/10" in next(ln for ln in lines if ln.startswith("peak_worker_rss_mb"))
 
 
 def test_runs_alternate_and_a_bad_run_fails_the_script(tmp_path, monkeypatch, capsys):
