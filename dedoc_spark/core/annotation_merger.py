@@ -20,11 +20,14 @@ span output (SURVEY.md §7.3 risk #2).
 from __future__ import annotations
 
 import re
+from bisect import bisect_left, bisect_right
+from operator import attrgetter
 from typing import Dict, List, Tuple
 
 from dedoc_spark.core.model import Annotation
 
 _SPACES = re.compile(r"\s+")
+_START = attrgetter("start")
 
 
 def merge_annotations(annotations: List[Annotation], text: str) -> List[Annotation]:
@@ -36,62 +39,82 @@ def merge_annotations(annotations: List[Annotation], text: str) -> List[Annotati
         groups.setdefault((a.name, a.value), []).append(a)
 
     merged: List[Annotation] = []
-    spaces = None  # whitespace runs glue spans; scanned only for a group that merges
+    runs = None  # whitespace runs glue spans; scanned only for a group with a gap
     for group in groups.values():
         if len(group) > 1 and group[0].is_mergeable:
-            if spaces is None:
-                spaces = [(m.start(), m.end(), None) for m in _SPACES.finditer(text)]
-            group = _merge_one_group(group, spaces)
+            group = sorted(group, key=_START)
+            if _chained(group):
+                group = [_collapse(group)]
+            else:
+                if runs is None:
+                    spans = [m.span() for m in _SPACES.finditer(text)]
+                    runs = [s for s, _ in spans], [e for _, e in spans]
+                group = _merge_one_group(group, *runs)
         merged.extend(group)
 
     return _filter_contradicting(merged, text)
 
 
-def _merge_one_group(
-    annotations: List[Annotation], spaces: List[Tuple[int, int, None]]
-) -> List[Annotation]:
-    """Merge one (name, value) group; spans may be glued by whitespace runs.
+def _chained(annotations: List[Annotation]) -> bool:
+    """Whether each annotation (sorted by start) starts within the ones
+    before it: then the group is one cluster whatever whitespace runs lie
+    in it, since a run only ever extends a cluster it touches."""
+    end = annotations[0].end
+    for a in annotations:
+        if a.start > end:
+            return False
+        if a.end > end:
+            end = a.end
+    return True
 
-    Mirrors annotation_merger.py:86-108 including the stable sort of
-    annotations-then-spaces by start; lone and non-mergeable groups never get here.
+
+def _merge_one_group(annotations: List[Annotation], starts: List[int], ends: List[int]) -> List[Annotation]:
+    """Merge one (name, value) group, sorted by start; spans may be glued
+    by whitespace runs.
+
+    Gives the clusters of annotation_merger.py:86-108, which stable-sorts
+    the annotations and then the whitespace runs by start and sweeps them,
+    extending a cluster while its end reaches the next start. Here the
+    sweep visits the annotations in that order and finds the runs that
+    fall between two of them with ``bisect``: maximal ``\\s+`` runs never
+    touch, so of those runs only the last one starting within the
+    cluster's end can extend it, and any later run closes it and leaves
+    an open cluster of its own (no annotations, the run's end).
     """
-    # events: (start, end, annotation or None-for-space); stable sort by start
-    events: List[Tuple[int, int, object]] = [(a.start, a.end, a) for a in annotations]
-    events += spaces
-    events.sort(key=lambda ev: ev[0])
-
     result: List[Annotation] = []
-    # current cluster state: overall [start,end), plus member annotations
-    cur_start, cur_end, cur_members = events[0][0], events[0][1], (
-        [events[0][2]] if events[0][2] is not None else []
-    )
-    for start, end, ann in events[1:]:
-        if cur_end >= start:
-            cur_end = max(cur_end, end)
-            cur_start = min(cur_start, start)
-            if ann is not None:
-                cur_members.append(ann)
+    k = bisect_left(starts, annotations[0].start)
+    cur_end = ends[k - 1] if k else None  # a run before the first annotation may still be open
+    members: List[Annotation] = []
+    for i, a in enumerate(annotations, 1):
+        if cur_end is not None and cur_end >= a.start:
+            members.append(a)
+            if a.end > cur_end:
+                cur_end = a.end
         else:
-            merged = _collapse(cur_members)
-            if merged is not None:
-                result.append(merged)
-            cur_start, cur_end = start, end
-            cur_members = [ann] if ann is not None else []
-    merged = _collapse(cur_members)
-    if merged is not None:
-        result.append(merged)
+            if members:
+                result.append(_collapse(members))
+            members, cur_end = [a], a.end
+        # runs sorted after this annotation and before the next one
+        hi = bisect_left(starts, annotations[i].start, k) if i < len(annotations) else len(starts)
+        if hi > k:
+            j = bisect_right(starts, cur_end, k, hi) - 1
+            if j >= k and ends[j] > cur_end:
+                cur_end = ends[j]
+            if j < hi - 1:
+                result.append(_collapse(members))
+                members, cur_end = [], ends[hi - 1]
+        k = hi
+    if members:
+        result.append(_collapse(members))
     return result
 
 
-def _collapse(members: List[Annotation]) -> Annotation | None:
+def _collapse(members: List[Annotation]) -> Annotation:
     """One cluster → one annotation spanning min..max of member annotations
-    only (space glue does not widen the result) — annotation_merger.py:54-61."""
-    if not members:
-        return None
-    start = min(a.start for a in members)
-    end = max(a.end for a in members)
+    only (space glue does not widen the result) — annotation_merger.py:54-61.
+    Members come sorted by start."""
     first = members[0]
-    return Annotation(start, end, first.name, first.value)
+    return Annotation(first.start, max(a.end for a in members), first.name, first.value)
 
 
 def _filter_contradicting(annotations: List[Annotation], text: str) -> List[Annotation]:

@@ -29,10 +29,13 @@ import email.header
 import hashlib
 import io
 import json
+import re
 import zipfile
+from itertools import accumulate
 from typing import Dict, List, Optional, Tuple
 
 from dedoc_spark.core.html_extract import HtmlExtractor
+from dedoc_spark.core.limits import MAX_JSON_DEPTH, ResourceLimit
 from dedoc_spark.core.model import Cell, HierarchyLevel, Line, Table
 
 _HTML = HtmlExtractor()
@@ -40,13 +43,28 @@ _HTML = HtmlExtractor()
 
 # --- JSON -------------------------------------------------------------------
 
+_JSON_STRING = re.compile(r'"[^"\\]*(?:\\.[^"\\]*)*"', re.S)
+_JSON_BRACKET = re.compile(r"[\[\]{}]")
+_JSON_STEP = {"[": 1, "{": 1, "]": -1, "}": -1}
+
+
+def _json_loads(payload: str):
+    """``json.loads`` within ``MAX_JSON_DEPTH``: past it, ResourceLimit
+    ("depth") before the decoder starts. The depth is the largest prefix
+    sum of the brackets left once the strings are cut out."""
+    if payload.count("[") + payload.count("{") > MAX_JSON_DEPTH:
+        brackets = _JSON_BRACKET.findall(_JSON_STRING.sub("", payload))
+        if max(accumulate(map(_JSON_STEP.__getitem__, brackets)), default=0) > MAX_JSON_DEPTH:
+            raise ResourceLimit("depth")
+    return json.loads(payload)
+
 
 def json_html_field_attachments(payload: str, html_fields: List[List[str]]) -> List[Tuple[str, bytes]]:
     """JsonAttachmentsExtractor port (json_attachment_extractor.py:16-61):
     each key path in ``html_fields`` whose end node is a STRING becomes an
     attached html file named ``json.dumps(keys)`` + ".html"; non-string
     end nodes are skipped."""
-    data = json.loads(payload)
+    data = _json_loads(payload)
     out: List[Tuple[str, bytes]] = []
     for keys in html_fields:
         name = json.dumps(keys, ensure_ascii=False) + ".html"
@@ -88,7 +106,7 @@ def extract_json_lines(
     ``html_fields`` (json_reader.py:41-49): key paths excluded from the
     flatten — their content is surfaced as html attachments instead
     (json_html_field_attachments)."""
-    data = json.loads(payload)
+    data = _json_loads(payload)
     if html_fields:
         data = _exclude_json_fields(data, html_fields)
 

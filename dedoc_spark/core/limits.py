@@ -13,6 +13,11 @@ from __future__ import annotations
 # and every tree node's id spells its path, so a list nested 1,000 deep
 # (2,000 elements) gives a row of about 13 MB in about 0.15 s.
 MAX_HTML_DEPTH = 2048
+# Nesting of JSON arrays and objects (``formats`` checks it before
+# ``json.loads``, whose C decoder recurses once per level against the
+# caller's Python stack: about 1,000 levels in a plain process, fewer in a
+# Spark worker).
+MAX_JSON_DEPTH = 512
 
 
 class ResourceLimit(Exception):

@@ -270,8 +270,12 @@ class Table:
 # colspan, rowspan, invisible}; Table {cells: [[Cell]], page_id, uid, title}.
 
 _ENCODE = json.JSONEncoder(ensure_ascii=False).encode
+# Encoded fragments memoised per key, each memo cleared when full. A key
+# holds each value's type too: 1, 1.0 and True hash alike but write three
+# texts.
 _HL_JSON: Dict[tuple, str] = {}
-_HL_JSON_CAP = 256
+_CELL_JSON: Dict[tuple, str] = {}
+_HL_JSON_CAP = _CELL_JSON_CAP = 256
 
 
 def json_value(v) -> str:
@@ -293,25 +297,47 @@ def _array(items: List[str]) -> str:
     return "[" + ", ".join(items) + "]"
 
 
+def _remember(memo: Dict[tuple, str], cap: int, key: tuple, out: str, *values) -> None:
+    if len(memo) >= cap:
+        memo.clear()
+    if not any(type(v) is float and v == 0 for v in values):  # -0.0 == 0.0, one key
+        memo[key] = out
+
+
 def _hl_json(hl: Optional[HierarchyLevel]) -> str:
     if hl is None:
         return "null"
     l1, l2, ml, lt = hl.level_1, hl.level_2, hl.can_be_multiline, hl.line_type
-    key = (type(l1), l1, type(l2), l2, type(ml), ml, lt)  # 1, 1.0, True: one hash, three texts
+    key = (type(l1), l1, type(l2), l2, type(ml), ml, lt)
     out = _HL_JSON.get(key)
     if out is None:
         out = (
             f'{{"level_1": {json_value(l1)}, "level_2": {json_value(l2)}, '
             f'"can_be_multiline": {json_value(ml)}, "line_type": {json_value(lt)}}}'
         )
-        if len(_HL_JSON) >= _HL_JSON_CAP:
-            _HL_JSON.clear()
-        if not (type(l1) is float and l1 == 0 or type(l2) is float and l2 == 0):  # -0.0 == 0.0
-            _HL_JSON[key] = out
+        _remember(_HL_JSON, _HL_JSON_CAP, key, out, l1, l2)
     return out
 
 
+def _cell_json(cell: Cell) -> str:
+    cs, rs, inv = cell.colspan, cell.rowspan, cell.invisible
+    key = (type(cs), cs, type(rs), rs, type(inv), inv)
+    tail = _CELL_JSON.get(key)
+    if tail is None:
+        tail = f'"colspan": {json_value(cs)}, "rowspan": {json_value(rs)}, "invisible": {json_value(inv)}}}'
+        _remember(_CELL_JSON, _CELL_JSON_CAP, key, tail, cs, rs, inv)
+    lines = cell.lines  # most cells hold one line or none
+    if len(lines) == 1:
+        return f'{{"lines": [{_line_json(lines[0])}], {tail}'
+    return f'{{"lines": {lines_json(lines) if lines else "[]"}, {tail}'
+
+
 def annotations_json(annotations: List[Annotation]) -> str:
+    if all(type(a.start) is int and type(a.end) is int for a in annotations):  # the usual case: format inline
+        return _array([
+            f'{{"start": {a.start}, "end": {a.end}, "name": {json_value(a.name)}, "value": {json_value(a.value)}}}'
+            for a in annotations
+        ])
     return _array([
         f'{{"start": {json_value(a.start)}, "end": {json_value(a.end)}, '
         f'"name": {json_value(a.name)}, "value": {json_value(a.value)}}}'
@@ -319,29 +345,29 @@ def annotations_json(annotations: List[Annotation]) -> str:
     ])
 
 
-def lines_json(lines: List[Line]) -> str:
-    return _array([
-        f'{{"line": {json_value(ln.line)}, "page_id": {json_value(ln.page_id)}, '
+def _line_json(ln: Line) -> str:
+    return (
+        f'{{"line": {encode_basestring(ln.line)}, "page_id": {json_value(ln.page_id)}, '
         f'"line_id": {json_value(ln.line_id)}, "tag_hl": {_hl_json(ln.tag_hl)}, '
         f'"hl": {_hl_json(ln.hl)}, '
         f'"annotations": {annotations_json(ln.annotations) if ln.annotations else "[]"}, '
-        f'"uid": {json_value(ln.uid)}, "extras": {{'
+        f'"uid": {encode_basestring(ln.uid)}, "extras": {{'
         # most lines carry no annotations or extras: skip those calls
         + (", ".join([f"{_key_json(k)}: {encode_basestring(str(v))}" for k, v in ln.extras.items()])
            if ln.extras else "")
         + "}}"
-        for ln in lines
-    ])
+    )
+
+
+def lines_json(lines: List[Line]) -> str:
+    return _array([_line_json(ln) for ln in lines])
 
 
 def tables_json(tables: List[Table]) -> str:
     return _array([
         '{"cells": '
-        + _array([_array([
-            f'{{"lines": {lines_json(c.lines)}, "colspan": {json_value(c.colspan)}, '
-            f'"rowspan": {json_value(c.rowspan)}, "invisible": {json_value(c.invisible)}}}'
-            for c in row
-        ]) for row in t.cells])
-        + f', "page_id": {json_value(t.page_id)}, "uid": {json_value(t.uid)}, "title": {json_value(t.title)}}}'
+        + _array([_array([_cell_json(c) for c in row]) for row in t.cells])
+        + f', "page_id": {json_value(t.page_id)}, "uid": {encode_basestring(t.uid)}, '
+        f'"title": {encode_basestring(t.title)}}}'
         for t in tables
     ])

@@ -11,6 +11,7 @@ Styles are intentionally out of scope (best-effort text layer).
 
 from __future__ import annotations
 
+import codecs
 import re
 from typing import List, Tuple
 
@@ -25,7 +26,31 @@ _SKIP_DESTINATIONS = {
 
 _BREAKS = {"par": "\n", "line": "\n", "row": "\n", "cell": "\t", "tab": "\t", "page": "\n", "sect": "\n"}
 
-_CW_RE = re.compile(rb"\\([a-z]+)(-?\d+)? ?|\\'([0-9a-fA-F]{2})|\\([^a-z])|([{}])|([^\\{}]+)", re.S)
+# One control word, hex escape, escaped symbol, brace or text chunk per token
+_CW = rb"\\([a-z]+)(-?\d+)? ?|\\'([0-9a-fA-F]{2})|\\([^a-z])|([{}])|([^\\{}]+)"
+_CW_RE = re.compile(_CW, re.S)
+# or a run of \uN escapes, each with one fallback (a byte or a \'hh escape)
+# and the plain text after it: under \uc1 the run decodes without a loop
+# turn per escape (_run_text), else it is read token by token
+_TOKEN_RE = re.compile(rb"((?:(?>\\u-?\d+ ?)(?:[^\\{}\r\n]|\\'[0-9a-fA-F]{2})[^\\{}]*)+)|" + _CW, re.S)
+_RUN_SPLIT = re.compile(rb"\\u(-?\d+) ?(?:\\'[0-9a-fA-F]{2}|[^\\{}\r\n])")
+
+
+def _unichar(code: bytes) -> str:
+    n = int(code)
+    return chr(n if n >= 0 else n + 65536)
+
+
+def _run_text(run: bytes, codepage: str) -> str:
+    """A run under \\uc1 outside a skipped group: each escape's character,
+    its fallback dropped, then the text after it with CR/LF removed."""
+    parts = _RUN_SPLIT.split(run)  # [b"", code, text, code, text, ...]
+    texts = parts[2::2]
+    decoded = {t: t.replace(b"\r", b"").replace(b"\n", b"").decode(codepage, "replace") for t in set(texts)}
+    parts[0] = ""
+    parts[1::2] = map(_unichar, parts[1::2]) if b"u-" in run else map(chr, map(int, parts[1::2]))
+    parts[2::2] = map(decoded.__getitem__, texts)
+    return "".join(parts)
 
 
 def extract_rtf_text(payload: bytes) -> Tuple[List[str], List[str]]:
@@ -34,6 +59,10 @@ def extract_rtf_text(payload: bytes) -> Tuple[List[str], List[str]]:
         raise ValueError("not an RTF payload")
     cpg = re.search(rb"\\ansicpg(\d+)", payload[:256])
     codepage = f"cp{cpg.group(1).decode()}" if cpg else "cp1252"
+    try:  # a codepage Python lacks fails at its first decode: keep stream order
+        whole_runs = codecs.lookup(codepage) is not None
+    except LookupError:
+        whole_runs = False
 
     out: List[str] = []
     # group stack entries: (skipping, uc_count)
@@ -42,55 +71,61 @@ def extract_rtf_text(payload: bytes) -> Tuple[List[str], List[str]]:
     uc = 1
     pending_uc_skip = 0
 
-    for m in _CW_RE.finditer(payload):
-        word, param, hexbyte, escaped, brace, text = m.groups()
-        if brace == b"{":
-            stack.append((skipping, uc))
+    for m in _TOKEN_RE.finditer(payload):
+        run = m.group(1)
+        if run is not None and uc == 1 and not skipping and whole_runs:
+            out.append(_run_text(run, codepage))
+            pending_uc_skip = 0
             continue
-        if brace == b"}":
-            if stack:
-                skipping, uc = stack.pop()
-            continue
-        if word is not None:
-            w = word.decode("ascii")
-            if w == "uc":
-                uc = int(param or 1)
-            elif w == "u":
-                if not skipping:
-                    code = int(param or 0)
-                    out.append(chr(code if code >= 0 else code + 65536))
-                pending_uc_skip = uc
-            elif w in _SKIP_DESTINATIONS:
-                skipping = True
-            elif not skipping and w in _BREAKS:
-                out.append(_BREAKS[w])
-            continue
-        if hexbyte is not None:
-            if pending_uc_skip > 0:
-                pending_uc_skip -= 1
-            elif not skipping:
-                out.append(bytes([int(hexbyte, 16)]).decode(codepage, "replace"))
-            continue
-        if escaped is not None:
-            if not skipping:
-                if escaped == b"*":
-                    # \* marks an unknown destination group → skip it
+        for word, param, hexbyte, escaped, brace, text in (
+            (m.group(2, 3, 4, 5, 6, 7),) if run is None else (t.groups() for t in _CW_RE.finditer(run))
+        ):
+            if brace == b"{":
+                stack.append((skipping, uc))
+                continue
+            if brace == b"}":
+                if stack:
+                    skipping, uc = stack.pop()
+                continue
+            if word is not None:
+                w = word.decode("ascii")
+                if w == "uc":
+                    uc = int(param or 1)
+                elif w == "u":
+                    if not skipping:
+                        out.append(_unichar(param or b"0"))
+                    pending_uc_skip = uc
+                elif w in _SKIP_DESTINATIONS:
                     skipping = True
-                elif escaped in (b"{", b"}", b"\\"):
-                    out.append(escaped.decode("ascii"))
-                elif escaped == b"~":
-                    out.append("\xa0")
-                elif escaped in (b"\n", b"\r"):
-                    out.append("\n")
-            continue
-        if text is not None and not skipping:
-            chunk = text.replace(b"\r", b"").replace(b"\n", b"")
-            if pending_uc_skip > 0:
-                take = min(pending_uc_skip, len(chunk))
-                chunk = chunk[take:]
-                pending_uc_skip -= take
-            if chunk:
-                out.append(chunk.decode(codepage, "replace"))
+                elif not skipping and w in _BREAKS:
+                    out.append(_BREAKS[w])
+                continue
+            if hexbyte is not None:
+                if pending_uc_skip > 0:
+                    pending_uc_skip -= 1
+                elif not skipping:
+                    out.append(bytes([int(hexbyte, 16)]).decode(codepage, "replace"))
+                continue
+            if escaped is not None:
+                if not skipping:
+                    if escaped == b"*":
+                        # \* marks an unknown destination group → skip it
+                        skipping = True
+                    elif escaped in (b"{", b"}", b"\\"):
+                        out.append(escaped.decode("ascii"))
+                    elif escaped == b"~":
+                        out.append("\xa0")
+                    elif escaped in (b"\n", b"\r"):
+                        out.append("\n")
+                continue
+            if text is not None and not skipping:
+                chunk = text.replace(b"\r", b"").replace(b"\n", b"")
+                if pending_uc_skip > 0:
+                    take = min(pending_uc_skip, len(chunk))
+                    chunk = chunk[take:]
+                    pending_uc_skip -= take
+                if chunk:
+                    out.append(chunk.decode(codepage, "replace"))
 
     text_full = "".join(out)
     lines = [ln for ln in text_full.split("\n")]

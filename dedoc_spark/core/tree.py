@@ -94,19 +94,21 @@ def construct_tree(lines: List[Line]) -> TreeNode:
     rest = _add_list_nodes(rest)
 
     root = _create_root(document_name)
-    tree = root
+    # HierarchyLevel's ordering key, taken once per line and once per step
+    # up, not twice per comparison (levels may change after construction,
+    # so the levels keep no key of their own)
+    tree, key = root, root.hl._key()
     for line in rest:
-        hl_equal = line.hl == tree.hl
-        type_equal = line.hl.line_type == tree.hl.line_type
-        if line.hl.can_be_multiline and hl_equal and type_equal:
+        hl = line.hl
+        line_key = hl._key()
+        if hl.can_be_multiline and line_key == key and hl.line_type == tree.hl.line_type:
             tree.add_text(line)
         else:
-            while tree.hl >= line.hl:
+            while key >= line_key:
                 tree = tree.parent
+                key = tree.hl._key()
             tree = tree.add_child(line)
-    root = tree
-    while root.parent is not None:
-        root = root.parent
+            key = line_key
     _merge_tree_annotations(root)
     return root
 

@@ -2,9 +2,9 @@
 
 Usage, from anywhere:
 
-    python3 scripts/perfbench_ab.py --parent DIR --change DIR --workload web_pages [--seed 1] [--pairs 10]
+    python3 scripts/perfbench_ab.py --parent DIR --change DIR --workload web_pages [--seed 1] [--pairs 10] [--trace 0|1]
 
-Each pair runs ``python3 perfbench/run.py --workload W --seed S --trace 0``
+Each pair runs ``python3 perfbench/run.py --workload W --seed S --trace T``
 once in each checkout, one after the other; the parent goes first in even
 pairs and the change in odd ones. The last JSON line of each run is its
 result, printed as it comes on a ``pair K SIDE: {...}`` line. For every
@@ -14,8 +14,11 @@ the change won, by the metric's ``better`` direction; then whether a gain
 in it would pass the claim rule — the change wins at least 9 of 10 pairs
 and the medians lie further apart than the parent's quartiles — and
 whether it stays within its ``bound``, a fraction of the parent's median.
-The exit status is 1 when a run is not ``correct`` or has failed rows,
-else 0.
+With ``--trace 1`` the runs are traced ones, which report layers instead:
+the summary prints, for each layer's self time (``*.self_ms_per_doc`` and
+``*.self_ms_per_page``), each side's median and the median over the pairs
+of change / parent. The exit status is 1 when a run is not ``correct`` or
+has failed rows, else 0.
 """
 
 from __future__ import annotations
@@ -73,6 +76,26 @@ def summarize(pairs: Sequence[Dict[str, dict]], end_to_end: Sequence[dict]) -> T
     return lines, gains, bounds_hold
 
 
+def layer_ratios(pairs: Sequence[Dict[str, dict]]) -> List[str]:
+    """Report lines of the traced runs' layer self times: each side's
+    median and the median of change / parent over the pairs in which the
+    parent's self time is not 0."""
+    lines = []
+    for name in pairs[0]["parent"]["metrics"]:
+        if not name.endswith((".self_ms_per_doc", ".self_ms_per_page")):
+            continue
+        values = {side: [p[side]["metrics"][name]["value"] for p in pairs] for side in SIDES}
+        ratios = [c / p for p, c in zip(values["parent"], values["change"]) if p]
+        if not ratios:
+            continue
+        lines.append(
+            f"{name}: parent {statistics.median(values['parent']):.4g} -> change "
+            f"{statistics.median(values['change']):.4g}, change/parent {statistics.median(ratios):.3f}"
+            f" (median of {len(ratios)} pairs)"
+        )
+    return lines
+
+
 def bad_runs(pairs: Sequence[Dict[str, dict]]) -> List[str]:
     """The runs that are not correct or report failed rows."""
     return [
@@ -83,8 +106,8 @@ def bad_runs(pairs: Sequence[Dict[str, dict]]) -> List[str]:
     ]
 
 
-def run_once(checkout: str, workload: str, seed: int) -> dict:
-    cmd = [sys.executable, "perfbench/run.py", "--workload", workload, "--seed", str(seed), "--trace", "0"]
+def run_once(checkout: str, workload: str, seed: int, trace: int) -> dict:
+    cmd = [sys.executable, "perfbench/run.py", "--workload", workload, "--seed", str(seed), "--trace", str(trace)]
     done = subprocess.run(cmd, cwd=checkout, stdout=subprocess.PIPE, text=True, timeout=1800)
     lines = [ln for ln in done.stdout.splitlines() if ln.strip().startswith("{")]
     if done.returncode != 0 or not lines:
@@ -99,6 +122,7 @@ def main(argv=None) -> int:
     ap.add_argument("--workload", required=True)
     ap.add_argument("--seed", type=int, default=1)
     ap.add_argument("--pairs", type=int, default=10)
+    ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     args = ap.parse_args(argv)
 
     with open(os.path.join(args.change, "BENCHMARK.json")) as f:
@@ -108,16 +132,20 @@ def main(argv=None) -> int:
     for k in range(args.pairs):
         pair = {}
         for side in SIDES if k % 2 == 0 else SIDES[::-1]:
-            pair[side] = run_once(dirs[side], args.workload, args.seed)
+            pair[side] = run_once(dirs[side], args.workload, args.seed, args.trace)
             print(f"pair {k} {side}: " + json.dumps(pair[side]), flush=True)
         pairs.append(pair)
 
-    lines, gains, bounds_hold = summarize(pairs, end_to_end)
-    print(f"{args.workload} seed {args.seed}, {len(pairs)} pairs:")
-    for line in lines:
-        print("  " + line)
-    print(f"claim rule holds for: {', '.join(gains) or 'no metric'}; "
-          f"metrics {'all within' if bounds_hold else 'NOT all within'} their bounds")
+    print(f"{args.workload} seed {args.seed}, {len(pairs)} {'traced ' if args.trace else ''}pairs:")
+    if args.trace:
+        for line in layer_ratios(pairs):
+            print("  " + line)
+    else:
+        lines, gains, bounds_hold = summarize(pairs, end_to_end)
+        for line in lines:
+            print("  " + line)
+        print(f"claim rule holds for: {', '.join(gains) or 'no metric'}; "
+              f"metrics {'all within' if bounds_hold else 'NOT all within'} their bounds")
     bad = bad_runs(pairs)
     for line in bad:
         print("bad run: " + line)

@@ -2,6 +2,13 @@
 (tests/unit_tests/test_misc_annotations.py shape): merge through spaces,
 contradiction filtering, non-mergeable passthrough."""
 
+import gc
+import re
+import time
+
+from hypothesis import given, settings
+from hypothesis import strategies as st
+
 from dedoc_spark.core import annotation_merger
 from dedoc_spark.core.annotation_merger import merge_annotations
 from dedoc_spark.core.model import Annotation
@@ -143,3 +150,100 @@ def test_only_second_group_needs_scan(monkeypatch):
     out, scans = _merge_counting(monkeypatch, anns, "ab cd\tef")
     assert out == [(0, 2, "size", "12"), (4, 6, "size", "14"), (3, 8, "bold", "True")]
     assert scans == 1
+
+
+# --- the one-sweep merger against the reference merger -----------------------
+
+_RUNS = re.compile(r"\s+")
+
+
+def _merge_reference(annotations, text):
+    """The merger as annotation_merger.py:67-145 writes it: per (name, value)
+    group, the annotations and then every whitespace run of the text, stable
+    sorted by start and swept; then the contradiction filter."""
+    if not annotations:
+        return []
+    groups = {}
+    for a in annotations:
+        groups.setdefault((a.name, a.value), []).append(a)
+    merged = []
+    for group in groups.values():
+        if len(group) > 1 and group[0].is_mergeable:
+            events = [(a.start, a.end, a) for a in group]
+            events += [(m.start(), m.end(), None) for m in _RUNS.finditer(text)]
+            events.sort(key=lambda ev: ev[0])
+            clusters, cur_end, members = [], events[0][1], [events[0][2]]
+            for start, end, a in events[1:]:
+                if cur_end >= start:
+                    cur_end = max(cur_end, end)
+                    members.append(a)
+                else:
+                    clusters.append(members)
+                    cur_end, members = end, [a]
+            clusters.append(members)
+            group = []
+            for members in clusters:
+                members = [a for a in members if a is not None]
+                if members:
+                    first = members[0]
+                    group.append(Annotation(
+                        min(a.start for a in members), max(a.end for a in members), first.name, first.value
+                    ))
+        merged.extend(group)
+    return annotation_merger._filter_contradicting(merged, text)
+
+
+def _tuples(annotations):
+    return [(a.start, a.end, a.name, a.value) for a in annotations]
+
+
+_texts = st.text(alphabet=st.sampled_from("ab  \t\n\r  "), max_size=40)
+_names = st.sampled_from(["bold", "size", "italic", "linked_text", "table"])
+_values = st.sampled_from(["True", "12", "14"])
+
+
+@st.composite
+def _cases(draw):
+    text = draw(_texts)
+    n = len(text)
+    spans = st.builds(ann, st.integers(-2, n + 3), st.integers(-2, n + 3), _names, _values)
+    return draw(st.lists(spans, max_size=14)), text
+
+
+@given(_cases())
+@settings(max_examples=3000, deadline=None)
+def test_sweep_merger_equals_the_reference(case):
+    annotations, text = case
+    assert _tuples(merge_annotations(annotations, text)) == _tuples(_merge_reference(annotations, text))
+
+
+def _node(words, groups):
+    """One node of ``words`` words, the i-th marked by one annotation of
+    group i % ``groups``: every group merges, and the whitespace runs glue
+    its spans."""
+    text = " ".join(f"w{i}" for i in range(words))
+    anns, pos = [], 0
+    for i in range(words):
+        anns.append(ann(pos, pos + len(f"w{i}"), "size", str(i % groups)))
+        pos += len(f"w{i}") + 1
+    return anns, text
+
+
+def test_merge_is_linear_in_the_words_of_a_node():
+    """Doubling the words of a node may cost at most 2.5x, with 20 groups
+    and with a group per 10 words: the reference merger sorts every
+    whitespace run of the text again for each group, so the second shape
+    costs it about 4x per doubling. The timings take turns, so a slow
+    spell of a shared host hits them all."""
+    nodes = [_node(w, g) for w, g in ((4000, 20), (8000, 20), (4000, 400), (8000, 800))]
+    best = [float("inf")] * len(nodes)
+    gc.disable()
+    try:
+        for _ in range(5):
+            for k, (anns, text) in enumerate(nodes):
+                t0 = time.perf_counter()
+                merge_annotations(anns, text)
+                best[k] = min(best[k], time.perf_counter() - t0)
+    finally:
+        gc.enable()
+    assert best[1] <= 2.5 * best[0] and best[3] <= 2.5 * best[2], best

@@ -16,6 +16,28 @@ from dedoc_spark.core.formats import (
 )
 
 
+def test_json_nesting_past_the_budget_is_a_limit_row():
+    """MAX_JSON_DEPTH arrays or objects may nest; one level more gives
+    ``resource_limit:depth`` before json.loads recurses. Brackets inside
+    strings do not count."""
+    from dedoc_spark.core.limits import MAX_JSON_DEPTH
+
+    def row(doc):
+        return extract_document("https://x/deep.json", doc.encode(), None)
+
+    d = MAX_JSON_DEPTH
+    ok = row("[" * d + '"x"' + "]" * d)
+    assert ok["error"] is None and ok["text_extracted"].count("x") == 1
+    assert row('{"k": ' * d + "1" + "}" * d)["error"] is None
+    for doc in ("[" * (d + 1) + '"x"' + "]" * (d + 1), '{"k": ' * (d + 1) + "[]" + "}" * (d + 1), "[" * 5000):
+        limited = row(doc)
+        assert limited["error"] == "resource_limit:depth" and limited["text_extracted"] == ""
+    quoted = '["' + "[" * 3000 + '\\"' + "{" * 600 + '", "]]"]'
+    assert row(quoted)["error"] is None
+    lines = [ln["line"] for ln in jsonlib.loads(row(quoted)["lines_json"])]
+    assert lines == ["[" * 3000 + '"' + "{" * 600, "]]"]
+
+
 def test_json_dict_sorted_keys():
     lines = extract_json_lines('{"b": 1, "a": "x"}')
     got = [(ln.line, ln.tag_hl.line_type, ln.tag_hl.level_1) for ln in lines]

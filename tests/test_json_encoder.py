@@ -190,6 +190,29 @@ def test_hl_memo_clears_at_cap():
     assert len(model._HL_JSON) == 1
 
 
+def test_annotation_spans_and_the_cell_memo_keep_types_apart():
+    model._CELL_JSON.clear()
+    for a, b in ((1, 1.0), (1.0, 1), (True, 1), (1, True), (0.0, -0.0), (-0.0, 0.0), ("1", 1), (False, 0)):
+        for v in (a, b, a):
+            spans = [Annotation(v, 1, "bold", "True"), Annotation(0, v, "bold", "True")]  # not only ints
+            assert model.annotations_json(spans) == dumps([annotation_spec(x) for x in spans])
+            for cell in (Cell([], v, 1, False), Cell([], 1, v, v), Cell([Line("x")], 2, 1, v)):
+                t = Table([[cell]])
+                assert tables_json([t]) == dumps([table_spec(t)])
+
+
+def test_cell_memo_clears_at_cap():
+    def write(i):
+        return tables_json([Table([[Cell([], i, 1, False)]])])
+
+    model._CELL_JSON.clear()
+    for i in range(model._CELL_JSON_CAP):
+        write(i)
+    assert len(model._CELL_JSON) == model._CELL_JSON_CAP
+    assert write(model._CELL_JSON_CAP) == dumps([table_spec(Table([[Cell([], model._CELL_JSON_CAP, 1, False)]]))])
+    assert len(model._CELL_JSON) == 1
+
+
 # --- static guard: one encoder, no dict-then-dumps path back -----------------
 
 

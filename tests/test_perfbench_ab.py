@@ -1,6 +1,7 @@
 """``scripts/perfbench_ab.py`` on canned perfbench results: the summary's
 medians, quartiles and wins, the claim rule, the bounds, the order of the
-runs and the exit status. No Spark is started."""
+runs, the traced runs' layer ratios and the exit status. No Spark is
+started."""
 
 from __future__ import annotations
 
@@ -84,7 +85,7 @@ def test_runs_alternate_and_a_bad_run_fails_the_script(tmp_path, monkeypatch, ca
     (tmp_path / "BENCHMARK.json").write_text(json.dumps({"end_to_end": END_TO_END}))
     calls = []
 
-    def fake_run(checkout, workload, seed):
+    def fake_run(checkout, workload, seed, trace):
         calls.append(checkout)
         if checkout == str(tmp_path) and len(calls) == 3:
             return _result(1700, failed=2)
@@ -99,5 +100,48 @@ def test_runs_alternate_and_a_bad_run_fails_the_script(tmp_path, monkeypatch, ca
     # every run's whole result is printed on its own line
     assert json.loads(out.splitlines()[2].partition(": ")[2]) == _result(1700, failed=2)
 
-    monkeypatch.setattr(ab, "run_once", lambda checkout, w, s: _result(1600 if checkout == "P" else 1700))
+    monkeypatch.setattr(ab, "run_once", lambda checkout, w, s, t: _result(1600 if checkout == "P" else 1700))
     assert ab.main(args) == 0
+
+
+def _traced(layers, failed=0):
+    metrics = {"pipeline.tasks": 4, "trace.overhead_frac": 0.1, **layers}
+    return {
+        "correct": True,
+        "attempted": 416,
+        "failed": failed,
+        "metrics": {k: {"value": v, "unit": ""} for k, v in metrics.items()},
+    }
+
+
+def test_traced_pairs_report_the_median_layer_ratio(tmp_path, monkeypatch, capsys):
+    ab = _ab()
+    tree, rtf = "tree.construct_tree.self_ms_per_doc", "rtf_extract.extract_rtf_text.self_ms_per_doc"
+    page, unseen = "ocr.ink_mask.self_ms_per_page", "dom.parse_html.self_ms_per_doc"
+    parent = [{tree: 1.0, rtf: 0.5, page: 2.0, unseen: 0.0}, {tree: 1.2, rtf: 0.6, page: 2.0, unseen: 0.0},
+              {tree: 0.8, rtf: 0.5, page: 2.0, unseen: 0.0}]
+    change = [{tree: 0.6, rtf: 0.25, page: 2.2, unseen: 0.0}, {tree: 0.6, rtf: 0.3, page: 1.8, unseen: 0.0},
+              {tree: 0.6, rtf: 0.2, page: 2.0, unseen: 0.0}]
+    pairs = [{"parent": _traced(p), "change": _traced(c)} for p, c in zip(parent, change)]
+    lines = ab.layer_ratios(pairs)
+    # a layer no run reached (self time 0) has no ratio; counts and fractions are not layers
+    assert [ln.split(":")[0] for ln in lines] == [tree, rtf, page]
+    assert lines[0] == f"{tree}: parent 1 -> change 0.6, change/parent 0.600 (median of 3 pairs)"
+    assert lines[1].endswith("change/parent 0.500 (median of 3 pairs)")
+    assert lines[2].endswith("change/parent 1.000 (median of 3 pairs)")
+
+    (tmp_path / "BENCHMARK.json").write_text(json.dumps({"end_to_end": END_TO_END}))
+    seen = []
+
+    def fake_run(checkout, workload, seed, trace):
+        seen.append(trace)
+        k = len(seen) // 2 % 3
+        return _traced(parent[k] if checkout == "P" else change[k])
+
+    monkeypatch.setattr(ab, "run_once", fake_run)
+    args = ["--parent", "P", "--change", str(tmp_path), "--workload", "file_mix", "--pairs", "2", "--trace", "1"]
+    assert ab.main(args) == 0
+    assert seen == [1, 1, 1, 1]
+    out = capsys.readouterr().out
+    assert "file_mix seed 1, 2 traced pairs:" in out
+    assert f"  {tree}: parent" in out and "claim rule" not in out

@@ -211,6 +211,29 @@ def test_html_past_the_depth_limit_gives_the_same_limit_row_on_every_path(spark)
         assert got[url] == {c: want.get(c) for c in out.columns}, url
 
 
+def test_deep_json_gives_the_same_row_on_every_path(spark):
+    """JSON nested past MAX_JSON_DEPTH is a ``resource_limit:depth`` row
+    (json.loads' C decoder fails near 1,000 levels, earlier on a deeper
+    stack), and at the budget a content row; both equal from
+    extract_document and from extract_stage on one Python worker."""
+    from dedoc_spark.core.limits import MAX_JSON_DEPTH
+
+    docs = [
+        ("https://deep.example/2000.json", "[" * 2000 + '"x"' + "]" * 2000),
+        ("https://deep.example/at_budget.json", "[" * MAX_JSON_DEPTH + '"x"' + "]" * MAX_JSON_DEPTH),
+    ]
+    df = spark.createDataFrame(
+        [(url, bytearray(doc.encode()), None) for url, doc in docs], "url string, html binary, text string"
+    ).coalesce(1)
+    out = extract_stage(df)
+    got = _rows_by_url(out)
+    want = {url: extract_document(url, doc.encode(), None) for url, doc in docs}
+    assert want[docs[0][0]]["error"] == "resource_limit:depth"
+    assert want[docs[1][0]]["error"] is None
+    for url, _ in docs:
+        assert got[url] == {c: want[url].get(c) for c in out.columns}, url
+
+
 STR, I32 = pa.string(), pa.int32()
 LIST = pa.list_(pa.field("element", pa.string()))
 
