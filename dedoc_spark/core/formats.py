@@ -43,7 +43,8 @@ _HTML = HtmlExtractor()
 
 # --- JSON -------------------------------------------------------------------
 
-_JSON_STRING = re.compile(r'"[^"\\]*(?:\\.[^"\\]*)*"', re.S)
+# a string; an unterminated one runs to the end, so the scan stays linear
+_JSON_STRING = re.compile(r'"[^"\\]*(?:\\.[^"\\]*)*"?', re.S)
 _JSON_BRACKET = re.compile(r"[\[\]{}]")
 _JSON_STEP = {"[": 1, "{": 1, "]": -1, "}": -1}
 

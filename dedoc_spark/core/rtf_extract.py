@@ -59,7 +59,9 @@ def extract_rtf_text(payload: bytes) -> Tuple[List[str], List[str]]:
         raise ValueError("not an RTF payload")
     cpg = re.search(rb"\\ansicpg(\d+)", payload[:256])
     codepage = f"cp{cpg.group(1).decode()}" if cpg else "cp1252"
-    try:  # a codepage Python lacks fails at its first decode: keep stream order
+    # a codepage Python lacks raises at the first decode, which must come in
+    # stream order with a bad \uN's ValueError: read such runs token by token
+    try:
         whole_runs = codecs.lookup(codepage) is not None
     except LookupError:
         whole_runs = False

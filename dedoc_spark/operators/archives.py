@@ -188,6 +188,7 @@ def explode_attachments(
     formats.list_attachments. Rows with no attachments produce nothing."""
     def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from dedoc_spark.core.formats import list_attachments
+        from dedoc_spark.core.limits import ResourceLimit
 
         for pdf in it:
             out = []
@@ -199,8 +200,9 @@ def explode_attachments(
                 try:
                     for name, data in list_attachments(sniff_url, raw, max_members, params):
                         out.append({"url": f"{url}#{name}", "html": data, "text": "", "error": None, "kind": "member"})
-                except Exception as e:
-                    out.append({"url": url, "html": None, "text": "", "error": f"{type(e).__name__}: {e}", "kind": "error"})
+                except Exception as e:  # a budget's error reads as on a document row
+                    error = str(e) if isinstance(e, ResourceLimit) else f"{type(e).__name__}: {e}"
+                    out.append({"url": url, "html": None, "text": "", "error": error, "kind": "error"})
             yield pd.DataFrame(out, columns=[f.name for f in MEMBER_SCHEMA.fields])
 
     return df.select("url", "html").mapInPandas(bootstrapped(fn), MEMBER_SCHEMA)

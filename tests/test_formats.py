@@ -38,6 +38,32 @@ def test_json_nesting_past_the_budget_is_a_limit_row():
     assert lines == ["[" * 3000 + '"' + "{" * 600, "]]"]
 
 
+def test_json_depth_check_is_linear_on_an_unterminated_string():
+    """A string that never closes (truncated JSON holding escaped JSON)
+    past a budget's worth of brackets: doubling it may cost at most 2.5x.
+    The timings take turns, so a slow spell of a shared host hits them all."""
+    import gc
+    import time
+
+    import pytest
+
+    from dedoc_spark.core.limits import MAX_JSON_DEPTH, ResourceLimit
+
+    docs = ["[" * (MAX_JSON_DEPTH + 1) + '"' + '\\"' * n for n in (100_000, 200_000)]
+    best = [float("inf")] * len(docs)
+    gc.disable()
+    try:
+        for _ in range(5):
+            for k, doc in enumerate(docs):
+                t0 = time.perf_counter()
+                with pytest.raises(ResourceLimit):
+                    extract_json_lines(doc)
+                best[k] = min(best[k], time.perf_counter() - t0)
+    finally:
+        gc.enable()
+    assert best[1] <= 2.5 * best[0], best
+
+
 def test_json_dict_sorted_keys():
     lines = extract_json_lines('{"b": 1, "a": "x"}')
     got = [(ln.line, ln.tag_hl.line_type, ln.tag_hl.level_1) for ln in lines]

@@ -234,6 +234,18 @@ def test_deep_json_gives_the_same_row_on_every_path(spark):
         assert got[url] == {c: want[url].get(c) for c in out.columns}, url
 
 
+def test_deep_json_gives_the_limit_error_in_the_attachment_channel(spark):
+    """Listing html_fields attachments of JSON past MAX_JSON_DEPTH gives an
+    error row whose error is the document row's, ``resource_limit:depth``."""
+    from dedoc_spark.operators.archives import explode_attachments
+
+    doc = '{"a": ' + "[" * 2000 + '"x"' + "]" * 2000 + "}"
+    df = spark.createDataFrame([("https://deep.example/a.json", bytearray(doc.encode()))], "url string, html binary")
+    rows = explode_attachments(df, params={"html_fields": [["a"]]}).collect()
+    assert [(r.url, r.error, r.kind) for r in rows] == [("https://deep.example/a.json", "resource_limit:depth", "error")]
+    assert extract_document("https://deep.example/a.json", doc.encode(), None)["error"] == "resource_limit:depth"
+
+
 STR, I32 = pa.string(), pa.int32()
 LIST = pa.list_(pa.field("element", pa.string()))
 
