@@ -486,6 +486,8 @@ def _content_resniff(url: str, html: bytes, failed_fmt: Optional[str], params: D
             out = extract_pdf_document(url, html, params)
         else:
             out = _finalize(url, *_READERS[fmt](url, html, params), params)
+    except ResourceLimit as e:  # the sniffed reader passed a budget: its row
+        return _error_row(url, str(e))
     except Exception:
         return None
     out["warnings"] = [f"format re-sniffed by content: {fmt}"] + list(out["warnings"])
@@ -581,22 +583,13 @@ def extract_document(
                 )
             return _error_row(url, f"needs_decoder:{fmt[6:]}", warnings=warnings_list)
         # unknown markup-ish bytes: html fallback (web default)
-        parse = _READERS.get(fmt, _parse_html)
-        if fmt not in _NATIVE_BEST_EFFORT:
-            return _finalize(url, *parse(url, html, params), params)
-        try:
-            lines, tables, warnings = parse(url, html, params)
-        except Exception as e:
-            retry = _content_resniff(url, html, fmt, params)
-            if retry is not None:
-                return retry
-            return _error_row(url, f"needs_conversion:{fmt}", warnings=[f"native parse failed: {e}"])
-        return _finalize(url, lines, tables, warnings, params)
+        return _finalize(url, *_READERS.get(fmt, _parse_html)(url, html, params), params)
     except ResourceLimit as e:  # past a fixed budget: the same row on every path
         return _error_row(url, str(e))
     except Exception as e:  # error channel, never job failure
-        if html:
-            retry = _content_resniff(url, html, fmt, params)
-            if retry is not None:
-                return retry
+        retry = _content_resniff(url, html, fmt, params) if html else None
+        if retry is not None:
+            return retry
+        if fmt in _NATIVE_BEST_EFFORT:
+            return _error_row(url, f"needs_conversion:{fmt}", warnings=[f"native parse failed: {e}"])
         return _error_row(url, f"{type(e).__name__}: {e}")

@@ -43,6 +43,7 @@ from typing import Dict, List, Optional, Tuple
 from xml.etree import ElementTree as ET
 
 from dedoc_spark.core.annotation_merger import merge_annotations
+from dedoc_spark.core.limits import BoundedZip
 from dedoc_spark.core.model import Annotation, Cell, HierarchyLevel, Line, Table
 from dedoc_spark.core.ooxml_ns import normalize_strict_ooxml
 
@@ -130,11 +131,8 @@ def diagram_attachments(payload: bytes, max_members: int = 1000) -> List[Tuple[s
     repacked document.xml holds ONLY the one diagram element, inserted back
     alone via ``bs.body.insert(1, p)``). Fixed zip timestamps keep the
     attachment bytes deterministic."""
-    import io
-    import zipfile
-
     try:
-        with zipfile.ZipFile(io.BytesIO(payload)) as zf:
+        with BoundedZip(payload) as zf:
             names = [n for n in zf.namelist() if not n.endswith("/")]
             docname = next(
                 (n for n in ("word/document.xml", "word/document2.xml") if n in names),
@@ -376,16 +374,14 @@ class _Numbering:
 class DocxExtractor:
     def extract(self, payload: bytes, url_hash: str = "") -> Tuple[List[Line], List[Table], List[str]]:
         warnings: List[str] = []
-        with zipfile.ZipFile(io.BytesIO(payload)) as zf:
+        with BoundedZip(payload) as zf:
             names = set(zf.namelist())
 
             def read(name: str) -> Optional[bytes]:
-                if name not in names:
-                    return None
                 # strict-OOXML URIs normalized so ElementTree paths line
                 # up (e.g. the corpus's size1.docx) — shared table, so
                 # diagram uids hash the SAME normalized bytes everywhere
-                return normalize_strict_ooxml(zf.read(name))
+                return normalize_strict_ooxml(zf.read(name)) if name in names else None
 
             # some Word builds emit document2.xml (reference falls back the
             # same way, office_utils.get_bs_from_zip / docx_document.py:134-136)

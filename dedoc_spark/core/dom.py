@@ -31,7 +31,7 @@ import re
 from html import unescape
 from typing import Dict, List, Optional, Tuple, Union
 
-from dedoc_spark.core.limits import MAX_HTML_DEPTH, ResourceLimit
+from dedoc_spark.core.limits import MAX_HTML_DEPTH, MAX_TABLE_DEPTH, ResourceLimit
 
 # bs4.builder.HTMLTreeBuilder.empty_element_tags (public knowledge: the
 # HTML5 void element list + historical additions)
@@ -267,8 +267,8 @@ def _markup(text: str, i: int) -> Tuple[int, int, object]:
 
 def parse_html(data: Union[bytes, str]) -> Document:
     """Parse HTML bytes/str into a DOM rooted at a ``[document]`` element.
-    Raises ResourceLimit("depth") once more than MAX_HTML_DEPTH elements
-    are open at once."""
+    Raises ResourceLimit("depth") once more than MAX_HTML_DEPTH elements,
+    or more than MAX_TABLE_DEPTH tables, are open at once."""
     text = decode_html(data) if isinstance(data, bytes) else data
     root = Document()
     tables = root.tables
@@ -313,7 +313,7 @@ def parse_html(data: Union[bytes, str]) -> Document:
                 if name == "table":
                     tables.append(el)
                 if not self_closing and name not in VOID_TAGS:
-                    if len(stack) > MAX_HTML_DEPTH:
+                    if len(stack) > MAX_HTML_DEPTH or (name == "table" and open_count.get(name, 0) >= MAX_TABLE_DEPTH):
                         raise ResourceLimit("depth")
                     stack.append(el)
                     kids = el.children

@@ -30,12 +30,11 @@ import hashlib
 import io
 import json
 import re
-import zipfile
 from itertools import accumulate
 from typing import Dict, List, Optional, Tuple
 
 from dedoc_spark.core.html_extract import HtmlExtractor
-from dedoc_spark.core.limits import MAX_JSON_DEPTH, ResourceLimit
+from dedoc_spark.core.limits import MAX_JSON_DEPTH, BoundedZip, ResourceLimit
 from dedoc_spark.core.model import Cell, HierarchyLevel, Line, Table
 
 _HTML = HtmlExtractor()
@@ -283,12 +282,8 @@ def list_archive_members(payload: bytes, max_members: int = 1000) -> List[Tuple[
 
         return rar_members(payload, max_members)
     if payload[:4] == b"PK\x03\x04":
-        with zipfile.ZipFile(io.BytesIO(payload)) as zf:
-            for info in zf.infolist()[:max_members]:
-                if info.is_dir():
-                    continue
-                out.append((info.filename, zf.read(info)))
-        return out
+        with BoundedZip(payload) as zf:
+            return [(info.filename, zf.read(info)) for info in zf.infolist()[:max_members] if not info.is_dir()]
     import bz2
     import gzip
     import lzma
@@ -313,16 +308,6 @@ def list_archive_members(payload: bytes, max_members: int = 1000) -> List[Tuple[
     if data is not payload:  # bare gzip/bz2/xz of a single file
         return [("member", data)]
     raise ValueError("unsupported archive payload")
-
-
-def _is_tar(data: bytes) -> bool:
-    import tarfile
-
-    try:
-        with tarfile.open(fileobj=io.BytesIO(data)):
-            return True
-    except tarfile.TarError:
-        return False
 
 
 # --- attachments (attachments_handler.py:31-81 re-entry semantics) -----------
@@ -391,11 +376,9 @@ def list_attachments(
         media_dirs = {"docx": ("word/media/", "word/embeddings/"),
                       "xlsx": ("xl/media/", "xl/embeddings/"),
                       "pptx": ("ppt/media/", "ppt/embeddings/")}[fmt]
-        with zipfile.ZipFile(io.BytesIO(payload)) as zf:
+        with BoundedZip(payload) as zf:
             for info in zf.infolist():
-                if info.is_dir():
-                    continue
-                if any(info.filename.startswith(d) for d in media_dirs):
+                if not info.is_dir() and info.filename.startswith(media_dirs):
                     out.append((info.filename.rsplit("/", 1)[-1], zf.read(info)))
                     if len(out) >= max_members:
                         break
@@ -406,14 +389,13 @@ def list_attachments(
 # --- note (.note.pickle, labeling format) ------------------------------------
 
 
-def extract_note_content(payload: bytes) -> str:
-    """NoteReader port (note_reader.py:15-37): unpickle the note dict and
-    return its "content" text. SECURITY deviation from the reference:
-    the reference calls pickle.load directly — on untrusted web bytes
-    that is arbitrary code execution, so this port uses a RESTRICTED
-    unpickler that refuses every global/class lookup (plain containers
-    and scalars only; a malicious pickle raises into the typed error
-    channel instead of executing)."""
+def _load_note(payload: bytes) -> Dict:
+    """The note dict. SECURITY deviation from the reference: the reference
+    calls pickle.load directly — on untrusted web bytes that is arbitrary
+    code execution, so this port uses a RESTRICTED unpickler that refuses
+    every global/class lookup (plain containers and scalars only; a
+    malicious pickle raises into the typed error channel instead of
+    executing)."""
     import pickle
 
     class _SafeUnpickler(pickle.Unpickler):
@@ -422,8 +404,13 @@ def extract_note_content(payload: bytes) -> str:
                 f"note pickle requested global {module}.{name} — refused"
             )
 
-    note_dict = _SafeUnpickler(io.BytesIO(payload)).load()
-    text = note_dict["content"]
+    return _SafeUnpickler(io.BytesIO(payload)).load()
+
+
+def extract_note_content(payload: bytes) -> str:
+    """NoteReader port (note_reader.py:15-37): unpickle the note dict
+    (``_load_note``) and return its "content" text."""
+    text = _load_note(payload)["content"]
     if isinstance(text, bytes):
         text = text.decode()
     return text
@@ -437,15 +424,7 @@ def extract_note_metadata(payload: bytes) -> Dict[str, str]:
     restricted unpickler as the reader. A broken note raises — the
     reference maps it to BadFileFormatError; callers route it to the
     typed error/empty-metadata channel."""
-    import pickle
-
-    class _SafeUnpickler(pickle.Unpickler):
-        def find_class(self, module, name):  # noqa: ARG002
-            raise pickle.UnpicklingError(
-                f"note pickle requested global {module}.{name} — refused"
-            )
-
-    note_dict = _SafeUnpickler(io.BytesIO(payload)).load()
+    note_dict = _load_note(payload)
     return {
         "file_type": "note",
         "size": str(note_dict["size"]),
@@ -586,11 +565,11 @@ _MEDIA_MAGIC = [
 _OLE2_MAGIC = b"\xd0\xcf\x11\xe0\xa1\xb1\x1a\xe1"
 
 
-def _is_valid_tar(payload: bytes) -> bool:
+def _is_tar(data: bytes) -> bool:
     import tarfile
 
     try:
-        with tarfile.open(fileobj=io.BytesIO(payload)):
+        with tarfile.open(fileobj=io.BytesIO(data)):
             return True
     except tarfile.TarError:
         return False
@@ -648,11 +627,11 @@ def detect_format(url: str, payload: Optional[bytes], text: Optional[str]) -> st
             return "zip"  # bzip2 (stdlib bz2)
         if payload[:6] == b"\xfd7zXZ\x00":
             return "zip"  # xz (stdlib lzma)
-        if payload[257:262] == b"ustar" and _is_valid_tar(payload):
+        if payload[257:262] == b"ustar" and _is_tar(payload):
             return "zip"  # verified tar (plain text can contain 'ustar')
         if payload[:4] == b"PK\x03\x04":
             try:
-                with zipfile.ZipFile(io.BytesIO(payload)) as zf:
+                with BoundedZip(payload) as zf:
                     members = set(zf.namelist())
                     if "word/document.xml" in members:
                         return "docx"

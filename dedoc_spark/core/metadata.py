@@ -13,13 +13,12 @@ References:
 
 from __future__ import annotations
 
-import io
 import re
-import zipfile
 from datetime import datetime, timedelta, timezone
 from typing import Dict, Optional
 from xml.etree import ElementTree as ET
 
+from dedoc_spark.core.limits import BoundedZip
 from dedoc_spark.core.model import param_flag
 
 _PDF_DATE_RE = re.compile(
@@ -110,7 +109,7 @@ def extract_docx_metadata(payload: bytes) -> Dict[str, str]:
     """docProps/core.xml fields (docx_metadata_extractor.py semantics)."""
     out: Dict[str, str] = {}
     try:
-        with zipfile.ZipFile(io.BytesIO(payload)) as zf:
+        with BoundedZip(payload) as zf:
             if "docProps/core.xml" not in zf.namelist():
                 return out
             root = ET.fromstring(zf.read("docProps/core.xml"))

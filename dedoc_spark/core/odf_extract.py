@@ -17,12 +17,11 @@ directly:
 from __future__ import annotations
 
 import hashlib
-import io
-import zipfile
 from typing import Dict, List, Optional, Tuple
 from xml.etree import ElementTree as ET
 
 from dedoc_spark.core.annotation_merger import merge_annotations
+from dedoc_spark.core.limits import BoundedZip
 from dedoc_spark.core.model import Annotation, Cell, HierarchyLevel, Line, Table
 
 _TEXT = "{urn:oasis:names:tc:opendocument:xmlns:text:1.0}"
@@ -97,7 +96,7 @@ def _para_text(el: ET.Element, styles: Optional[Dict[str, Dict[str, str]]] = Non
 
 
 def _content_root(payload: bytes) -> ET.Element:
-    with zipfile.ZipFile(io.BytesIO(payload)) as zf:
+    with BoundedZip(payload) as zf:
         return ET.fromstring(zf.read("content.xml"))
 
 

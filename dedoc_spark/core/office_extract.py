@@ -13,23 +13,16 @@ References:
 from __future__ import annotations
 
 import hashlib
-import io
 import re
-import zipfile
 from typing import Dict, List, Optional, Tuple
 from xml.etree import ElementTree as ET
 
+from dedoc_spark.core.limits import BoundedZip
 from dedoc_spark.core.model import Annotation, Cell, HierarchyLevel, Line, Table
+from dedoc_spark.core.ooxml_ns import normalize_strict_ooxml
 
 _SSML = "{http://schemas.openxmlformats.org/spreadsheetml/2006/main}"
 _DRAW = "{http://schemas.openxmlformats.org/drawingml/2006/main}"
-
-def _member_xml(zf: zipfile.ZipFile, name: str) -> bytes:
-    # strict-OOXML -> transitional (shared map, core/ooxml_ns.py)
-    from dedoc_spark.core.ooxml_ns import normalize_strict_ooxml
-
-    return normalize_strict_ooxml(zf.read(name))
-
 
 def _col_index(ref: str) -> int:
     """'BC12' → 0-based column index."""
@@ -48,11 +41,11 @@ def extract_xlsx_tables(payload: bytes, url_hash: str = "") -> Tuple[List[Table]
     strings resolved)."""
     tables: List[Table] = []
     warnings: List[str] = []
-    with zipfile.ZipFile(io.BytesIO(payload)) as zf:
+    with BoundedZip(payload) as zf:
         names = set(zf.namelist())
         shared: List[str] = []
         if "xl/sharedStrings.xml" in names:
-            root = ET.fromstring(_member_xml(zf, "xl/sharedStrings.xml"))
+            root = ET.fromstring(normalize_strict_ooxml(zf.read("xl/sharedStrings.xml")))
             for si in root.findall(f"{_SSML}si"):
                 shared.append("".join(t.text or "" for t in si.iter(f"{_SSML}t")))
         sheet_names = sorted(
@@ -60,7 +53,7 @@ def extract_xlsx_tables(payload: bytes, url_hash: str = "") -> Tuple[List[Table]
             key=lambda n: int(re.search(r"\d+", n.rsplit("/", 1)[-1]).group()),
         )
         for sheet_id, name in enumerate(sheet_names):
-            root = ET.fromstring(_member_xml(zf, name))
+            root = ET.fromstring(normalize_strict_ooxml(zf.read(name)))
             rows: List[List[str]] = []
             max_cols = 0
             for row_el in root.iter(f"{_SSML}row"):
@@ -111,7 +104,7 @@ def extract_pptx(payload: bytes, url_hash: str = "") -> Tuple[List[Line], List[T
             lines.append(Line(line="", page_id=slide_id, uid=f"{url_hash}_pptx_anchor{slide_id}"))
         return lines[-1]
 
-    with zipfile.ZipFile(io.BytesIO(payload)) as zf:
+    with BoundedZip(payload) as zf:
         names = zf.namelist()
         slide_names = sorted(
             (n for n in names if re.fullmatch(r"ppt/slides/slide\d+\.xml", n)),
@@ -121,11 +114,11 @@ def extract_pptx(payload: bytes, url_hash: str = "") -> Tuple[List[Line], List[T
             rels_name = f"ppt/slides/_rels/{name.rsplit('/', 1)[-1]}.rels"
             media_rels = {}
             if rels_name in names:
-                for rel in ET.fromstring(_member_xml(zf, rels_name)).iter(f"{_REL_NS}Relationship"):
+                for rel in ET.fromstring(normalize_strict_ooxml(zf.read(rels_name))).iter(f"{_REL_NS}Relationship"):
                     target = rel.get("Target") or ""
                     if "media/" in target:
                         media_rels[rel.get("Id") or ""] = target.rsplit("/", 1)[-1]
-            root = ET.fromstring(_member_xml(zf, name))
+            root = ET.fromstring(normalize_strict_ooxml(zf.read(name)))
             sp_tree = next((el for el in root.iter() if el.tag.endswith("}spTree")), root)
             is_first_shape = True
             for node in sp_tree:

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from dedoc_spark.core.limits import ResourceLimit
 from dedoc_spark.operators.pipeline import bootstrapped
 
 MEMBER_SCHEMA = T.StructType(
@@ -34,6 +35,13 @@ MEMBER_SCHEMA = T.StructType(
         T.StructField("kind", T.StringType()),
     ]
 )
+
+
+def _error_member(url: str, e: Exception) -> dict:
+    """The kind='error' row of a payload that failed to explode; a budget's
+    error reads as on a document row."""
+    error = str(e) if isinstance(e, ResourceLimit) else f"{type(e).__name__}: {e}"
+    return {"url": url, "html": None, "text": "", "error": error, "kind": "error"}
 
 
 def explode_archives(df: DataFrame, max_members: int = 1000) -> DataFrame:
@@ -61,7 +69,7 @@ def explode_archives(df: DataFrame, max_members: int = 1000) -> DataFrame:
                     for name, data in list_archive_members(raw, max_members):
                         out.append({"url": f"{url}#{name}", "html": data, "text": "", "error": None, "kind": "member"})
                 except Exception as e:
-                    out.append({"url": url, "html": None, "text": "", "error": f"{type(e).__name__}: {e}", "kind": "error"})
+                    out.append(_error_member(url, e))
             yield pd.DataFrame(out, columns=[f.name for f in MEMBER_SCHEMA.fields])
 
     return df.select("url", "html").mapInPandas(bootstrapped(fn), MEMBER_SCHEMA)
@@ -188,7 +196,6 @@ def explode_attachments(
     formats.list_attachments. Rows with no attachments produce nothing."""
     def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from dedoc_spark.core.formats import list_attachments
-        from dedoc_spark.core.limits import ResourceLimit
 
         for pdf in it:
             out = []
@@ -200,9 +207,8 @@ def explode_attachments(
                 try:
                     for name, data in list_attachments(sniff_url, raw, max_members, params):
                         out.append({"url": f"{url}#{name}", "html": data, "text": "", "error": None, "kind": "member"})
-                except Exception as e:  # a budget's error reads as on a document row
-                    error = str(e) if isinstance(e, ResourceLimit) else f"{type(e).__name__}: {e}"
-                    out.append({"url": url, "html": None, "text": "", "error": error, "kind": "error"})
+                except Exception as e:
+                    out.append(_error_member(url, e))
             yield pd.DataFrame(out, columns=[f.name for f in MEMBER_SCHEMA.fields])
 
     return df.select("url", "html").mapInPandas(bootstrapped(fn), MEMBER_SCHEMA)

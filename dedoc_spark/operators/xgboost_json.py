@@ -34,13 +34,13 @@ mapInPandas alike).
 
 from __future__ import annotations
 
-import io
 import json
 import math
-import zipfile
 from typing import Dict, List, Optional, Sequence, Tuple
 
 import numpy as np
+
+from dedoc_spark.core.limits import BoundedZip
 
 
 class _Tree:
@@ -261,7 +261,7 @@ def load_xgboost_json(
             with open(source, "rb") as f:
                 payload = f.read()
         if payload[:4] == b"PK\x03\x04":
-            with zipfile.ZipFile(io.BytesIO(payload)) as zf:
+            with BoundedZip(payload) as zf:
                 names = zf.namelist()
                 clf = next(n for n in names if n.endswith("classifier.json"))
                 doc = json.loads(zf.read(clf).decode("utf-8"))

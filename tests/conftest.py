@@ -48,3 +48,42 @@ def spark():
     )
     yield spark
     spark.stop()
+
+
+# the smallest members each reader needs before it reads the bomb member
+_BOMB_CONTAINERS = {
+    "docx": ([("word/document.xml", b"<document/>")], "word/styles.xml"),
+    "xlsx": ([("xl/workbook.xml", b"<workbook/>")], "xl/worksheets/sheet1.xml"),
+    "pptx": ([("ppt/presentation.xml", b"<presentation/>")], "ppt/slides/slide1.xml"),
+    "odt": ([("mimetype", b"application/vnd.oasis.opendocument.text")], "content.xml"),
+    "zip": ([("a.txt", b"a")], "b.txt"),
+}
+
+
+@pytest.fixture(scope="session")
+def zip_bomb():
+    """``zip_bomb(kind)`` -> a .docx/.xlsx/.pptx/.odt/.zip payload whose
+    last member inflates to 4 x MAX_UNZIP_BYTES spaces (about 520 KB of
+    deflate), built once per session with streamed writes."""
+    import io
+    import zipfile
+
+    from dedoc_spark.core.limits import MAX_UNZIP_BYTES
+
+    built = {}
+
+    def get(kind: str) -> bytes:
+        if kind not in built:
+            members, bomb = _BOMB_CONTAINERS[kind]
+            buf = io.BytesIO()
+            with zipfile.ZipFile(buf, "w", zipfile.ZIP_DEFLATED) as zf:
+                for name, data in members:
+                    zf.writestr(name, data)
+                chunk = b" " * (1 << 20)
+                with zf.open(bomb, "w") as f:
+                    for _ in range(4 * MAX_UNZIP_BYTES // len(chunk)):
+                        f.write(chunk)
+            built[kind] = buf.getvalue()
+        return built[kind]
+
+    return get

@@ -3,6 +3,7 @@
 Key invariant: the Spark path produces byte-identical output to the plain
 function path, and the same output at any parallelism/partitioning."""
 
+import hashlib
 import json
 import time
 import unicodedata
@@ -161,11 +162,15 @@ DEEP_PAGES = [
     ),
     # each list level is two document-tree levels: the tree walks go as deep
     ("https://deep.example/ul.html", "<ul><li>item" * (DEPTH // 2)),
+    # MAX_TABLE_DEPTH tables open at once (about 0.1 s)
+    ("https://deep.example/table10.html", "<table><tr><td>" * 10 + "x" + "</td></tr></table>" * 10),
 ]
-# nesting past MAX_HTML_DEPTH: a list 20,000 deep (180 KB) and a block
+# nesting past MAX_HTML_DEPTH: a list 20,000 deep (180 KB) and a block;
+# past MAX_TABLE_DEPTH: 11 tables
 LIMIT_PAGES = [
     ("https://deep.example/ul20k.html", "<body>" + "<ul><li>a" * 20_000),
     ("https://deep.example/div20k.html", "<div>" * 20_000 + "x" + "</div>" * 20_000),
+    ("https://deep.example/table11.html", "<table><tr><td>" * 11 + "x" + "</td></tr></table>" * 11),
 ]
 
 
@@ -189,6 +194,9 @@ def test_deep_html_gives_the_same_content_row_on_every_path(spark):
     cells = json.loads(got["https://deep.example/colspan.html"]["tables_json"])[0]["cells"]
     assert [[c["lines"][0]["line"] for c in row] for row in cells] == [["cell text", "cell text"], ["x", "y"]]
     assert got["https://deep.example/ul.html"]["text_extracted"].count("item") == DEPTH // 2
+    # the bytes from before the table cap
+    table10 = json.dumps(got["https://deep.example/table10.html"], sort_keys=True)
+    assert hashlib.sha256(table10.encode()).hexdigest()[:16] == "3a2fe481d8d49959"
 
 
 def test_html_past_the_depth_limit_gives_the_same_limit_row_on_every_path(spark):
@@ -244,6 +252,31 @@ def test_deep_json_gives_the_limit_error_in_the_attachment_channel(spark):
     rows = explode_attachments(df, params={"html_fields": [["a"]]}).collect()
     assert [(r.url, r.error, r.kind) for r in rows] == [("https://deep.example/a.json", "resource_limit:depth", "error")]
     assert extract_document("https://deep.example/a.json", doc.encode(), None)["error"] == "resource_limit:depth"
+
+
+def test_a_zip_bomb_gives_the_limit_row_on_every_path(spark, zip_bomb):
+    """A zip member past MAX_UNZIP_BYTES is ``resource_limit:zip_member``
+    from extract_document, from extract_stage, and as the error row of
+    both explosion channels (archive members, attachments)."""
+    from dedoc_spark.operators.archives import explode_archives, explode_attachments
+
+    docx, archive = "https://bomb.example/a.docx", "https://bomb.example/a.zip"
+    rows = [(docx, zip_bomb("docx")), (archive, zip_bomb("zip"))]
+    df = spark.createDataFrame(
+        [(url, bytearray(payload), None) for url, payload in rows], "url string, html binary, text string"
+    ).coalesce(1)
+    out = extract_stage(df)
+    got = _rows_by_url(out)
+    for url, payload in rows:
+        want = extract_document(url, payload, None)
+        assert want["error"] == "resource_limit:zip_member", url
+        assert got[url] == {c: want.get(c) for c in out.columns}, url
+    limit = "resource_limit:zip_member"
+    # a docx is no archive: explode_archives passes it through to extraction
+    assert [(r.url, r.error) for r in explode_archives(df).collect() if r.kind != "passthrough"] == [(archive, limit)]
+    assert sorted((r.url, r.error, r.kind) for r in explode_attachments(df).collect()) == [
+        (docx, limit, "error"), (archive, limit, "error")
+    ]
 
 
 STR, I32 = pa.string(), pa.int32()
