@@ -18,7 +18,7 @@ from functools import partial
 from typing import Callable, Dict, List, Optional, Sequence
 
 from dedoc_spark.core.html_extract import HtmlExtractor
-from dedoc_spark.core.limits import ResourceLimit
+from dedoc_spark.core.limits import BoundedZip, ResourceLimit
 from dedoc_spark.core.model import Line, lines_json, param_flag, select_pages, tables_json
 from dedoc_spark.core.structure import assign_hierarchy_levels
 from dedoc_spark.core.tree import construct_tree, flatten_tree, tree_to_text
@@ -538,11 +538,17 @@ def extract_document(
         if fmt == "zip":
             # archives are exploded into member rows by
             # operators/archives.extract_with_archives; a bare per-row call
-            # reports the members instead of parsing zip bytes as markup
+            # reports the members instead of parsing zip bytes as markup;
+            # a zip's names come from its central directory, with no
+            # member read (the other archive kinds must be inflated)
             from dedoc_spark.core.formats import list_archive_members
 
             try:
-                names = [n for n, _ in list_archive_members(html, max_members=100)]
+                if html[:4] == b"PK\x03\x04":
+                    with BoundedZip(html) as zf:
+                        names = [i.filename for i in zf.infolist()[:100] if not i.is_dir()]
+                else:
+                    names = [n for n, _ in list_archive_members(html, max_members=100)]
             except ValueError as e:
                 # rar compressed members raise the typed needs_unpacker
                 # message (core/rar_extract.py) — surface it as the row's

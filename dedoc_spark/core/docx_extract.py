@@ -140,13 +140,16 @@ def diagram_attachments(payload: bytes, max_members: int = 1000) -> List[Tuple[s
             )
             if docname is None:
                 return []
-            members = {n: zf.read(n) for n in names}
+            # normalize strict-OOXML URIs BEFORE hashing: the reader's
+            # annotation side hashes the normalized document.xml, and the
+            # two md5s must agree
+            content, diag = diagram_paragraphs(normalize_strict_ooxml(zf.read(docname)))
+            if not diag:
+                return []
+            # the other members are read only for a document that has a
+            # diagram to repack them with
+            members = {n: zf.read(n) for n in names if n != docname}
     except zipfile.BadZipFile:
-        return []
-    # normalize strict-OOXML URIs BEFORE hashing: the reader's annotation
-    # side hashes the normalized document.xml, and the two md5s must agree
-    content, diag = diagram_paragraphs(normalize_strict_ooxml(members[docname]))
-    if not diag:
         return []
     bo = re.search(rb"<(?:\w+:)?body[\s>]", content)
     bc = re.search(rb"</(?:\w+:)?body>", content)

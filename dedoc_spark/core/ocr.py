@@ -382,18 +382,31 @@ def detect_columns(mask: np.ndarray) -> int:
     return 1
 
 
+def _best_band_conf(
+    lines: List[Tuple[Tuple[int, int, int, int], List[OcrWordOut], float]],
+) -> Optional[float]:
+    """Confidence of the best band with at least 4 recognised glyphs, or
+    None when no band has that many. Fixture pages always carry at least
+    one ≈1.0 band, while a fused table/noise band (a lone glyph over a
+    whole table row) would drag a mean below the floor even on a genuine
+    scanfont page — so orientation and engine choice both judge a page
+    by its best substantial band."""
+    confs = [c for _, ws, c in lines if sum(len(w.text) for w in ws) >= 4]
+    return max(confs) if confs else None
+
+
 def detect_orientation(
     image: np.ndarray, language: str = "rus+eng", mask: Optional[np.ndarray] = None
 ) -> int:
     """Page rotation in degrees CCW needed to make the text upright —
     stand-in for the EfficientNet orientation head
-    (columns_orientation_classifier). Each 90° candidate is scored by the
-    mean template-match confidence over the first bands (a rotated or
-    flipped glyph matches nothing, so the upright candidate wins by a
-    wide margin); ties and blank pages keep 0. A near-perfect upright
-    match short-circuits the other three candidates (the common case —
-    a flipped glyph cannot also match near-perfectly: the glyph set is
-    distinctness-checked at import)."""
+    (columns_orientation_classifier). Each 90° candidate is scored by its
+    best substantial band among the first three (``_best_band_conf``; a
+    rotated or flipped glyph matches nothing, so the upright candidate
+    wins by a wide margin); ties and blank pages keep 0. A near-perfect
+    upright match short-circuits the other three candidates (the common
+    case — a flipped glyph cannot also match near-perfectly: the glyph
+    set is distinctness-checked at import)."""
     if mask is None:
         mask = ink_mask(image)
     best_k, best_score = 0, -1.0
@@ -408,7 +421,9 @@ def detect_orientation(
         if glyphs == 0:
             score = -0.5
         else:
-            score = float(np.mean([c for _, _, c in lines]))
+            score = _best_band_conf(lines)
+            if score is None:
+                score = float(np.mean([c for _, _, c in lines]))
         if k == 0 and glyphs >= 5 and score > 0.95:
             return 0
         if score > best_score + 1e-9:
@@ -505,11 +520,14 @@ def rotate_small(image: np.ndarray, deg: float, fill: int = 255) -> np.ndarray:
 # the real-font glyph engine should read it instead
 _SCANFONT_CONF_FLOOR = 0.92
 # the glyph engine's orientation vote replaces the scanfont one only when
-# the bank actually READS the winner: pages it cannot read (the
-# procedural fixture font, photos, ruled forms) score junk at EVERY
-# rotation (measured: a fixture table page maxes 0.28, a real 300-dpi
-# fax reads 0.47 and FreeType type 0.84), and there the scanfont argmax
-# stands. A nonzero override also needs a decisive margin over upright.
+# the bank actually READS the winner. The vote runs only on pages whose
+# best substantial scanfont band stays under _SCANFONT_CONF_FLOOR at every
+# rotation: real type and real scans, never the fixture font (its upright
+# bands read ≈1.0, so fixture pages, table pages included, exit at k=0).
+# The bank reads FreeType type at 0.79-0.90 and a real 300-dpi fax at
+# 0.47; a page it cannot read (a photo, noise fused into bands) scores
+# junk at EVERY rotation, and there the scanfont argmax stands. A nonzero
+# override also needs a decisive margin over upright.
 _GLYPH_VOTE_FLOOR = 0.35
 _GLYPH_VOTE_MARGIN = 0.08
 
@@ -523,13 +541,9 @@ def choose_engine(mask: np.ndarray, language: str, engine: str = "auto") -> str:
     with spuriously HIGH confidence, so count beats confidence there)."""
     if engine != "auto":
         return engine
-    probe = _recognize_block(mask, 0, 0, language, max_bands=4, max_glyphs=80)
-    # judge by the BEST substantial band: fixture pages always carry at
-    # least one ≈1.0 band, while a fused table/noise band would drag a
-    # mean below the floor even on a genuine scanfont page
-    band_confs = [c for _, ws, c in probe if sum(len(w.text) for w in ws) >= 4]
-    if band_confs:
-        use_glyph = max(band_confs) < _SCANFONT_CONF_FLOOR
+    best = _best_band_conf(_recognize_block(mask, 0, 0, language, max_bands=4, max_glyphs=80))
+    if best is not None:
+        use_glyph = best < _SCANFONT_CONF_FLOOR
     else:
         # measure ink AFTER stripping page-long rules/borders: a ruled
         # table drawn around a handful of fixture glyphs is mostly rule

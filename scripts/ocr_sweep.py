@@ -5,10 +5,9 @@ Run before and after a matcher/codec change and diff the JSON — every
 value is an md5 of the full extract_document output, so any behavior
 change in decode, orientation, segmentation or matching shows up.
 Each document is also checked against its gate's closed form (Q67_SQL /
-Q68_SQL), and the misses are printed per half: the q67 half uses
-two-character sources ("s0".."s4"), on which the table page is known to
-be read at 270° (see ROADMAP), so its misses are expected until that is
-fixed.
+Q68_SQL), and the misses are printed per half (the q67 half uses
+two-character sources, "s0".."s4"). The script exits 1 when either half
+has a miss.
 """
 
 from __future__ import annotations
@@ -70,6 +69,8 @@ def main() -> None:
     print(f"wrote {len(out)} digests to {out_path}")
     for half, ids in misses.items():
         print(f"{half} closed-form misses: {len(ids)}/{n}" + (f" (doc ids {ids})" if ids else ""))
+    if any(misses.values()):
+        sys.exit(1)
 
 
 if __name__ == "__main__":

@@ -1,9 +1,11 @@
 """Hostile inputs give one error row in bounded time and memory.
 
 Each case runs in a fresh subprocess, which reports the wall time of the
-one call and its peak RSS (``ru_maxrss``, imports included). The zip
-bombs hold one member of 4 x MAX_UNZIP_BYTES; ``BoundedZip`` stops the
-read one byte past the budget."""
+one call and its peak RSS (``VmHWM``, imports included; ``ru_maxrss``
+would also count the parent's peak, which Linux carries across exec). The zip
+bombs hold members of 4 x MAX_UNZIP_BYTES; ``BoundedZip`` stops the read
+one byte past the budget. A bare zip's row lists its member names from
+the central directory and reads no member."""
 
 import ast
 import io
@@ -24,7 +26,7 @@ MAX_SECONDS = 1.0
 MAX_RSS_MB = 500
 
 _RUN = """
-import json, resource, sys, time
+import hashlib, json, sys, time
 from dedoc_spark.core.document import extract_document
 from dedoc_spark.core.formats import list_attachments
 from dedoc_spark.core.limits import ResourceLimit
@@ -32,17 +34,24 @@ from dedoc_spark.core.limits import ResourceLimit
 url, path, call = sys.argv[1:]
 payload = open(path, "rb").read()
 t0 = time.perf_counter()
+warnings = attachments = None
 if call == "extract_document":
-    error = extract_document(url, payload, None)["error"]
+    row = extract_document(url, payload, None)
+    error, warnings = row["error"], row["warnings"]
 else:
     try:
-        list_attachments(url, payload)
+        got = list_attachments(url, payload)
+        attachments = [[n, hashlib.md5(b).hexdigest()] for n, b in got]
         error = None
     except ResourceLimit as e:
         error = str(e)
 seconds = time.perf_counter() - t0
-rss_mb = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss / 1024
-print(json.dumps({"error": error, "seconds": seconds, "rss_mb": rss_mb}))
+with open("/proc/self/status") as f:
+    rss_mb = next(int(ln.split()[1]) for ln in f if ln.startswith("VmHWM:")) / 1024
+print(json.dumps({
+    "error": error, "warnings": warnings, "attachments": attachments,
+    "seconds": seconds, "rss_mb": rss_mb,
+}))
 """
 
 
@@ -64,7 +73,7 @@ def _run(tmp_path, url: str, payload: bytes, call: str = "extract_document") -> 
         ("pptx", "https://h.example/a.pptx", "extract_document"),
         ("odt", "https://h.example/a.odt", "extract_document"),
         ("docx", "https://h.example/misnamed.doc", "extract_document"),
-        ("zip", "https://h.example/a.zip", "extract_document"),
+        ("zip", "https://h.example/a.zip", "list_attachments"),
         ("docx", "https://h.example/a.docx", "list_attachments"),
     ],
     ids=["docx", "xlsx", "pptx", "odt", "docx-as-doc", "zip", "docx-attachments"],
@@ -73,6 +82,73 @@ def test_zip_bomb_gives_the_limit_row_quickly(tmp_path, zip_bomb, kind, url, cal
     got = _run(tmp_path, url, zip_bomb(kind), call)
     assert got["error"] == "resource_limit:zip_member"
     assert got["seconds"] < MAX_SECONDS and got["rss_mb"] < MAX_RSS_MB, got
+
+
+_EXPLODE = "needs_explosion:zip (use operators.archives.extract_with_archives)"
+
+
+def _streamed_zip(members) -> bytes:
+    """A deflate zip of ``(name, byte, size)`` members, each ``size``
+    copies of ``byte``, written in 1 MiB chunks."""
+    buf = io.BytesIO()
+    with zipfile.ZipFile(buf, "w", zipfile.ZIP_DEFLATED) as zf:
+        for name, byte, size in members:
+            with zf.open(name, "w") as f:
+                for _ in range(size >> 20):
+                    f.write(byte * (1 << 20))
+    return buf.getvalue()
+
+
+def test_a_bare_zip_row_names_its_members_without_reading_them(tmp_path, zip_bomb):
+    """20 members of 8 MiB pass the zip budget together; the row still
+    lists every name, and so does a zip bomb's."""
+    payload = _streamed_zip([(f"m{i:02d}.txt", b" ", 8 << 20) for i in range(20)])
+    got = _run(tmp_path, "https://h.example/many.zip", payload)
+    assert got["error"] == _EXPLODE
+    assert got["warnings"] == [f"archive member: m{i:02d}.txt" for i in range(20)]
+    assert got["seconds"] < MAX_SECONDS and got["rss_mb"] < 200, got
+    got = _run(tmp_path, "https://h.example/a.zip", zip_bomb("zip"))
+    assert got["error"] == _EXPLODE
+    assert got["warnings"] == ["archive member: a.txt", "archive member: b.txt"]
+    assert got["seconds"] < MAX_SECONDS and got["rss_mb"] < MAX_RSS_MB, got
+
+
+def test_docx_media_attachments_keep_their_bytes(tmp_path):
+    """A docx with no diagram: the diagram pass reads document.xml only,
+    and the ten media members come out whole."""
+    import hashlib
+
+    size = 8 << 20
+    media = [(f"word/media/image{i}.png", bytes([65 + i]), size) for i in range(10)]
+    buf = io.BytesIO(_streamed_zip(media))
+    with zipfile.ZipFile(buf, "a", zipfile.ZIP_DEFLATED) as zf:
+        zf.writestr("word/document.xml", b"<w:document><w:body><w:p/></w:body></w:document>")
+    got = _run(tmp_path, "https://h.example/media.docx", buf.getvalue(), "list_attachments")
+    assert got["error"] is None
+    assert got["attachments"] == [
+        [f"image{i}.png", hashlib.md5(bytes([65 + i]) * size).hexdigest()] for i in range(10)
+    ]
+
+
+def test_docx_attachments_read_each_member_once(monkeypatch):
+    from dedoc_spark.core.formats import list_attachments
+
+    reads = []
+    real = BoundedZip.read
+
+    def spy(self, name_or_info):
+        reads.append(getattr(name_or_info, "filename", name_or_info))
+        return real(self, name_or_info)
+
+    monkeypatch.setattr(BoundedZip, "read", spy)
+    payload = _zip(
+        ("word/document.xml", b"<w:document><w:body><w:p/></w:body></w:document>"),
+        ("word/styles.xml", b"<w:styles/>"),
+        ("word/media/a.png", b"a"),
+        ("word/media/b.png", b"b"),
+    )
+    assert list_attachments("https://h.example/a.docx", payload) == [("a.png", b"a"), ("b.png", b"b")]
+    assert sorted(reads) == ["word/document.xml", "word/media/a.png", "word/media/b.png"]
 
 
 def test_tables_nested_past_the_cap_give_the_limit_row_quickly(tmp_path):

@@ -444,21 +444,50 @@ def _q67_table_page(source: str):
     )
 
 
-@pytest.mark.xfail(
-    strict=True,
-    reason=(
-        "known defect: an upright fixture table page with the two-character "
-        "cell 's3' is read at 270°. The scanfont engine scores upright at "
-        "0.812, under its 0.92 floor, so the glyph engine re-scores the page; "
-        "it scores 270° at 0.387, which clears its 0.35 floor and beats "
-        "upright (0.213) by more than 0.08. A fix changes output bytes."
-    ),
-)
 def test_table_page_with_two_char_cell_stays_upright():
+    """An upright fixture table page whose body line reads perfectly but
+    whose table band fuses to a lone glyph: the mean over its bands
+    (0.81) missed the scanfont floor, and the glyph re-score read the
+    page at 270°. The best substantial band keeps it upright."""
     assert ocr.detect_orientation(_q67_table_page("s3")) == 0
 
 
 def test_table_page_stays_upright():
-    """Control for the xfail above: the same page with the cell text
-    'src3' (the source shape the q67 gate sees) is read upright."""
+    """The same page with the cell text 'src3' (the source shape the q67
+    gate sees) is read upright."""
     assert ocr.detect_orientation(_q67_table_page("src3")) == 0
+
+
+def _spy_orientation_confidences(monkeypatch):
+    from dedoc_spark.core import glyph_ocr
+
+    calls = []
+    real = glyph_ocr.orientation_confidences
+
+    def spy(*args, **kwargs):
+        calls.append(args)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(glyph_ocr, "orientation_confidences", spy)
+    return calls
+
+
+@pytest.mark.parametrize("source", ["s3", "src3"])
+def test_fixture_table_page_skips_the_glyph_rescore(monkeypatch, source):
+    """Fixture table pages exit on their upright scanfont score: the
+    four-rotation glyph re-score is not run for them."""
+    calls = _spy_orientation_confidences(monkeypatch)
+    assert ocr.detect_orientation(_q67_table_page(source)) == 0
+    assert calls == []
+
+
+def test_real_font_page_runs_the_glyph_rescore_once(monkeypatch):
+    from dedoc_spark.core.ftrender import ft_available, render_text_page
+    from dedoc_spark.sources.pdf_fixture import q68_lines
+
+    if not ft_available():
+        pytest.skip("freetype/fonts absent")
+    calls = _spy_orientation_confidences(monkeypatch)
+    page = render_text_page(q68_lines(0), face="sans", px=40)
+    assert ocr.detect_orientation(np.ascontiguousarray(np.rot90(page, 1))) == 270
+    assert len(calls) == 1

@@ -3,9 +3,9 @@ of ``scripts/ocr_sweep.py``, each the md5 of its full ``extract_document``
 output. Any change in scan decoding, orientation, segmentation, matching,
 table recognition or line building shows up here.
 
-The q67 half records today's table-page orientation defect (ROADMAP item
-3); fixing it changes those digests on purpose. After an intended output
-change, re-record with ``python3 scripts/ocr_sweep.py tests/ocr_golden.json``.
+Both halves meet their gates' closed forms (the sweep exits 1 on a
+miss). After an intended output change, re-record with
+``python3 scripts/ocr_sweep.py tests/ocr_golden.json``.
 """
 
 from __future__ import annotations

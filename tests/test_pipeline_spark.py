@@ -256,8 +256,10 @@ def test_deep_json_gives_the_limit_error_in_the_attachment_channel(spark):
 
 def test_a_zip_bomb_gives_the_limit_row_on_every_path(spark, zip_bomb):
     """A zip member past MAX_UNZIP_BYTES is ``resource_limit:zip_member``
-    from extract_document, from extract_stage, and as the error row of
-    both explosion channels (archive members, attachments)."""
+    from extract_document and extract_stage for a docx, and as the error
+    row of both explosion channels (archive members, attachments). A bare
+    zip's own row reads no member: it names the members and asks for
+    explosion, on both paths alike."""
     from dedoc_spark.operators.archives import explode_archives, explode_attachments
 
     docx, archive = "https://bomb.example/a.docx", "https://bomb.example/a.zip"
@@ -267,11 +269,12 @@ def test_a_zip_bomb_gives_the_limit_row_on_every_path(spark, zip_bomb):
     ).coalesce(1)
     out = extract_stage(df)
     got = _rows_by_url(out)
+    limit = "resource_limit:zip_member"
+    explode = "needs_explosion:zip (use operators.archives.extract_with_archives)"
     for url, payload in rows:
         want = extract_document(url, payload, None)
-        assert want["error"] == "resource_limit:zip_member", url
+        assert want["error"] == (limit if url == docx else explode), url
         assert got[url] == {c: want.get(c) for c in out.columns}, url
-    limit = "resource_limit:zip_member"
     # a docx is no archive: explode_archives passes it through to extraction
     assert [(r.url, r.error) for r in explode_archives(df).collect() if r.kind != "passthrough"] == [(archive, limit)]
     assert sorted((r.url, r.error, r.kind) for r in explode_attachments(df).collect()) == [
